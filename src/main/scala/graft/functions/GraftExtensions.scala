@@ -12,10 +12,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.All.foreach(ext.injectFunction)
-    // materialize-before-sample fence for global sorts over expensive
-    // subtrees (see SortSampleFenceRule) — physical-plan only, results
-    // and logical/optimized plans are untouched
-    ext.injectQueryStagePrepRule(s => SortSampleFenceRule(s))
   }
 }
 

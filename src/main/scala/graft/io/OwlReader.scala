@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayInputStream
@@ -32,6 +32,13 @@ object OwlReader {
   val SubClassOf = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
   val OnProperty = "http://www.w3.org/2002/07/owl#onProperty"
   val SomeValuesFrom = "http://www.w3.org/2002/07/owl#someValuesFrom"
+  /** The ontology header's root-term annotation (SURVEY A8). */
+  val OntologyRoot = "http://purl.obolibrary.org/obo/IAO_0000700"
+
+  /** The relation-label dictionary: read for its term labels only, never a
+    * triple source (reference: OntologyTripleParser.java:164, FIXTURES.md §2).
+    */
+  val DictionaryFile = "ro.owl"
 
   // ---------------------------------------------------------------- sources
 
@@ -71,12 +78,6 @@ object OwlReader {
   def terms(spark: SparkSession, paths: Seq[String]): Dataset[TermRow] = {
     import spark.implicits._
     binaryFiles(spark, paths).flatMap { case (name, bytes) => parseElements(name, bytes)._1 }
-  }
-
-  /** Distinct ontology prefix ids per file (reference: OntologyElementParser.java:109-118). */
-  def ids(spark: SparkSession, paths: Seq[String]): Dataset[IdRow] = {
-    import spark.implicits._
-    binaryFiles(spark, paths).flatMap { case (name, bytes) => parseElements(name, bytes)._2 }
   }
 
   /** One metadata row per file (reference: OntologyElementParser.java:146-184). */

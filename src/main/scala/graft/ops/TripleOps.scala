@@ -38,6 +38,19 @@ object TripleOps {
     else subjectValid
   }
 
+  /** A8 header: each file's root term, read off the parsed ontology header
+    * (reference: OntologyTripleParser.java:130-150) — the first
+    * `obo:IAO_0000700` URI object by `stmtIdx`, which the parser emits from
+    * the `owl:Ontology` element; null when the file has none. One row per
+    * file of `raw`, as (srcFile, root): the `meta` that [[rootNamespaces]]
+    * and [[collectTriples]] read, without a second scan of the files.
+    */
+  def ontologyRoots(raw: DataFrame): DataFrame =
+    raw.groupBy(col("srcFile"))
+      .agg(min(when(col("predicate") === OwlReader.OntologyRoot && col("objIsUri"),
+        struct(col("stmtIdx"), col("objectStr")))).as("first"))
+      .select(col("srcFile"), col("first.objectStr").as("root"))
+
   /** A8: per-file root namespace (reference: OntologyTripleParser.java:130-150).
     * Primary: the ontology header's IAO_0000700 root term before '_'.
     * Fallback (taxslim has no IAO_0000700): derived from a class URI of the
@@ -144,11 +157,12 @@ object TripleOps {
     * `HashSet<Triple>` of the reference (OntologyTripleParser.java:159-171),
     * keeping the earliest (src_file, stmt_idx) provenance so downstream
     * "last-wins" semantics are deterministic (SURVEY.md §7.5). `ro.owl` is
-    * excluded as a label-dictionary-only file (F7).
+    * excluded as a label-dictionary-only file (F7), for callers that parse it
+    * with the ontologies.
     */
   def uniqueTriples(collected: DataFrame): DataFrame = {
     collected
-      .filter(col("src_file") =!= "ro.owl")
+      .filter(col("src_file") =!= OwlReader.DictionaryFile)
       .groupBy(col("subject"), col("predicate"), col("object"))
       .agg(min(struct(
         col("src_file"), col("stmt_idx"), col("obj_is_uri"), col("obj_is_literal"),

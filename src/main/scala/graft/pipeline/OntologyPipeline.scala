@@ -1,9 +1,9 @@
 package graft.pipeline
 
 import graft.io.{GraphSink, OwlReader}
-import graft.ops.{GraphOps, TripleOps, UriOps}
+import graft.ops.{GraphOps, TripleOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** The flagship two-pass ETL DAG (SURVEY.md §3.1,
   * reference: OntologyGraphBuilder.main, OntologyGraphBuilder.java:491-626):
@@ -13,8 +13,13 @@ import org.apache.spark.sql.functions._
   * pass 2 ("phenotypes"): cl.owl only, testObject=true, RO dictionary
   * injected (reference :577) → CL-only subgraph.
   *
-  * Unlike the reference — which re-parses cl.owl from scratch for pass 2 —
-  * the parsed raw statements are cached and reused (SURVEY §3.2).
+  * Source stage: every file is read once, for one role. ro.owl goes through
+  * the element harvest only (`OwlReader.terms`, its relation labels); every
+  * other file goes through the triple parse only (`OwlReader.triples`), and
+  * its root term is read off its own parsed header statements
+  * (`TripleOps.ontologyRoots`) instead of a second metadata scan. Unlike the
+  * reference — which re-parses cl.owl from scratch for pass 2 — the parsed
+  * raw statements are cached and reused (SURVEY §3.2).
   *
   * The entry point takes (oboDir, outDir) parameters, which the reference's
   * integration test implies but its main ignores (SURVEY §3.1 discrepancy
@@ -86,54 +91,57 @@ object OntologyPipeline {
     GraphResult(kept, deprecated, edges, labels, Seq(unique, kept))
   }
 
+  /** Writes one pass's store and text sinks beneath `dir`, then releases its
+    * cached frames — also when a write fails.
+    */
+  private def writePass(g: GraphResult, dir: String): Unit =
+    try {
+      GraphSink.writeVertices(g.vertices, dir)
+      GraphSink.writeEdges(g.edges, dir)
+      GraphSink.writeDeprecatedTerms(g.deprecated, dir)
+      GraphSink.writeEdgeLabels(g.edgeLabels, dir)
+    } finally g.unpersist()
+
   /** Full two-pass run over a directory of OWL files, writing the graph store
     * and side outputs beneath `outDir` (`ontologies/`, `phenotypes/`).
     * `phenotypePattern` selects pass-2's file set (the reference hard-codes
     * "cl.owl", OntologyGraphBuilder.java:566; its integration test runs on a
     * fixture dir without cl.owl, so the pattern is a parameter here).
+    * Nothing stays cached after the run, whether it returns or throws.
     */
   def run(spark: SparkSession, oboDir: String, outDir: String,
           lastWins: Boolean = false, phenotypePattern: String = "cl\\.owl"): Unit = {
     val allFiles = OwlReader.listFilesMatchingPattern(oboDir, ".*\\.owl")
     require(allFiles.nonEmpty, s"No OBO files found in $oboDir")
     val phenotypeRegex = phenotypePattern.r
+    def fileName(path: String) = path.substring(path.lastIndexOf('/') + 1)
 
-    // Source stage: parse once, reuse across both passes. Parsing yields one
-    // partition per FILE (RDF/XML is not splittable); when files are fewer
-    // than cores, spread the parsed triples before caching so every
+    // Source stage: one read per file (see the object doc). Parsing yields
+    // one partition per FILE (RDF/XML is not splittable); when ontologies
+    // are fewer than cores, spread the parsed triples before caching so every
     // downstream stage is parallel. At cluster scale (files >> cores) this
     // branch never fires and no extra shuffle is paid.
+    val (dictionary, ontologies) = allFiles.partition(fileName(_) == OwlReader.DictionaryFile)
     val parallelism = spark.sparkContext.defaultParallelism
-    val parsed = OwlReader.triples(spark, allFiles).toDF()
-    val raw = (if (allFiles.size < parallelism) parsed.repartition(parallelism) else parsed).cache()
-    val meta = OwlReader.meta(spark, allFiles).toDF().cache()
-    val terms = OwlReader.terms(spark, allFiles).toDF()
-    val roTerms = terms
-      .filter(UriOps.fileStemCol(col("srcFile")) === "ro")
-      .select("term", "label")
-      .cache()
+    val parsed = OwlReader.triples(spark, ontologies).toDF()
+    val raw = (if (ontologies.size < parallelism) parsed.repartition(parallelism) else parsed).cache()
+    val roTerms = OwlReader.terms(spark, dictionary).toDF().select("term", "label").cache()
+    try {
+      // One row per file, collected into a local relation: both passes then
+      // plan against a small table of known size. Re-aggregating raw inside
+      // each pass cost about 40 more generated-code compiles per build.
+      val roots = TripleOps.ontologyRoots(raw)
+      val meta = spark.createDataFrame(roots.collectAsList(), roots.schema)
 
-    // Pass 1: full ontology graph (testObject = false).
-    val pass1 = buildGraph(raw, meta, roTerms, testObject = false, lastWins)
-    GraphSink.writeVertices(pass1.vertices, s"$outDir/ontologies")
-    GraphSink.writeEdges(pass1.edges, s"$outDir/ontologies")
-    GraphSink.writeDeprecatedTerms(pass1.deprecated, s"$outDir/ontologies")
-    GraphSink.writeEdgeLabels(pass1.edgeLabels, s"$outDir/ontologies")
-    pass1.unpersist()
+      // Pass 1: full ontology graph (testObject = false).
+      writePass(buildGraph(raw, meta, roTerms, testObject = false, lastWins), s"$outDir/ontologies")
 
-    // Pass 2: CL-only phenotype subgraph (testObject = true, RO dict injected).
-    val phenoFiles = allFiles.map(f => f.substring(f.lastIndexOf('/') + 1))
-      .filter(n => phenotypeRegex.pattern.matcher(n).matches())
-    val clRaw = raw.filter(col("srcFile").isin(phenoFiles: _*))
-    val clMeta = meta.filter(col("srcFile").isin(phenoFiles: _*))
-    if (phenoFiles.nonEmpty) {
-      val pass2 = buildGraph(clRaw, clMeta, roTerms, testObject = true, lastWins)
-      GraphSink.writeVertices(pass2.vertices, s"$outDir/phenotypes")
-      GraphSink.writeEdges(pass2.edges, s"$outDir/phenotypes")
-      GraphSink.writeDeprecatedTerms(pass2.deprecated, s"$outDir/phenotypes")
-      GraphSink.writeEdgeLabels(pass2.edgeLabels, s"$outDir/phenotypes")
-      pass2.unpersist()
-    }
-    raw.unpersist(); meta.unpersist(); roTerms.unpersist()
+      // Pass 2: CL-only phenotype subgraph (testObject = true, RO dict injected).
+      val phenoFiles = allFiles.map(fileName).filter(n => phenotypeRegex.pattern.matcher(n).matches())
+      val isPheno = col("srcFile").isin(phenoFiles: _*)
+      if (phenoFiles.nonEmpty)
+        writePass(buildGraph(raw.filter(isPheno), meta.filter(isPheno), roTerms,
+          testObject = true, lastWins), s"$outDir/phenotypes")
+    } finally { raw.unpersist(); roTerms.unpersist() }
   }
 }

@@ -213,6 +213,10 @@ class OwlReaderSpec extends AnyFunSuite {
     } finally java.nio.file.Files.deleteIfExists(dtd)
   }
 
+  test("an empty path list reads as an empty dataset (a directory without ro.owl)") {
+    assert(OwlReader.terms(TestSpark.spark, Nil).count() == 0)
+  }
+
   test("listFilesMatchingPattern throws on bad dir") {
     intercept[java.io.IOException] {
       OwlReader.listFilesMatchingPattern("/nonexistent/dir", ".*")

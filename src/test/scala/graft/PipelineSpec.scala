@@ -52,6 +52,47 @@ class PipelineSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
+  /** A temp copy of the fixture directory, deleted after `body`. */
+  private def withFixtureCopy(body: java.nio.file.Path => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-obo")
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(TestSpark.oboDir), dir.toFile)
+      body(dir)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  /** Bytes read from local files through Hadoop's file system, all threads. */
+  private def localBytesRead(): Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+  }
+
+  test("source stage reads each OWL file once") {
+    withFixtureCopy { obo =>
+      val owlBytes = obo.toFile.listFiles().filter(_.getName.endsWith(".owl")).map(_.length).sum
+      val before = localBytesRead()
+      OntologyPipeline.run(spark, obo.toString, obo.resolve("out").toString,
+        phenotypePattern = "macrophage\\.owl")
+      assert(localBytesRead() - before == owlBytes)
+    }
+  }
+
+  test("a failed run leaves nothing cached") {
+    withFixtureCopy { obo =>
+      val out = obo.resolve("out")
+      java.nio.file.Files.createDirectories(out)
+      // pass 2's first write fails after pass 1 has materialized the sources
+      java.nio.file.Files.write(out.resolve("phenotypes"), Array.emptyByteArray)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      intercept[Exception] {
+        OntologyPipeline.run(spark, obo.toString, out.toString, phenotypePattern = "macrophage\\.owl")
+      }
+      assert(java.nio.file.Files.isDirectory(out.resolve("ontologies/vertices")))
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    }
+  }
+
   test("upsert merge: insert-if-absent, overwrite-if-present") {
     import spark.implicits._
     val current = Seq(("CL", "1", "old"), ("CL", "2", "keep")).toDF("id", "number", "label")

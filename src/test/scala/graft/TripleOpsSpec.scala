@@ -86,6 +86,20 @@ class TripleOpsSpec extends AnyFunSuite {
     assert(ns.length == 1 && ns(0).getString(1) == "http://purl.obolibrary.org/obo/NCBITaxon")
   }
 
+  test("header roots equal the element harvest's meta roots on every fixture") {
+    val dirs = Seq(TestSpark.oboDir, new java.io.File(TestSpark.oboDir).getParent + "/obo-extra")
+    val files = dirs.flatMap(OwlReader.listFilesMatchingPattern(_, ".*\\.owl"))
+    assert(files.exists(_.endsWith("/no-IAO_0000700-test.owl")) && files.exists(_.endsWith("/entity-refs.owl")))
+    def roots(df: org.apache.spark.sql.DataFrame) =
+      df.select("srcFile", "root").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val fromHeader = roots(TripleOps.ontologyRoots(OwlReader.triples(spark, files).toDF()))
+    val fromMeta = roots(OwlReader.meta(spark, files).toDF())
+    assert(fromHeader == fromMeta)
+    assert(fromHeader.size == files.size)
+    assert(fromHeader("no-IAO_0000700-test.owl") == null)
+    assert(fromHeader("entity-refs.owl") == "http://purl.obolibrary.org/obo/CL_0000000")
+  }
+
   test("testObject=true drops foreign-NS URI objects but keeps literals") {
     val pheno = collect(Seq(TestSpark.fixture("macrophage.owl")), testObject = true)
     // GO/NCBITaxon objects are outside the CL root namespace -> dropped
