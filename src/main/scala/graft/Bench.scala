@@ -282,20 +282,17 @@ object Bench {
               val prior = priorLegs.map(pick(_, isPrior = true))
               val cur = curLegs.map(pick(_, isPrior = false))
               // pair ratio over queries valid in BOTH legs of THAT pair.
-              // Warmup bridge: a prior harness that predates the untimed
-              // shared-store warmup still pays materialization inside its
-              // entries' timed windows, while the current side pre-pays it
-              // untimed — add the current leg's warmupSeconds back into its
-              // sum so both sides account the same work. Once both legs
-              // record warmupSeconds the stores are excluded on both sides
-              // and no adjustment applies.
+              // Each leg's sum is its common entries PLUS its own untimed
+              // warmupSeconds: a harness that pre-pays shared stores untimed
+              // and one that charges them to their first consumer then
+              // account the same work, whichever side is which.
               val ratios = priorLegs.zip(curLegs).map { case (pl, cl) =>
                 val p = pick(pl, isPrior = true); val c = pick(cl, isPrior = false)
                 val common = p.keySet.intersect(c.keySet)
                   .filter(k => p(k) >= 0 && c(k) >= 0).toSeq
-                val wAdj = if (pl.warmup.isEmpty) cl.warmup.getOrElse(0.0) else 0.0
-                val ps = common.map(p).sum
-                if (ps > 0) (common.map(c).sum + wAdj) / ps else Double.NaN
+                val ps = common.map(p).sum + pl.warmup.getOrElse(0.0)
+                val cs = common.map(c).sum + cl.warmup.getOrElse(0.0)
+                if (ps > 0) cs / ps else Double.NaN
               }.filter(java.lang.Double.isFinite)
               // per-query medians over queries valid in EVERY run of a side
               def medians(runs: Seq[Map[String, Double]]): Map[String, Double] =
@@ -371,58 +368,15 @@ object Bench {
 
     // session warm-up so the first timed query doesn't absorb JVM/codegen init
     spark.range(1000).selectExpr("sum(id)").collect()
-    // UNTIMED shared-store warmup: materialize every cross-entry persisted
-    // store before any timed window, so no entry's timing depends on being
-    // the store's first consumer (registry-composition-dependent attribution
-    // was the r8 phantom-regression suspect). The cost is recorded as
-    // warmupSeconds — the A/B adds it back when the prior harness predates
-    // the warmup and still pays materialization inside its entries.
     // optional args: query names to run (default all) — isolation/profiling aid
     val selected = if (args.nonEmpty) SparkEntry.queries.filter(q => args.contains(q._1))
                    else SparkEntry.queries
+    // Input staging is the only untimed pre-battery work (warmupSeconds);
+    // every shared store is built by its first consumer in battery order,
+    // inside that entry's timed window (attribution: sharedStores).
     val tWarm0 = System.nanoTime()
-    try graft.queries.PipelineQueries.warmSharedStores(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: warmup failed: $e") }
-    // louvain-family caches: warm only when a consumer is selected (an
-    // --only run without them should not pay the build)
-    try if (Seq("g_louvain", "g_louvain2", "g_leiden").exists(selected.contains))
-      graft.queries.GraphQueries.warmShared(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: louvain warmup failed: $e") }
-    // LPA labeling: one fixpoint, two consumers (g_label_prop emits it,
-    // g_louvain's baseline guard reads it) — same discipline
-    try if (Seq("g_label_prop", "g_louvain").exists(selected.contains))
-      graft.queries.GraphQueries.warmLpa(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: lpa warmup failed: $e") }
-    // duplicate-cluster CC labeling: one fixpoint, three consumers — same
-    // discipline (attribution `cc_labels`/`_warmup` via sharedStores)
-    try if (Seq("d8_cc_components", "d16_cluster_sizes", "d20_cluster_keep_best")
-        .exists(selected.contains))
-      graft.queries.PipelineQueries.warmCcLabels(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: cc-labels warmup failed: $e") }
-    // flagship store: built once per JVM from the FIXED fixture corpus —
-    // pre-pay it untimed when its consumer is selected (attribution
-    // `_warmup` via sharedStores, the louvain-cache discipline)
-    try if (selected.contains("pipeline_flagship"))
-      graft.queries.FlagshipQueries.warmStore(spark)
-    catch { case e: Throwable => System.err.println(s"bench: flagship warmup failed: $e") }
-    // k-NN graph stores: the hnsw serving walk and the append patch read
-    // frozen graphs — build them untimed (attribution `knng_*`/`_warmup`
-    // via sharedStores) so the timed entries measure serving, not index
-    // construction (round-15 verdict #3); sim_nndescent_knng/
-    // sim_knng_capped remain the timed build entries
-    try {
-      if (selected.contains("sim_hnsw_search"))
-        graft.queries.PipelineQueries.warmHnswLayers(spark, sfDir)
-      if (selected.contains("sim_knng_append") ||
-          selected.contains("stream_knng_append"))
-        graft.queries.PipelineQueries.warmKnngAppendBase(spark, sfDir)
-    } catch { case e: Throwable => System.err.println(s"bench: knng warmup failed: $e") }
-    // shared two-batch replay stagings: cross-entry stores paid by the
-    // alphabetically-first twin otherwise (measured ~75 s inside
-    // stream_double_quantiles at the 100× probe) — pre-pay untimed
-    try if (selected.keys.exists(_.startsWith("stream_")))
-      graft.queries.StreamingQueries.warmStagedReplays(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: staging warmup failed: $e") }
+    try graft.queries.SharedStores.stageInputs(spark, sfDir, selected.keys)
+    catch { case e: Throwable => System.err.println(s"bench: input staging failed: $e") }
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
     // Attribution contract: only queries whose plans carry CollectMetrics
     // can contribute to `observed`, so only THOSE pay a bus drain — once
@@ -775,13 +729,13 @@ object Bench {
           val cp = if (clsDir.isDirectory) s"${clsDir.getPath}:/opt/spark/jars/*"
                    else sys.props("java.class.path")
           // SPARK_GRAFT_WARM_PASS: the child executes the flagged entries
-          // once UNTIMED before its timed battery — a full battery
-          // amortizes first-use materialization of cross-entry caches
-          // (staged replay dirs, louvain L1, BM25 postings) onto earlier
-          // entries, so history medians are warm numbers; without the
-          // warm pass an --only rerun pays materialization inside the
-          // flagged entry's own window and is biased toward CONFIRMING
-          // flags that are actually phantom.
+          // once UNTIMED before its timed battery — in a full battery all
+          // but the first consumer of a shared store read it warm, so
+          // their history medians are warm numbers; without the warm pass an --only rerun pays the build
+          // inside the flagged entry's own window and is biased toward
+          // CONFIRMING flags that are actually phantom. A store's first
+          // consumer pays the build in the battery but not in this rerun,
+          // so its flags lean the other way.
           runChildBench(cp, repoDir, sfDir, cpus, prelim.map(_._1).toSeq,
               extraEnv = Map("SPARK_GRAFT_WARM_PASS" -> "1"),
               timeoutSec = math.min(900L, math.max(120L, remainingSec.toLong - 60))) match {
@@ -821,12 +775,12 @@ object Bench {
       }
     } catch { case _: Throwable => "{}" }
 
-    // which registry entry materialized each cross-entry shared store this
-    // run (r7 ADVICE: makes sharing entries' timings interpretable under
+    // which registry entry built each cross-entry shared store this run
+    // (r7 ADVICE: makes sharing entries' timings interpretable under
     // registry reordering / --only subsets)
     val shared = {
       import scala.jdk.CollectionConverters._
-      graft.queries.PipelineQueries.sharedStoreMaterializers.asScala.toSeq.sortBy(_._1)
+      graft.queries.SharedStores.materializers.asScala.toSeq.sortBy(_._1)
         .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     }
 

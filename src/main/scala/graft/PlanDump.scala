@@ -298,12 +298,9 @@ object PlanDump {
       }
       println(s"join audit clean: ${JoinExpectations.size} entries pinned")
     } else {
-      // SPARK_GRAFT_PLAN_WARM=1: materialize the cross-entry shared stores
-      // first (as Bench/Verify-with-warmups sessions do), so dumps show the
-      // InMemoryRelation substitution a consumer entry actually runs with
-      if (sys.env.get("SPARK_GRAFT_PLAN_WARM").contains("1"))
-        try graft.queries.PipelineQueries.warmSharedStores(spark, sfDir)
-        catch { case e: Throwable => println(s"shared-store warmup failed: $e") }
+      // a shared store's persist() registers with the CacheManager when its
+      // first consumer builds the plan, so `PlanDump <dir> <producer>
+      // <consumer>` shows the substitution the consumer runs with
       args.drop(1).foreach { name =>
         println(s"===== $name =====")
         SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1,5 +1,5 @@
 package graft
-import graft.queries.{FlagshipQueries, GraphQueries, PipelineQueries, RelationalQueries, StreamingQueries, TemporalQueries}
+import graft.queries.{FlagshipQueries, GraphQueries, PipelineQueries, RelationalQueries, SharedStores, StreamingQueries, TemporalQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -21,14 +21,14 @@ object SparkEntry {
     queries("a2_flagship_agg")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Each fn runs
-    * with [[PipelineQueries.currentEntry]] bound to its name so cross-entry
+    * with [[SharedStores.currentEntry]] bound to its name so cross-entry
     * shared stores can attribute their materialization cost (bench_out's
     * `sharedStores` map).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     entries.map { case (name, fn, _) =>
       name -> ((s: SparkSession, d: String) =>
-        PipelineQueries.currentEntry.withValue(name)(fn(s, d)))
+        SharedStores.currentEntry.withValue(name)(fn(s, d)))
     }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -62,20 +62,15 @@ object FlagshipQueries {
   private val GoldenXrefs = Seq("ZFA:0009141", "CALOHA:TS-0587",
     "MESH:D008264", "FMA:83585", "BTO:0000801", "FMA:63261")
 
-  // ---- built-store cache (round-14 verdict #6) ---------------------------
+  // ---- built-store sharing (round-14 verdict #6) -------------------------
   // The two-pass DAG over the FIXED fixture corpus is deterministic, yet
   // every bench/verify execution re-ran the full build + store write —
-  // 9.2 s wall against 0.02 s of returned-result execution, pure harness
-  // re-staging. The store now persists for the JVM (the staged-replay
-  // cache discipline: a filesystem path keyed by input dir, surviving
-  // session turnover, swept by a shutdown hook), built ONCE — in the
-  // bench's untimed warmup window when selected (attributed to `_warmup`
-  // in sharedStores like the louvain caches), or by the first caller
-  // otherwise. Every call still re-runs ALL golden assertions against the
-  // store content and returns freshly-read rows, so the correctness
+  // 9.2 s wall against 0.02 s of returned-result execution. The store is a
+  // shared store: built once per session by the entry's first call (whose
+  // timed window pays it), under a JVM-lifetime scratch root swept by a
+  // shutdown hook. Every call still re-runs ALL golden assertions against
+  // the store content and returns freshly-read rows, so the correctness
   // surface is unchanged — only the rebuild is amortized.
-  private val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private lazy val storeRoot: java.nio.file.Path = {
     val p = graft.ops.Scratch.dir("graft-flagship-shared")
     sys.addShutdownHook(
@@ -85,9 +80,7 @@ object FlagshipQueries {
   }
 
   private def builtStore(s: SparkSession): String =
-    storeCache.computeIfAbsent(oboDir, _ => {
-      PipelineQueries.sharedStoreMaterializers.putIfAbsent("flagship_store",
-        PipelineQueries.currentEntry.value)
+    SharedStores(s, "flagship_store", oboDir) {
       val out = java.nio.file.Files.createTempDirectory(storeRoot, "store").toString
       // fixture-scale: 32-partition shuffles across dozens of jobs are pure
       // scheduler overhead — build in the 8-partition window (results
@@ -97,11 +90,7 @@ object FlagshipQueries {
           phenotypePattern = "macrophage\\.owl")
       }
       out
-    })
-
-  /** Materialize the store in the bench's UNTIMED warmup window. */
-  def warmStore(s: SparkSession): Unit =
-    PipelineQueries.currentEntry.withValue("_warmup") { builtStore(s); () }
+    }
 
   val all: Seq[RelationalQueries.Entry] = Seq(
     ("pipeline_flagship",

@@ -532,72 +532,35 @@ object GraphQueries {
       .reduce(_ union _)
   }
 
-  /** Level-1 Louvain over [[louvainEdges]], memoized per corpus dir: the
-    * gain rounds run DRIVER-side during plan construction (checkpoint-
-    * backed result), so the CacheManager plan-matching trick cannot share
-    * them — the RESULT frame is what g_louvain and g_louvain2 reuse
-    * (measured: the duplicated level-1 was ~40% of g_louvain2's wall).
-    * Vertex-sized, session-pinned like the staged-replay caches; the
-    * materializing entry is recorded for bench attribution.
+  /** Level-1 Louvain over [[louvainEdges]], a shared store: the gain
+    * rounds run DRIVER-side during plan construction (checkpoint-backed
+    * result), so the CacheManager plan-matching trick cannot share them —
+    * the RESULT frame is what g_louvain and g_louvain2 reuse (measured: the
+    * duplicated level-1 was ~40% of g_louvain2's wall).
     */
-  // keyed by (SESSION, dir), not dir alone: the frame is localCheckpoint-
-  // backed, so a frame cached under a stopped session's context would
-  // throw (or bind to the wrong session) when a later session reuses the
-  // same corpus dir in this JVM — unlike the staged replay caches, which
-  // store filesystem paths and survive session turnover
-  private val louvainL1Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def louvainL1Shared(s: SparkSession, d: String): DataFrame = {
-    // evict entries keyed by STOPPED sessions on access (review finding,
-    // round 12): the frames are localCheckpoint-backed, so a dead entry
-    // pins its session's checkpoint RDD references for the JVM lifetime
-    // in long-lived multi-session JVMs — and can never be reused anyway
-    val it = louvainL1Cache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    louvainL1Cache.computeIfAbsent((s, d), _ => {
-      PipelineQueries.sharedStoreMaterializers.putIfAbsent("louvain_l1",
-        PipelineQueries.currentEntry.value)
-      graft.ops.GraphTraversal.louvainLevel(louvainEdges(s, d), rounds = 2)
-    })
-  }
+  private def louvainL1Shared(s: SparkSession, d: String): DataFrame =
+    SharedStores(s, "louvain_l1", d)(
+      graft.ops.GraphTraversal.louvainLevel(louvainEdges(s, d), rounds = 2))
 
   /** The 3-round label-propagation assignment over [[louvainEdges]] —
-    * memoized like [[louvainL1Shared]] (driver-eager checkpointed rounds,
-    * so CacheManager plan matching cannot share them): g_label_prop EMITS
-    * it and g_louvain consumes it as the quality baseline its gain moves
-    * must beat, so one run serves both (r17; before this the identical
-    * LPA fixpoint ran twice per battery).
+    * shared like [[louvainL1Shared]] (driver-eager checkpointed rounds, so
+    * CacheManager plan matching cannot share them): g_label_prop EMITS it
+    * and g_louvain consumes it as the quality baseline its gain moves must
+    * beat, so one run serves both (r17; before this the identical LPA
+    * fixpoint ran twice per battery).
     */
-  private val lpaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[queries] def lpaShared(s: SparkSession, d: String): DataFrame = {
-    val it = lpaCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    lpaCache.computeIfAbsent((s, d), _ => {
-      PipelineQueries.sharedStoreMaterializers.putIfAbsent("lpa_labels",
-        PipelineQueries.currentEntry.value)
-      graft.ops.GraphTraversal.labelPropagation(louvainEdges(s, d), rounds = 3)
-    })
-  }
-
-  /** Bench warmup hook for [[lpaShared]] (attribution `_warmup`). */
-  def warmLpa(s: SparkSession, d: String): Unit =
-    PipelineQueries.currentEntry.withValue("_warmup") { lpaShared(s, d).count(); () }
+  private[queries] def lpaShared(s: SparkSession, d: String): DataFrame =
+    SharedStores(s, "lpa_labels", d)(
+      graft.ops.GraphTraversal.labelPropagation(louvainEdges(s, d), rounds = 3))
 
   /** The UNREFINED level-2 pyramid projection (g_louvain2's assignment),
-    * memoized like [[louvainL1Shared]]: g_louvain2 emits it and g_leiden
+    * shared like [[louvainL1Shared]]: g_louvain2 emits it and g_leiden
     * needs it as the quality bar its refined pyramid must match-or-beat —
     * without sharing, each entry pays the contracted weighted level's
     * driver-side gain rounds twice per battery.
     */
-  private val louvainProj2Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def louvainProj2Shared(s: SparkSession, d: String): DataFrame = {
-    val it = louvainProj2Cache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    louvainProj2Cache.computeIfAbsent((s, d), _ => {
-      PipelineQueries.sharedStoreMaterializers.putIfAbsent("louvain_proj2",
-        PipelineQueries.currentEntry.value)
+  private def louvainProj2Shared(s: SparkSession, d: String): DataFrame =
+    SharedStores(s, "louvain_proj2", d) {
       val und = louvainUnd(louvainEdges(s, d))
       val l1 = louvainL1Shared(s, d)
       val l2 = graft.ops.GraphTraversal.louvainWeightedLevel(
@@ -605,20 +568,6 @@ object GraphQueries {
       l1.select(col("id"), col("community").as("c1"))
         .join(l2.select(col("id").as("c1"), col("community")), Seq("c1"))
         .select(col("id"), col("community"))
-    })
-  }
-
-  /** Materialize the louvain-family shared caches in the bench's UNTIMED
-    * warmup window — the [[PipelineQueries.warmSharedStores]] rationale:
-    * without this the alphabetically-first consumer (g_leiden) pays the
-    * level-1 AND unrefined-level-2 construction inside its own timed
-    * window, and its number depends on registry composition. proj2 builds
-    * l1 transitively; attribution records `_warmup`.
-    */
-  def warmShared(s: SparkSession, d: String): Unit =
-    PipelineQueries.currentEntry.withValue("_warmup") {
-      louvainProj2Shared(s, d).count()
-      ()
     }
 
   /** Undirected-distinct (a ≤ b) edges of the successor graph. */

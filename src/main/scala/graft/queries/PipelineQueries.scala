@@ -401,65 +401,38 @@ object PipelineQueries {
       |             CROSS JOIN tot
       |        GROUP BY 1)""".stripMargin
 
-  /** The registry entry whose plan is currently being constructed — set by
-    * [[graft.SparkEntry.queries]]'s wrapper so [[sharedStore]] can attribute
-    * each shared store's materialization cost to the entry that pays it.
-    */
-  val currentEntry = new scala.util.DynamicVariable[String]("")
-
-  /** store name → the registry entry that first built the store's plan this
-    * session. Under the sequential Bench/Verify loop that entry is the one
-    * whose timed window pays the materialization, so per-entry timings for
-    * the sharing entries stay interpretable when the registry order or an
-    * `--only` subset changes (r7 ADVICE): the bench records this map in
-    * `bench_out.json` as `sharedStores`.
-    */
-  val sharedStoreMaterializers =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Cross-entry persist, gated on input size. MEASURED (r8, 3 interleaved
     * on/off reps of the 9-entry sharing subset, per-query numbers in
     * PLANS.md): persist WINS at sf0.1 (43.4→35.2 s on the clean rep, the
     * cache-reading consumers collapsing: d3_minhash_lsh 3.2→0.8,
     * x1_hybrid_rrf 4.9→1.7) and is neutral-at-worst at sf0.01 (25.9 vs
-    * 25.8; persist never lost a rep) — refuting r7's open hypothesis that
-    * persist fixed costs caused the recorded sf0.01 A/B reading of 1.601
-    * (that reading was box noise; the median-of-3 A/B now bounds it). The
-    * gate therefore only skips DEGENERATE inputs (below a few KiB the
-    * cache bookkeeping can't pay for itself and unit-fixture runs skip the
-    * pinned storage), via the `documents` table's on-disk bytes — a cheap
-    * driver-side listing, no job. SPARK_GRAFT_SHARED_PERSIST overrides:
-    * "0" never persists, "1" always does (the measurement lever).
+    * 25.8; persist never lost a rep). The gate therefore only skips
+    * DEGENERATE inputs (below a few KiB the cache bookkeeping can't pay for
+    * itself and unit-fixture runs skip the pinned storage), via the
+    * `documents` table's on-disk bytes — a cheap driver-side listing, no job.
     */
   private val SharedPersistMinBytes = 8L << 10
-  private def shouldPersist(d: String): Boolean =
-    sys.env.get("SPARK_GRAFT_SHARED_PERSIST") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _ =>
-        def bytes(f: java.io.File): Long =
-          if (f.isDirectory) f.listFiles().map(bytes).sum else f.length()
-        bytes(new java.io.File(d, "documents.parquet")) >= SharedPersistMinBytes
-    }
-
-  /** The d3/BM25 CacheManager pattern: every consumer builds the IDENTICAL
-    * plan and persists lazily — Spark's CacheManager matches the analyzed
-    * plan, so the first consumer materializes and the rest read the cache.
-    * The store is never explicitly unpersisted — entries are independent
-    * and none knows it is last; MEMORY_AND_DISK + LRU eviction bounds the
-    * cost, and a session that is done can `spark.catalog.clearCache()`.
-    */
-  private def sharedStore(name: String, d: String)(build: => DataFrame): DataFrame = {
-    val df = build
-    if (!shouldPersist(d)) df
-    else {
-      // storageLevel == NONE ⇒ no cache entry for this canonical plan yet ⇒
-      // the entry under construction is the one that will materialize it
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        sharedStoreMaterializers.putIfAbsent(name, currentEntry.value)
-      df.persist()
-    }
+  private def shouldPersist(d: String): Boolean = {
+    def bytes(f: java.io.File): Long =
+      if (f.isDirectory) f.listFiles().map(bytes).sum else f.length()
+    bytes(new java.io.File(d, "documents.parquet")) >= SharedPersistMinBytes
   }
+
+  /** The d3/BM25 CacheManager pattern: the store's plan is persisted (lazily)
+    * inside its build, so Spark's CacheManager matches the analyzed plan —
+    * the first consumer to execute materializes it and every plan holding
+    * the identical subtree reads the cache, including ops that rebuild the
+    * subtree internally (d10/d23/d24). The store is never explicitly
+    * unpersisted — entries are independent and none knows it is last;
+    * MEMORY_AND_DISK + LRU eviction bounds the cost, and a session that is
+    * done can `spark.catalog.clearCache()`.
+    */
+  private def sharedStore(s: SparkSession, name: String, d: String)
+                         (build: => DataFrame): DataFrame =
+    SharedStores(s, name, d) {
+      val df = build
+      if (shouldPersist(d)) df.persist() else df
+    }
 
   /** Per-(source, word) token counts over a documents frame — the
     * mergeable INPUT of [[tvdFromWordCounts]]: counts are plain sums, so
@@ -528,7 +501,7 @@ object PipelineQueries {
     * plain ranked entry and the hybrid-RRF fusion entry.
     */
   private def bm25ScoresShared(s: SparkSession, d: String): DataFrame =
-    sharedStore("bm25_scores", d)(
+    sharedStore(s, "bm25_scores", d)(
       TextIndex.bm25Scores(t(s, d, "documents"), Seq("joins", "vector", "the")))
 
   /** The shared word-3-gram shingle frame and its MinHash(12) signatures —
@@ -539,41 +512,24 @@ object PipelineQueries {
     * re-tokenizations of the corpus.
     */
   private def shinglesShared(s: SparkSession, d: String): DataFrame =
-    sharedStore("shingles", d)(Dedup.wordShingles(spread(t(s, d, "documents")), 3))
+    sharedStore(s, "shingles", d)(Dedup.wordShingles(spread(t(s, d, "documents")), 3))
 
   private def sigsShared(s: SparkSession, d: String): DataFrame =
-    sharedStore("minhash_sigs", d)(Dedup.minhashSignatures(shinglesShared(s, d), 12))
+    sharedStore(s, "minhash_sigs", d)(Dedup.minhashSignatures(shinglesShared(s, d), 12))
 
   /** The duplicated-position marking frame the THREE batch span-dedup
     * entries (d10, d23, d24) derive from: one tokenize + 8-gram-count +
     * coverage-window pass over the corpus. Each op builds this identical
-    * subtree internally (Dedup.spanCoveredPositions), so persisting it
-    * once lets the CacheManager plan match serve all three — the same
+    * subtree internally (Dedup.spanCoveredPositions), so the entries only
+    * call this to register the persist, and the CacheManager plan match
+    * serves all three from the first one's execution — the same
     * one-derivation-N-consumers shape as [[shinglesShared]]; before this
     * each entry re-ran the full marking pass (profiled r17: ~2 s apiece
     * at sf0.1).
     */
   private def coveredSpansShared(s: SparkSession, d: String): DataFrame =
-    sharedStore("covered_spans", d)(
+    sharedStore(s, "covered_spans", d)(
       Dedup.spanCoveredPositions(spread(t(s, d, "documents")), 8))
-
-  /** Materialize every cross-entry shared store up front (the bench's
-    * UNTIMED warmup phase). Without this the store's first consumer in
-    * execution order pays the corpus-scale materialization inside its own
-    * timed window — per-entry timings then depend on registry composition
-    * (r8 forensics: the same query read 20.3 s at sf0.01 and 3.5 s at
-    * sf0.1 across two registry shapes). A count() per store forces the
-    * cache through Spark's CacheManager; consumers build the identical
-    * analyzed plan and read it back. No-op when the persist gate is off
-    * (degenerate inputs — nothing is cached, so nothing to pre-pay).
-    */
-  def warmSharedStores(s: SparkSession, d: String): Unit =
-    if (shouldPersist(d)) currentEntry.withValue("_warmup") {
-      shinglesShared(s, d).count()
-      sigsShared(s, d).count()
-      bm25ScoresShared(s, d).count()
-      coveredSpansShared(s, d).count()
-    }
 
   /** The duplicate-cluster labeling d8/d16/d20 all serve from: ONE
     * vertex-closed connected-components run over the corpus's confirmed
@@ -581,58 +537,31 @@ object PipelineQueries {
     * IDENTICAL iterative star-contraction fixpoint (~30 driver jobs each
     * at sf0.1 — profiled r17: 6.3/6.6/7.2 s per entry, ~3x one run) for
     * one artifact; production multi-tier dedup labels clusters once and
-    * every governance/selection pass reads the labeling. Memoized like
-    * [[GraphQueries]]'s louvain L1 (the round-15 verdict #3 pattern):
-    * keyed by (session, dir) because the frame derives from
-    * localCheckpoint-backed converged state; evicted when the session
-    * stops; materializer recorded for bench attribution; warmed UNTIMED
-    * by the bench only when a consumer entry is selected.
+    * every governance/selection pass reads the labeling. The frame derives
+    * from localCheckpoint-backed converged state, so it is shared as a
+    * result, not through CacheManager plan matching.
     */
-  private val ccLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[queries] def ccLabelsShared(s: SparkSession, d: String): DataFrame = {
-    val it = ccLabelsCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    ccLabelsCache.computeIfAbsent((s, d), _ => {
-      sharedStoreMaterializers.putIfAbsent("cc_labels", currentEntry.value)
+  private[queries] def ccLabelsShared(s: SparkSession, d: String): DataFrame =
+    SharedStores(s, "cc_labels", d) {
       val docsDf = spread(t(s, d, "documents"))
       graft.ops.ConnectedComponents.components(
         Dedup.jaccardPairs(shinglesShared(s, d), 0.2), "id_a", "id_b",
         vertices = Some(docsDf.select(col("doc_id").as("id"))))
-    })
-  }
-
-  /** Bench warmup hook for [[ccLabelsShared]] (attribution `_warmup`). */
-  def warmCcLabels(s: SparkSession, d: String): Unit =
-    currentEntry.withValue("_warmup") { ccLabelsShared(s, d).count(); () }
+    }
 
   // ---- k-NN graph stores (round-15 verdict #3/#4) ------------------------
   // nnDescentGraph's rounds run DRIVER-side during plan construction
   // (eager checkpoints), so the CacheManager plan-matching trick cannot
-  // share them — like the louvain level-1, the RESULT frames are memoized
-  // per (session, dir). Before this, sim_hnsw_search re-built its THREE
-  // graph constructions inside every timed execution (13.0 s at sf0.1 for
-  // a walk that costs ~1 s — the bench measured the wrong thing);
-  // sim_nndescent_knng remains the TIMED build entry. Keyed by session
-  // because the frames are localCheckpoint-backed (the louvainL1Cache
-  // rationale), with the same stopped-session eviction.
-  private val knngCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Seq[DataFrame]]()
-  private def knngShared(s: SparkSession, d: String, tag: String)
-                        (build: => Seq[DataFrame]): Seq[DataFrame] = {
-    val it = knngCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    knngCache.computeIfAbsent((s, d, tag), _ => {
-      sharedStoreMaterializers.putIfAbsent(s"knng_$tag", currentEntry.value)
-      build
-    })
-  }
+  // share them — like the louvain level-1, the RESULT frames are shared.
+  // Before this, sim_hnsw_search re-built its THREE graph constructions
+  // inside every timed execution (13.0 s at sf0.1 for a walk that costs
+  // ~1 s); sim_nndescent_knng remains a build entry of its own.
 
   /** The three layer graphs sim_hnsw_search serves from — the frozen ANN
     * index, built once per (session, corpus).
     */
   private[queries] def hnswLayersShared(s: SparkSession, d: String): Seq[DataFrame] =
-    knngShared(s, d, "hnsw_layers") {
+    SharedStores(s, "knng_hnsw_layers", d) {
       val e = t(s, d, "embeddings")
       val lvl = Similarity.hnswLayerOf(col("vec_id"), 2)
       Seq(
@@ -641,23 +570,14 @@ object PipelineQueries {
         Similarity.nnDescentGraph(e.filter(lvl >= 2), k = 8, rounds = 2))
     }
 
-  /** The frozen base graph sim_knng_append patches (old corpus =
-    * vec_id >= 50; the < 50 rows play the append batch).
+  /** The frozen base graph sim_knng_append and stream_knng_append patch
+    * (old corpus = vec_id >= 50; the < 50 rows play the append batch).
     */
-  private[queries] def knngAppendBaseShared(s: SparkSession, d: String): Seq[DataFrame] =
-    knngShared(s, d, "append_base") {
-      Seq(Similarity.nnDescentGraph(
-        t(s, d, "embeddings").filter(col("vec_id") >= 50), k = 12, rounds = 2))
+  private[queries] def knngAppendBaseShared(s: SparkSession, d: String): DataFrame =
+    SharedStores(s, "knng_append_base", d) {
+      Similarity.nnDescentGraph(
+        t(s, d, "embeddings").filter(col("vec_id") >= 50), k = 12, rounds = 2)
     }
-
-  /** Materialize a k-NN graph store in the bench's UNTIMED warmup window
-    * (called per selected consumer), so the timed entries measure SERVING
-    * — the walk / the append patch — not index construction.
-    */
-  def warmHnswLayers(s: SparkSession, d: String): Unit =
-    currentEntry.withValue("_warmup") { hnswLayersShared(s, d); () }
-  def warmKnngAppendBase(s: SparkSession, d: String): Unit =
-    currentEntry.withValue("_warmup") { knngAppendBaseShared(s, d); () }
 
   /** md5-hyperplane CTEs shared by the NN-descent oracles: `plv(p, plane)`
     * — the [[graft.llm.Similarity.planeComponent]] family in-database
@@ -1596,12 +1516,11 @@ object PipelineQueries {
     // corpus size.
     ("sim_hnsw_search",
       // the three graph builds come from the per-(session, dir) shared
-      // store ([[hnswLayersShared]], warmed untimed by the bench): the
-      // SERVING WALK is the operator this entry showcases, and before the
-      // staging it timed three full index constructions around a ~1 s walk
-      // (round-15 verdict #3). sim_nndescent_knng remains the timed BUILD
-      // entry. The oracle still replays builds + walk end-to-end, so the
-      // hash match continues to pin every graph edge and routing decision.
+      // store ([[hnswLayersShared]]): this entry's first execution in a
+      // session pays them, later executions time the SERVING WALK alone
+      // (round-15 verdict #3). The oracle still replays builds + walk
+      // end-to-end, so the hash match continues to pin every graph edge
+      // and routing decision.
       (s, d) => {
         val e = t(s, d, "embeddings")
         Similarity.layeredSearch(e.filter(col("vec_id") < 20),
@@ -1651,7 +1570,7 @@ object PipelineQueries {
     ("sim_knng_append",
       (s, d) => {
         val e = t(s, d, "embeddings")
-        Similarity.knngAppend(knngAppendBaseShared(s, d).head,
+        Similarity.knngAppend(knngAppendBaseShared(s, d),
             e.filter(col("vec_id") >= 50), e.filter(col("vec_id") < 50),
             k = 12, beam = 24, hops = 4)
           .filter(col("id") < 60)
@@ -3714,8 +3633,11 @@ object PipelineQueries {
     // are dropped from text_kept. Unlike d9 (first-occurrence chunk keep),
     // EVERY copy of duplicated text is removed — the ExactSubstr contract.
     ("d10_dup_spans",
-      (s, d) => Dedup.removeDuplicateSpans(spread(t(s, d, "documents")), spanTokens = 8)
-        .orderBy("doc_id"),
+      (s, d) => {
+        coveredSpansShared(s, d)
+        Dedup.removeDuplicateSpans(spread(t(s, d, "documents")), spanTokens = 8)
+          .orderBy("doc_id")
+      },
       """WITH w AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS words FROM documents),
         | wp AS (SELECT doc_id, i - 1 AS pos, words[i] AS word
         |        FROM w, LATERAL (SELECT unnest(generate_series(1, len(w.words))) AS i) g),
@@ -3751,9 +3673,11 @@ object PipelineQueries {
     // full maximal-run extension: marking, island numbering (cumulative
     // span_start), per-island extents + text, same-text window count.
     ("d23_substring_dedup",
-      (s, d) => graft.llm.Dedup.duplicateSpanExtents(
-          spread(t(s, d, "documents")), spanTokens = 8)
-        .orderBy("doc_id", "span_pos_first"),
+      (s, d) => {
+        coveredSpansShared(s, d)
+        graft.llm.Dedup.duplicateSpanExtents(spread(t(s, d, "documents")), spanTokens = 8)
+          .orderBy("doc_id", "span_pos_first")
+      },
       SubstringDedupSql),
 
     // ---- span-level keep-one-survivor cut (Lee et al. production policy) -
@@ -3764,9 +3688,11 @@ object PipelineQueries {
     // d23's marking + island extents + full-span md5, ROW_NUMBER survivor
     // ranking, per-position range cut, kept-text re-aggregation.
     ("d24_span_survivor_cut",
-      (s, d) => graft.llm.Dedup.spanSurvivorCut(
-          spread(t(s, d, "documents")), spanTokens = 8)
-        .orderBy("doc_id"),
+      (s, d) => {
+        coveredSpansShared(s, d)
+        graft.llm.Dedup.spanSurvivorCut(spread(t(s, d, "documents")), spanTokens = 8)
+          .orderBy("doc_id")
+      },
       """WITH w AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS words FROM documents),
         | wp AS (SELECT doc_id, i - 1 AS pos, words[i] AS word
         |        FROM w, LATERAL (SELECT unnest(generate_series(1, len(w.words))) AS i) g),

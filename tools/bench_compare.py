@@ -8,6 +8,11 @@ comparison path:
 
   - ALWAYS prints raw totals and the median of per-query ratios with its
     binomial CI (the order-statistic channel, robust to uniform drift);
+  - prints each record's all-in total (value + warmupSeconds: the battery
+    plus the untimed pre-battery work), so a record that pre-paid shared
+    stores untimed and one that charged them to entries compare like for
+    like, and lists every shared store whose `sharedStores` attribution
+    (the entry that built it) differs between the records;
   - prints normalized totals ONLY when both records are comparable:
     neither is marked cal_contaminated, and their calibrations agree
     within CAL_TOLERANCE (default 1.25x). Otherwise it REFUSES, and says
@@ -33,6 +38,12 @@ def median(xs):
     if n == 0:
         return float("nan")
     return xs[n // 2] if n % 2 else 0.5 * (xs[n // 2 - 1] + xs[n // 2])
+
+
+def all_in(rec):
+    """value + warmupSeconds; None when the record predates warmupSeconds."""
+    w = rec.get("warmupSeconds")
+    return None if w is None else rec.get("value") + w
 
 
 def main():
@@ -63,6 +74,15 @@ def main():
           f"(start {b.get('calibration_start')}, "
           f"contaminated {b.get('cal_contaminated')})")
     print(f"common queries: {len(common)} ({len(ratios)} above jitter floor)")
+    for tag, rec in (("A", a), ("B", b)):
+        tot = all_in(rec)
+        print(f"all-in total {tag}: " + ("n/a (no warmupSeconds)" if tot is None
+              else f"{tot:.1f} s (warmup {rec['warmupSeconds']:.1f} s)"))
+    sa, sb = a.get("sharedStores", {}), b.get("sharedStores", {})
+    moved = sorted(k for k in set(sa) | set(sb) if sa.get(k) != sb.get(k))
+    print(f"shared stores attributed differently: {len(moved)}")
+    for k in moved:
+        print(f"   {k}: A {sa.get(k, '-')}  B {sb.get(k, '-')}")
 
     if ratios:
         n = len(ratios)
