@@ -201,13 +201,9 @@ object ScaleProbe {
       graft.ops.TextIndex.phraseMatch(scaled, Seq("slow", "batch", "joins")).count()
     }
     timed("prefixFilterCandidates (positional)") {
-      // PPJoin positional-filter payoff: candidate volume WITH the bound…
+      // candidate volume under the PPJoin positional bound (the plain
+      // prefix join's numbers are recorded in PLANS.md)
       Dedup.prefixFilterCandidates(Dedup.wordShingles(scaled, 3), 70).count()
-    }
-    timed("prefixFilterCandidates (plain)") {
-      // …vs the plain prefix join — the delta is verification fan-out saved
-      Dedup.prefixFilterCandidates(Dedup.wordShingles(scaled, 3), 70,
-        positional = false).count()
     }
     timed("prefixFilterAuto (gate + route)") {
       // the df-skew gate on the duplicate-cluster corpus: one bounded
@@ -664,11 +660,9 @@ object ScaleProbe {
             .select(explode(col("tk"))).count()
         }
       }
-      // string-vs-long LPA key cost at mult x edges: the same vote loop,
-      // once on 40-byte URI keys straight through (the pre-r10 behavior,
-      // encodeKeys=false) and once through the internal order-preserving
-      // dictionary — the delta is per-round shuffle bytes, which the
-      // two one-time encode joins must repay within a few rounds
+      // LPA on 40-byte URI keys at mult x edges, through the internal
+      // order-preserving dictionary (the unencoded loop's numbers are
+      // recorded in PLANS.md)
       if (enabled("lpaRounds")) {
         val uris = (0 until mult).map(k => orders.select(
             concat(lit("http://purl.obolibrary.org/obo/CL_"),
@@ -679,10 +673,6 @@ object ScaleProbe {
             concat(lit("http://purl.obolibrary.org/obo/CL_"),
               lpad((substring(col("v"), -12, 12).cast("long") + dl).cast("string"),
                 12, "0")).as("dst"))).reduce(_ union _)
-        timed("lpaRounds string keys (legacy)") {
-          graft.ops.GraphTraversal.labelPropagation(e, rounds = 3,
-            encodeKeys = false).count()
-        }
         timed("lpaRounds dict-encoded") {
           graft.ops.GraphTraversal.labelPropagation(e, rounds = 3).count()
         }

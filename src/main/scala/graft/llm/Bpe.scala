@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.Checkpointer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,11 +17,11 @@ import org.apache.spark.sql.functions._
   * provably sequence-preserving BATCH of merges (see [[trainMerges]]),
   * dividing the driver round-trips that dominate a 32k-merge training run.
   * Iteration state is checkpointed per round via
-  * the pluggable [[graft.ops.Checkpointer]] (vocabulary-sized — cheap; the
-  * same lineage-truncation discipline as
-  * [[graft.ops.ConnectedComponents]]; Auto upgrades to reliable
-  * checkpoints once a checkpoint dir is configured — essential here, since
-  * a 32k-merge training loop on a cluster WILL see an executor loss).
+  * [[graft.ops.Checkpointer]] (vocabulary-sized — cheap; the same
+  * lineage-truncation discipline as [[graft.ops.ConnectedComponents]];
+  * reliable checkpoints once a checkpoint dir is configured — essential
+  * here, since a 32k-merge training loop on a cluster WILL see an executor
+  * loss).
   *
   * Determinism: ties on pair frequency break lexicographically on
   * (left, right), so the learned merge sequence is identical on any
@@ -78,21 +79,19 @@ object Bpe {
     */
   def trainMerges(docs: DataFrame, numMerges: Int,
                   textCol: String = "text",
-                  cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto,
                   maxBatch: Int = 1): Seq[(Int, String, String, String, Long)] =
-    trainMergesWithRounds(docs, numMerges, textCol, cp, maxBatch)._1
+    trainMergesWithRounds(docs, numMerges, textCol, maxBatch)._1
 
   /** [[trainMerges]] plus the number of Spark rounds actually executed —
     * the batching observability surface (rounds < rules proves batching).
     */
   def trainMergesWithRounds(docs: DataFrame, numMerges: Int,
                             textCol: String = "text",
-                            cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto,
                             maxBatch: Int = 1): (Seq[(Int, String, String, String, Long)], Int) = {
     require(numMerges > 0, s"numMerges must be positive: $numMerges")
     require(maxBatch > 0, s"maxBatch must be positive: $maxBatch")
     // ONE corpus pass: word frequency table with initial per-char symbols
-    var vocab = cp(docs
+    var vocab = Checkpointer(docs
       .select(explode(split(coalesce(col(textCol), lit("")), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("n"))
@@ -171,8 +170,8 @@ object Bpe {
         val applyBatch = udf((symbols: Seq[String]) =>
           batchRules.foldLeft(symbols) { case (s, (l, r)) => mergeOnce(s, l, r) })
         val prev = vocab
-        vocab = cp(vocab.withColumn("symbols", applyBatch(col("symbols"))))
-        cp.release(prev)
+        vocab = Checkpointer(vocab.withColumn("symbols", applyBatch(col("symbols"))))
+        Checkpointer.release(prev)
       }
     }
     (rules.toSeq, rounds)
@@ -181,11 +180,10 @@ object Bpe {
   /** Learned rules as a DataFrame — the registry/bench surface. */
   def trainMergesDf(docs: DataFrame, numMerges: Int,
                     textCol: String = "text",
-                    cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto,
                     maxBatch: Int = 1): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    trainMerges(docs, numMerges, textCol, cp, maxBatch)
+    trainMerges(docs, numMerges, textCol, maxBatch)
       .toDF("rank", "left", "right", "merged", "pair_count")
   }
 

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.Checkpointer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -198,8 +199,7 @@ object Dedup {
     * Output: (id_a < id_b, n_inter, n_a, n_b) for every pair with
     * n_inter·100 ≥ pct·(n_a + n_b − n_inter).
     */
-  def prefixFilterCandidates(shingles: DataFrame, minJaccardPct: Int,
-                             positional: Boolean = true): DataFrame = {
+  def prefixFilterCandidates(shingles: DataFrame, minJaccardPct: Int): DataFrame = {
     require(minJaccardPct >= 1 && minJaccardPct <= 100,
       s"minJaccardPct must be in [1,100]: $minJaccardPct")
     val dfx = shingles.groupBy("shingle").agg(count(lit(1)).as("df"))
@@ -234,17 +234,12 @@ object Dedup {
           col("rn").as("rn_b"), col("n").as("n_b")).hint("merge"),
         Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
-    // `positional = false` is the measurement lever (ScaleProbe A/Bs the
-    // candidate volume with and without the bound), never the production path
-    val gated = if (positional)
-      joined.filter(least(col("rn_a"), col("rn_b"))
+      .filter(least(col("rn_a"), col("rn_b"))
         + least(col("n_a") - col("rn_a"), col("n_b") - col("rn_b")) >= alpha)
-    else joined
-    gated.select("id_a", "id_b").distinct()
+    joined.select("id_a", "id_b").distinct()
   }
 
-  def prefixFilterPairs(shingles: DataFrame, minJaccardPct: Int,
-                        cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+  def prefixFilterPairs(shingles: DataFrame, minJaccardPct: Int): DataFrame = {
     // EXACT-DUPLICATE COLLAPSE before the quadratic stage: on a corpus with
     // e-sized classes of identical token sets, every prefix token's df
     // multiplies by e, so the candidate join emits Σ df² ≈ e² × the
@@ -264,11 +259,11 @@ object Dedup {
     // doc-sized; repShingles is the COLLAPSED posting table — the
     // Checkpointer trade the iterative operators already make (reliable
     // files on a cluster, local blocks in local[] mode).
-    val sig = cp(shingles.groupBy("id")
+    val sig = Checkpointer(shingles.groupBy("id")
       .agg(md5(concat_ws("\u0000", sort_array(collect_set(col("shingle"))))).as("sig")))
     val classes = sig.groupBy("sig").agg(min(col("id")).as("rep"))
     val members = sig.join(classes, Seq("sig")) // (id, sig, rep)
-    val repShingles = cp(shingles
+    val repShingles = Checkpointer(shingles
       .join(classes.select(col("rep").as("id")), Seq("id"), "left_semi"))
 
     val candidates = prefixFilterCandidates(repShingles, minJaccardPct)
@@ -412,13 +407,12 @@ object Dedup {
     * Output on both routes: (id_a, id_b, n_inter, n_a, n_b, route).
     */
   def prefixFilterPairsAuto(shingles: DataFrame, minJaccardPct: Int,
-      maxDF: Long = 1000L, skewRatioMin: Double = 4.0, meanDfMax: Double = 8.0,
-      cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+      maxDF: Long = 1000L, skewRatioMin: Double = 4.0, meanDfMax: Double = 8.0): DataFrame = {
     val (nTokens, nPostings, medianDf, p99Df) = dfSkewStats(shingles)
     val meanDf = nPostings.toDouble / math.max(1L, nTokens)
     val skewRatio = p99Df.toDouble / math.max(1L, medianDf)
     if (skewRatio >= skewRatioMin || meanDf <= meanDfMax)
-      prefixFilterPairs(shingles, minJaccardPct, cp)
+      prefixFilterPairs(shingles, minJaccardPct)
         .withColumn("route", lit("prefix_exact"))
     else
       jaccardPairs(shingles, minJaccardPct / 100.0, maxDF)
@@ -510,8 +504,7 @@ object Dedup {
                            numHashes: Int = 12, bands: Int = 4,
                            textCol: String = "text", idCol: String = "doc_id",
                            maxBucket: Long = Long.MaxValue,
-                           maxDF: Long = Long.MaxValue,
-                           cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+                           maxDF: Long = Long.MaxValue): DataFrame = {
     // the candidate table feeds the id set AND the pair semi-join, and its
     // upstream is the whole multi-shuffle sketch pipeline: materialize it
     // once — it is SMALL (dup-density-bound pairs), so this is the
@@ -520,7 +513,7 @@ object Dedup {
     // checkpointed (see cappedUniverse) — its re-executed subtree is a
     // map-side scan, not a shuffle.
     val shingles = wordShingles(docs, shingleN, textCol, idCol)
-    val candidates = cp(lshCandidates(minhashSignatures(shingles, numHashes), bands,
+    val candidates = Checkpointer(lshCandidates(minhashSignatures(shingles, numHashes), bands,
       numHashes / bands, maxBucket))
     // exact jaccard on candidates only (semi-join-restricted posting lists).
     // Pairing shares [[pairCounts]]/[[cappedUniverse]] with jaccardPairs — a

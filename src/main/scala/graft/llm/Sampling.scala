@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.Checkpointer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -361,8 +362,7 @@ object Sampling {
     */
   def importanceScores(docs: DataFrame, targetDocs: DataFrame, rawDocs: DataFrame,
                        buckets: Int = 256, textCol: String = "text",
-                       idCol: String = "doc_id",
-                       cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+                       idCol: String = "doc_id"): DataFrame = {
     require(buckets >= 1, s"buckets must be positive: $buckets")
     // the internal scored-side alias must not collide with the caller's id
     // column in the final rejoin (the tokenBudgetMix reserved-name rule)
@@ -381,7 +381,7 @@ object Sampling {
         coalesce(col("r_cnt"), lit(0L)).as("r_cnt"))
       // ≤ buckets rows over two corpus-scale subtrees; cut the lineage so
       // the totals agg and the scoring join don't re-run the fits
-      .transform(cp(_))
+      .transform(Checkpointer(_))
     val totals = model.agg(coalesce(sum(col("t_cnt")), lit(0L)).as("t_n"),
       coalesce(sum(col("r_cnt")), lit(0L)).as("r_n"))
     val scored = features(docs)

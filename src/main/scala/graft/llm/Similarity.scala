@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.Checkpointer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -909,8 +910,7 @@ object Similarity {
     */
   def semanticDedup(vectors: DataFrame, centroidsQ: Seq[Seq[Long]], tau: Double,
                     idCol: String = "vec_id", embCol: String = "embedding",
-                    scale: Int = 1000,
-                    cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+                    scale: Int = 1000): DataFrame = {
     // assigned feeds three consumers (both self-join sides + the anti-join
     // base): materialize once — otherwise each branch re-runs the
     // nCentroids×dims assignment kernel, the CPU-dominant stage (there is
@@ -919,9 +919,9 @@ object Similarity {
     // storage — at true corpus scale run the assignment as its own pipeline
     // stage persisted to a table (the SemDeDup operating shape) and feed
     // that table here; the inline checkpoint serves the self-contained
-    // operator form. Checkpointer.Auto upgrades to a reliable checkpoint
-    // once a checkpoint dir is configured.
-    val assigned = cp(vectors
+    // operator form. The Checkpointer writes a reliable checkpoint once a
+    // checkpoint dir is configured.
+    val assigned = Checkpointer(vectors
       .select(col(idCol).as("id"), quantize(col(embCol), scale).as("qv"))
       .withColumn("cell", graft.functions.CellAssign.assignCol(col("qv"), centroidsQ))
       .withColumn("__nv", normQ(col("qv"))))
@@ -1168,20 +1168,19 @@ object Similarity {
     // each round consumes the previous graph THREE times (forward, reverse,
     // and in the candidate union) — lazy reuse recomputes the whole prefix
     // per consumer, a 3^rounds blowup
-    val ckpt = graft.ops.Checkpointer.Auto
-    var g = ckpt(rankTopKById(scored0, k))
+    var g = Checkpointer(rankTopKById(scored0, k))
     for (_ <- 1 to rounds) {
       // release the superseded round once the new one has materialized
-      // (eager checkpoint) — under the Local strategy unreleased per-round
+      // (eager checkpoint) — with local checkpoints unreleased per-round
       // blocks (k·|V| rows each) pin non-evictable storage for the JVM,
       // the cross-query contamination class (the GraphTraversal /
       // ConnectedComponents discipline). The FINAL graph stays pinned: it
       // is the operator's result and callers (layeredSearch, the bench
       // shared stores) read it.
       val prev = g
-      g = ckpt(nnDescentRound(prev,
+      g = Checkpointer(nnDescentRound(prev,
         qvecs.select(col("vid"), col("qv"), col("__nq")), k))
-      ckpt.release(prev)
+      Checkpointer.release(prev)
     }
     g.select(col("id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
@@ -1232,7 +1231,6 @@ object Similarity {
     val entry = corpus
       .select(col(idCol).as("node"), hnswLayerOf(col(idCol), maxL).as("lvl"))
       .orderBy(col("lvl").desc, col("node")).limit(1).select("node")
-    val ckpt = graft.ops.Checkpointer.Auto
     // (query_id, node, cosine): the entry scored per query
     def score(cand: DataFrame): DataFrame =
       cand.join(qs, Seq("query_id")).join(cvec, Seq("node"))
@@ -1251,16 +1249,16 @@ object Similarity {
             .orderBy(col("cosine").desc, col("node"))))
         .filter(col("rn") <= width)
         .select("query_id", "node", "cosine")
-      ckpt(scored)
+      Checkpointer(scored)
     }
-    var cur = ckpt(score(qs.select("query_id").crossJoin(broadcast(entry))))
+    var cur = Checkpointer(score(qs.select("query_id").crossJoin(broadcast(entry))))
     // release each superseded beam frame once the next hop materializes
     // (eager checkpoints) — the nnDescentGraph round discipline; without
     // it every hop's |Q|·width-row frame stays pinned for the JVM
     def advance(graph: DataFrame, width: Int): Unit = {
       val prev = cur
       cur = hop(prev, graph, width)
-      ckpt.release(prev)
+      Checkpointer.release(prev)
     }
     for (l <- maxL to 1 by -1; _ <- 1 to upperHops)
       advance(layers(l), width = 1)
@@ -1325,11 +1323,10 @@ object Similarity {
         .join(lookup, Seq("node"))
         .withColumn("cosine", cosineQN(col("qv"), col("cv"), col("__nq"), col("__nc")))
         .select("query_id", "node", "cosine")
-    val ckpt = graft.ops.Checkpointer.Auto
-    var cur = ckpt(score(qs.select("query_id").crossJoin(broadcast(entry))))
+    var cur = Checkpointer(score(qs.select("query_id").crossJoin(broadcast(entry))))
     for (_ <- 1 to hops) {
       val prev = cur
-      cur = ckpt(score(prev.select("query_id", "node")
+      cur = Checkpointer(score(prev.select("query_id", "node")
           .unionByName(prev.select(col("query_id"), col("node"))
             .join(graph.select(col("id").as("node"), col("neighbor_id")),
               Seq("node"))
@@ -1340,7 +1337,7 @@ object Similarity {
             .orderBy(col("cosine").desc, col("node"))))
         .filter(col("rn") <= beam)
         .select("query_id", "node", "cosine"))
-      ckpt.release(prev)
+      Checkpointer.release(prev)
     }
     // (per-query windows here are beam-bounded — candidates ≤
     // beam·(k+1) per query before the window, the layeredSearch shape)

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.Checkpointer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -411,17 +412,16 @@ object TextStats {
     */
   def topKeywords(docs: DataFrame, k: Int, groupCol: String = "source",
                   textCol: String = "text", nBuckets: Int = 64,
-                  scale: Long = 1000000L,
-                  cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+                  scale: Long = 1000000L): DataFrame = {
     require(k > 0 && nBuckets > 0, s"k and nBuckets must be positive: $k, $nBuckets")
     // vocabulary-sized result over the corpus-scale tokenize — materialize
     // once (the unigramSurprisal ref-table precedent): it feeds both the
     // group-frequency aggregate and the scored join, and AQE exchange reuse
-    // across those consumers is not guaranteed. `cp` owns the lifecycle:
-    // under Local the blocks live until the returned frame is GC'd, so a
-    // long-lived session that calls this repeatedly should prefer a
-    // configured checkpoint dir (Auto -> Reliable: files, not blocks)
-    val counts = cp(tokenCounts(docs, groupCol, textCol))
+    // across those consumers is not guaranteed. Local checkpoint blocks
+    // live until the returned frame is GC'd, so a long-lived session that
+    // calls this repeatedly should prefer a configured checkpoint dir
+    // (reliable checkpoints: files, not blocks)
+    val counts = Checkpointer(tokenCounts(docs, groupCol, textCol))
     val gdf = counts.groupBy(col("token")).agg(count(lit(1)).as("gdf"))
     val g = docs.agg(count_distinct(col(groupCol)).as("n_groups"))
     val score = round(col("n").cast("double")
@@ -459,12 +459,11 @@ object TextStats {
     * is genuinely count-estimable) → per-doc map-combinable rollup.
     */
   def unigramSurprisal(docs: DataFrame, refDocs: DataFrame,
-                       textCol: String = "text", idCol: String = "doc_id",
-                       cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     def tok(df: DataFrame) = df
       .select(col(idCol), explode(split(coalesce(col(textCol), lit("")), " ")).as("token"))
       .filter(col("token") =!= "")
-    val ref = cp(tok(refDocs).groupBy("token").agg(count(lit(1)).as("cnt")))
+    val ref = Checkpointer(tok(refDocs).groupBy("token").agg(count(lit(1)).as("cnt")))
     val tot = ref.agg(sum(col("cnt")).as("n_total"), count(lit(1)).as("v_size"))
     val scored = tok(docs)
       .join(ref, Seq("token"), "left")
@@ -503,13 +502,12 @@ object TextStats {
     * because a 2-field window is left||' '||right by construction.
     */
   def bigramSurprisal(docs: DataFrame, refDocs: DataFrame,
-                      textCol: String = "text", idCol: String = "doc_id",
-                      cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+                      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     def bigrams(df: DataFrame, id: Column) = df.select(id.as("bsid"),
       graft.functions.WordShingles.wordShingles(col(textCol), 2).as("g"))
     // corpus-vocabulary-sized result over a corpus-scale subtree,
     // feeding three consumers — materialize once (surprisal precedent)
-    val refBig = cp(bigrams(refDocs, lit(0L)).groupBy("g")
+    val refBig = Checkpointer(bigrams(refDocs, lit(0L)).groupBy("g")
       .agg(count(lit(1)).as("big_cnt")))
     val refCtx = refBig
       .select(substring_index(col("g"), " ", 1).as("l"), col("big_cnt"))
@@ -550,13 +548,12 @@ object TextStats {
     * two-level discipline. The two threshold rows then broadcast back.
     */
   def perplexityBuckets(docs: DataFrame, refDocs: DataFrame, bucketScale: Int = 64,
-                        textCol: String = "text", idCol: String = "doc_id",
-                        cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Auto): DataFrame = {
+                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(bucketScale >= 1, s"bucketScale must be positive: $bucketScale")
     // doc-count-sized result over the corpus-scale scoring subtree; it
     // feeds the rank path twice (counts + ranked rows) and the output join
-    val scored = cp(bigramSurprisal(docs, refDocs, textCol, idCol, cp))
+    val scored = Checkpointer(bigramSurprisal(docs, refDocs, textCol, idCol))
     val sc = scored.filter(col("n_bigrams") > 0)
       .withColumn("pb", floor(col("avg_surprisal") * bucketScale).cast("long"))
     // the unpartitioned running-sum window sees one row per DISTINCT coarse

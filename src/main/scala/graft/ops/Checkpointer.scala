@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage-truncation strategy for the engine's iterative operators
+/** Lineage truncation for the engine's iterative operators
   * ([[ConnectedComponents.components]], [[GraphTraversal.bfsLevels]],
   * [[GraphTraversal.pageRank]], [[GraphTraversal.triangleCounts]],
   * [[graft.llm.Bpe.trainMerges]], [[graft.llm.Similarity.semanticDedup]],
@@ -13,32 +13,30 @@ import org.apache.spark.sql.DataFrame
   * not the data, becomes the bottleneck), but the two ways to truncate have
   * opposite failure modes at cluster scale:
   *
-  *  - [[Checkpointer.Local]] (`df.localCheckpoint(eager = true)`) writes
-  *    blocks to executor-local storage — fast, no distributed FS round
-  *    trip, but the blocks DIE WITH THEIR EXECUTOR. One lost executor
-  *    mid-loop kills the whole CC/PageRank/BFS/BPE job unrecoverably.
-  *    Right for `local[]` mode and short loops on stable clusters.
-  *  - [[Checkpointer.Reliable]] (`df.checkpoint(eager = true)`) writes the
-  *    materialized rows to the fault-tolerant FS configured via
-  *    `spark.sparkContext.setCheckpointDir(...)` — an executor loss
-  *    recomputes only from the last checkpoint, never from the start of
-  *    the loop. Right for multi-executor clusters at 100 TB, where the
-  *    probability of losing at least one executor during an O(log² n)- or
-  *    32k-round loop approaches 1.
+  *  - `df.localCheckpoint` writes blocks to executor-local storage — fast,
+  *    no distributed FS round trip, but the blocks DIE WITH THEIR EXECUTOR.
+  *    One lost executor mid-loop kills the whole CC/PageRank/BFS/BPE job
+  *    unrecoverably. Right for `local[]` mode and short loops on stable
+  *    clusters.
+  *  - `df.checkpoint` writes the materialized rows to the fault-tolerant FS
+  *    configured via `spark.sparkContext.setCheckpointDir(...)` — an
+  *    executor loss recomputes only from the last checkpoint, never from
+  *    the start of the loop. Right for multi-executor clusters at 100 TB,
+  *    where the probability of losing at least one executor during an
+  *    O(log² n)- or 32k-round loop approaches 1.
   *
-  * [[Checkpointer.Auto]] (the operators' default) dispatches per frame: if
-  * the session has a checkpoint directory configured it uses Reliable,
-  * otherwise Local. So `local[]` runs are unchanged, and a cluster job
-  * opts into fault tolerance with the one line Spark users already know
-  * (`sc.setCheckpointDir("hdfs://…/checkpoints")`) — no operator-signature
-  * change required. Pass an explicit strategy to override the dispatch.
+  * The policy is read per frame from the session, never passed in: a
+  * reliable checkpoint when the session has a checkpoint directory, a local
+  * one otherwise. So `local[]` runs stay local, and a cluster job opts into
+  * fault tolerance with the one line Spark users already know
+  * (`sc.setCheckpointDir("hdfs://…/checkpoints")`).
   */
-sealed trait Checkpointer {
+object Checkpointer {
 
   /** Materialize `df` eagerly and return a frame whose plan is the
     * materialized result (lineage truncated).
     */
-  def apply(df: DataFrame): DataFrame
+  def apply(df: DataFrame): DataFrame = truncate(df, eager = true)
 
   /** LAZY variant: lineage still truncates at this frame, but
     * materialization happens inside the caller's NEXT action over ALL
@@ -48,30 +46,24 @@ sealed trait Checkpointer {
     * the returned frame runs BEFORE any `release` of its inputs (a lazy
     * frame re-reads its inputs at materialization; releasing a
     * truncated-lineage input first would lose data unrecoverably), and
-    * (b) nothing depends on the materialization's timing. Default:
-    * eager (strategies opt in).
+    * (b) nothing depends on the materialization's timing.
     */
-  def lazily(df: DataFrame): DataFrame = apply(df)
+  def lazily(df: DataFrame): DataFrame = truncate(df, eager = false)
 
-  /** Release per-round state superseded by the next iteration. For Local
-    * this unpersists the executor blocks — without it up to `iterations`
-    * edge/vocabulary-scale copies pin non-evictable block storage for the
-    * life of the session (the cross-query contamination class). For
-    * Reliable the data lives in checkpoint FILES, not block storage; the
-    * files are removed by the ContextCleaner when the backing RDD is
-    * garbage-collected (set `spark.cleaner.referenceTracking.cleanCheckpoints=true`)
-    * or by the application's own checkpoint-dir lifecycle — `unpersist`
-    * still drops any blocks the materialization cached, and is the same
-    * correct action under every strategy, hence one shared implementation.
+  /** Release per-round state superseded by the next iteration. For a local
+    * checkpoint this unpersists the executor blocks — without it up to
+    * `iterations` edge/vocabulary-scale copies pin non-evictable block
+    * storage for the life of the session (the cross-query contamination
+    * class). A reliable checkpoint's data lives in checkpoint FILES, not
+    * block storage; the files are removed by the ContextCleaner when the
+    * backing RDD is garbage-collected (set
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`) or by the
+    * application's own checkpoint-dir lifecycle — `unpersist` still drops
+    * any blocks the materialization cached, so it is the right action in
+    * both modes.
     */
-  final def release(df: DataFrame): Unit = { df.unpersist(); () }
-}
+  def release(df: DataFrame): Unit = { df.unpersist(); () }
 
-object Checkpointer {
-
-  /** Eager `localCheckpoint` — executor-local blocks. Fast; not resilient
-    * to executor loss.
-    */
   /** Checkpoints PRESERVE the origin plan's statistics inside the
     * resulting LogicalRDD — useful one-shot, catastrophic in fixpoint
     * loops: every round's join SQUARES the inherited sizeInBytes, so its
@@ -79,45 +71,14 @@ object Checkpointer {
     * minutes inside BigInteger.multiply in the stats visitor (measured,
     * round 13 — the latent failure mode was masked by low round counts
     * until pointer-jumped SCC propagation added a second join per
-    * round). Every strategy therefore drops origin stats after
-    * truncation; AQE re-plans joins from runtime sizes, so compile-time
-    * accuracy is not load-bearing in these loops.
+    * round). Every truncation therefore drops origin stats; AQE re-plans
+    * joins from runtime sizes, so compile-time accuracy is not
+    * load-bearing in these loops.
     */
-  private def reset(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftStatsReset.dropOriginStats(df)
-
-  case object Local extends Checkpointer {
-    def apply(df: DataFrame): DataFrame = reset(df.localCheckpoint(eager = true))
-    override def lazily(df: DataFrame): DataFrame =
-      reset(df.localCheckpoint(eager = false))
-  }
-
-  /** Eager reliable `checkpoint` against the session's configured
-    * checkpoint directory. Fails fast (not mid-loop, and not silently
-    * downgraded) if no directory is configured.
-    */
-  case object Reliable extends Checkpointer {
-    def apply(df: DataFrame): DataFrame = {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "Checkpointer.Reliable requires spark.sparkContext.setCheckpointDir(...) " +
-          "(a fault-tolerant FS path) before running the iterative operator")
-      reset(df.checkpoint(eager = true))
-    }
-    override def lazily(df: DataFrame): DataFrame = {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "Checkpointer.Reliable requires spark.sparkContext.setCheckpointDir(...) " +
-          "(a fault-tolerant FS path) before running the iterative operator")
-      reset(df.checkpoint(eager = false))
-    }
-  }
-
-  /** Per-frame dispatch: Reliable when a checkpoint dir is configured,
-    * Local otherwise. The operators' default.
-    */
-  case object Auto extends Checkpointer {
-    private def resolve(df: DataFrame): Checkpointer =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) Reliable else Local
-    def apply(df: DataFrame): DataFrame = resolve(df)(df)
-    override def lazily(df: DataFrame): DataFrame = resolve(df).lazily(df)
+  private def truncate(df: DataFrame, eager: Boolean): DataFrame = {
+    val cut =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+      else df.localCheckpoint(eager)
+    org.apache.spark.sql.GraftStatsReset.dropOriginStats(cut)
   }
 }

@@ -25,12 +25,11 @@ import org.apache.spark.sql.functions._
   * high-degree fringes directly at the running minimum, so hub skew decays
   * geometrically over rounds — the paper's load-balancing argument); AQE
   * skew-split covers the first-round hubs. Lineage across iterations is
-  * truncated each round via the pluggable [[Checkpointer]] (`cp` param;
-  * default [[Checkpointer.Auto]] — eager localCheckpoint in local[] mode,
-  * reliable `df.checkpoint()` automatically once
+  * truncated each round by [[Checkpointer]] — eager localCheckpoint in
+  * local[] mode, reliable `df.checkpoint()` once
   * `spark.sparkContext.setCheckpointDir` is configured, so an executor
   * loss mid-loop on a cluster recomputes from the last round instead of
-  * killing the job).
+  * killing the job.
   *
   * Reference provenance: the reference has no graph algorithms (its graph
   * is stored, not traversed — `OntologyGraphBuilder.java` builds
@@ -117,8 +116,7 @@ object ConnectedComponents {
     */
   def componentsIncremental(oldLabels: DataFrame, newEdges: DataFrame,
                             srcCol: String = "src", dstCol: String = "dst",
-                            idCol: String = "id",
-                            cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                            idCol: String = "id"): DataFrame = {
     val e = newEdges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
     val collapsed = e
       .join(oldLabels.select(col(idCol).as("__s"), col("component").as("__cs")),
@@ -127,7 +125,7 @@ object ConnectedComponents {
         Seq("__d"), "left")
       .select(coalesce(col("__cs"), col("__s")).as("src"),
         coalesce(col("__cd"), col("__d")).as("dst"))
-    val merged = components(collapsed, cp = cp) // component-scale, not data-scale
+    val merged = components(collapsed) // component-scale, not data-scale
       .select(col("id").as("component"), col("component").as("__new"))
     val relabeledOld = oldLabels
       .join(merged, Seq("component"), "left")
@@ -142,8 +140,8 @@ object ConnectedComponents {
 
   def components(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                  vertices: Option[DataFrame] = None, idCol: String = "id",
-                 maxIter: Int = 30, cp: Checkpointer = Checkpointer.Auto): DataFrame = {
-    var e = cp(canonical(edges, srcCol, dstCol))
+                 maxIter: Int = 30): DataFrame = {
+    var e = Checkpointer(canonical(edges, srcCol, dstCol))
     var fp = fingerprint(e)
     var converged = false
     var it = 0
@@ -158,14 +156,14 @@ object ConnectedComponents {
     // stabilizes exactly one comparison later. Release order stays safe —
     // the fingerprint action materializes `next` BEFORE `e` is released.
     while (!converged && it < maxIter) {
-      val next = cp.lazily(smallStar(largeStar(smallStar(largeStar(e)))))
+      val next = Checkpointer.lazily(smallStar(largeStar(smallStar(largeStar(e)))))
       val nfp = fingerprint(next)
       converged = nfp == fp
       fp = nfp
       // release the superseded round's state — otherwise up to maxIter
       // edge-scale copies pin non-evictable executor storage (the pageRank
       // discipline)
-      cp.release(e)
+      Checkpointer.release(e)
       e = next
       it += 2
     }
@@ -197,9 +195,8 @@ object ConnectedComponents {
     */
   def dedupByComponents(docs: DataFrame, pairs: DataFrame,
                         idCol: String = "doc_id",
-                        pairACol: String = "id_a", pairBCol: String = "id_b",
-                        cp: Checkpointer = Checkpointer.Auto): DataFrame = {
-    val comp = components(pairs, pairACol, pairBCol, cp = cp)
+                        pairACol: String = "id_a", pairBCol: String = "id_b"): DataFrame = {
+    val comp = components(pairs, pairACol, pairBCol)
     // merge-hint: the component table is duplicate-density-bound — size
     // estimates for it are meaningless, and a mis-planned broadcast of a
     // pathological cluster set OOMs the driver (same taxonomy as the
@@ -224,9 +221,9 @@ object ConnectedComponents {
     */
   def dedupByComponentsKeepBest(docs: DataFrame, pairs: DataFrame,
                                 priorityCol: String, idCol: String = "doc_id",
-                                pairACol: String = "id_a", pairBCol: String = "id_b",
-                                cp: Checkpointer = Checkpointer.Auto): DataFrame = {
-    val comp = components(pairs, pairACol, pairBCol, cp = cp,
+                                pairACol: String = "id_a",
+                                pairBCol: String = "id_b"): DataFrame = {
+    val comp = components(pairs, pairACol, pairBCol,
       vertices = Some(docs.select(col(idCol).as("id"))))
     keepBestByComponents(docs, comp, priorityCol, idCol)
   }

@@ -35,24 +35,18 @@ object EntityResolution {
     * quadratic pair table, and a detonating block would finish exploding
     * before tripping.)
     *
-    * `broadcastSizes` gates the broadcast hint on the guard's sizes frame
-    * (one row per distinct block key). With the fixed-cardinality blocking
-    * keys this function is documented for (brands, categories — the only
-    * regime where within-block pairing is survivable), the frame is tiny
-    * and post-aggregate stats otherwise made the planner shuffle the probe
-    * side a second time — a measured 1.6× wall regression at bench SF, so
-    * the hint defaults ON. But the guard's own failure message tells users
-    * to RE-BLOCK to a finer key, and a fine-grained key makes the sizes
-    * frame arbitrarily large (one row per key value — past broadcast
-    * limits at 100 TB). Callers following that advice onto a
-    * high-cardinality key MUST pass `broadcastSizes = false` and let the
-    * planner/AQE pick the join — the guard works identically either way.
+    * The guard's sizes frame (one row per distinct block key) is
+    * broadcast. With the fixed-cardinality blocking keys this function is
+    * documented for (brands, categories — the only regime where
+    * within-block pairing is survivable), the frame is tiny, and
+    * post-aggregate stats otherwise made the planner shuffle the probe
+    * side a second time — a measured 1.6× wall regression at bench SF.
+    * A high-cardinality key makes the frame as large as the key's value
+    * count; such keys belong to [[sortedNeighborhoodPairs]].
     */
   def blockedNamePairs(df: DataFrame, blockCols: Seq[String], keyCol: String,
                        nameCol: String, minSim: Double,
-                       maxBlockRows: Option[Long] = None,
-                       broadcastSizes: Boolean = true,
-                       spreadProbe: Boolean = true): DataFrame = {
+                       maxBlockRows: Option[Long] = None): DataFrame = {
     require(blockCols.nonEmpty, "blockedNamePairs needs at least one blocking column")
     require(minSim >= 0.0 && minSim <= 1.0, s"minSim must be in [0,1]: $minSim")
     // The probe side is REDISTRIBUTED before pairing: the quadratic
@@ -63,23 +57,20 @@ object EntityResolution {
     // j9's scoring ran as one 5.8 s task on a 32-core box). A round-robin
     // spread of the linear input is a near-no-op relative to the pair
     // work at any scale, and broadcast/SMJ strategy choice is unaffected.
-    // `spreadProbe = false` skips the shuffle for callers whose input is
-    // already spread to cluster parallelism (round-16 ADVICE).
     val para = df.sparkSession.sparkContext.defaultParallelism
-    val aSlim = df.select(
+    val a = df.select(
       blockCols.map(col) :+ col(keyCol).as("key_a") :+ col(nameCol).as("name_a"): _*)
-    val a = if (spreadProbe) aSlim.repartition(para) else aSlim
+      .repartition(para)
     val b = df.select(
       blockCols.map(col) :+ col(keyCol).as("key_b") :+ col(nameCol).as("name_b"): _*)
     val aGuarded = maxBlockRows match {
       case Some(max) =>
         val sizes = df.groupBy(blockCols.map(col): _*)
           .agg(count(lit(1)).as("__er_n"))
-        a.join(if (broadcastSizes) broadcast(sizes) else sizes, blockCols)
+        a.join(broadcast(sizes), blockCols)
           .withColumn("key_a", Bounded.guard(col("key_a"), col("__er_n") <= max,
             s"blockedNamePairs: a block exceeds maxBlockRows=$max rows " +
-              "— re-block or pre-split the key (and pass " +
-              "broadcastSizes=false if the re-blocked key is high-cardinality)"))
+              "— re-block or pre-split the key"))
           .drop("__er_n")
       case None => a
     }

@@ -86,19 +86,6 @@ object GraphOps {
       .agg(map_from_entries(sort_array(collect_list(struct(col("attribute"), col("values"))))).as("attrs"))
   }
 
-  /** Wide-pivot view of [[vertexAttributes]]: one column per attribute name.
-    * Dynamic two-pass pivot — convenient at ontology scale; at unbounded
-    * attribute cardinality prefer the map representation (SURVEY §7.5).
-    * Multi-valued attributes stay arrays; with `lastWins` they are single
-    * strings.
-    */
-  def vertexAttributesWide(attrs: DataFrame, lastWins: Boolean = false): DataFrame = {
-    val exploded = attrs.select(col("id"), col("number"), explode(col("attrs")).as(Seq("attribute", "values")))
-    val values = if (lastWins) exploded.withColumn("v", element_at(col("values"), -1))
-                 else exploded.withColumn("v", col("values"))
-    values.groupBy("id", "number").pivot("attribute").agg(first("v"))
-  }
-
   /** Single-shuffle wide pivot with an EXPLICIT attribute list — the at-scale
     * variant (SURVEY §7.5): no second pass to discover attribute names, no
     * intermediate map, deterministic last-wins via max_by on provenance.

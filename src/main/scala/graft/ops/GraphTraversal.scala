@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * against the edge table, anti-joins the already-visited set (so every
   * node is labeled with its FIRST — minimum — hop count), and stops early
   * when the frontier empties. Rounds are bounded by `maxHops`, lineage is
-  * truncated per round via the pluggable [[Checkpointer]] (`cp` param; same
-  * discipline as [[ConnectedComponents]] — [[Checkpointer.Auto]] upgrades
-  * to reliable checkpoints automatically once a checkpoint dir is set, so a
-  * cluster executor loss recomputes from the last round).
+  * truncated per round by [[Checkpointer]] (same discipline as
+  * [[ConnectedComponents]] — reliable checkpoints once the session has a
+  * checkpoint dir, so a cluster executor loss recomputes from the last
+  * round; local checkpoints otherwise).
   *
   * Scale notes (100 TB): the per-round work is ONE equi-join shuffle on the
   * frontier key (broadcast when the frontier is small — the common case for
@@ -34,10 +34,10 @@ object GraphTraversal {
     */
   def bfsLevels(edges: DataFrame, sources: DataFrame, maxHops: Int,
                 srcCol: String = "src", dstCol: String = "dst",
-                idCol: String = "id", cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                idCol: String = "id"): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e = edges.select(col(srcCol).as("id"), col(dstCol).as("nid"))
-    var visited = cp(sources.select(col(idCol).as("id")).distinct()
+    var visited = Checkpointer(sources.select(col(idCol).as("id")).distinct()
       .withColumn("level", lit(0)))
     var frontier = visited.select("id")
     var frontierCp: Option[DataFrame] = None // checkpointed frame backing frontier
@@ -45,24 +45,24 @@ object GraphTraversal {
     var exhausted = false
     while (h < maxHops && !exhausted) {
       h += 1
-      val next = cp(e.join(frontier, Seq("id"))
+      val next = Checkpointer(e.join(frontier, Seq("id"))
         .select(col("nid").as("id")).distinct()
         .join(visited.select("id"), Seq("id"), "left_anti")
         .withColumn("level", lit(h)))
-      if (next.isEmpty) { cp.release(next); exhausted = true }
+      if (next.isEmpty) { Checkpointer.release(next); exhausted = true }
       else {
         // each round keeps ONE visited-set copy and ONE frontier copy of
         // per-round state, releasing the superseded ones (the pageRank
         // discipline — without this up to maxHops copies pin storage)
         val prevVisited = visited
-        visited = cp(visited.union(next))
-        cp.release(prevVisited)
-        frontierCp.foreach(cp.release)
+        visited = Checkpointer(visited.union(next))
+        Checkpointer.release(prevVisited)
+        frontierCp.foreach(Checkpointer.release)
         frontierCp = Some(next)
         frontier = next.select("id")
       }
     }
-    frontierCp.foreach(cp.release)
+    frontierCp.foreach(Checkpointer.release)
     visited
   }
 
@@ -91,12 +91,11 @@ object GraphTraversal {
     */
   def shortestPaths(edges: DataFrame, sources: DataFrame, maxHops: Int,
                     srcCol: String = "src", dstCol: String = "dst",
-                    weightCol: String = "weight", idCol: String = "id",
-                    cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                    weightCol: String = "weight", idCol: String = "id"): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e = edges.select(col(srcCol).as("id"),
       col(dstCol).as("nid"), col(weightCol).cast("long").as("w"))
-    var dist = cp(sources.select(col(idCol).as("id")).distinct()
+    var dist = Checkpointer(sources.select(col(idCol).as("id")).distinct()
       .withColumn("dist", lit(0L)))
     var h = 0
     while (h < maxHops) {
@@ -104,8 +103,8 @@ object GraphTraversal {
       val relaxed = e.join(dist, Seq("id"))
         .select(col("nid").as("id"), (col("dist") + col("w")).as("dist"))
       val prev = dist
-      dist = cp(prev.union(relaxed).groupBy("id").agg(min("dist").as("dist")))
-      cp.release(prev)
+      dist = Checkpointer(prev.union(relaxed).groupBy("id").agg(min("dist").as("dist")))
+      Checkpointer.release(prev)
     }
     dist
   }
@@ -124,7 +123,7 @@ object GraphTraversal {
     * loop-invariant out-degree table is materialized ONCE before the loop
     * (vertex-sized result over an edge-scale aggregate — the
     * small-data-over-big-subtree case; it feeds two branches every round).
-    * The per-round [[Checkpointer]] (`cp` param) truncates lineage, and
+    * The per-round [[Checkpointer]] truncates lineage, and
     * each round's rank table releases its predecessor so state storage
     * holds one copy, not `iterations` (rank table is vertex-sized; same
     * discipline as [[ConnectedComponents]]).
@@ -135,9 +134,8 @@ object GraphTraversal {
     */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,
                srcCol: String = "src", dstCol: String = "dst",
-               cp: Checkpointer = Checkpointer.Auto,
                tolerance: Option[Double] = None): DataFrame =
-    pageRankWithStats(edges, iterations, damping, srcCol, dstCol, cp, tolerance)._1
+    pageRankWithStats(edges, iterations, damping, srcCol, dstCol, tolerance)._1
 
   /** Personalized PageRank: random walks restart at the `sources` set
     * instead of uniformly — the "importance relative to THESE seeds"
@@ -156,9 +154,8 @@ object GraphTraversal {
   def personalizedPageRank(edges: DataFrame, sources: DataFrame,
                            iterations: Int, damping: Double = 0.85,
                            srcCol: String = "src", dstCol: String = "dst",
-                           idCol: String = "id",
-                           cp: Checkpointer = Checkpointer.Auto): DataFrame =
-    pageRankWithStats(edges, iterations, damping, srcCol, dstCol, cp, None,
+                           idCol: String = "id"): DataFrame =
+    pageRankWithStats(edges, iterations, damping, srcCol, dstCol, None,
       sources = Some(sources.select(col(idCol).as("id"))))._1
 
   /** [[pageRank]] plus the number of update rounds actually executed — the
@@ -171,14 +168,14 @@ object GraphTraversal {
     */
   def pageRankWithStats(edges: DataFrame, iterations: Int, damping: Double = 0.85,
                         srcCol: String = "src", dstCol: String = "dst",
-                        cp: Checkpointer = Checkpointer.Auto,
                         tolerance: Option[Double] = None,
                         sources: Option[DataFrame] = None): (DataFrame, Int) = {
     require(iterations >= 0, "iterations must be >= 0")
     require(damping >= 0.0 && damping <= 1.0, s"damping must be in [0,1]: $damping")
     require(tolerance.forall(_ > 0.0), s"tolerance must be positive: $tolerance")
-    val eRaw = cp(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val verticesRaw = cp(eRaw.select(col("src").as("id"))
+    val eRaw = Checkpointer(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val verticesRaw = Checkpointer(eRaw.select(col("src").as("id"))
       .union(eRaw.select(col("dst").as("id"))).distinct())
     // Dictionary-encode non-integral vertex keys (URI graphs) to dense
     // longs BEFORE the loop: every round shuffles the edge table on its
@@ -193,10 +190,10 @@ object GraphTraversal {
       org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
     val encode = !integral.contains(eRaw.schema("src").dataType)
     val dict = if (encode)
-      Some(cp(verticesRaw.withColumn("vid", monotonically_increasing_id())))
+      Some(Checkpointer(verticesRaw.withColumn("vid", monotonically_increasing_id())))
     else None
     val e = dict match {
-      case Some(d) => cp(eRaw
+      case Some(d) => Checkpointer(eRaw
         .join(d.select(col("id").as("src"), col("vid").as("vsrc")), Seq("src"))
         .join(d.select(col("id").as("dst"), col("vid").as("vdst")), Seq("dst"))
         .select(col("vsrc").as("src"), col("vdst").as("dst")))
@@ -212,7 +209,7 @@ object GraphTraversal {
     // dangling redistribution all read the SAME per-vertex tp column, so
     // the uniform case is bit-identical to the historical formula
     val vtp = sources match {
-      case None => cp(vertices.withColumn("tp", lit(1.0 / n)))
+      case None => Checkpointer(vertices.withColumn("tp", lit(1.0 / n)))
       case Some(srcSet) =>
         val keyed = dict match {
           case Some(d) => srcSet.distinct()
@@ -220,20 +217,20 @@ object GraphTraversal {
             .select(col("__vid").as("id"))
           case None => srcSet.distinct().join(vertices, Seq("id"), "leftsemi")
         }
-        val sMembers = cp(keyed.withColumn("__src", lit(1)))
+        val sMembers = Checkpointer(keyed.withColumn("__src", lit(1)))
         val sCount = sMembers.count()
         require(sCount > 0,
           "personalized teleport: no source id is a vertex of the graph — " +
             "an all-zero teleport vector would silently drain all rank mass")
-        cp(vertices.join(sMembers, Seq("id"), "left")
+        Checkpointer(vertices.join(sMembers, Seq("id"), "left")
           .withColumn("tp",
             when(col("__src").isNotNull, lit(1.0 / sCount)).otherwise(lit(0.0)))
           .select(col("id"), col("tp")))
     }
-    if (encode) cp.release(eRaw) // loop reads only the encoded edge table
-    if (encode) cp.release(verticesRaw) // dict carries the id mapping
-    val outDeg = cp(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg")))
-    var ranks = cp(vtp.select(col("id"), col("tp").as("rank")))
+    if (encode) Checkpointer.release(eRaw) // loop reads only the encoded edge table
+    if (encode) Checkpointer.release(verticesRaw) // dict carries the id mapping
+    val outDeg = Checkpointer(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg")))
+    var ranks = Checkpointer(vtp.select(col("id"), col("tp").as("rank")))
     var i = 0
     var converged = false
     while (i < iterations && !converged) {
@@ -257,7 +254,7 @@ object GraphTraversal {
         else
           lit(1.0 - damping) * col("tp") +
             lit(damping) * (coalesce(col("inbound"), lit(0.0)) + col("dm") * col("tp"))
-      ranks = cp(vtp
+      ranks = Checkpointer(vtp
         .join(contribs, Seq("id"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"), rankExpr.as("rank")))
@@ -269,7 +266,7 @@ object GraphTraversal {
           .head().getDouble(0)
         if (delta < tol) converged = true
       }
-      cp.release(prev)
+      Checkpointer.release(prev)
     }
     // decode back to the caller's vertex keys (vertex-sized join, once)
     val out = dict match {
@@ -299,9 +296,8 @@ object GraphTraversal {
     * mis-planned-broadcast lesson); all joins are equi-joins on vertex keys.
     */
   def triangleCounts(edges: DataFrame, srcCol: String = "src",
-                     dstCol: String = "dst",
-                     cp: Checkpointer = Checkpointer.Auto): DataFrame = {
-    val (deg, perVertex) = triangleCore(edges, srcCol, dstCol, cp)
+                     dstCol: String = "dst"): DataFrame = {
+    val (deg, perVertex) = triangleCore(edges, srcCol, dstCol)
     deg.select(col("v").as("id"))
       .join(perVertex.withColumnRenamed("v", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
@@ -315,9 +311,8 @@ object GraphTraversal {
     * deterministic. Output: (`id`, `degree`, `n_triangles`, `coeff`).
     */
   def clusteringCoefficients(edges: DataFrame, srcCol: String = "src",
-                             dstCol: String = "dst",
-                             cp: Checkpointer = Checkpointer.Auto): DataFrame = {
-    val (deg, perVertex) = triangleCore(edges, srcCol, dstCol, cp)
+                             dstCol: String = "dst"): DataFrame = {
+    val (deg, perVertex) = triangleCore(edges, srcCol, dstCol)
     deg.select(col("v").as("id"), col("deg").as("degree"))
       .join(perVertex.withColumnRenamed("v", "id"), Seq("id"), "left")
       .select(col("id"), col("degree"),
@@ -333,15 +328,15 @@ object GraphTraversal {
     * undirected edge set, per-vertex triangle counts). See
     * [[triangleCounts]] for the orientation/wedge plan shape notes.
     */
-  private def triangleCore(edges: DataFrame, srcCol: String, dstCol: String,
-                           cp: Checkpointer): (DataFrame, DataFrame) = {
+  private def triangleCore(edges: DataFrame, srcCol: String,
+                           dstCol: String): (DataFrame, DataFrame) = {
     // und feeds two consumers (degrees + orientation) and oriented feeds
     // THREE (both wedge sides + the closing-edge probe): materialize each
     // once via the Checkpointer — the formatted plan otherwise re-executes
     // the whole normalize/degree subtree per consumer whenever exchange
-    // reuse fails (the lshCandidates lesson; Checkpointer.Auto upgrades to
+    // reuse fails (the lshCandidates lesson; the Checkpointer writes
     // reliable checkpoints once a checkpoint dir is configured).
-    val und = cp(edges
+    val und = Checkpointer(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -355,7 +350,7 @@ object GraphTraversal {
       .join(deg.withColumnsRenamed(Map("v" -> "b", "deg" -> "deg_b")), Seq("b"))
       .withColumn("fwd",
         col("deg_a") < col("deg_b") || (col("deg_a") === col("deg_b") && col("a") < col("b")))
-    val oriented = cp(aFirst.select(
+    val oriented = Checkpointer(aFirst.select(
       when(col("fwd"), col("a")).otherwise(col("b")).as("u"),
       when(col("fwd"), col("b")).otherwise(col("a")).as("v"),
       when(col("fwd"), col("deg_b")).otherwise(col("deg_a")).as("deg_v")))
@@ -395,11 +390,10 @@ object GraphTraversal {
     * round via [[Checkpointer]], one live edge-table copy at a time.
     */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
-            dstCol: String = "dst", maxIter: Int = 50,
-            cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+            dstCol: String = "dst", maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    var e = cp(edges
+    var e = Checkpointer(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -411,11 +405,11 @@ object GraphTraversal {
       val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy("v").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("v")
-      val next = cp(e
+      val next = Checkpointer(e
         .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi"))
       val nNext = next.count()
-      cp.release(e)
+      Checkpointer.release(e)
       e = next
       rounds += 1
       if (nNext == nEdges) converged = true
@@ -451,8 +445,7 @@ object GraphTraversal {
     * [[Checkpointer]].
     */
   def kTruss(edges: DataFrame, k: Int, srcCol: String = "src",
-             dstCol: String = "dst", maxIter: Int = 50,
-             cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+             dstCol: String = "dst", maxIter: Int = 50): DataFrame = {
     require(k >= 3, s"kTruss: k must be >= 3 (k=2 keeps every edge): $k")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     // per-edge triangle support over a canonical (a<b) edge set
@@ -465,7 +458,7 @@ object GraphTraversal {
         .withColumn("fwd",
           col("deg_a") < col("deg_b") ||
             (col("deg_a") === col("deg_b") && col("a") < col("b")))
-      val oriented = cp(aFirst.select(
+      val oriented = Checkpointer(aFirst.select(
         when(col("fwd"), col("a")).otherwise(col("b")).as("u"),
         when(col("fwd"), col("b")).otherwise(col("a")).as("v"),
         when(col("fwd"), col("deg_b")).otherwise(col("deg_a")).as("deg_v")))
@@ -476,17 +469,17 @@ object GraphTraversal {
           (col("deg_x") === col("deg_y") && col("x") < col("y")))
         .join(oriented.select(col("u").as("x"), col("v").as("y")).hint("merge"),
           Seq("x", "y"), "left_semi")
-      val sup = cp(tri.select(explode(array(
+      val sup = Checkpointer(tri.select(explode(array(
           struct(least(col("u"), col("x")).as("a"), greatest(col("u"), col("x")).as("b")),
           struct(least(col("u"), col("y")).as("a"), greatest(col("u"), col("y")).as("b")),
           struct(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))))
           .as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("support")))
-      cp.release(oriented)
+      Checkpointer.release(oriented)
       sup
     }
-    var e = cp(edges
+    var e = Checkpointer(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -495,16 +488,16 @@ object GraphTraversal {
     var rounds = 0
     while (nEdges > 0 && rounds < maxIter) {
       val sup = support(e)
-      val next = cp(e.join(sup.filter(col("support") >= k - 2)
+      val next = Checkpointer(e.join(sup.filter(col("support") >= k - 2)
         .select("a", "b"), Seq("a", "b"), "left_semi"))
       val nNext = next.count()
       if (nNext == nEdges) {
         // fixpoint: the support just computed IS the truss support
-        val out = cp(e.join(sup, Seq("a", "b")))
-        cp.release(sup); cp.release(next); cp.release(e)
+        val out = Checkpointer(e.join(sup, Seq("a", "b")))
+        Seq(sup, next, e).foreach(Checkpointer.release)
         return out
       }
-      cp.release(sup); cp.release(e)
+      Seq(sup, e).foreach(Checkpointer.release)
       e = next
       rounds += 1
       nEdges = nNext
@@ -540,12 +533,11 @@ object GraphTraversal {
     */
   def neighborJaccard(edges: DataFrame, minJaccardPct: Int,
                       maxPivotDegree: Long,
-                      srcCol: String = "src", dstCol: String = "dst",
-                      cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(minJaccardPct >= 0 && minJaccardPct <= 100,
       s"minJaccardPct must be in [0,100]: $minJaccardPct")
     require(maxPivotDegree >= 1, s"maxPivotDegree must be >= 1: $maxPivotDegree")
-    val und = cp(edges
+    val und = Checkpointer(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -592,10 +584,9 @@ object GraphTraversal {
     */
   def resourceAllocation(edges: DataFrame, maxPivotDegree: Long,
                          minRaMicro: Long = 0L,
-                         srcCol: String = "src", dstCol: String = "dst",
-                         cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                         srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(maxPivotDegree >= 1, s"maxPivotDegree must be >= 1: $maxPivotDegree")
-    val und = cp(edges
+    val und = Checkpointer(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -650,29 +641,24 @@ object GraphTraversal {
     * both output columns decode back through vertex-sized joins.
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
-                       srcCol: String = "src", dstCol: String = "dst",
-                       cp: Checkpointer = Checkpointer.Auto,
-                       encodeKeys: Boolean = true): DataFrame = {
+                       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
     val eCaller = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val integral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
-    // encodeKeys=false runs the vote loop directly on the caller's keys —
-    // a measurement knob (ScaleProbe `lpaRounds` A/B quantifies the
-    // string-key shuffle cost), not a production path
-    if (integral.contains(eCaller.schema("src").dataType) || !encodeKeys)
-      return lpaRounds(eCaller, rounds, cp)
-    val eRaw = cp(eCaller.distinct())
+    if (integral.contains(eCaller.schema("src").dataType))
+      return lpaRounds(eCaller, rounds)
+    val eRaw = Checkpointer(eCaller.distinct())
     val keys = eRaw.select(col("src").as("id"))
       .union(eRaw.select(col("dst").as("id"))).distinct()
-    val dict = cp(orderPreservingIds(keys))
-    val e = cp(eRaw
+    val dict = Checkpointer(orderPreservingIds(keys))
+    val e = Checkpointer(eRaw
       .join(dict.select(col("id").as("src"), col("vid").as("vsrc")), Seq("src"))
       .join(dict.select(col("id").as("dst"), col("vid").as("vdst")), Seq("dst"))
       .select(col("vsrc").as("src"), col("vdst").as("dst")))
-    cp.release(eRaw) // the loop reads only the encoded edge table
-    val enc = lpaRounds(e, rounds, cp)
+    Checkpointer.release(eRaw) // the loop reads only the encoded edge table
+    val enc = lpaRounds(e, rounds)
     // decode BOTH columns back to caller keys (vertex-sized joins, once);
     // order preservation already guaranteed min(vid-label) = min(key-label)
     enc
@@ -718,9 +704,7 @@ object GraphTraversal {
     * Returns (`id`, `community`) for every vertex with an edge.
     */
   def louvainLevel(edges: DataFrame, rounds: Int,
-                   srcCol: String = "src", dstCol: String = "dst",
-                   cp: Checkpointer = Checkpointer.Auto,
-                   encodeKeys: Boolean = true): DataFrame = {
+                   srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
     val eCaller = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val integral = Set[org.apache.spark.sql.types.DataType](
@@ -737,18 +721,18 @@ object GraphTraversal {
         s"${eCaller.schema("src").dataType.simpleString}, $dstCol: " +
         s"${eCaller.schema("dst").dataType.simpleString}) — both endpoints " +
         "must be integral, or both non-integral (dictionary-encoded)")
-    if (srcInt || !encodeKeys)
-      return louvainRounds(eCaller, rounds, cp)
-    val eRaw = cp(eCaller.distinct())
+    if (srcInt)
+      return louvainRounds(eCaller, rounds)
+    val eRaw = Checkpointer(eCaller.distinct())
     val keys = eRaw.select(col("src").as("id"))
       .union(eRaw.select(col("dst").as("id"))).distinct()
-    val dict = cp(orderPreservingIds(keys))
-    val e = cp(eRaw
+    val dict = Checkpointer(orderPreservingIds(keys))
+    val e = Checkpointer(eRaw
       .join(dict.select(col("id").as("src"), col("vid").as("vsrc")), Seq("src"))
       .join(dict.select(col("id").as("dst"), col("vid").as("vdst")), Seq("dst"))
       .select(col("vsrc").as("src"), col("vdst").as("dst")))
-    cp.release(eRaw)
-    val enc = louvainRounds(e, rounds, cp)
+    Checkpointer.release(eRaw)
+    val enc = louvainRounds(e, rounds)
     enc
       .join(dict.select(col("vid").as("id"), col("id").as("__id_key")), Seq("id"))
       .join(dict.select(col("vid").as("community"), col("id").as("__comm_key")),
@@ -761,14 +745,14 @@ object GraphTraversal {
     * [[louvainWeightedLevel]] (counts ARE unit-weight sums) — see
     * [[louvainLevel]] for semantics.
     */
-  private def louvainRounds(eRaw: DataFrame, rounds: Int, cp: Checkpointer): DataFrame =
+  private def louvainRounds(eRaw: DataFrame, rounds: Int): DataFrame =
     louvainWeightedLevel(
       eRaw.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .distinct()
         .withColumn("w", lit(1L)),
-      rounds, cp)
+      rounds)
 
   /** One WEIGHTED Louvain level over a contracted graph — the second half
     * of the Louvain pyramid: after [[louvainLevel]] assigns communities,
@@ -786,20 +770,19 @@ object GraphTraversal {
     * a ≤ b; integral node ids (contracted graphs are — community ids are
     * vertex ids). Returns (`id`, `community`).
     */
-  def louvainWeightedLevel(wedges: DataFrame, rounds: Int,
-                           cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+  def louvainWeightedLevel(wedges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    val we = cp(wedges.select(col("a"), col("b"), col("w").cast("long").as("w")))
-    val sym = cp(we.filter(col("a") =!= col("b"))
+    val we = Checkpointer(wedges.select(col("a"), col("b"), col("w").cast("long").as("w")))
+    val sym = Checkpointer(we.filter(col("a") =!= col("b"))
       .select(col("a").as("src"), col("b").as("dst"), col("w"))
       .union(we.filter(col("a") =!= col("b"))
         .select(col("b").as("src"), col("a").as("dst"), col("w"))))
     val wRow = we.agg(sum(col("w")).as("m")) // 1 row — broadcast into gains
-    val str = cp(sym.select(col("src").as("id"), col("w"))
+    val str = Checkpointer(sym.select(col("src").as("id"), col("w"))
       .unionByName(we.filter(col("a") === col("b"))
         .select(col("a").as("id"), (col("w") * 2).as("w")))
       .groupBy("id").agg(sum(col("w")).as("dv")))
-    var cur = cp(str.select(col("id"), col("id").as("community")))
+    var cur = Checkpointer(str.select(col("id"), col("id").as("community")))
     for (r <- 0 until rounds) {
       val tot = cur.join(str, Seq("id"))
         .groupBy("community").agg(sum(col("dv")).as("tot"))
@@ -833,14 +816,14 @@ object GraphTraversal {
         .filter(col("gain") === col("mg"))
         .groupBy(col("v").as("id")).agg(min(col("community")).as("new_comm"))
       val prev = cur
-      cur = cp(cur.select(col("id"), col("community").as("old_comm"))
+      cur = Checkpointer(cur.select(col("id"), col("community").as("old_comm"))
         .join(chosen, Seq("id"))
         .select(col("id"),
           when(pmod(col("id"), lit(2L)) === lit(r % 2), col("new_comm"))
             .otherwise(col("old_comm")).as("community")))
-      cp.release(prev)
+      Checkpointer.release(prev)
     }
-    cp.release(we); cp.release(sym); cp.release(str)
+    Seq(we, sym, str).foreach(Checkpointer.release)
     cur
   }
 
@@ -880,17 +863,16 @@ object GraphTraversal {
     * community (intra edges never cross communities, so one global CC run
     * labels all communities at once — no per-community orchestration) +
     * the CC star-contraction rounds (O(log² n), edge-scale shuffles,
-    * lineage truncated via `cp`).
+    * lineage truncated by [[Checkpointer]]).
     */
-  def leidenRefine(und: DataFrame, labels: DataFrame,
-                   cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+  def leidenRefine(und: DataFrame, labels: DataFrame): DataFrame = {
     val intra = und
       .join(labels.select(col("id").as("a"), col("community").as("__ca")), Seq("a"))
       .join(labels.select(col("id").as("b"), col("community").as("__cb")), Seq("b"))
       .filter(col("__ca") === col("__cb"))
       .select(col("a"), col("b"))
     ConnectedComponents.components(intra, "a", "b",
-        vertices = Some(labels.select(col("id"))), idCol = "id", cp = cp)
+        vertices = Some(labels.select(col("id"))), idCol = "id")
       .select(col("id"), col("component").as("community"))
   }
 
@@ -945,13 +927,12 @@ object GraphTraversal {
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", vertices: Option[DataFrame] = None,
       idCol: String = "id", maxOuter: Int = 20, maxProp: Int = 60,
-      cp: Checkpointer = Checkpointer.Auto, maxTrim: Int = 64,
-      stats: Option[SccStats] = None): DataFrame = {
+      maxTrim: Int = 64, stats: Option[SccStats] = None): DataFrame = {
     // lazy pair, materialized together by the vertex count (no truncated
-    // input is released before it, so the lazy-cp contract holds)
-    var rem = cp.lazily(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    // input is released before it, so the lazy-checkpoint contract holds)
+    var rem = Checkpointer.lazily(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull).distinct())
-    var remV = cp.lazily(rem.select(col("src").as("id"))
+    var remV = Checkpointer.lazily(rem.select(col("src").as("id"))
       .union(rem.select(col("dst").as("id"))).distinct())
     var nRem = remV.count()
     val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -974,28 +955,28 @@ object GraphTraversal {
       while (peeled && t < maxTrim && nRem > 0) {
         // LAZY checkpoints, materialized inside the two counts this
         // iteration already needs (triv size; nextE before the releases) —
-        // 2 driver jobs per peel instead of 4 eager-cp+count jobs (the
+        // 2 driver jobs per peel instead of 4 eager-checkpoint+count jobs (the
         // ConnectedComponents batched-round discipline; ~60 ms fixed
         // latency per job dominates these fringe-sized frames, and trim
         // iterations are the bulk of this operator's job count — profiled
         // r17: 218 jobs / 7.5 s at sf0.1)
-        val triv = cp.lazily(remV
+        val triv = Checkpointer.lazily(remV
           .join(rem.select(col("dst").as("id")), Seq("id"), "left_anti")
           .union(remV.join(rem.select(col("src").as("id")), Seq("id"), "left_anti"))
           .distinct())
         val nTriv = triv.count()
-        if (nTriv == 0) { cp.release(triv); peeled = false }
+        if (nTriv == 0) { Checkpointer.release(triv); peeled = false }
         else {
           done += triv.select(col("id"), col("id").as("scc"))
-          val nextV = cp.lazily(remV.join(triv, Seq("id"), "left_anti"))
-          val nextE = cp.lazily(rem
+          val nextV = Checkpointer.lazily(remV.join(triv, Seq("id"), "left_anti"))
+          val nextE = Checkpointer.lazily(rem
             .join(nextV.select(col("id").as("src")), Seq("src"), "left_semi")
             .join(nextV.select(col("id").as("dst")), Seq("dst"), "left_semi"))
           // one all-partition action materializes nextV and nextE BEFORE
-          // their truncated-lineage inputs are released (the lazy-cp
+          // their truncated-lineage inputs are released (the lazy-checkpoint
           // safety contract)
           nextE.count()
-          cp.release(remV); cp.release(rem)
+          Seq(remV, rem).foreach(Checkpointer.release)
           remV = nextV; rem = nextE
           nRem -= nTriv
           stats.foreach { st => st.trimIterations += 1; st.trimAssigned += nTriv }
@@ -1011,27 +992,27 @@ object GraphTraversal {
         // cluster idle, and the two fixpoints' jobs back-fill each other.
         // Spark's FIFO scheduler interleaves them; results are unchanged
         // (each fixpoint is deterministic and shares no mutable state —
-        // Checkpointer strategies are stateless objects).
+        // the Checkpointer is one stateless object).
         val fwdF = scala.concurrent.Future(
-          minPropagate(rem, remV, reversed = false, maxProp, cp))(
+          minPropagate(rem, remV, reversed = false, maxProp))(
           scala.concurrent.ExecutionContext.global)
-        val bwd = minPropagate(rem, remV, reversed = true, maxProp, cp)
+        val bwd = minPropagate(rem, remV, reversed = true, maxProp)
         val fwd = scala.concurrent.Await.result(
           fwdF, scala.concurrent.duration.Duration.Inf)
         // same 2-action batching as the trim loop: nextE's count
         // materializes assigned → nextV → nextE before any release; the
         // remaining-vertex count then reads nextV's materialized blocks
-        val assigned = cp.lazily(
+        val assigned = Checkpointer.lazily(
           fwd.join(bwd.withColumnsRenamed(Map("lab" -> "blab")), Seq("id"))
             .filter(col("lab") === col("blab"))
             .select(col("id"), col("lab").as("scc")))
         done += assigned
-        val nextV = cp.lazily(remV.join(assigned, Seq("id"), "left_anti"))
-        val nextE = cp.lazily(rem
+        val nextV = Checkpointer.lazily(remV.join(assigned, Seq("id"), "left_anti"))
+        val nextE = Checkpointer.lazily(rem
           .join(nextV.select(col("id").as("src")), Seq("src"), "left_semi")
           .join(nextV.select(col("id").as("dst")), Seq("dst"), "left_semi"))
         nextE.count()
-        cp.release(fwd); cp.release(bwd); cp.release(remV); cp.release(rem)
+        Seq(fwd, bwd, remV, rem).foreach(Checkpointer.release)
         remV = nextV
         rem = nextE
         val before = nRem
@@ -1063,7 +1044,7 @@ object GraphTraversal {
     * convergence test; throws after `maxProp` rounds.
     */
   private def minPropagate(e: DataFrame, verts: DataFrame, reversed: Boolean,
-                           maxProp: Int, cp: Checkpointer): DataFrame = {
+                           maxProp: Int): DataFrame = {
     val ed = if (reversed) e.select(col("dst").as("src"), col("src").as("dst")) else e
     // (r17 note: pre-hash-partitioning `ed` on the join key once per
     // fixpoint — guide §2.4, one exchange for the fixed side — was tried
@@ -1073,7 +1054,7 @@ object GraphTraversal {
     // materialization per fixpoint; the broadcast-sized label side never
     // paid an edge re-exchange to begin with once AQE plans the round's
     // join as broadcast.)
-    var labels = cp(verts.withColumn("lab", col("id")))
+    var labels = Checkpointer(verts.withColumn("lab", col("id")))
     def fp(df: DataFrame): BigDecimal = BigDecimal(
       df.agg(coalesce(sum(xxhash64(col("id"), col("lab"))
           .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0)))
@@ -1088,7 +1069,7 @@ object GraphTraversal {
     // straddling convergence re-emits the converged labeling and the
     // batch-end fingerprint stabilizes one comparison later. The
     // fingerprint materializes `next` BEFORE the superseded labels are
-    // released (the lazy-cp safety contract).
+    // released (the lazy-checkpoint safety contract).
     //
     // (Round-13 note: VALUE-pointer jumping — lab(v) ← min(lab(v),
     // lab(lab(v))) — was prototyped here and REVERTED: it is sound
@@ -1109,9 +1090,9 @@ object GraphTraversal {
         nl = nl.join(msgs, Seq("id"), "left")
           .select(col("id"), least(col("lab"), coalesce(col("mlab"), col("lab"))).as("lab"))
       }
-      val next = cp.lazily(nl)
+      val next = Checkpointer.lazily(nl)
       val nfp = fp(next)
-      cp.release(labels)
+      Checkpointer.release(labels)
       labels = next
       if (nfp == prev) return labels
       prev = nfp
@@ -1132,12 +1113,12 @@ object GraphTraversal {
   /** The synchronous LPA vote loop on an already-encoded (or natively
     * integral) edge table — see [[labelPropagation]] for semantics.
     */
-  private def lpaRounds(eRaw: DataFrame, rounds: Int, cp: Checkpointer): DataFrame = {
-    val sym = cp(eRaw
+  private def lpaRounds(eRaw: DataFrame, rounds: Int): DataFrame = {
+    val sym = Checkpointer(eRaw
       .union(eRaw.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct())
-    var labels = cp(sym.select(col("src").as("id")).distinct()
+    var labels = Checkpointer(sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     for (_ <- 0 until rounds) {
       val votes = sym
@@ -1146,11 +1127,11 @@ object GraphTraversal {
         .agg(count(lit(1)).as("cnt"))
       val best = votes.groupBy("src").agg(max(col("cnt")).as("m"))
       val prev = labels
-      labels = cp(votes.join(best, Seq("src"))
+      labels = Checkpointer(votes.join(best, Seq("src"))
         .filter(col("cnt") === col("m"))
         .groupBy(col("src").as("id"))
         .agg(min(col("label")).as("label")))
-      cp.release(prev)
+      Checkpointer.release(prev)
     }
     labels
   }
@@ -1181,30 +1162,29 @@ object GraphTraversal {
     * per-round lineage; one live (a, h) pair at a time.
     */
   def hits(edges: DataFrame, rounds: Int,
-           srcCol: String = "src", dstCol: String = "dst",
-           cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    // cp the deduped edge table so its distinct() shuffle runs once, not
+    // checkpoint the deduped edge table so its distinct() shuffle runs once, not
     // twice per round under the two per-round joins (pageRank discipline)
-    val e = cp(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val vertices = cp(e.select(col("src").as("id"))
+    val e = Checkpointer(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val vertices = Checkpointer(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     var h = vertices.withColumn("s", lit(1L))
     var a: DataFrame = null
     var live = List.empty[DataFrame]
     for (_ <- 1 to rounds) {
-      val aNext = cp(e.join(h.select(col("id").as("src"), col("s")), Seq("src"))
+      val aNext = Checkpointer(e.join(h.select(col("id").as("src"), col("s")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("s")).as("s")))
-      val hNext = cp(e.join(aNext.select(col("id").as("dst"), col("s")), Seq("dst"))
+      val hNext = Checkpointer(e.join(aNext.select(col("id").as("dst"), col("s")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(sum(col("s")).as("s")))
-      live.foreach(cp.release)
+      live.foreach(Checkpointer.release)
       live = List(aNext, hNext)
       a = aNext
       h = hNext
     }
-    // the returned plan reads only vertices and the (cp'd) final a/h —
+    // the returned plan reads only vertices and the (checkpointed) final a/h —
     // the edge table is no longer referenced and can release its blocks
-    cp.release(e)
+    Checkpointer.release(e)
     val out = vertices
       .join(h.select(col("id"), col("s").as("hub")), Seq("id"), "left")
       .join(a.select(col("id"), col("s").as("auth")), Seq("id"), "left")
@@ -1268,13 +1248,12 @@ object GraphTraversal {
     * fixed-size HLL register set instead of the pair set.
     */
   def neighborhoodFunction(edges: DataFrame, maxT: Int,
-                           srcCol: String = "src", dstCol: String = "dst",
-                           cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(maxT >= 0, "neighborhoodFunction: maxT must be >= 0")
     val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("w"), col(dstCol).as("nw")).distinct()
     val verts = e.select(col("w").as("u")).union(e.select(col("nw").as("u"))).distinct()
-    var visited = cp(verts.select(col("u"), col("u").as("w")))
+    var visited = Checkpointer(verts.select(col("u"), col("u").as("w")))
     var frontier = visited
     var frontierCp: Option[DataFrame] = None
     val counts = Array.ofDim[Long](maxT + 1)
@@ -1283,7 +1262,7 @@ object GraphTraversal {
     var exhausted = false
     while (t < maxT && !exhausted) {
       t += 1
-      val next = cp(frontier.join(e, Seq("w"))
+      val next = Checkpointer(frontier.join(e, Seq("w"))
         .select(col("u"), col("nw").as("w")).distinct()
         .join(visited, Seq("u", "w"), "left_anti"))
       val n = next.count()
@@ -1291,22 +1270,22 @@ object GraphTraversal {
         // frontier exhausted: every later N(t) equals N(t-1) — backfill and
         // stop instead of re-running the identical join per remaining round
         // just to rediscover an empty set
-        cp.release(next)
+        Checkpointer.release(next)
         for (r <- t to maxT) counts(r) = counts(t - 1)
         exhausted = true
       }
       else {
         counts(t) = counts(t - 1) + n
         val prevVisited = visited
-        visited = cp(visited.union(next))
-        cp.release(prevVisited)
-        frontierCp.foreach(cp.release)
+        visited = Checkpointer(visited.union(next))
+        Checkpointer.release(prevVisited)
+        frontierCp.foreach(Checkpointer.release)
         frontierCp = Some(next)
         frontier = next
       }
     }
-    frontierCp.foreach(cp.release)
-    cp.release(visited)
+    frontierCp.foreach(Checkpointer.release)
+    Checkpointer.release(visited)
     import spark.implicits._
     counts.zipWithIndex.map { case (n, i) => (i, n) }.toSeq
       .toDF("t", "n_pairs")
@@ -1331,13 +1310,12 @@ object GraphTraversal {
     * graphs and entries guard a tolerance.
     */
   def hyperBall(edges: DataFrame, maxT: Int, lgK: Int = 12,
-                srcCol: String = "src", dstCol: String = "dst",
-                cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(maxT >= 0, "hyperBall: maxT must be >= 0")
     val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("id"), col(dstCol).as("nid")).distinct()
     val verts = e.select(col("id")).union(e.select(col("nid").as("id"))).distinct()
-    var counters = cp(verts.groupBy("id")
+    var counters = Checkpointer(verts.groupBy("id")
       .agg(expr(s"hll_sketch_agg(id, $lgK)").as("sk")))
     def estSum(c: DataFrame): Long = c
       .agg(sum(expr("hll_sketch_estimate(sk)"))).head.getLong(0)
@@ -1347,12 +1325,12 @@ object GraphTraversal {
       val contrib = e.join(counters.select(col("id").as("nid"), col("sk")), Seq("nid"))
         .select(col("id"), col("sk"))
       val prev = counters
-      counters = cp(counters.select(col("id"), col("sk")).union(contrib)
+      counters = Checkpointer(counters.select(col("id"), col("sk")).union(contrib)
         .groupBy("id").agg(expr("hll_union_agg(sk)").as("sk")))
       ests(t) = estSum(counters)
-      cp.release(prev)
+      Checkpointer.release(prev)
     }
-    cp.release(counters)
+    Checkpointer.release(counters)
     import spark.implicits._
     ests.zipWithIndex.map { case (n, i) => (i, n) }.toSeq
       .toDF("t", "n_est")
@@ -1447,12 +1425,11 @@ object GraphTraversal {
     * for global reports.
     */
   def shortestPathCounts(edges: DataFrame, maxT: Int,
-                         srcCol: String = "src", dstCol: String = "dst",
-                         cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                         srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(maxT >= 0, "shortestPathCounts: maxT must be >= 0")
     val e = edges.select(col(srcCol).as("w"), col(dstCol).as("nw")).distinct()
     val verts = e.select(col("w").as("u")).union(e.select(col("nw").as("u"))).distinct()
-    val first = cp(verts.select(col("u").as("src"), col("u").as("w"),
+    val first = Checkpointer(verts.select(col("u").as("src"), col("u").as("w"),
       lit(0).as("dist"), lit(1L).as("sigma")))
     var visited = first
     var frontier = first
@@ -1462,19 +1439,19 @@ object GraphTraversal {
     var exhausted = false
     while (t < maxT && !exhausted) {
       t += 1
-      val next = cp(frontier.join(e, Seq("w"))
+      val next = Checkpointer(frontier.join(e, Seq("w"))
         .groupBy(col("src"), col("nw").as("w"))
         .agg(sum(col("sigma")).as("sigma"))
         .join(visited.select("src", "w"), Seq("src", "w"), "left_anti")
         .select(col("src"), col("w"), lit(t).as("dist"), col("sigma")))
-      if (next.isEmpty) { cp.release(next); exhausted = true }
+      if (next.isEmpty) { Checkpointer.release(next); exhausted = true }
       else {
         val prevVisited = visited
-        visited = cp(visited.union(next))
+        visited = Checkpointer(visited.union(next))
         // the first frame doubles as outs(0) — it must survive until the
         // final union is pinned; intermediate union accumulators are pure
         // anti-join state and release immediately
-        if (!(prevVisited eq first)) cp.release(prevVisited)
+        if (!(prevVisited eq first)) Checkpointer.release(prevVisited)
         outs += next
         frontier = next
       }
@@ -1482,9 +1459,9 @@ object GraphTraversal {
     // pin one copy of the output, THEN release every per-round frame (the
     // hyperBallExplicit lifecycle discipline)
     val roundFrames = outs.result()
-    val out = cp(roundFrames.reduce(_ unionByName _))
-    if (!(visited eq first)) cp.release(visited)
-    roundFrames.foreach(cp.release)
+    val out = Checkpointer(roundFrames.reduce(_ unionByName _))
+    if (!(visited eq first)) Checkpointer.release(visited)
+    roundFrames.foreach(Checkpointer.release)
     out
   }
 
@@ -1502,9 +1479,8 @@ object GraphTraversal {
     * guard. Output: (`id`, `stress`) for EVERY vertex (0 when on no path).
     */
   def stressCentrality(edges: DataFrame, maxT: Int,
-                       srcCol: String = "src", dstCol: String = "dst",
-                       cp: Checkpointer = Checkpointer.Auto): DataFrame = {
-    val sp = shortestPathCounts(edges, maxT, srcCol, dstCol, cp)
+                       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+    val sp = shortestPathCounts(edges, maxT, srcCol, dstCol)
     val a = sp.select(col("src").as("s"), col("w").as("v"),
       col("dist").as("d1"), col("sigma").as("sig1"))
       .filter(col("s") =!= col("v"))
@@ -1539,9 +1515,9 @@ object GraphTraversal {
     // pin the (vertex-sized) result BEFORE releasing sp — releasing a
     // local-checkpointed frame a lazy consumer still reads would drop its
     // only copy
-    val out = cp(verts.join(st, Seq("id"), "left")
+    val out = Checkpointer(verts.join(st, Seq("id"), "left")
       .na.fill(0L, Seq("stress")))
-    cp.release(sp)
+    Checkpointer.release(sp)
     out
   }
 
@@ -1564,8 +1540,7 @@ object GraphTraversal {
     * div S·2^F (F = 34 keeps every term in Long range for lgK ≤ 4).
     */
   def hyperBallExplicit(edges: DataFrame, maxT: Int, lgK: Int = 4,
-                        srcCol: String = "src", dstCol: String = "dst",
-                        cp: Checkpointer = Checkpointer.Auto): DataFrame = {
+                        srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(maxT >= 0, "hyperBallExplicit: maxT must be >= 0")
     require(lgK >= 1 && lgK <= 12, s"hyperBallExplicit: lgK out of range: $lgK")
     val m = 1 << lgK
@@ -1576,7 +1551,7 @@ object GraphTraversal {
     // Spark and DuckDB), 33 when the window is all zeros
     val hx = md5(concat(lit("hb:"), col("id").cast("string")))
     val v32 = conv(substring(hx, 13, 8), 16, 10).cast("long")
-    var state = cp(verts.select(col("id"),
+    var state = Checkpointer(verts.select(col("id"),
       (conv(substring(hx, 1, 12), 16, 10).cast("long") % m).as("j"),
       when(v32 === 0L, lit(33L))
         .otherwise(lit(33L) - length(bin(v32))).cast("long").as("r")))
@@ -1588,7 +1563,7 @@ object GraphTraversal {
       val contrib = e.join(state.select(col("id").as("nid"), col("j"), col("r")),
           Seq("nid"))
         .select(col("id"), col("j"), col("r"))
-      state = cp(state.union(contrib).groupBy("id", "j").agg(max("r").as("r"))
+      state = Checkpointer(state.union(contrib).groupBy("id", "j").agg(max("r").as("r"))
         .select("id", "j", "r"))
       states += state
       rounds += state.withColumn("t", lit(t))
@@ -1598,8 +1573,8 @@ object GraphTraversal {
     // this the maxT+1 intermediate block sets stay pinned for the life of
     // the session (the cross-query contamination class). Callers may
     // unpersist the returned frame when done.
-    val out = cp(rounds.result().reduce(_ union _).select("t", "id", "j", "r"))
-    states.result().foreach(cp.release)
+    val out = Checkpointer(rounds.result().reduce(_ union _).select("t", "id", "j", "r"))
+    states.result().foreach(Checkpointer.release)
     out
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    // the forked test JVM's exit is the session's end: remove the dir then
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(wh.toFile))
     System.setProperty("derby.system.home", wh.toString)
     val s = SparkSession.builder()
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
