@@ -49,19 +49,23 @@ object OwlReader {
     * `permissive=true` routes unparseable files to a skip (logged on the
     * executor) instead of failing the job — at corpus scale one corrupt file
     * must not kill the run; pair with [[corruptFiles]] to audit what was
-    * dropped. Default is fail-fast, matching the reference.
+    * dropped. Default is fail-fast, matching the reference, and the failure
+    * names the file (and, for an XML error, its line and column).
     */
   def triples(spark: SparkSession, paths: Seq[String], permissive: Boolean = false): Dataset[TripleRow] = {
     import spark.implicits._
     binaryFiles(spark, paths).flatMap { case (name, bytes) =>
-      if (!permissive) parseTriples(name, bytes)
-      else
-        try parseTriples(name, bytes)
-        catch {
-          case e: Exception =>
-            System.err.println(s"[OwlReader] skipping corrupt file $name: ${e.getMessage}")
-            Seq.empty[TripleRow]
-        }
+      try parseTriples(name, bytes)
+      catch {
+        case e: Exception if permissive =>
+          System.err.println(s"[OwlReader] skipping corrupt file $name: ${e.getMessage}")
+          Seq.empty[TripleRow]
+        case e: javax.xml.stream.XMLStreamException if e.getLocation != null =>
+          val at = e.getLocation
+          throw new java.io.IOException(
+            s"cannot parse $name at line ${at.getLineNumber}, column ${at.getColumnNumber}: ${e.getMessage}", e)
+        case e: Exception => throw new java.io.IOException(s"cannot parse $name: ${e.getMessage}", e)
+      }
     }
   }
 

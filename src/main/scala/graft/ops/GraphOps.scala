@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Property-graph construction from the unique triple set (SURVEY.md §2.3 J2,
@@ -38,17 +38,20 @@ object GraphOps {
 
   /** A2/U2: vertex identities — every valid (id, number) appearing as subject
     * or object of any triple (reference: OntologyGraphBuilder.java:141-185).
-    * Output: (id, number), distinct.
+    * Output: (id, number), distinct; tagged triples (TripleOps.InPass2) add
+    * `in_p2`: the vertex appears in a pass-2 triple.
     */
   def vertices(triples: DataFrame): DataFrame = {
-    val nodes = triples.select(explode(array(col("subject"), col("object"))).as("node"))
+    val tagged = TripleOps.isTagged(triples)
+    val flag = if (tagged) Seq(col(TripleOps.InPass2)) else Nil
+    val nodes = triples.select(explode(array(col("subject"), col("object"))).as("node") +: flag: _*)
     val vt = graft.functions.VTupleParse.vtuple(col("node"))
-    nodes
-      .select(vt.getField("id").as("id"), vt.getField("number").as("number"),
-        vt.getField("isValidVertex").as("valid"))
+    val valid = nodes
+      .select(Seq(vt.getField("id").as("id"), vt.getField("number").as("number"),
+        vt.getField("isValidVertex").as("valid")) ++ flag: _*)
       .filter(col("valid"))
-      .select("id", "number")
-      .distinct()
+    if (tagged) valid.groupBy("id", "number").agg(max(col(TripleOps.InPass2)).as(TripleOps.InPass2))
+    else valid.select("id", "number").distinct()
   }
 
   /** U1/F5/F6: vertex attributes from literal-object triples
@@ -62,28 +65,25 @@ object GraphOps {
     * HashSet order is nondeterministic, SURVEY §7.5); `lastWins=false` keeps
     * the full value list (the integration test's intended semantics,
     * OntologyGraphBuilderTest.java:364).
+    *
+    * Tagged triples (TripleOps.InPass2) add `attrs_p2`: the map built from
+    * pass-2 triples in pass-2 provenance order, null where it equals `attrs`.
     */
   def vertexAttributes(triples: DataFrame, roTerms: DataFrame, lastWins: Boolean = false): DataFrame = {
-    val lits = triples.filter(col("obj_is_literal"))
-    val vt = graft.functions.VTupleParse.vtuple(col("subject"))
-    val subj = lits
-      .withColumn("id", vt.getField("id"))
-      .withColumn("number", vt.getField("number"))
-      .withColumn("__valid", vt.getField("isValidVertex"))
-      .filter(col("__valid"))
-    val labeled = resolvePredicateLabels(subj, roTerms)
-      .select(col("id"), col("number"), col("label").as("attribute"),
-        col("obj_lexical").as("value"), col("src_file"), col("stmt_idx"))
-    val perAttr = labeled
-      .groupBy("id", "number", "attribute")
-      .agg(sort_array(collect_list(struct(col("src_file"), col("stmt_idx"), col("value")))).as("ord"))
-      .withColumn("values",
-        if (lastWins) slice(transform(col("ord"), _.getField("value")), -1, 1)
-        else transform(col("ord"), _.getField("value")))
-      .drop("ord")
-    perAttr
-      .groupBy("id", "number")
-      .agg(map_from_entries(sort_array(collect_list(struct(col("attribute"), col("values"))))).as("attrs"))
+    val passes = TripleOps.passes(triples)
+    // each pass's values of one attribute, in that pass's provenance order
+    val values = passes.map { p =>
+      val vs = transform(sort_array(collect_list(p.only(struct(p.file, p.idx, col("value"))))), _.getField("value"))
+      (if (lastWins) slice(vs, -1, 1) else vs).as("values" + p.suffix)
+    }
+    val entries = passes.map { p =>
+      val vs = col("values" + p.suffix)
+      sort_array(collect_list(when(size(vs) > 0, struct(col("attribute"), vs.as("values"))))).as("e" + p.suffix)
+    }
+    vertexLiterals(triples, roTerms).groupBy("id", "number", "attribute").agg(values.head, values.tail: _*)
+      .groupBy("id", "number").agg(entries.head, entries.tail: _*)
+      .select(col("id") +: col("number") +: map_from_entries(col("e")).as("attrs") +: passes.tail.map(p =>
+        map_from_entries(TripleOps.pass2Delta(col("e"), col("e" + p.suffix))).as("attrs" + p.suffix)): _*)
   }
 
   /** Single-shuffle wide pivot with an EXPLICIT attribute list — the at-scale
@@ -93,20 +93,22 @@ object GraphOps {
     * unbounded map representation.
     */
   def vertexAttributesWideDirect(triples: DataFrame, roTerms: DataFrame,
-                                 attrNames: Seq[String]): DataFrame = {
-    val lits = triples.filter(col("obj_is_literal"))
-    val vt = graft.functions.VTupleParse.vtuple(col("subject"))
-    val subj = lits
-      .withColumn("id", vt.getField("id"))
-      .withColumn("number", vt.getField("number"))
-      .withColumn("__valid", vt.getField("isValidVertex"))
-      .filter(col("__valid"))
-    resolvePredicateLabels(subj, roTerms)
-      .select(col("id"), col("number"), col("label").as("attribute"),
-        col("obj_lexical").as("value"), col("src_file"), col("stmt_idx"))
+                                 attrNames: Seq[String]): DataFrame =
+    vertexLiterals(triples, roTerms)
       .groupBy("id", "number")
       .pivot("attribute", attrNames)
       .agg(max_by(col("value"), struct(col("src_file"), col("stmt_idx"))))
+
+  /** Literal triples of valid vertices, with the vertex's (id, number), the
+    * resolved predicate label as `attribute` and the lexical form as `value`.
+    */
+  private def vertexLiterals(triples: DataFrame, roTerms: DataFrame): DataFrame = {
+    val vt = graft.functions.VTupleParse.vtuple(col("subject"))
+    val subj = triples.filter(col("obj_is_literal"))
+      .withColumns(Map("id" -> vt.getField("id"), "number" -> vt.getField("number"),
+        "__valid" -> vt.getField("isValidVertex")))
+      .filter(col("__valid"))
+    resolvePredicateLabels(subj, roTerms).withColumnsRenamed(Map("label" -> "attribute", "obj_lexical" -> "value"))
   }
 
   /** F8: deprecated-vertex predicate over the attrs map
@@ -119,16 +121,20 @@ object GraphOps {
     dep || obs
   }
 
-  /** Vertices with attributes, split into (kept, deprecated) — the routed
-    * filter F8 feeding the S6 text sink and the S8 graph sink.
+  /** Vertices with their attributes (an empty map where there are none):
+    * the frame F8 routes. Tagged vertices keep `in_p2` and `attrs_p2`.
     */
-  def routeDeprecated(verts: DataFrame, attrs: DataFrame): (DataFrame, DataFrame) = {
-    val joined = verts.join(attrs, Seq("id", "number"), "left")
+  def route(verts: DataFrame, attrs: DataFrame): DataFrame =
+    verts.join(attrs, Seq("id", "number"), "left")
       .withColumn("attrs", coalesce(col("attrs"), map()))
-    val kept = joined.filter(!isDeprecated)
-    val deprecated = joined.filter(isDeprecated)
-    (kept, deprecated)
-  }
+
+  /** One pass's routed frame as (kept, deprecated): F8 feeding S6 and S8. */
+  def splitDeprecated(routed: DataFrame): (DataFrame, DataFrame) =
+    (routed.filter(!isDeprecated), routed.filter(isDeprecated))
+
+  /** [[route]] then [[splitDeprecated]]: one pass's (kept, deprecated). */
+  def routeDeprecated(verts: DataFrame, attrs: DataFrame): (DataFrame, DataFrame) =
+    splitDeprecated(route(verts, attrs))
 
   /** A3/A4/F6/J2: edges between valid vertices
     * (reference: OntologyGraphBuilder.java:338-407). Edge identity is
@@ -139,8 +145,12 @@ object GraphOps {
     * where `labels` is the ordered-distinct normalized label list (intended
     * semantics, OntologyGraphBuilderTest.java:378) and `label`/`source` are
     * the deterministic last-wins scalars (reference semantics).
+    *
+    * Tagged triples (TripleOps.InPass2) add `in_p2` and the four value
+    * columns of pass 2's triples in pass-2 provenance order, as `_p2`.
     */
   def edges(triples: DataFrame, roTerms: DataFrame): DataFrame = {
+    val tagged = TripleOps.isTagged(triples)
     val sv = graft.functions.VTupleParse.vtuple(col("subject"))
     val ov = graft.functions.VTupleParse.vtuple(col("object"))
     val both = triples
@@ -154,18 +164,28 @@ object GraphOps {
     val labeled = resolvePredicateLabels(both, roTerms)
       .withColumn("norm_label", Normalize.normalizeEdgeLabel(col("label")))
       .withColumn("norm_source", Normalize.normalizeEdgeSource(col("from_id")))
-    labeled
-      .groupBy("from_id", "from_number", "to_id", "to_number")
-      .agg(
-        sort_array(collect_list(struct(col("src_file"), col("stmt_idx"), col("norm_label"), col("norm_source")))).as("ord"),
-        // A4 collects the RESOLVED label (post-RO-lookup, pre-normalization),
-        // matching the reference's edgeLabels.add(parsePredicate(...))
-        // (OntologyGraphBuilder.java:365-366).
-        sort_array(collect_set(col("label"))).as("raw_labels"))
-      .withColumn("labels", array_distinct(transform(col("ord"), _.getField("norm_label"))))
-      .withColumn("label", element_at(col("ord"), -1).getField("norm_label"))
-      .withColumn("source", element_at(col("ord"), -1).getField("norm_source"))
-      .drop("ord")
+    val aggs = TripleOps.passes(triples).flatMap { p => Seq(
+      sort_array(collect_list(p.only(struct(p.file.as("src_file"), p.idx.as("stmt_idx"),
+        col("norm_label"), col("norm_source"))))).as("ord" + p.suffix),
+      // A4 collects the RESOLVED label (post-RO-lookup, pre-normalization),
+      // matching the reference's edgeLabels.add(parsePredicate(...))
+      // (OntologyGraphBuilder.java:365-366).
+      sort_array(collect_set(p.only(col("label")))).as("raw_labels" + p.suffix))
+    }
+    def passCols(suffix: String): Seq[(String, Column)] = {
+      val ord = col("ord" + suffix)
+      Seq("raw_labels" -> col("raw_labels" + suffix),
+        "labels" -> array_distinct(transform(ord, _.getField("norm_label"))),
+        "label" -> element_at(ord, -1).getField("norm_label"),
+        "source" -> element_at(ord, -1).getField("norm_source"))
+    }
+    // element_at fails on an empty list: pass 2's columns are read only for its members
+    val member = size(col("ord_p2")) > 0
+    val pass2 = if (!tagged) Nil
+      else member.as(TripleOps.InPass2) +: passCols("_p2").map { case (n, c) => when(member, c).as(n + "_p2") }
+    val keys = Seq("from_id", "from_number", "to_id", "to_number").map(col)
+    labeled.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+      .select(keys ++ passCols("").map { case (n, c) => c.as(n) } ++ pass2: _*)
   }
 
   /** A4: distinct raw edge labels with normalization, for the S7 sink

@@ -27,15 +27,37 @@ object TripleOps {
   def predicateWhitelisted(predicate: Column): Column =
     PredicateNamespaces.map(ns => predicate.startsWith(ns)).reduce(_ || _)
 
-  /** F3: valid-triple predicate (reference: OntologyTripleParser.java:42-49).
-    * `testObject` toggles the phenotype-subgraph mode: named objects must also
-    * contain the root namespace; literal/blank objects always pass.
+  /** F3's phenotype-subgraph check (`testObject`, reference:
+    * OntologyTripleParser.java:42-49) on collected rows: named objects must
+    * also contain the root namespace; literal/blank objects always pass.
     */
-  def isValidTriple(subject: Column, objectStr: Column, objIsUri: Column,
-                    rootNs: Column, testObject: Boolean): Column = {
-    val subjectValid = subject.contains(rootNs)
-    if (testObject) subjectValid && (!objIsUri || objectStr.contains(rootNs))
-    else subjectValid
+  private def objectInRoot: Column = !col("obj_is_uri") || col("object").contains(col("root_ns"))
+
+  /** Pass tagging. The phenotype pass (pass 2) sees a subset of the ontology
+    * pass's (pass 1) rows, so both ride on one frame: pass 1's columns, the
+    * flag [[InPass2]] and, for each column `c` whose pass-2 value can differ,
+    * `c_p2` holding pass 2's value, or null where pass 1's value serves.
+    * An untagged frame is the one-pass case.
+    */
+  val InPass2 = "in_p2"
+  def isTagged(df: DataFrame): Boolean = df.columns.contains(InPass2)
+  private[ops] def pass2Value(c: String): Column = coalesce(col(s"${c}_p2"), col(c))
+  private[ops] def pass2Delta(pass1: Column, value: Column): Column = when(!(value <=> pass1), value)
+
+  /** A pass of a tagged triple frame as aggregations see it: its column
+    * suffix, a wrapper that nulls values outside its rows, its provenance.
+    */
+  private[ops] final case class Pass(suffix: String, only: Column => Column, file: Column, idx: Column)
+  private[ops] def passes(unique: DataFrame): Seq[Pass] =
+    Pass("", identity, col("src_file"), col("stmt_idx")) +: (if (!isTagged(unique)) Nil
+      else Seq(Pass("_p2", when(col(InPass2), _), pass2Value("src_file"), pass2Value("stmt_idx"))))
+
+  /** Pass 1 or 2 of a tagged frame, in the single-pass shape. */
+  def passView(df: DataFrame, pass: Int): DataFrame = {
+    val cols = df.columns.filterNot(c => c == InPass2 || c.endsWith("_p2")).toIndexedSeq
+    if (pass == 1) df.select(cols.map(col): _*)
+    else df.filter(col(InPass2)).select(cols.map(c =>
+      if (df.columns.contains(s"${c}_p2")) pass2Value(c).as(c) else col(c)): _*)
   }
 
   /** A8 header: each file's root term, read off the parsed ontology header
@@ -76,11 +98,24 @@ object TripleOps {
 
   /** F1 + F2 + F3 + F4 + J1: one file-set's statements → collected triples
     * (reference: OntologyTripleParser.java:62-121), before cross-file dedup.
+    * `testObject` keeps only rows that pass [[objectInRoot]].
     *
     * Output schema: src_file, stmt_idx, subject, predicate, object,
     * obj_is_uri, obj_is_literal, obj_is_blank, obj_lexical, root_ns.
     */
   def collectTriples(raw: DataFrame, meta: DataFrame, testObject: Boolean): DataFrame = {
+    val all = collectAll(raw, meta)
+    if (testObject) all.filter(objectInRoot) else all
+  }
+
+  /** Pass 1's rows (`testObject = false`), tagged [[InPass2]] where the file
+    * is one of `pass2Files` and the row passes [[objectInRoot]]: root
+    * namespaces are per file, so those are pass 2's rows.
+    */
+  def collectPasses(raw: DataFrame, meta: DataFrame, pass2Files: Seq[String]): DataFrame =
+    collectAll(raw, meta).withColumn(InPass2, col("src_file").isin(pass2Files: _*) && objectInRoot)
+
+  private def collectAll(raw: DataFrame, meta: DataFrame): DataFrame = {
     val rootNs = rootNamespaces(raw, meta)
 
     // Statements with their file's root namespace attached (broadcast: one
@@ -106,7 +141,7 @@ object TripleOps {
     // Branch 1 (F2+F4): named-object statements with whitelisted predicates.
     val named = aboutClasses(
       stmts.filter(!col("objIsBlank") && predicateWhitelisted(col("predicate"))))
-      .filter(isValidTriple(col("subject"), col("objectStr"), col("objIsUri"), col("root_ns"), testObject))
+      .filter(col("subject").contains(col("root_ns")))
 
     // Branch 2 (J1): anonymous-object rdfs:subClassOf statements flattened
     // through their owl:Restriction blank node. The reference requires BOTH
@@ -142,7 +177,7 @@ object TripleOps {
         col("v_last.objIsBlank").as("objIsBlank"),
         col("v_last.objLexical").as("objLexical"),
         col("r_root_ns").as("root_ns"))
-      .filter(isValidTriple(col("subject"), col("objectStr"), col("objIsUri"), col("root_ns"), testObject))
+      .filter(col("subject").contains(col("root_ns")))
 
     val cols = Seq("srcFile", "stmtIdx", "subject", "predicate", "objectStr",
       "objIsUri", "objIsLiteral", "objIsBlank", "objLexical", "root_ns")
@@ -158,19 +193,21 @@ object TripleOps {
     * keeping the earliest (src_file, stmt_idx) provenance so downstream
     * "last-wins" semantics are deterministic (SURVEY.md §7.5). `ro.owl` is
     * excluded as a label-dictionary-only file (F7), for callers that parse it
-    * with the ontologies.
+    * with the ontologies. Tagged rows also keep pass 2's earliest provenance;
+    * the other winner columns are functions of the triple (or, as `root_ns`,
+    * unread after dedup), so pass 1's serve both passes.
     */
   def uniqueTriples(collected: DataFrame): DataFrame = {
+    val pass2 = if (!isTagged(collected)) Nil
+      else Seq(min(when(col(InPass2), struct(col("src_file"), col("stmt_idx")))).as("w2"))
+    val w2 = pass2Delta(struct(col("w.src_file"), col("w.stmt_idx")), col("w2"))
     collected
       .filter(col("src_file") =!= OwlReader.DictionaryFile)
       .groupBy(col("subject"), col("predicate"), col("object"))
       .agg(min(struct(
         col("src_file"), col("stmt_idx"), col("obj_is_uri"), col("obj_is_literal"),
-        col("obj_is_blank"), col("obj_lexical"), col("root_ns"))).as("w"))
-      .select(col("subject"), col("predicate"), col("object"),
-        col("w.src_file").as("src_file"), col("w.stmt_idx").as("stmt_idx"),
-        col("w.obj_is_uri").as("obj_is_uri"), col("w.obj_is_literal").as("obj_is_literal"),
-        col("w.obj_is_blank").as("obj_is_blank"), col("w.obj_lexical").as("obj_lexical"),
-        col("w.root_ns").as("root_ns"))
+        col("obj_is_blank"), col("obj_lexical"), col("root_ns"))).as("w"), pass2: _*)
+      .select(Seq(col("subject"), col("predicate"), col("object"), col("w.*")) ++ (if (pass2.isEmpty) Nil
+        else Seq(col("w2").isNotNull.as(InPass2), w2("src_file").as("src_file_p2"), w2("stmt_idx").as("stmt_idx_p2"))): _*)
   }
 }

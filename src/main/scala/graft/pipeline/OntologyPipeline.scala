@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.io.{GraphSink, OwlReader}
 import graft.ops.{GraphOps, TripleOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** The flagship two-pass ETL DAG (SURVEY.md §3.1,
   * reference: OntologyGraphBuilder.main, OntologyGraphBuilder.java:491-626):
@@ -17,9 +16,21 @@ import org.apache.spark.sql.functions.col
   * the element harvest only (`OwlReader.terms`, its relation labels); every
   * other file goes through the triple parse only (`OwlReader.triples`), and
   * its root term is read off its own parsed header statements
-  * (`TripleOps.ontologyRoots`) instead of a second metadata scan. Unlike the
-  * reference — which re-parses cl.owl from scratch for pass 2 — the parsed
-  * raw statements are cached and reused (SURVEY §3.2).
+  * (`TripleOps.ontologyRoots`) instead of a second metadata scan.
+  *
+  * Both passes are one DAG. The reference rebuilds pass 2 from a fresh parse
+  * of cl.owl (OntologyGraphBuilder.java:566-586); here pass 2's rows are a
+  * subset of pass 1's, so triples are collected and deduplicated once, each
+  * unique triple tagged with pass 2 and its pass-2 provenance. Vertices,
+  * attributes, routing and edges are built once over the tagged rows; each
+  * pass's sinks, RI and edge labels read its view (`TripleOps.passView`).
+  *
+  * Cached: `raw` and the RO dictionary; the tagged unique triples,
+  * materialized at once so `raw` is released before anything else is
+  * cached; the routed vertices of both passes. Edges are not cached: a
+  * cached frame keeps the shuffle's partition count, so each edge
+  * collection would be written as more files. All is released when the run
+  * returns or throws.
   *
   * The entry point takes (oboDir, outDir) parameters, which the reference's
   * integration test implies but its main ignores (SURVEY §3.1 discrepancy
@@ -56,57 +67,23 @@ object OntologyPipeline {
     finally spark.stop()
   }
 
-  /** Result handles of one pipeline pass. `unpersist()` after the outputs
-    * are written.
+  /** Writes one pass's store and text sinks beneath `dir` from its view of
+    * the routed vertices and the pre-RI edges.
     */
-  final case class GraphResult(
-      vertices: DataFrame, // kept vertices with attrs map
-      deprecated: DataFrame, // routed-out vertices
-      edges: DataFrame, // RI-checked edges
-      edgeLabels: DataFrame,
-      cached: Seq[DataFrame]) {
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+  private def writePass(routed: DataFrame, allEdges: DataFrame, dir: String): Unit = {
+    val (kept, deprecated) = GraphOps.splitDeprecated(routed)
+    GraphSink.writeVertices(kept, dir)
+    GraphSink.writeEdges(GraphOps.edgesWithIntegrity(allEdges, kept), dir)
+    GraphSink.writeDeprecatedTerms(deprecated, dir)
+    GraphSink.writeEdgeLabels(GraphOps.edgeLabels(allEdges), dir)
   }
-
-  /** One parameterized pass (reference runs it twice with different params).
-    * The deduplicated triple set and the kept-vertex set are consumed by
-    * several independent sink writes — cache both so each write doesn't
-    * re-run the parse/dedup DAG.
-    */
-  def buildGraph(
-      raw: DataFrame,
-      meta: DataFrame,
-      roTerms: DataFrame,
-      testObject: Boolean,
-      lastWins: Boolean = false): GraphResult = {
-    val collected = TripleOps.collectTriples(raw, meta, testObject)
-    val unique = TripleOps.uniqueTriples(collected).cache()
-    val verts = GraphOps.vertices(unique)
-    val attrs = GraphOps.vertexAttributes(unique, roTerms, lastWins)
-    val (kept0, deprecated) = GraphOps.routeDeprecated(verts, attrs)
-    val kept = kept0.cache()
-    val allEdges = GraphOps.edges(unique, roTerms)
-    val labels = GraphOps.edgeLabels(allEdges)
-    val edges = GraphOps.edgesWithIntegrity(allEdges, kept)
-    GraphResult(kept, deprecated, edges, labels, Seq(unique, kept))
-  }
-
-  /** Writes one pass's store and text sinks beneath `dir`, then releases its
-    * cached frames — also when a write fails.
-    */
-  private def writePass(g: GraphResult, dir: String): Unit =
-    try {
-      GraphSink.writeVertices(g.vertices, dir)
-      GraphSink.writeEdges(g.edges, dir)
-      GraphSink.writeDeprecatedTerms(g.deprecated, dir)
-      GraphSink.writeEdgeLabels(g.edgeLabels, dir)
-    } finally g.unpersist()
 
   /** Full two-pass run over a directory of OWL files, writing the graph store
     * and side outputs beneath `outDir` (`ontologies/`, `phenotypes/`).
     * `phenotypePattern` selects pass-2's file set (the reference hard-codes
     * "cl.owl", OntologyGraphBuilder.java:566; its integration test runs on a
-    * fixture dir without cl.owl, so the pattern is a parameter here).
+    * fixture dir without cl.owl, so the pattern is a parameter here); when it
+    * matches no file, no `phenotypes/` is written.
     * Nothing stays cached after the run, whether it returns or throws.
     */
   def run(spark: SparkSession, oboDir: String, outDir: String,
@@ -115,6 +92,7 @@ object OntologyPipeline {
     require(allFiles.nonEmpty, s"No OBO files found in $oboDir")
     val phenotypeRegex = phenotypePattern.r
     def fileName(path: String) = path.substring(path.lastIndexOf('/') + 1)
+    val phenoFiles = allFiles.map(fileName).filter(n => phenotypeRegex.pattern.matcher(n).matches())
 
     // Source stage: one read per file (see the object doc). Parsing yields
     // one partition per FILE (RDF/XML is not splittable); when ontologies
@@ -126,22 +104,29 @@ object OntologyPipeline {
     val parsed = OwlReader.triples(spark, ontologies).toDF()
     val raw = (if (ontologies.size < parallelism) parsed.repartition(parallelism) else parsed).cache()
     val roTerms = OwlReader.terms(spark, dictionary).toDF().select("term", "label").cache()
+    var cached = Seq(raw, roTerms)
     try {
-      // One row per file, collected into a local relation: both passes then
-      // plan against a small table of known size. Re-aggregating raw inside
-      // each pass cost about 40 more generated-code compiles per build.
+      // One row per file, collected into a local relation, so the collection
+      // plans against a small table of known size.
       val roots = TripleOps.ontologyRoots(raw)
       val meta = spark.createDataFrame(roots.collectAsList(), roots.schema)
 
-      // Pass 1: full ontology graph (testObject = false).
-      writePass(buildGraph(raw, meta, roTerms, testObject = false, lastWins), s"$outDir/ontologies")
+      // Both passes' triples, deduplicated once and tagged with pass 2.
+      val collected =
+        if (phenoFiles.isEmpty) TripleOps.collectTriples(raw, meta, testObject = false)
+        else TripleOps.collectPasses(raw, meta, phenoFiles)
+      val unique = TripleOps.uniqueTriples(collected).cache()
+      cached :+= unique
+      unique.count()
+      raw.unpersist() // nothing reads the parsed statements after dedup
 
-      // Pass 2: CL-only phenotype subgraph (testObject = true, RO dict injected).
-      val phenoFiles = allFiles.map(fileName).filter(n => phenotypeRegex.pattern.matcher(n).matches())
-      val isPheno = col("srcFile").isin(phenoFiles: _*)
+      val routed = GraphOps.route(GraphOps.vertices(unique),
+        GraphOps.vertexAttributes(unique, roTerms, lastWins)).cache()
+      cached :+= routed
+      val allEdges = GraphOps.edges(unique, roTerms)
+      writePass(TripleOps.passView(routed, 1), TripleOps.passView(allEdges, 1), s"$outDir/ontologies")
       if (phenoFiles.nonEmpty)
-        writePass(buildGraph(raw.filter(isPheno), meta.filter(isPheno), roTerms,
-          testObject = true, lastWins), s"$outDir/phenotypes")
-    } finally { raw.unpersist(); roTerms.unpersist() }
+        writePass(TripleOps.passView(routed, 2), TripleOps.passView(allEdges, 2), s"$outDir/phenotypes")
+    } finally cached.foreach(_.unpersist())
   }
 }

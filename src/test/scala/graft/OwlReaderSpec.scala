@@ -138,6 +138,19 @@ class OwlReaderSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("fail-fast parse errors name the file, line and column") {
+    val spark = TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-truncated")
+    try {
+      val whole = TestSpark.readFixture("macrophage.owl")
+      java.nio.file.Files.write(dir.resolve("truncated-macrophage.owl"), whole.take(whole.length / 2))
+      val files = OwlReader.listFilesMatchingPattern(dir.toString, ".*\\.owl")
+      val e = intercept[org.apache.spark.SparkException](OwlReader.triples(spark, files).count())
+      assert(e.getMessage.contains("cannot parse truncated-macrophage.owl at line "), e.getMessage)
+      assert(e.getMessage.contains(", column "), e.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   // --- round-2 parser fidelity (ADVICE.md items) ---
 
   test("xml:lang inherits from ancestor elements (rdf:RDF and node element)") {
