@@ -5,8 +5,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Driver-run benchmark: every registry query on SPARK_GRAFT_SF_DIR, one
   * COMPACT JSON line on stdout (the driver tails a bounded window of stdout;
-  * an 80-query map overflows it, so per-query timings and observed metrics
-  * go to the bench_out.json file — SPARK_GRAFT_BENCH_OUT — instead).
+  * an 80-query map overflows it, so per-query timings, observed metrics and
+  * each entry's jobs, task CPU, shuffle and spill go to the bench_out.json
+  * file — SPARK_GRAFT_BENCH_OUT — instead).
   * Queries are forced through the noop sink so the full plan executes (a
   * bare count() would let Catalyst skip projected work).
   */
@@ -346,6 +347,12 @@ object Bench {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
     graft.functions.GraftExtensions.register(spark)
+    // per-entry jobs, task CPU, shuffle and spill (bench_out.json
+    // `entryStats`): each entry's plan construction and execution run
+    // under the job groups "[<entry>] prep" and "[<entry>] exec"
+    val sc = spark.sparkContext
+    val groupStats = new JobGroupStats
+    sc.addSparkListener(groupStats)
 
     // Observed metrics (the silent-cap audit trail: jaccard_maxdf_*,
     // lsh_maxbucket_*, neardup_maxdf_* drop counts) are delivered via the
@@ -375,7 +382,8 @@ object Bench {
     // every shared store is built by its first consumer in battery order,
     // inside that entry's timed window (attribution: sharedStores).
     val tWarm0 = System.nanoTime()
-    try graft.queries.SharedStores.stageInputs(spark, sfDir, selected.keys)
+    try JobGroupStats.within(sc, s"[${graft.queries.SharedStores.InputStaging}] prep")(
+      graft.queries.SharedStores.stageInputs(spark, sfDir, selected.keys))
     catch { case e: Throwable => System.err.println(s"bench: input staging failed: $e") }
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
     // Attribution contract: only queries whose plans carry CollectMetrics
@@ -405,7 +413,7 @@ object Bench {
       var drainedOk = true
       val tPrep0 = System.nanoTime()
       val prep: Either[String, (org.apache.spark.sql.DataFrame, Boolean)] = try {
-        val df = fn(spark, dir)
+        val df = JobGroupStats.within(sc, s"[$name] prep")(fn(spark, dir))
         val hm = df.queryExecution.analyzed.collect {
           case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics => c
         }.nonEmpty
@@ -419,7 +427,7 @@ object Bench {
       val err = prep match {
         case Left(m) => Some(m)
         case Right((df, _)) =>
-          try { df.write.mode("overwrite").format("noop").save(); None }
+          try { JobGroupStats.within(sc, s"[$name] exec")(df.write.mode("overwrite").format("noop").save()); None }
           catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200)) }
       }
       val execSec = (System.nanoTime() - t0) / 1e9
@@ -446,9 +454,11 @@ object Bench {
     // battery, so the timed numbers measure the same warm shape the
     // full-battery history medians did — see the flag-rerun call site.
     if (sys.env.getOrElse("SPARK_GRAFT_WARM_PASS", "0") == "1")
-      for ((_, fn) <- selected.toSeq.sortBy(_._1))
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () } // the timed battery reports it
+      JobGroupStats.within(sc, "[_warm_pass]") {
+        for ((_, fn) <- selected.toSeq.sortBy(_._1))
+          try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          catch { case _: Throwable => () } // the timed battery reports it
+      }
     // ---- calibration gate (round-14 verdict #1) -------------------------
     // Three consecutive official closes landed on a loaded box (r14: cal
     // 1.59-2.35) and no record said whether anyone waited for quiet. The
@@ -513,6 +523,35 @@ object Bench {
     // the calibration always runs; the A/B runs unless disabled
     // (SPARK_GRAFT_AB=0) or a query-name filter was passed (profiling mode).
     val calibration = calibrate(spark)
+    // ONE drain for the whole battery's job events (never per entry: see
+    // runBattery); a timeout leaves the counts partial, and the record
+    // says so in entryStatsComplete
+    val statsComplete = org.apache.spark.GraftListenerBridge.drain(sc, 60000L)
+    val entryStats: Seq[(String, Long, Long, GroupStats)] = {
+      val groups = groupStats.snapshot()
+      (graft.queries.SharedStores.InputStaging +: results.map(_._1)).flatMap { e =>
+        val prep = groups.get(s"[$e] prep"); val exec = groups.get(s"[$e] exec")
+        if (prep.isEmpty && exec.isEmpty) None
+        else {
+          val all = new GroupStats
+          (prep ++ exec).foreach(all.add)
+          Some((e, prep.map(_.jobs).getOrElse(0L), exec.map(_.jobs).getOrElse(0L), all))
+        }
+      }
+    }
+    def statFields(pj: Long, ej: Long, g: GroupStats): Seq[(String, String)] = Seq(
+      "prep_jobs" -> pj.toString, "exec_jobs" -> ej.toString, "tasks" -> g.tasks.toString,
+      "task_cpu_s" -> jnum(g.cpuNs / 1e9), "shuffle_read_bytes" -> g.shuffleRead.toString,
+      "shuffle_write_bytes" -> g.shuffleWrite.toString, "spill_bytes" -> g.spill.toString)
+    val entryStatsJson = entryStats.map { case (e, pj, ej, g) =>
+      jstr(e) + statFields(pj, ej, g).map { case (k, v) => jstr(k) + ":" + v }.mkString(":{", ",", "}")
+    }.mkString("{", ",", "}")
+    if (args.nonEmpty) {
+      if (!statsComplete)
+        System.err.println("bench: listener bus did not drain in 60 s: entry stats are partial")
+      for ((e, pj, ej, g) <- entryStats)
+        System.err.println(s"bench: $e " + statFields(pj, ej, g).map { case (k, v) => s"$k=$v" }.mkString(" "))
+    }
     // contamination verdict: only adjudicable when the gate ran (official
     // records); start-quiet + end-quiet is the comparable regime
     val calContaminated: Option[Boolean] =
@@ -783,6 +822,12 @@ object Bench {
       graft.queries.SharedStores.materializers.asScala.toSeq.sortBy(_._1)
         .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     }
+    // each store's build seconds, inclusive of nested store builds
+    val sharedSeconds = {
+      import scala.jdk.CollectionConverters._
+      graft.queries.SharedStores.buildSeconds.asScala.toSeq.sortBy(_._1)
+        .map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}")
+    }
 
     // calibration-NORMALIZED per-query walls (sec / box-speed constant):
     // the directly-cross-round-comparable channel. Round 13's records ran
@@ -818,7 +863,7 @@ object Bench {
     // 337 entries, still one line. Everything else heavy (normalized,
     // execSeconds, plans pointers) lives only in the file.
     val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"nQueries":${results.size},"errors":$errs,"nErrors":$nErr,"regressions":$regressions,"phantom_flags":$phantomFlags,"sf":${jstr(sfDir)},"calibration":${jnum(calibration)},$contamFields"normalized_total":$normTotalJson,"sentinel":${jnum(sentinel)},"ab":$abPlaceholder,"perQuery":${jstr(outPath)}}"""
-    def fullJson(ab: String): String = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"normalized":$normQs,"normalized_total":$normTotalJson,"execSeconds":$execQs,"warmupSeconds":${jnum(warmupSec)},"rowsOut":$rowsOutJson,"errors":$errs,"regressions":$regressions,"phantom_flags":$phantomFlags,"observedMetrics":$om,"sharedStores":$shared,"sf":${jstr(sfDir)},"calibration":${jnum(calibration)},$contamFields"sentinel":${jnum(sentinel)},"calGate":$calGateJson,"ab":$ab,"abPerQuery":$abPerQueryJson}"""
+    def fullJson(ab: String): String = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"normalized":$normQs,"normalized_total":$normTotalJson,"execSeconds":$execQs,"warmupSeconds":${jnum(warmupSec)},"rowsOut":$rowsOutJson,"errors":$errs,"regressions":$regressions,"phantom_flags":$phantomFlags,"observedMetrics":$om,"sharedStores":$shared,"sharedStoreSeconds":$sharedSeconds,"entryStats":$entryStatsJson,"entryStatsComplete":$statsComplete,"sf":${jstr(sfDir)},"calibration":${jnum(calibration)},$contamFields"sentinel":${jnum(sentinel)},"calGate":$calGateJson,"ab":$ab,"abPerQuery":$abPerQueryJson}"""
     // ONE bare line on the process's real stdout: java.io.FileDescriptor.out
     // bypasses sbt's System.out capture (whose "[info] " prefix breaks
     // line-oriented JSON parsing downstream) and IS System.out everywhere

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *  - entity name/text columns get a per-copy suffix: real 10× data has
   *    10× DISTINCT entities; byte-identical name copies would grow every
   *    blocking key 10× and measure pair detonation instead of the
-  *    operator (the dedup family's duplicate-topology scaling is probed
-  *    separately by [[ScaleProbe]], which controls exact-vs-perturbed
-  *    copy fractions on purpose);
+  *    operator (the dedup family's duplicate-topology scaling was probed
+  *    separately, with exact-vs-perturbed copy fractions controlled on
+  *    purpose: PLANS.md, round 4, "measured 10× behavior");
   *  - timestamps are left unchanged: 10× events over the same span is a
   *    10× event RATE — watermarks, windows and session gaps see denser
   *    streams, which is the honest streaming scale-up;

@@ -28,7 +28,7 @@ object OntologyDownloader {
     * (reference: OntologyDownloader.java:48-74).
     */
   def findOboVersion(owlFile: Path): String = {
-    val meta = OwlReader.parseElements(owlFile.getFileName.toString, Files.readAllBytes(owlFile))._3
+    val meta = OwlReader.parseElements(owlFile.getFileName.toString, Files.readAllBytes(owlFile))._2
     Option(meta.versionInfo).flatMap(v => DatePattern.findFirstIn(v))
       .orElse(Option(meta.versionIri).flatMap(v => DatePattern.findFirstIn(v)))
       .orNull

@@ -87,7 +87,7 @@ object OwlReader {
   /** One metadata row per file (reference: OntologyElementParser.java:146-184). */
   def meta(spark: SparkSession, paths: Seq[String]): Dataset[OntoMeta] = {
     import spark.implicits._
-    binaryFiles(spark, paths).map { case (name, bytes) => parseElements(name, bytes)._3 }
+    binaryFiles(spark, paths).map { case (name, bytes) => parseElements(name, bytes)._2 }
   }
 
   /** StAX factory hardened for untrusted corpora: internal DTD entities keep
@@ -368,17 +368,15 @@ object OwlReader {
 
   // ------------------------------------------------------------ element parse
 
-  /** Harvest terms / prefix ids / metadata from one OWL document, matching the
+  /** Harvest terms / metadata from one OWL document, matching the
     * reference's DOM pass (OntologyElementParser.java:97-184):
-    * elements whose qualified tag starts with "owl:" and carry a non-empty
-    * rdf:about contribute a prefix id (term before '_', excluding "valid") and
-    * — when they have at least one rdfs:label descendant — a term->(purl,label)
-    * entry where the LAST such element in document order wins (HashMap put) and
-    * the FIRST label descendant of that element is used.
+    * elements whose qualified tag starts with "owl:", carry a non-empty
+    * rdf:about and have at least one rdfs:label descendant contribute a
+    * term->(purl,label) entry where the LAST such element in document order
+    * wins (HashMap put) and the FIRST label descendant of that element is used.
     */
-  def parseElements(fileName: String, bytes: Array[Byte]): (Seq[TermRow], Seq[IdRow], OntoMeta) = {
+  def parseElements(fileName: String, bytes: Array[Byte]): (Seq[TermRow], OntoMeta) = {
     val termMap = mutable.LinkedHashMap.empty[String, TermRow]
-    val idSet = mutable.LinkedHashSet.empty[String]
     var title: String = null
     var description: String = null
     var purl: String = null
@@ -459,13 +457,7 @@ object OwlReader {
                 if (about != null && about.nonEmpty) {
                   val uri = graft.ops.UriOps.rewriteUri(about)
                   val term = lastPathSegment(uri)
-                  if (term != null) {
-                    if (term.contains("_")) {
-                      val id = term.split("_")(0)
-                      if (id != "valid") idSet += id
-                    }
-                    owlStack.push(OwlFrame(term, uri, null, depth))
-                  }
+                  if (term != null) owlStack.push(OwlFrame(term, uri, null, depth))
                 }
               }
               if (qn == "rdfs:label" && owlStack.exists(_.label == null)) {
@@ -490,7 +482,7 @@ object OwlReader {
     } finally r.close()
 
     val metaRow = OntoMeta(fileName, title, description, purl, versionIri, versionInfo, root)
-    (termMap.values.toSeq, idSet.toSeq.map(IdRow(fileName, _)), metaRow)
+    (termMap.values.toSeq, metaRow)
   }
 
   /** Last path segment of a URI, as `Paths.get(uri.getPath).getFileName`

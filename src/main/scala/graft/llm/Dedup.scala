@@ -92,10 +92,10 @@ object Dedup {
     * and sizes describe the same retained universe. Deliberately NO join
     * against a document-frequency table: that table is vocabulary-sized,
     * and a planner that mis-estimates it as broadcastable OOMs the driver —
-    * observed at a 10× corpus in ScaleProbe. Deriving sizes by exploding
-    * the retained postings keeps everything a shuffle of data that is
-    * already grouped (and the grouping exchange is shared by both
-    * consumers). Used by both [[jaccardPairs]] and
+    * observed at a 10× corpus (PLANS.md, round-4 10× probes). Deriving
+    * sizes by exploding the retained postings keeps everything a shuffle
+    * of data that is already grouped (and the grouping exchange is shared
+    * by both consumers). Used by both [[jaccardPairs]] and
     * [[removeNearDuplicates]] so the cap + drop metric exist exactly once.
     */
   private def cappedUniverse(shingles: DataFrame, maxDF: Long,
@@ -130,8 +130,8 @@ object Dedup {
     * — but the planner's size ESTIMATE for it collapses (projections drop
     * the wide text column early), so static planning picks a broadcast
     * build side and the driver OOMs building it; observed at a 10× corpus
-    * in ScaleProbe. Sort-merge is the only shape that is always safe here,
-    * and AQE still handles skew within it. The ONE copy of this rationale —
+    * (PLANS.md, round-4 10× probes). Sort-merge is the only shape that is
+    * always safe here, and AQE still handles skew within it. The ONE copy of this rationale —
     * [[jaccardPairs]], [[containmentPairs]], and [[removeNearDuplicates]]
     * all route through here.
     */

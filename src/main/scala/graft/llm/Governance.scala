@@ -53,8 +53,8 @@ object Governance {
     *
     * `fp` is caller-chosen so the cost/parity trade is explicit: the
     * engine-native `xxhash64(cols…)` is the 100-TB reconciliation default
-    * (one codegen'd hash kernel, ~5x cheaper than md5 — ScaleProbe
-    * `checksumHash`), while an md5-derived fp buys bit-identical
+    * (one codegen'd hash kernel, ~5x cheaper than md5 — PLANS.md round-10
+    * probes, `checksumHash`), while an md5-derived fp buys bit-identical
     * fingerprints on any engine that has md5 (the s20 oracle-parity shape).
     */
   def tableFingerprint(df: DataFrame, groupCols: Seq[String], fp: Column): DataFrame =

@@ -37,11 +37,6 @@ final case class TripleRow(
   */
 final case class TermRow(srcFile: String, term: String, purl: String, label: String)
 
-/** Distinct ontology prefix ids seen in a file
-  * (reference: OntologyElementParser.java:109-118).
-  */
-final case class IdRow(srcFile: String, id: String)
-
 /** Per-ontology file metadata
   * (reference: OntologyElementParser.java:146-184, OntologyElementMap.java).
   */

@@ -711,8 +711,7 @@ object GraphQueries {
 
   /** The g_fof_recommend candidate core (2-hop expansion from every
     * `sampleMod`-th node, direct edges anti-joined, common-neighbor
-    * support counted) — shared with ScaleProbe so the probe measures the
-    * exact registry operator.
+    * support counted).
     */
   def fofCandidates(rawEdges: DataFrame, sampleMod: Int): DataFrame = {
     val edges = rawEdges.select("src", "dst").distinct()

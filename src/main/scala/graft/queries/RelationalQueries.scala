@@ -143,8 +143,7 @@ object RelationalQueries {
   }
 
   /** The g_copurchase_pairs core (distinct basket-item pairs, basket-DEPTH
-    * cap applied BEFORE pairing, support count + threshold) — shared with
-    * ScaleProbe so the probe measures the exact registry operator.
+    * cap applied BEFORE pairing, support count + threshold).
     */
   def copurchasePairs(lineitem: DataFrame, cap: Int, minSupport: Long): DataFrame = {
     val bp = lineitem
@@ -2031,7 +2030,7 @@ object RelationalQueries {
     // s20's md5 fingerprint buys cross-engine parity (the DuckDB oracle
     // recomputes it bit-for-bit) at ~13 s/6M rows of pure digest cost;
     // real same-engine 100-TB reconciliation wants the codegen'd
-    // xxhash64 kernel instead (~5x cheaper — ScaleProbe `checksumHash`).
+    // xxhash64 kernel instead (~5x cheaper — PLANS.md round-10 probes).
     // xxhash64 values aren't reproducible outside Spark, so the entry
     // verifies the PROPERTIES a reconciliation run relies on, which ARE
     // oracle-expressible: (1) the fingerprint is order/partitioning-

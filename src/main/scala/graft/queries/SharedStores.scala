@@ -31,8 +31,18 @@ object SharedStores {
     */
   val materializers = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** store name → wall seconds of the build that [[materializers]] names
+    * (bench_out.json `sharedStoreSeconds`). Inclusive: a build that asks
+    * for another store not yet built (minhash signatures read the
+    * shingles) counts that nested build in both stores. A store that is
+    * a lazily persisted frame (the shingles) records only its plan
+    * construction: the frame is computed and cached by the first action
+    * that reads it. A build that throws records nothing.
+    */
+  val buildSeconds = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+
   /** The [[currentEntry]] label of [[stageInputs]]' builds. */
-  private val InputStaging = "_input_staging"
+  val InputStaging = "_input_staging"
 
   // The map holds cells, not values: a store's build may ask for another
   // store (minhash signatures read the shingles), and a ConcurrentHashMap
@@ -50,7 +60,9 @@ object SharedStores {
     val key = (s, s"$name@$d")
     val entry = currentEntry.value
     val cell = cells.computeIfAbsent(key, _ => new Cell(() => {
+      val t0 = System.nanoTime()
       val v = build
+      buildSeconds.put(name, (System.nanoTime() - t0) / 1e9)
       materializers.put(name, entry)
       v
     }))

@@ -15,12 +15,10 @@ object TemporalQueries {
   import RelationalQueries.Entry
 
   /** The purchases←clicks backward as-of shape, shared by the ts_asof_*
-    * registry entries AND ScaleProbe's temporal group — the probe must
-    * measure the exact operator the registry checks, not a drifted copy.
+    * registry entries (scale results: PLANS.md, "Temporal scale probes").
     * Input events must carry the `ts_us` epoch-µs column ([[TemporalOps.loadEvents]]).
     */
-  /** The t_next_event_examples shape, shared with ScaleProbe (the probe
-    * must measure the exact registry operator). Input carries `ts_us`.
+  /** The t_next_event_examples shape. Input carries `ts_us`.
     */
   def nextEventExamples(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -33,7 +31,7 @@ object TemporalQueries {
         col("ctx3"), col("event_type").as("target"))
   }
 
-  /** The ts_seasonal_dow shape, shared with ScaleProbe. Daily rollup is
+  /** The ts_seasonal_dow shape. Daily rollup is
     * the only event-scale pass; the weekday dimension is 7·|types| rows at
     * any corpus size and broadcasts.
     */
@@ -64,9 +62,8 @@ object TemporalQueries {
       asOfCol = "click_value", rightTieCol = "tsn", tolerance = tolerance)
   }
 
-  /** The 7-day first/last-touch attribution window pass, shared by the
-    * ts_attribution registry entry AND ScaleProbe (the probe must measure
-    * the exact operator the registry checks). Input events must carry
+  /** The 7-day first/last-touch attribution window pass of the
+    * ts_attribution registry entry. Input events must carry
     * `ts_us` ([[TemporalOps.loadEvents]]).
     */
   def attributionWindow(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -118,7 +115,7 @@ object TemporalQueries {
       |  AND c.tsn BETWEEN p.tsn - 300000000 AND p.tsn + 300000000
       | ORDER BY purchase_id, click_id""".stripMargin
 
-  /** The CDC ordered-apply shape (u7_cdc_apply + ScaleProbe): collapse the
+  /** The CDC ordered-apply shape (u7_cdc_apply): collapse the
     * change stream derived from `ev` (events with `ts_us`) to its final
     * per-key image and apply it to `base` (`key`, `cents`) — delete
     * removes, upsert replaces-or-inserts, untouched base rows survive.
@@ -141,8 +138,8 @@ object TemporalQueries {
         when(col("op").isNull, lit("base")).otherwise(lit("cdc")).as("src"))
   }
 
-  /** The purchases→daily-spine gap fill, shared by the ts_gap_fill
-    * registry entry AND ScaleProbe. Input events must carry `ts_us`.
+  /** The purchases→daily-spine gap fill of the ts_gap_fill registry
+    * entry. Input events must carry `ts_us`.
     */
   def purchaseGapFill(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     TemporalOps.gapFillDaily(
@@ -150,10 +147,9 @@ object TemporalQueries {
         .withColumn("cents", round(col("value") * 100).cast("long")),
       "user_id", "ts_us", "cents")
 
-  /** The clicks-into-purchase-windows interval join, shared by the
-    * ts_interval_join registry entry AND ScaleProbe's temporal group (the
-    * probe must measure the exact operator the registry checks). Input
-    * events must carry `ts_us` ([[TemporalOps.loadEvents]]).
+  /** The clicks-into-purchase-windows interval join of the
+    * ts_interval_join registry entry. Input events must carry `ts_us`
+    * ([[TemporalOps.loadEvents]]).
     */
   def purchaseClickIntervalJoin(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -169,9 +165,8 @@ object TemporalQueries {
       bucketWidth = 600000000L) // 10 min — replication factor ≤ 2
   }
 
-  /** Session path trigram top-20, shared by the ts_path_ngrams registry
-    * entry AND ScaleProbe (the probe must measure the exact registry
-    * shape). Input: (user_id, event_id, event_type, tsn).
+  /** Session path trigram top-20 of the ts_path_ngrams registry entry.
+    * Input: (user_id, event_id, event_type, tsn).
     */
   def pathNgramsTop(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sess = TemporalOps.sessionize(e, keyCol = "user_id", tsCol = "tsn",

@@ -53,26 +53,22 @@ class OwlReaderSpec extends AnyFunSuite {
 
   // --- element harvest (reference: OntologyElementParserTest.java) ---
 
-  test("macrophage element harvest: terms, ids, valid filtered") {
-    val (terms, ids, meta) = elements("macrophage.owl")
+  test("macrophage element harvest: terms and metadata") {
+    val (terms, meta) = elements("macrophage.owl")
     val byTerm = terms.map(t => t.term -> t).toMap
     assert(byTerm("CL_0000235").label == "macrophage")
     assert(byTerm("CL_0000235").purl == "http://purl.obolibrary.org/obo/CL_0000235")
     assert(byTerm("CL_0000000").label == "cell")
     assert(byTerm("CL_0000576").label == "monocyte")
-    assert(ids.map(_.id).contains("CL"))
-    assert(!ids.map(_.id).contains("valid"))
     assert(meta.title == null && meta.description == null)
     assert(meta.purl == "http://purl.obolibrary.org/obo/cl.owl")
     assert(meta.versionIri == "http://purl.obolibrary.org/obo/cl/releases/2024-09-26/cl.owl")
     assert(meta.root == "http://purl.obolibrary.org/obo/CL_0000000")
   }
 
-  test("ro element harvest: RO and IAO ids, relation labels") {
-    val (terms, ids, meta) = elements("ro.owl")
+  test("ro element harvest: relation labels and metadata") {
+    val (terms, meta) = elements("ro.owl")
     val byTerm = terms.map(t => t.term -> t).toMap
-    assert(ids.map(_.id).toSet.contains("RO"))
-    assert(ids.map(_.id).toSet.contains("IAO"))
     assert(byTerm("RO_0002202").label == "develops from")
     assert(byTerm("RO_0002215").label == "capable of")
     assert(byTerm("IAO_0000115").label == "definition")
@@ -83,7 +79,7 @@ class OwlReaderSpec extends AnyFunSuite {
   // --- version sniffing (reference: OntologyDownloaderTest.java:19-44, N6) ---
 
   private def sniffVersion(name: String): String = {
-    val m = elements(name)._3
+    val m = elements(name)._2
     val date = "(\\d{4}-\\d{2}-\\d{2})".r
     Option(m.versionInfo).flatMap(v => date.findFirstIn(v))
       .orElse(Option(m.versionIri).flatMap(v => date.findFirstIn(v)))
@@ -112,7 +108,7 @@ class OwlReaderSpec extends AnyFunSuite {
       t.predicate == OwlReader.SubClassOf &&
       t.objectStr == "http://purl.obolibrary.org/obo/CL_0000000"))
     assert(ts.exists(t => t.objLexical == "entity ref class & more"))
-    val (terms, _, meta) = OwlReader.parseElements("entity-refs.owl", bytes)
+    val (terms, meta) = OwlReader.parseElements("entity-refs.owl", bytes)
     assert(terms.exists(t => t.term == "CL_0000001" &&
       t.purl == "http://purl.obolibrary.org/obo/CL_0000001"))
     assert(meta.purl == "http://purl.obolibrary.org/obo/cl.owl")
@@ -196,7 +192,7 @@ class OwlReaderSpec extends AnyFunSuite {
         |    <rdfs:label>outer label</rdfs:label>
         |  </owl:Class>
         |</rdf:RDF>""".stripMargin
-    val (terms, _, _) = OwlReader.parseElements("nested.owl", doc.getBytes("UTF-8"))
+    val (terms, _) = OwlReader.parseElements("nested.owl", doc.getBytes("UTF-8"))
     val byTerm = terms.map(t => t.term -> t.label).toMap
     assert(byTerm("INNER_0000002") == "inner label")
     // first-descendant-wins: the outer frame takes the inner's label, which

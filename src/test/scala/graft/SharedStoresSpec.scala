@@ -49,6 +49,16 @@ class SharedStoresSpec extends AnyFunSuite {
     assert(SharedStores.materializers.get("spec_failing") == "retry")
   }
 
+  test("a build that throws records no build seconds") {
+    val s = fresh()
+    intercept[IllegalStateException] {
+      SharedStores(s, "spec_failing_seconds", sf)(throw new IllegalStateException("boom"))
+    }
+    assert(!SharedStores.buildSeconds.containsKey("spec_failing_seconds"))
+    SharedStores(s, "spec_failing_seconds", sf)("built")
+    assert(SharedStores.buildSeconds.get("spec_failing_seconds") >= 0.0)
+  }
+
   test("attribution names the first consumer in battery order, never _warmup") {
     val s = fresh()
     val qs = SparkEntry.queries

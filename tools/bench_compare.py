@@ -13,6 +13,9 @@ comparison path:
     stores untimed and one that charged them to entries compare like for
     like, and lists every shared store whose `sharedStores` attribution
     (the entry that built it) differs between the records;
+  - when both records carry `entryStats` (per-entry jobs, task CPU,
+    shuffle and spill), prints jobs, task CPU and shuffle bytes side by
+    side for the TOP_ENTRIES entries with the largest wall ratio A/B;
   - prints normalized totals ONLY when both records are comparable:
     neither is marked cal_contaminated, and their calibrations agree
     within CAL_TOLERANCE (default 1.25x). Otherwise it REFUSES, and says
@@ -25,6 +28,7 @@ import math
 import sys
 
 CAL_TOLERANCE = 1.25
+TOP_ENTRIES = 10
 
 
 def load(path):
@@ -44,6 +48,23 @@ def all_in(rec):
     """value + warmupSeconds; None when the record predates warmupSeconds."""
     w = rec.get("warmupSeconds")
     return None if w is None else rec.get("value") + w
+
+
+def entry_figures(s):
+    return (f"{s['prep_jobs']}+{s['exec_jobs']} jobs {s['task_cpu_s']:.2f} s "
+            f"{s['shuffle_write_bytes'] / 1e6:.1f}/{s['shuffle_read_bytes'] / 1e6:.1f} MB")
+
+
+def print_entry_stats(ea, eb, qa, qb, common):
+    """Jobs, task CPU and shuffle bytes of A and B for the entries whose
+    wall grew most from B to A."""
+    both = [q for q in common if q in ea and q in eb and qb[q] > 0]
+    top = sorted(both, key=lambda q: qa[q] / qb[q], reverse=True)[:TOP_ENTRIES]
+    print(f"entry stats, top {len(top)} wall ratios A/B "
+          "(jobs prep+exec, task CPU s, shuffle write/read MB):")
+    for q in top:
+        print(f"   {q}: ratio {qa[q] / qb[q]:.2f}  "
+              f"A {entry_figures(ea[q])}  B {entry_figures(eb[q])}")
 
 
 def main():
@@ -83,6 +104,10 @@ def main():
     print(f"shared stores attributed differently: {len(moved)}")
     for k in moved:
         print(f"   {k}: A {sa.get(k, '-')}  B {sb.get(k, '-')}")
+
+    ea, eb = a.get("entryStats"), b.get("entryStats")
+    if ea is not None and eb is not None:
+        print_entry_stats(ea, eb, qa, qb, common)
 
     if ratios:
         n = len(ratios)
