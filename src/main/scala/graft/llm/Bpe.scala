@@ -91,7 +91,7 @@ object Bpe {
     require(numMerges > 0, s"numMerges must be positive: $numMerges")
     require(maxBatch > 0, s"maxBatch must be positive: $maxBatch")
     // ONE corpus pass: word frequency table with initial per-char symbols
-    var vocab = Checkpointer(docs
+    val vocab0 = Checkpointer(docs
       .select(explode(split(coalesce(col(textCol), lit("")), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("n"))
@@ -99,11 +99,13 @@ object Bpe {
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var rank = 0
     var rounds = 0
-    var exhausted = false
-    while (rank < numMerges && !exhausted) {
+    // every round learns at least one rule, so numMerges rounds suffice; a
+    // round that learns none (all rules learned, or no pair occurs twice)
+    // returns the vocabulary unchanged, which ends training
+    val vocab = Checkpointer.iterate(vocab0, numMerges, (_, _) => false) { (vocab, _) =>
       // adjacent pair counts over the vocabulary, weighted by word frequency
       val want = math.min(maxBatch, numMerges - rank)
-      val top = vocab
+      lazy val top = vocab
         .select(posexplode(slice(col("symbols"), lit(1), size(col("symbols")) - 1))
             .as(Seq("i", "left")),
           col("symbols"), col("n"))
@@ -113,7 +115,7 @@ object Bpe {
         .orderBy(col("total").desc, col("left"), col("right"))
         .limit(want)
         .collect()
-      if (top.isEmpty) exhausted = true
+      if (want == 0 || top.isEmpty) vocab
       else {
         rounds += 1
         // per-candidate created-pair bound: max count of any trigram with
@@ -162,18 +164,14 @@ object Bpe {
           }
         }
         batch.foreach { case (l, r, t) => rules += ((rank, l, r, l + r, t)); rank += 1 }
-        // ONE rewrite pass applies the whole batch in learned order.
-        // Checkpoint the new round, then release the superseded copy —
-        // otherwise numMerges (often tens of thousands) vocabulary copies
-        // accumulate in non-evictable block storage over the training loop
+        // ONE rewrite pass applies the whole batch in learned order
         val batchRules = batch.map(b => (b._1, b._2)).toSeq
         val applyBatch = udf((symbols: Seq[String]) =>
           batchRules.foldLeft(symbols) { case (s, (l, r)) => mergeOnce(s, l, r) })
-        val prev = vocab
-        vocab = Checkpointer(vocab.withColumn("symbols", applyBatch(col("symbols"))))
-        Checkpointer.release(prev)
+        vocab.withColumn("symbols", applyBatch(col("symbols")))
       }
     }
+    Checkpointer.release(vocab)
     (rules.toSeq, rounds)
   }
 

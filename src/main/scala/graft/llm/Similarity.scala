@@ -196,7 +196,7 @@ object Similarity {
     * Input columns: (idCol, embCol). Output: query_id, neighbor_id, cosine,
     * rank (1..k), deterministically tie-broken by neighbor id.
     * The corpus side is broadcast when small; otherwise Spark picks a
-    * shuffle-replicate-NL join — at scale, prefer [[lshTopK]].
+    * shuffle-replicate-NL join — at scale, prefer [[ivfTopK]].
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                      idCol: String = "vec_id", embCol: String = "embedding",
@@ -350,33 +350,13 @@ object Similarity {
     vectors.select(col(idCol) +: comps: _*)
   }
 
-  /** LSH-bucketed approximate top-k: queries join only candidates in the
-    * same sign-bucket, then exact cosine rank within the bucket. Recall is
-    * traded for a 2^numPlanes candidate reduction; co-partitioned equi-join
-    * on the bucket key replaces the cross join.
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, numPlanes: Int = 8,
-              idCol: String = "vec_id", embCol: String = "embedding",
-              scale: Int = 1000): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol), scale).as("qv"),
-      lshBucket(col(embCol), numPlanes).as("bucket"))
-      .withColumn("__nq", normQ(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), quantize(col(embCol), scale).as("cv"),
-      lshBucket(col(embCol), numPlanes).as("bucket"))
-      .withColumn("__nc", normQ(col("cv")))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosineQN(col("qv"), col("cv"), col("__nq"), col("__nc")))
-    rankTopK(scored, k, Seq(col("cosine").desc, col("neighbor_id")))
-      .select("query_id", "neighbor_id", "cosine", "rank")
-  }
-
   /** IVF (inverted-file) approximate top-k: corpus vectors are partitioned
     * into `nCentroids` Voronoi cells by seeded KMeans; each query probes only
     * its `nProbe` nearest cells and ranks exact cosine within them. The
     * coarse quantizer turns the all-pairs cross join into an equi-join on
     * cell id — the centroid table is tiny and broadcast. Complements
-    * [[lshTopK]]: IVF adapts to the data distribution, LSH is data-independent.
+    * [[lshBucket]] routing: IVF adapts to the data distribution, LSH is
+    * data-independent.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCentroids: Int = 16, nProbe: Int = 4,
@@ -1042,8 +1022,8 @@ object Similarity {
   // trick — level(id) from the id hash — so the hierarchy too is
   // order-free (hnswLayerOf / layeredSearch below).
   //
-  // Scale shape (100 TB): init is the lshTopK shape (bucket equi-join;
-  // bucket size is controlled by plane count and the documented multi-band
+  // Scale shape (100 TB): init is an lshBucket equi-join (bucket size is
+  // controlled by plane count and the documented multi-band
   // production path); each round's candidate volume is ≤ (2k)²·|V| rows
   // (out-degree k by construction, REVERSE degree capped to k by a
   // per-node window before expansion — the ρ-sampling of the paper made
@@ -1168,20 +1148,11 @@ object Similarity {
     // each round consumes the previous graph THREE times (forward, reverse,
     // and in the candidate union) — lazy reuse recomputes the whole prefix
     // per consumer, a 3^rounds blowup
-    var g = Checkpointer(rankTopKById(scored0, k))
-    for (_ <- 1 to rounds) {
-      // release the superseded round once the new one has materialized
-      // (eager checkpoint) — with local checkpoints unreleased per-round
-      // blocks (k·|V| rows each) pin non-evictable storage for the JVM,
-      // the cross-query contamination class (the GraphTraversal /
-      // ConnectedComponents discipline). The FINAL graph stays pinned: it
-      // is the operator's result and callers (layeredSearch, the bench
-      // shared stores) read it.
-      val prev = g
-      g = Checkpointer(nnDescentRound(prev,
-        qvecs.select(col("vid"), col("qv"), col("__nq")), k))
-      Checkpointer.release(prev)
-    }
+    // the FINAL graph stays pinned: it is the operator's result and callers
+    // (layeredSearch, the bench shared stores) read it
+    val qv = qvecs.select(col("vid"), col("qv"), col("__nq"))
+    val g = Checkpointer.iterate(Checkpointer(rankTopKById(scored0, k)), rounds,
+        (_, _) => false)((prev, _) => nnDescentRound(prev, qv, k))
     g.select(col("id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
@@ -1243,27 +1214,22 @@ object Similarity {
             col("neighbor_id")), Seq("node"))
           .select(col("query_id"), col("neighbor_id").as("node")))
         .distinct()
-      val scored = score(cand)
+      score(cand)
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("query_id"))
             .orderBy(col("cosine").desc, col("node"))))
         .filter(col("rn") <= width)
         .select("query_id", "node", "cosine")
-      Checkpointer(scored)
     }
-    var cur = Checkpointer(score(qs.select("query_id").crossJoin(broadcast(entry))))
-    // release each superseded beam frame once the next hop materializes
-    // (eager checkpoints) — the nnDescentGraph round discipline; without
-    // it every hop's |Q|·width-row frame stays pinned for the JVM
-    def advance(graph: DataFrame, width: Int): Unit = {
-      val prev = cur
-      cur = hop(prev, graph, width)
-      Checkpointer.release(prev)
+    // greedy hops (width 1) down the upper layers, then the base-layer beam
+    val schedule = (maxL to 1 by -1).flatMap(l => Seq.fill(upperHops)((layers(l), 1))) ++
+      Seq.fill(baseHops)((layers(0), beam))
+    val cur = Checkpointer.iterate(
+        Checkpointer(score(qs.select("query_id").crossJoin(broadcast(entry)))),
+        schedule.size, (_, _) => false) { (cur, r) =>
+      val (graph, width) = schedule(r - 1)
+      hop(cur, graph, width)
     }
-    for (l <- maxL to 1 by -1; _ <- 1 to upperHops)
-      advance(layers(l), width = 1)
-    for (_ <- 1 to baseHops)
-      advance(layers(0), width = beam)
     cur.filter(col("node") =!= col("query_id"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
@@ -1323,10 +1289,10 @@ object Similarity {
         .join(lookup, Seq("node"))
         .withColumn("cosine", cosineQN(col("qv"), col("cv"), col("__nq"), col("__nc")))
         .select("query_id", "node", "cosine")
-    var cur = Checkpointer(score(qs.select("query_id").crossJoin(broadcast(entry))))
-    for (_ <- 1 to hops) {
-      val prev = cur
-      cur = Checkpointer(score(prev.select("query_id", "node")
+    val cur = Checkpointer.iterate(
+        Checkpointer(score(qs.select("query_id").crossJoin(broadcast(entry)))), hops,
+        (_, _) => false) { (prev, _) =>
+      score(prev.select("query_id", "node")
           .unionByName(prev.select(col("query_id"), col("node"))
             .join(graph.select(col("id").as("node"), col("neighbor_id")),
               Seq("node"))
@@ -1336,8 +1302,7 @@ object Similarity {
           Window.partitionBy(col("query_id"))
             .orderBy(col("cosine").desc, col("node"))))
         .filter(col("rn") <= beam)
-        .select("query_id", "node", "cosine"))
-      Checkpointer.release(prev)
+        .select("query_id", "node", "cosine")
     }
     // (per-query windows here are beam-bounded — candidates ≤
     // beam·(k+1) per query before the window, the layeredSearch shape)

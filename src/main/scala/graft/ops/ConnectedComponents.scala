@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * GraphFrames/GraphX implementations). Converges in O(log² n) rounds on
   * any graph (practically < 10). Each round is TWO key shuffles (one
   * window aggregation per star op) over the current edge set; there is no
-  * driver-side graph state — only a 2-value convergence fingerprint is
-  * collected per round.
+  * driver-side graph state — only the round driver's 2-value state
+  * fingerprint ([[Checkpointer.untilStable]]) is collected per batch.
   *
   * Scale notes (100 TB): edge rows only ever shrink or re-point (both star
   * ops emit ≤ one edge per input half-edge, and large-star points
@@ -75,29 +75,6 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** (row count, order-insensitive hash sum) — cheap per-round convergence
-    * fingerprint over the checkpointed edge set. The fold is a decimal sum:
-    * a long sum of 64-bit hashes overflows (an error under ANSI mode, the
-    * Spark 4 default), and xor-folds lose the multiplicity signal.
-    */
-  private def fingerprint(e: DataFrame): (Long, BigDecimal) = {
-    val r = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0)))
-      .head()
-    (r.getLong(0), BigDecimal(r.getDecimal(1)))
-  }
-
-  /** Component assignment: one row per node reachable from an edge —
-    * `(id, component)` with component = MIN node id of the component. Pass
-    * `vertices` (a 1-column DataFrame named `idCol`) to also emit isolated
-    * nodes (component = own id) — the dedup path passes the full corpus so
-    * non-duplicated documents appear as their own singleton cluster.
-    *
-    * Throws if the contraction has not converged within `maxIter` rounds
-    * (O(log² n) expected — 30 covers any realistic corpus) rather than
-    * returning a partially-contracted, silently wrong labeling.
-    */
   /** Incremental connected components under EDGE INSERTS — the graph twin
     * of u5/u11's delta maintenance: instead of re-running star contraction
     * over the full edge set, the new edges are COLLAPSED through the old
@@ -138,13 +115,19 @@ object ConnectedComponents {
     relabeledOld.unionByName(newOnly)
   }
 
+  /** Component assignment: one row per node reachable from an edge —
+    * `(id, component)` with component = MIN node id of the component. Pass
+    * `vertices` (a 1-column DataFrame named `idCol`) to also emit isolated
+    * nodes (component = own id) — the dedup path passes the full corpus so
+    * non-duplicated documents appear as their own singleton cluster.
+    *
+    * Throws if the contraction has not converged within `maxIter` rounds
+    * (O(log² n) expected — 30 covers any realistic corpus) rather than
+    * returning a partially-contracted, silently wrong labeling.
+    */
   def components(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                  vertices: Option[DataFrame] = None, idCol: String = "id",
                  maxIter: Int = 30): DataFrame = {
-    var e = Checkpointer(canonical(edges, srcCol, dstCol))
-    var fp = fingerprint(e)
-    var converged = false
-    var it = 0
     // BATCHED rounds: two star alternations per checkpoint+fingerprint.
     // Every driver job costs ~60 ms of fixed latency regardless of task
     // size (measured, PLANS.md round 13), so per-round actions dominate
@@ -153,24 +136,13 @@ object ConnectedComponents {
     // action cuts 2 jobs/round to 1 job/2 rounds. Convergence is still
     // sound: the star fixpoint is idempotent, so a batch straddling the
     // fixpoint re-emits the converged state and the batch-end fingerprint
-    // stabilizes exactly one comparison later. Release order stays safe —
-    // the fingerprint action materializes `next` BEFORE `e` is released.
-    while (!converged && it < maxIter) {
-      val next = Checkpointer.lazily(smallStar(largeStar(smallStar(largeStar(e)))))
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      fp = nfp
-      // release the superseded round's state — otherwise up to maxIter
-      // edge-scale copies pin non-evictable executor storage (the pageRank
-      // discipline)
-      Checkpointer.release(e)
-      e = next
-      it += 2
-    }
-    if (!converged)
-      throw new IllegalStateException(
+    // stabilizes exactly one comparison later.
+    val e = Checkpointer.untilStable(Checkpointer(canonical(edges, srcCol, dstCol)),
+        (maxIter + 1) / 2, eager = false,
         s"connected components did not converge in $maxIter rounds " +
-          "(raise maxIter; expected O(log^2 n) rounds)")
+          "(raise maxIter; expected O(log^2 n) rounds)") { e =>
+      smallStar(largeStar(smallStar(largeStar(e))))
+    }
     // Converged edges form stars (child -> component min); add the roots.
     val stars = e.select(col("u").as("id"), col("v").as("component"))
     val assigned = stars

@@ -37,33 +37,47 @@ object GraphTraversal {
                 idCol: String = "id"): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e = edges.select(col(srcCol).as("id"), col(dstCol).as("nid"))
-    var visited = Checkpointer(sources.select(col(idCol).as("id")).distinct()
-      .withColumn("level", lit(0)))
-    var frontier = visited.select("id")
-    var frontierCp: Option[DataFrame] = None // checkpointed frame backing frontier
-    var h = 0
-    var exhausted = false
-    while (h < maxHops && !exhausted) {
-      h += 1
-      val next = Checkpointer(e.join(frontier, Seq("id"))
+    val (visited, frontiers) = frontierRounds(
+        Checkpointer(sources.select(col(idCol).as("id")).distinct()
+          .withColumn("level", lit(0))), maxHops, _.isEmpty) { (frontier, visited, h) =>
+      e.join(frontier.select("id"), Seq("id"))
         .select(col("nid").as("id")).distinct()
         .join(visited.select("id"), Seq("id"), "left_anti")
-        .withColumn("level", lit(h)))
-      if (next.isEmpty) { Checkpointer.release(next); exhausted = true }
+        .withColumn("level", lit(h))
+    }
+    frontiers.filterNot(_ eq visited).foreach(Checkpointer.release)
+    visited
+  }
+
+  /** The visited/frontier discipline of [[bfsLevels]],
+    * [[neighborhoodFunction]] and [[shortestPathCounts]]: `seed`
+    * (checkpointed) is round 0's frontier and visited set; round
+    * t ≤ `maxRounds` checkpoints `expand(frontier, visited, t)` — the newly
+    * reached rows, which become the next frontier — and stops at the first
+    * round where `exhausted(next)` holds; otherwise the visited set grows
+    * by them (checkpointed, one live copy: each superseded one is
+    * released). Only newly reached rows join the next round. Returns the
+    * final visited set and every non-empty frontier, seed first; the
+    * caller releases what it does not return.
+    */
+  private def frontierRounds(seed: DataFrame, maxRounds: Int, exhausted: DataFrame => Boolean)(
+      expand: (DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Seq[DataFrame]) = {
+    var visited = seed
+    val frontiers = scala.collection.mutable.ArrayBuffer(seed)
+    var t = 1
+    var open = true
+    while (open && t <= maxRounds) {
+      val next = Checkpointer(expand(frontiers.last, visited, t))
+      if (exhausted(next)) { Checkpointer.release(next); open = false }
       else {
-        // each round keeps ONE visited-set copy and ONE frontier copy of
-        // per-round state, releasing the superseded ones (the pageRank
-        // discipline — without this up to maxHops copies pin storage)
-        val prevVisited = visited
-        visited = Checkpointer(visited.union(next))
-        Checkpointer.release(prevVisited)
-        frontierCp.foreach(Checkpointer.release)
-        frontierCp = Some(next)
-        frontier = next.select("id")
+        val grown = Checkpointer(visited.union(next))
+        if (!(visited eq seed)) Checkpointer.release(visited)
+        visited = grown
+        frontiers += next
+        t += 1
       }
     }
-    frontierCp.foreach(Checkpointer.release)
-    visited
+    (visited, frontiers.toSeq)
   }
 
   /** Hop-bounded single-source(s) shortest paths over a WEIGHTED directed
@@ -95,18 +109,12 @@ object GraphTraversal {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e = edges.select(col(srcCol).as("id"),
       col(dstCol).as("nid"), col(weightCol).cast("long").as("w"))
-    var dist = Checkpointer(sources.select(col(idCol).as("id")).distinct()
-      .withColumn("dist", lit(0L)))
-    var h = 0
-    while (h < maxHops) {
-      h += 1
+    Checkpointer.iterate(Checkpointer(sources.select(col(idCol).as("id")).distinct()
+        .withColumn("dist", lit(0L))), maxHops, (_, _) => false) { (dist, _) =>
       val relaxed = e.join(dist, Seq("id"))
         .select(col("nid").as("id"), (col("dist") + col("w")).as("dist"))
-      val prev = dist
-      dist = Checkpointer(prev.union(relaxed).groupBy("id").agg(min("dist").as("dist")))
-      Checkpointer.release(prev)
+      dist.union(relaxed).groupBy("id").agg(min("dist").as("dist"))
     }
-    dist
   }
 
   /** PageRank over a directed edge table: `iterations` rounds of the
@@ -222,18 +230,38 @@ object GraphTraversal {
         require(sCount > 0,
           "personalized teleport: no source id is a vertex of the graph — " +
             "an all-zero teleport vector would silently drain all rank mass")
-        Checkpointer(vertices.join(sMembers, Seq("id"), "left")
+        val tp = Checkpointer(vertices.join(sMembers, Seq("id"), "left")
           .withColumn("tp",
             when(col("__src").isNotNull, lit(1.0 / sCount)).otherwise(lit(0.0)))
           .select(col("id"), col("tp")))
+        Checkpointer.release(sMembers)
+        tp
     }
     if (encode) Checkpointer.release(eRaw) // loop reads only the encoded edge table
     if (encode) Checkpointer.release(verticesRaw) // dict carries the id mapping
     val outDeg = Checkpointer(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg")))
-    var ranks = Checkpointer(vtp.select(col("id"), col("tp").as("rank")))
-    var i = 0
-    var converged = false
-    while (i < iterations && !converged) {
+    // uniform path keeps the historical divide-by-n evaluation order
+    // (bit-identical to the unrolled oracle SQL, which also divides);
+    // the personalized path multiplies by the per-vertex tp — its oracle
+    // mirrors that form
+    val rankExpr =
+      if (sources.isEmpty)
+        lit((1.0 - damping) / n) +
+          lit(damping) * (coalesce(col("inbound"), lit(0.0)) + col("dm") / n)
+      else
+        lit(1.0 - damping) * col("tp") +
+          lit(damping) * (coalesce(col("inbound"), lit(0.0)) + col("dm") * col("tp"))
+    // the tolerance stop: the round's L1 rank delta, read while the
+    // superseded ranks are still live
+    val settled = (prev: DataFrame, next: DataFrame) => tolerance.exists { tol =>
+      next.join(prev.withColumnRenamed("rank", "prev_rank"), Seq("id"))
+        .agg(coalesce(sum(abs(col("rank") - col("prev_rank"))), lit(0.0)))
+        .head().getDouble(0) < tol
+    }
+    var rounds = 0
+    val ranks = Checkpointer.iterate(
+        Checkpointer(vtp.select(col("id"), col("tp").as("rank"))), iterations, settled) { (ranks, r) =>
+      rounds = r
       val withDeg = ranks.join(outDeg, Seq("id"), "left")
       // dangling mass: rank held by vertices with no outlinks
       val dangling = withDeg.filter(col("outdeg").isNull)
@@ -242,39 +270,20 @@ object GraphTraversal {
         .select(col("id").as("src"), (col("rank") / col("outdeg")).as("c"))
         .join(e, Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("c")).as("inbound"))
-      val prev = ranks
-      // uniform path keeps the historical divide-by-n evaluation order
-      // (bit-identical to the unrolled oracle SQL, which also divides);
-      // the personalized path multiplies by the per-vertex tp — its oracle
-      // mirrors that form
-      val rankExpr =
-        if (sources.isEmpty)
-          lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("inbound"), lit(0.0)) + col("dm") / n)
-        else
-          lit(1.0 - damping) * col("tp") +
-            lit(damping) * (coalesce(col("inbound"), lit(0.0)) + col("dm") * col("tp"))
-      ranks = Checkpointer(vtp
+      vtp
         .join(contribs, Seq("id"), "left")
         .crossJoin(broadcast(dangling))
-        .select(col("id"), rankExpr.as("rank")))
-      i += 1
-      tolerance.foreach { tol =>
-        val delta = ranks
-          .join(prev.withColumnRenamed("rank", "prev_rank"), Seq("id"))
-          .agg(coalesce(sum(abs(col("rank") - col("prev_rank"))), lit(0.0)))
-          .head().getDouble(0)
-        if (delta < tol) converged = true
-      }
-      Checkpointer.release(prev)
+        .select(col("id"), rankExpr.as("rank"))
     }
+    (Seq(e, outDeg, vtp) ++ (if (encode) Nil else Seq(verticesRaw)))
+      .foreach(Checkpointer.release)
     // decode back to the caller's vertex keys (vertex-sized join, once)
     val out = dict match {
       case Some(d) => ranks.withColumnRenamed("id", "vid")
         .join(d, Seq("vid")).select(col("id"), col("rank"))
       case None => ranks
     }
-    (out, i)
+    (out, rounds)
   }
 
   /** Per-vertex triangle counts over an UNDIRECTED graph (edge direction and
@@ -393,32 +402,20 @@ object GraphTraversal {
             dstCol: String = "dst", maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    var e = Checkpointer(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
-    var nEdges = e.count()
-    var rounds = 0
-    var converged = nEdges == 0L
-    while (!converged && rounds < maxIter) {
-      val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
+    val core = Checkpointer.untilStable(Checkpointer(edges
+        .select(least(col(srcCol), col(dstCol)).as("a"),
+          greatest(col(srcCol), col(dstCol)).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct()), maxIter, eager = true,
+        s"kCore(k=$k) did not converge in $maxIter peel rounds — " +
+          "deep-peeling graph (e.g. a long chain); raise maxIter") { e =>
+      val keep = e.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy("v").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("v")
-      val next = Checkpointer(e
-        .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi"))
-      val nNext = next.count()
-      Checkpointer.release(e)
-      e = next
-      rounds += 1
-      if (nNext == nEdges) converged = true
-      nEdges = nNext
+        .filter(col("deg") >= k).select("v")
+      e.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+        .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
     }
-    if (!converged) throw new IllegalStateException(
-      s"kCore(k=$k) did not converge in $maxIter peel rounds — " +
-        "deep-peeling graph (e.g. a long chain); raise maxIter")
-    e.select(explode(array(col("a"), col("b"))).as("id"))
+    core.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("core_deg"))
   }
 
@@ -479,34 +476,24 @@ object GraphTraversal {
       Checkpointer.release(oriented)
       sup
     }
-    var e = Checkpointer(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
-    var nEdges = e.count()
-    var rounds = 0
-    while (nEdges > 0 && rounds < maxIter) {
-      val sup = support(e)
-      val next = Checkpointer(e.join(sup.filter(col("support") >= k - 2)
-        .select("a", "b"), Seq("a", "b"), "left_semi"))
-      val nNext = next.count()
-      if (nNext == nEdges) {
-        // fixpoint: the support just computed IS the truss support
-        val out = Checkpointer(e.join(sup, Seq("a", "b")))
-        Seq(sup, next, e).foreach(Checkpointer.release)
-        return out
-      }
-      Seq(sup, e).foreach(Checkpointer.release)
-      e = next
-      rounds += 1
-      nEdges = nNext
+    // the last round's support: at the fixpoint it is the truss's own
+    var sup: DataFrame = null
+    val truss = Checkpointer.untilStable(Checkpointer(edges
+        .select(least(col(srcCol), col(dstCol)).as("a"),
+          greatest(col(srcCol), col(dstCol)).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct()), maxIter, eager = true,
+        s"kTruss(k=$k) did not converge in $maxIter peel rounds — " +
+          "deep-peeling graph; raise maxIter") { e =>
+      Option(sup).foreach(Checkpointer.release)
+      sup = support(e)
+      e.join(sup.filter(col("support") >= k - 2).select("a", "b"), Seq("a", "b"), "left_semi")
     }
-    if (nEdges > 0) throw new IllegalStateException(
-      s"kTruss(k=$k) did not converge in $maxIter peel rounds — " +
-        "deep-peeling graph; raise maxIter")
-    // empty truss: keep the (a, b, support) schema
-    e.select(col("a"), col("b"), lit(0L).as("support"))
+    if (sup == null) // empty input: keep the (a, b, support) schema
+      return truss.select(col("a"), col("b"), lit(0L).as("support"))
+    val out = Checkpointer(truss.join(sup, Seq("a", "b")))
+    Seq(sup, truss).foreach(Checkpointer.release)
+    out
   }
 
   /** Neighborhood-overlap similarity (common-neighbor Jaccard) over an
@@ -659,6 +646,7 @@ object GraphTraversal {
       .select(col("vsrc").as("src"), col("vdst").as("dst")))
     Checkpointer.release(eRaw) // the loop reads only the encoded edge table
     val enc = lpaRounds(e, rounds)
+    Checkpointer.release(e)
     // decode BOTH columns back to caller keys (vertex-sized joins, once);
     // order preservation already guaranteed min(vid-label) = min(key-label)
     enc
@@ -733,6 +721,7 @@ object GraphTraversal {
       .select(col("vsrc").as("src"), col("vdst").as("dst")))
     Checkpointer.release(eRaw)
     val enc = louvainRounds(e, rounds)
+    Checkpointer.release(e)
     enc
       .join(dict.select(col("vid").as("id"), col("id").as("__id_key")), Seq("id"))
       .join(dict.select(col("vid").as("community"), col("id").as("__comm_key")),
@@ -782,8 +771,9 @@ object GraphTraversal {
       .unionByName(we.filter(col("a") === col("b"))
         .select(col("a").as("id"), (col("w") * 2).as("w")))
       .groupBy("id").agg(sum(col("w")).as("dv")))
-    var cur = Checkpointer(str.select(col("id"), col("id").as("community")))
-    for (r <- 0 until rounds) {
+    val labels = Checkpointer.iterate(
+        Checkpointer(str.select(col("id"), col("id").as("community"))), rounds,
+        (_, _) => false) { (cur, r) =>
       val tot = cur.join(str, Seq("id"))
         .groupBy("community").agg(sum(col("dv")).as("tot"))
       val kvc = sym
@@ -811,20 +801,19 @@ object GraphTraversal {
       // of merging (measured: q barely grows round over round). Round r
       // applies moves only to vertices of id parity r % 2 — a symmetric
       // swap can't happen when only one endpoint may move — so `rounds`
-      // should be even (each parity moves rounds/2 times).
+      // should be even (each parity moves rounds/2 times; round r here is
+      // 1-based, so parity (r − 1) % 2 moves first).
       val chosen = gains.join(best, Seq("v"))
         .filter(col("gain") === col("mg"))
         .groupBy(col("v").as("id")).agg(min(col("community")).as("new_comm"))
-      val prev = cur
-      cur = Checkpointer(cur.select(col("id"), col("community").as("old_comm"))
+      cur.select(col("id"), col("community").as("old_comm"))
         .join(chosen, Seq("id"))
         .select(col("id"),
-          when(pmod(col("id"), lit(2L)) === lit(r % 2), col("new_comm"))
-            .otherwise(col("old_comm")).as("community")))
-      Checkpointer.release(prev)
+          when(pmod(col("id"), lit(2L)) === lit((r - 1) % 2), col("new_comm"))
+            .otherwise(col("old_comm")).as("community"))
     }
     Seq(we, sym, str).foreach(Checkpointer.release)
-    cur
+    labels
   }
 
   /** Contract an undirected edge table through a community assignment:
@@ -1028,6 +1017,8 @@ object GraphTraversal {
           "(condensation deeper than maxOuter; raise it)")
     val assigned = done.reduceOption(_ union _)
       .getOrElse(rem.select(col("src").as("id"), col("src").as("scc")).limit(0))
+    Checkpointer.release(remV)
+    if (done.nonEmpty) Checkpointer.release(rem)
     vertices match {
       case None => assigned
       case Some(vs) =>
@@ -1039,9 +1030,9 @@ object GraphTraversal {
 
   /** Min-label propagation fixpoint over directed edges (reachability
     * semilattice): lab(v) = min over {v} ∪ {lab(u) : u → v} (or the
-    * reversed relation). Labels only decrease, so the xxhash64-sum
-    * fingerprint ([[ConnectedComponents]] discipline) is a sound
-    * convergence test; throws after `maxProp` rounds.
+    * reversed relation). Labels only decrease, so the state fingerprint
+    * of [[Checkpointer.untilStable]] is a sound convergence test; throws
+    * after `maxProp` rounds.
     */
   private def minPropagate(e: DataFrame, verts: DataFrame, reversed: Boolean,
                            maxProp: Int): DataFrame = {
@@ -1054,22 +1045,13 @@ object GraphTraversal {
     // materialization per fixpoint; the broadcast-sized label side never
     // paid an edge re-exchange to begin with once AQE plans the round's
     // join as broadcast.)
-    var labels = Checkpointer(verts.withColumn("lab", col("id")))
-    def fp(df: DataFrame): BigDecimal = BigDecimal(
-      df.agg(coalesce(sum(xxhash64(col("id"), col("lab"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0)))
-        .head().getDecimal(0))
-    var prev = fp(labels)
-    var it = 0
     // BATCHED propagation: two one-hop min rounds per checkpoint, lazily
     // materialized inside the fingerprint's action — 1 driver job per 2
     // rounds instead of 2 jobs per round (the ~60 ms/job driver latency
     // dominates these small-state fixpoints; see ConnectedComponents).
     // Labels only decrease and the fixpoint is idempotent, so a batch
     // straddling convergence re-emits the converged labeling and the
-    // batch-end fingerprint stabilizes one comparison later. The
-    // fingerprint materializes `next` BEFORE the superseded labels are
-    // released (the lazy-checkpoint safety contract).
+    // batch-end fingerprint stabilizes one comparison later.
     //
     // (Round-13 note: VALUE-pointer jumping — lab(v) ← min(lab(v),
     // lab(lab(v))) — was prototyped here and REVERTED: it is sound
@@ -1082,25 +1064,17 @@ object GraphTraversal {
     // log-round reach-min needs transitive-closure-sized state; the
     // honest contract remains the documented diameter bound with a loud
     // maxProp failure.)
-    while (it < maxProp) {
-      var nl = labels
-      for (_ <- 0 until 2) {
+    Checkpointer.untilStable(Checkpointer(verts.withColumn("lab", col("id"))),
+        (maxProp + 1) / 2, eager = false,
+        s"min propagation did not converge in $maxProp rounds " +
+          "(graph diameter exceeds maxProp; raise it)") { labels =>
+      (0 until 2).foldLeft(labels) { (nl, _) =>
         val msgs = ed.join(nl.withColumnsRenamed(Map("id" -> "src")), Seq("src"))
           .groupBy(col("dst").as("id")).agg(min(col("lab")).as("mlab"))
-        nl = nl.join(msgs, Seq("id"), "left")
+        nl.join(msgs, Seq("id"), "left")
           .select(col("id"), least(col("lab"), coalesce(col("mlab"), col("lab"))).as("lab"))
       }
-      val next = Checkpointer.lazily(nl)
-      val nfp = fp(next)
-      Checkpointer.release(labels)
-      labels = next
-      if (nfp == prev) return labels
-      prev = nfp
-      it += 2
     }
-    throw new IllegalStateException(
-      s"min propagation did not converge in $maxProp rounds " +
-        "(graph diameter exceeds maxProp; raise it)")
   }
 
   /** vid = rank of `id` in ascending key order: an order-preserving dense
@@ -1118,21 +1092,19 @@ object GraphTraversal {
       .union(eRaw.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct())
-    var labels = Checkpointer(sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    for (_ <- 0 until rounds) {
+    val labels = Checkpointer.iterate(Checkpointer(sym.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))), rounds, (_, _) => false) { (labels, _) =>
       val votes = sym
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       val best = votes.groupBy("src").agg(max(col("cnt")).as("m"))
-      val prev = labels
-      labels = Checkpointer(votes.join(best, Seq("src"))
+      votes.join(best, Seq("src"))
         .filter(col("cnt") === col("m"))
         .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("label")))
-      Checkpointer.release(prev)
+        .agg(min(col("label")).as("label"))
     }
+    Checkpointer.release(sym)
     labels
   }
 
@@ -1169,30 +1141,25 @@ object GraphTraversal {
     val e = Checkpointer(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     val vertices = Checkpointer(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
-    var h = vertices.withColumn("s", lit(1L))
+    // one round is two checkpoints — authorities from hubs, then hubs from
+    // those authorities: the driver carries h, the round's a lives here
     var a: DataFrame = null
-    var live = List.empty[DataFrame]
-    for (_ <- 1 to rounds) {
-      val aNext = Checkpointer(e.join(h.select(col("id").as("src"), col("s")), Seq("src"))
+    val h = Checkpointer.iterate(vertices.withColumn("s", lit(1L)), rounds,
+        (_, _) => false) { (h, _) =>
+      Option(a).foreach(Checkpointer.release)
+      a = Checkpointer(e.join(h.select(col("id").as("src"), col("s")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("s")).as("s")))
-      val hNext = Checkpointer(e.join(aNext.select(col("id").as("dst"), col("s")), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(sum(col("s")).as("s")))
-      live.foreach(Checkpointer.release)
-      live = List(aNext, hNext)
-      a = aNext
-      h = hNext
+      e.join(a.select(col("id").as("dst"), col("s")), Seq("dst"))
+        .groupBy(col("src").as("id")).agg(sum(col("s")).as("s"))
     }
-    // the returned plan reads only vertices and the (checkpointed) final a/h —
-    // the edge table is no longer referenced and can release its blocks
+    // the returned plan reads only vertices and the (checkpointed) final
+    // a/h, which stay live; the edge table is no longer referenced
     Checkpointer.release(e)
-    val out = vertices
+    vertices
       .join(h.select(col("id"), col("s").as("hub")), Seq("id"), "left")
       .join(a.select(col("id"), col("s").as("auth")), Seq("id"), "left")
       .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
-    // vertices and the final (a, h) pair stay live — the returned plan
-    // reads them (releasing a localCheckpoint's blocks is destructive)
-    out
   }
 
   /** Deterministic random walks (the node2vec/DeepWalk corpus generator):
@@ -1253,41 +1220,23 @@ object GraphTraversal {
     val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("w"), col(dstCol).as("nw")).distinct()
     val verts = e.select(col("w").as("u")).union(e.select(col("nw").as("u"))).distinct()
-    var visited = Checkpointer(verts.select(col("u"), col("u").as("w")))
-    var frontier = visited
-    var frontierCp: Option[DataFrame] = None
-    val counts = Array.ofDim[Long](maxT + 1)
-    counts(0) = visited.count()
-    var t = 0
-    var exhausted = false
-    while (t < maxT && !exhausted) {
-      t += 1
-      val next = Checkpointer(frontier.join(e, Seq("w"))
-        .select(col("u"), col("nw").as("w")).distinct()
-        .join(visited, Seq("u", "w"), "left_anti"))
+    val seed = Checkpointer(verts.select(col("u"), col("u").as("w")))
+    // newly reached pairs per round; the first round that reaches none
+    // ends the loop, and every later N(t) equals N(t-1)
+    val reached = scala.collection.mutable.ArrayBuffer(seed.count())
+    val (visited, frontiers) = frontierRounds(seed, maxT, { next =>
       val n = next.count()
-      if (n == 0L) {
-        // frontier exhausted: every later N(t) equals N(t-1) — backfill and
-        // stop instead of re-running the identical join per remaining round
-        // just to rediscover an empty set
-        Checkpointer.release(next)
-        for (r <- t to maxT) counts(r) = counts(t - 1)
-        exhausted = true
-      }
-      else {
-        counts(t) = counts(t - 1) + n
-        val prevVisited = visited
-        visited = Checkpointer(visited.union(next))
-        Checkpointer.release(prevVisited)
-        frontierCp.foreach(Checkpointer.release)
-        frontierCp = Some(next)
-        frontier = next
-      }
+      if (n > 0L) reached += n
+      n == 0L
+    }) { (frontier, visited, _) =>
+      frontier.join(e, Seq("w"))
+        .select(col("u"), col("nw").as("w")).distinct()
+        .join(visited, Seq("u", "w"), "left_anti")
     }
-    frontierCp.foreach(Checkpointer.release)
-    Checkpointer.release(visited)
+    (visited +: frontiers).distinct.foreach(Checkpointer.release)
+    val cumulative = reached.scanLeft(0L)(_ + _).tail
     import spark.implicits._
-    counts.zipWithIndex.map { case (n, i) => (i, n) }.toSeq
+    (0 to maxT).map(t => (t, cumulative(math.min(t, cumulative.length - 1)))).toSeq
       .toDF("t", "n_pairs")
   }
 
@@ -1315,21 +1264,20 @@ object GraphTraversal {
     val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("id"), col(dstCol).as("nid")).distinct()
     val verts = e.select(col("id")).union(e.select(col("nid").as("id"))).distinct()
-    var counters = Checkpointer(verts.groupBy("id")
-      .agg(expr(s"hll_sketch_agg(id, $lgK)").as("sk")))
     def estSum(c: DataFrame): Long = c
       .agg(sum(expr("hll_sketch_estimate(sk)"))).head.getLong(0)
     val ests = Array.ofDim[Long](maxT + 1)
-    ests(0) = estSum(counters)
-    for (t <- 1 to maxT) {
+    // round t estimates N(t − 1) from its input before extending it, so
+    // the estimates run in round order: N(0), round 1, N(1), round 2, …
+    val counters = Checkpointer.iterate(Checkpointer(verts.groupBy("id")
+        .agg(expr(s"hll_sketch_agg(id, $lgK)").as("sk"))), maxT, (_, _) => false) { (counters, t) =>
+      ests(t - 1) = estSum(counters)
       val contrib = e.join(counters.select(col("id").as("nid"), col("sk")), Seq("nid"))
         .select(col("id"), col("sk"))
-      val prev = counters
-      counters = Checkpointer(counters.select(col("id"), col("sk")).union(contrib)
-        .groupBy("id").agg(expr("hll_union_agg(sk)").as("sk")))
-      ests(t) = estSum(counters)
-      Checkpointer.release(prev)
+      counters.select(col("id"), col("sk")).union(contrib)
+        .groupBy("id").agg(expr("hll_union_agg(sk)").as("sk"))
     }
+    ests(maxT) = estSum(counters)
     Checkpointer.release(counters)
     import spark.implicits._
     ests.zipWithIndex.map { case (n, i) => (i, n) }.toSeq
@@ -1429,39 +1377,19 @@ object GraphTraversal {
     require(maxT >= 0, "shortestPathCounts: maxT must be >= 0")
     val e = edges.select(col(srcCol).as("w"), col(dstCol).as("nw")).distinct()
     val verts = e.select(col("w").as("u")).union(e.select(col("nw").as("u"))).distinct()
-    val first = Checkpointer(verts.select(col("u").as("src"), col("u").as("w"),
-      lit(0).as("dist"), lit(1L).as("sigma")))
-    var visited = first
-    var frontier = first
-    val outs = Seq.newBuilder[DataFrame]
-    outs += first
-    var t = 0
-    var exhausted = false
-    while (t < maxT && !exhausted) {
-      t += 1
-      val next = Checkpointer(frontier.join(e, Seq("w"))
+    val (visited, frontiers) = frontierRounds(
+        Checkpointer(verts.select(col("u").as("src"), col("u").as("w"),
+          lit(0).as("dist"), lit(1L).as("sigma"))), maxT, _.isEmpty) { (frontier, visited, t) =>
+      frontier.join(e, Seq("w"))
         .groupBy(col("src"), col("nw").as("w"))
         .agg(sum(col("sigma")).as("sigma"))
         .join(visited.select("src", "w"), Seq("src", "w"), "left_anti")
-        .select(col("src"), col("w"), lit(t).as("dist"), col("sigma")))
-      if (next.isEmpty) { Checkpointer.release(next); exhausted = true }
-      else {
-        val prevVisited = visited
-        visited = Checkpointer(visited.union(next))
-        // the first frame doubles as outs(0) — it must survive until the
-        // final union is pinned; intermediate union accumulators are pure
-        // anti-join state and release immediately
-        if (!(prevVisited eq first)) Checkpointer.release(prevVisited)
-        outs += next
-        frontier = next
-      }
+        .select(col("src"), col("w"), lit(t).as("dist"), col("sigma"))
     }
-    // pin one copy of the output, THEN release every per-round frame (the
-    // hyperBallExplicit lifecycle discipline)
-    val roundFrames = outs.result()
-    val out = Checkpointer(roundFrames.reduce(_ unionByName _))
-    if (!(visited eq first)) Checkpointer.release(visited)
-    roundFrames.foreach(Checkpointer.release)
+    // every frontier is a slice of the output: pin one copy of it, THEN
+    // release the per-round frames (the hyperBallExplicit lifecycle)
+    val out = Checkpointer(frontiers.reduce(_ unionByName _))
+    (visited +: frontiers).distinct.foreach(Checkpointer.release)
     out
   }
 

@@ -37,3 +37,16 @@ object GraftStatsReset {
     }
   }
 }
+
+/** Bridge dropping the blocks of a truncated frame's RDD through the
+  * context, as the ContextCleaner does for an unreachable RDD: the RDD
+  * leaves `getPersistentRDDs` at once and its blocks are removed
+  * asynchronously (waiting for the removal measured slower on g_scc's
+  * hundreds of per-round releases). `RDD.unpersist` does the same but logs
+  * a lineage warning for every local checkpoint, which the iterative
+  * operators release once per round.
+  */
+object GraftCheckpointBlocks {
+  def drop(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+}

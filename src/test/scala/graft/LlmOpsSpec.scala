@@ -438,21 +438,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(b(0L) != b(2L)) // every plane's sign flips
   }
 
-  test("lshTopK finds all neighbors within tight clusters") {
-    // two antipodal clusters: tiny per-vector jitter never flips a plane
-    // sign, so cluster members share buckets and in-bucket ranking is exact
-    val mk = (base: Float, id: Long) =>
-      (id, Seq.tabulate(64)(d => base + 0.001f * ((id + d) % 7)))
-    val v = vecs(((0L until 8L).map(i => mk(0.5f, i)) ++ (8L until 16L).map(i => mk(-0.5f, i))): _*)
-    val exact = Similarity.bruteForceTopK(v, v, k = 3)
-      .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.lshTopK(v, v, k = 3, numPlanes = 4)
-      .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(approx == exact) // full recall within clusters
-    // and neighbors never cross clusters
-    assert(approx.forall { case (q, n) => (q < 8) == (n < 8) })
-  }
-
   test("bpe-ish token count splits letter runs, digit runs, and symbols") {
     val r = docs(1L -> "hello world42!").select(TextStats.bpeishTokenCount($"text")).collect()(0)
     assert(r.getInt(0) == 4) // hello, world, 42, !

@@ -15,7 +15,9 @@ comparison path:
     (the entry that built it) differs between the records;
   - when both records carry `entryStats` (per-entry jobs, task CPU,
     shuffle and spill), prints jobs, task CPU and shuffle bytes side by
-    side for the TOP_ENTRIES entries with the largest wall ratio A/B;
+    side for the TOP_ENTRIES entries with the largest wall ratio A/B, and
+    then every entry whose job count (prep + exec) differs between A and B
+    — the check that a refactor kept each entry's Spark actions;
   - prints normalized totals ONLY when both records are comparable:
     neither is marked cal_contaminated, and their calibrations agree
     within CAL_TOLERANCE (default 1.25x). Otherwise it REFUSES, and says
@@ -55,9 +57,14 @@ def entry_figures(s):
             f"{s['shuffle_write_bytes'] / 1e6:.1f}/{s['shuffle_read_bytes'] / 1e6:.1f} MB")
 
 
+def jobs(s):
+    return s["prep_jobs"] + s["exec_jobs"]
+
+
 def print_entry_stats(ea, eb, qa, qb, common):
     """Jobs, task CPU and shuffle bytes of A and B for the entries whose
-    wall grew most from B to A."""
+    wall grew most from B to A, then for every entry whose job count
+    differs."""
     both = [q for q in common if q in ea and q in eb and qb[q] > 0]
     top = sorted(both, key=lambda q: qa[q] / qb[q], reverse=True)[:TOP_ENTRIES]
     print(f"entry stats, top {len(top)} wall ratios A/B "
@@ -65,6 +72,11 @@ def print_entry_stats(ea, eb, qa, qb, common):
     for q in top:
         print(f"   {q}: ratio {qa[q] / qb[q]:.2f}  "
               f"A {entry_figures(ea[q])}  B {entry_figures(eb[q])}")
+    moved = [q for q in sorted(set(ea) & set(eb)) if jobs(ea[q]) != jobs(eb[q])]
+    print(f"entries whose job count (prep+exec) differs: {len(moved)}")
+    for q in moved:
+        print(f"   {q}: A {jobs(ea[q])}  B {jobs(eb[q])}  "
+              f"(A {entry_figures(ea[q])}  B {entry_figures(eb[q])})")
 
 
 def main():
