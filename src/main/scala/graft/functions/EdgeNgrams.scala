@@ -53,6 +53,6 @@ case class EdgeNgramsExpr(child: Expression, minN: Int, maxN: Int)
 
 object EdgeNgrams {
   /** Column API: select(edgeNgramTokens(col)) yields rows (token). */
-  def edgeNgramTokens(c: Column, minN: Int = 3, maxN: Int = 12): Column =
-    GraftColumnBridge.column(EdgeNgramsExpr(GraftColumnBridge.expression(c), minN, maxN))
+  def edgeNgramTokens(c: Column): Column =
+    GraftColumnBridge.column(EdgeNgramsExpr(GraftColumnBridge.expression(c), 3, 12))
 }

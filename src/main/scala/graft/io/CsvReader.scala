@@ -23,8 +23,7 @@ import org.apache.spark.sql.types.StructType
   */
 object CsvReader {
 
-  def read(spark: SparkSession, path: String, schema: StructType,
-           delimiter: String = ","): DataFrame = {
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     require(!schema.fieldNames.contains("corrupt_record"),
       "schema may not contain the reserved column name corrupt_record")
     val withCorrupt = schema.add("corrupt_record", org.apache.spark.sql.types.StringType)
@@ -32,7 +31,7 @@ object CsvReader {
       .filter(length(trim(col("value"))) > 0)
       .withColumn("cs", from_csv(col("value"), withCorrupt,
         Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "corrupt_record",
-          "delimiter" -> delimiter)))
+          "delimiter" -> ",")))
       .select(schema.fieldNames.map(f => col(s"cs.`$f`").as(f)) :+
         when(col("cs").isNull, col("value"))
           .otherwise(col("cs.corrupt_record")).as("corrupt_record"): _*)

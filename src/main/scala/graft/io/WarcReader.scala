@@ -46,19 +46,18 @@ object WarcReader {
       payload_len: Long,
       payload: Array[Byte])
 
-  /** Read every record of the WARC files under `dir` matching `pattern`
-    * (regex on the file NAME), one Spark task per file.
+  /** Read every record of the `*.warc` / `*.warc.gz` files under `dir`,
+    * one Spark task per file.
     */
-  def records(spark: SparkSession, dir: String,
-              pattern: String = ".*\\.warc(\\.gz)?",
-              maxPayloadBytes: Int = 1 << 20): DataFrame = {
+  def records(spark: SparkSession, dir: String): DataFrame = {
+    val pattern = ".*\\.warc(\\.gz)?"
     import spark.implicits._
     val paths = OwlReader.listFilesMatchingPattern(dir, pattern)
     require(paths.nonEmpty, s"No WARC files matching '$pattern' in $dir")
     spark.read.format("binaryFile").load(paths: _*)
       .select(element_at(split(col("path"), "/"), -1).as("name"), col("content"))
       .as[(String, Array[Byte])]
-      .flatMap { case (name, bytes) => parse(name, bytes, maxPayloadBytes) }
+      .flatMap { case (name, bytes) => parse(name, bytes, 1 << 20) }
       .toDF()
   }
 

@@ -78,21 +78,19 @@ object Bpe {
     * gain count), so the learned sequence is identical by induction.
     */
   def trainMerges(docs: DataFrame, numMerges: Int,
-                  textCol: String = "text",
                   maxBatch: Int = 1): Seq[(Int, String, String, String, Long)] =
-    trainMergesWithRounds(docs, numMerges, textCol, maxBatch)._1
+    trainMergesWithRounds(docs, numMerges, maxBatch)._1
 
   /** [[trainMerges]] plus the number of Spark rounds actually executed —
     * the batching observability surface (rounds < rules proves batching).
     */
   def trainMergesWithRounds(docs: DataFrame, numMerges: Int,
-                            textCol: String = "text",
                             maxBatch: Int = 1): (Seq[(Int, String, String, String, Long)], Int) = {
     require(numMerges > 0, s"numMerges must be positive: $numMerges")
     require(maxBatch > 0, s"maxBatch must be positive: $maxBatch")
     // ONE corpus pass: word frequency table with initial per-char symbols
     val vocab0 = Checkpointer(docs
-      .select(explode(split(coalesce(col(textCol), lit("")), " ")).as("word"))
+      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("n"))
       .select(split(col("word"), "").as("symbols"), col("n")))
@@ -177,11 +175,10 @@ object Bpe {
 
   /** Learned rules as a DataFrame — the registry/bench surface. */
   def trainMergesDf(docs: DataFrame, numMerges: Int,
-                    textCol: String = "text",
                     maxBatch: Int = 1): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    trainMerges(docs, numMerges, textCol, maxBatch)
+    trainMerges(docs, numMerges, maxBatch)
       .toDF("rank", "left", "right", "merged", "pair_count")
   }
 

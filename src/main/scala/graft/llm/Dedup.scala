@@ -29,9 +29,9 @@ object Dedup {
   /** Exact dedup: group by content digest, keep the smallest id as canonical
     * (deterministic), count members. One map-side-combinable aggregate.
     */
-  def exactGroups(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_members"))
+  def exactGroups(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("content_hash"))
+      .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_members"))
 
   /** Word n-gram shingles: (id, shingle) distinct. Shingles are
     * space-joined word windows, streamed by a native generator
@@ -39,9 +39,9 @@ object Dedup {
     * instead of a split-array + slice + concat_ws chain of interpreted
     * higher-order functions per window.
     */
-  def wordShingles(docs: DataFrame, n: Int, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol).as("id"),
-        graft.functions.WordShingles.wordShingles(col(textCol), n).as("shingle"))
+  def wordShingles(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id").as("id"),
+        graft.functions.WordShingles.wordShingles(col("text"), n).as("shingle"))
       .distinct()
 
   /** n-gram Jaccard near-dup pairs: inverted-index self-join on shingle →
@@ -336,10 +336,9 @@ object Dedup {
     * Output: (id, kept_text, n_units, n_kept) — emptied documents remain
     * with kept_text = '' so the caller decides their fate.
     */
-  def unitDedup(docs: DataFrame, sep: String, joinSep: String = " | ",
-                textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val units = docs.select(col(idCol).as("id"),
-        posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
+  def unitDedup(docs: DataFrame, sep: String, joinSep: String = " | "): DataFrame = {
+    val units = docs.select(col("doc_id").as("id"),
+        posexplode(split(col("text"), java.util.regex.Pattern.quote(sep)))
           .as(Seq("pos", "unit")))
       .filter(col("unit") =!= "")
     val winners = units.groupBy(md5(col("unit")).as("h"))
@@ -396,8 +395,8 @@ object Dedup {
     * PLANS.md). This entry point measures the distribution first (one
     * bounded aggregate) and routes:
     *
-    *  - Zipfian (p99/median ≥ `skewRatioMin`, or postings sparse enough
-    *    that mean df ≤ `meanDfMax` — uniform-but-tiny dfs cannot blow up):
+    *  - Zipfian (p99/median ≥ 4, or postings sparse enough that mean
+    *    df ≤ 8 — uniform-but-tiny dfs cannot blow up):
     *    the EXACT tier, output tagged `route = "prefix_exact"`.
     *  - degenerate: the maxDF-capped posting join ([[jaccardPairs]] — the
     *    documented scale-safe alternative; its cap drop-count is surfaced
@@ -407,11 +406,11 @@ object Dedup {
     * Output on both routes: (id_a, id_b, n_inter, n_a, n_b, route).
     */
   def prefixFilterPairsAuto(shingles: DataFrame, minJaccardPct: Int,
-      maxDF: Long = 1000L, skewRatioMin: Double = 4.0, meanDfMax: Double = 8.0): DataFrame = {
+      maxDF: Long = 1000L): DataFrame = {
     val (nTokens, nPostings, medianDf, p99Df) = dfSkewStats(shingles)
     val meanDf = nPostings.toDouble / math.max(1L, nTokens)
     val skewRatio = p99Df.toDouble / math.max(1L, medianDf)
-    if (skewRatio >= skewRatioMin || meanDf <= meanDfMax)
+    if (skewRatio >= 4.0 || meanDf <= 8.0)
       prefixFilterPairs(shingles, minJaccardPct)
         .withColumn("route", lit("prefix_exact"))
     else
@@ -500,11 +499,9 @@ object Dedup {
     * corpus. This is the standard two-stage scale pattern: candidates from
     * the cheap sketch, exact similarity only on the candidate set.
     */
-  def removeNearDuplicates(docs: DataFrame, shingleN: Int = 3, minJaccard: Double = 0.8,
-                           numHashes: Int = 12, bands: Int = 4,
-                           textCol: String = "text", idCol: String = "doc_id",
-                           maxBucket: Long = Long.MaxValue,
-                           maxDF: Long = Long.MaxValue): DataFrame = {
+  def removeNearDuplicates(docs: DataFrame, minJaccard: Double = 0.8): DataFrame = {
+    val numHashes = 12
+    val bands = 4
     // the candidate table feeds the id set AND the pair semi-join, and its
     // upstream is the whole multi-shuffle sketch pipeline: materialize it
     // once — it is SMALL (dup-density-bound pairs), so this is the
@@ -512,9 +509,9 @@ object Dedup {
     // trade. The corpus-scale shingle table is deliberately NOT
     // checkpointed (see cappedUniverse) — its re-executed subtree is a
     // map-side scan, not a shuffle.
-    val shingles = wordShingles(docs, shingleN, textCol, idCol)
+    val shingles = wordShingles(docs, 3)
     val candidates = Checkpointer(lshCandidates(minhashSignatures(shingles, numHashes), bands,
-      numHashes / bands, maxBucket))
+      numHashes / bands))
     // exact jaccard on candidates only (semi-join-restricted posting lists).
     // Pairing shares [[pairCounts]]/[[cappedUniverse]] with jaccardPairs — a
     // shingle self-join here would re-execute the shingle pipeline on both
@@ -531,12 +528,12 @@ object Dedup {
     // splits skewed merge joins.
     val candIds = candidates.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
     val candShingles = shingles.join(candIds.hint("merge"), Seq("id"), "left_semi")
-    val (postings, sizes) = cappedUniverse(candShingles, maxDF, "neardup_maxdf")
+    val (postings, sizes) = cappedUniverse(candShingles, Long.MaxValue, "neardup_maxdf")
     val inter = pairsFromPostings(postings)
       .join(candidates.hint("merge"), Seq("id_a", "id_b"), "left_semi")
     val confirmed = scorePairs(inter, sizes, "jaccard", jaccardOf, minJaccard)
-    val dropIds = confirmed.select(col("id_b").as(idCol)).distinct()
-    docs.join(dropIds.hint("merge"), Seq(idCol), "left_anti")
+    val dropIds = confirmed.select(col("id_b").as("doc_id")).distinct()
+    docs.join(dropIds.hint("merge"), Seq("doc_id"), "left_anti")
   }
 
   /** MinHash Jaccard estimate for candidate pairs: the fraction of the k
@@ -624,9 +621,8 @@ object Dedup {
     * shuffled on shingle. Only the (small) contaminated-id set reaches a
     * shuffle, in the final anti-join.
     */
-  def decontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int = 13,
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.join(contaminatedIds(docs, evalDocs, n, textCol, idCol), Seq(idCol), "left_anti")
+  def decontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame =
+    docs.join(contaminatedIds(docs, evalDocs, n), Seq("doc_id"), "left_anti")
 
   /** The shared contaminated-id probe behind [[decontaminate]] and
     * [[contaminationReport]]: ids of docs sharing ≥ 1 word n-gram with the
@@ -634,16 +630,15 @@ object Dedup {
     * id-distinct). One definition so the filter and the governance report
     * can never disagree about what "contaminated" means.
     */
-  private def contaminatedIds(docs: DataFrame, evalDocs: DataFrame, n: Int,
-                              textCol: String, idCol: String): DataFrame = {
-    val docShingles = docs.select(col(idCol).as("id"),
-      graft.functions.WordShingles.wordShingles(col(textCol), n).as("shingle"))
+  private def contaminatedIds(docs: DataFrame, evalDocs: DataFrame, n: Int): DataFrame = {
+    val docShingles = docs.select(col("doc_id").as("id"),
+      graft.functions.WordShingles.wordShingles(col("text"), n).as("shingle"))
     val evalShingles = evalDocs
-      .select(graft.functions.WordShingles.wordShingles(col(textCol), n).as("shingle"))
+      .select(graft.functions.WordShingles.wordShingles(col("text"), n).as("shingle"))
       .distinct()
     docShingles
       .join(broadcast(evalShingles), Seq("shingle"), "left_semi")
-      .select(col("id").as(idCol)).distinct()
+      .select(col("id").as("doc_id")).distinct()
   }
 
   /** Decontamination GOVERNANCE row: per-group contamination counts and
@@ -653,13 +648,11 @@ object Dedup {
     * (the eval side broadcasts, the corpus side never shuffles before the
     * group-sized aggregate).
     */
-  def contaminationReport(docs: DataFrame, evalDocs: DataFrame, n: Int = 13,
-                          textCol: String = "text", idCol: String = "doc_id",
-                          groupCol: String = "source"): DataFrame = {
-    val contaminated = contaminatedIds(docs, evalDocs, n, textCol, idCol)
+  def contaminationReport(docs: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame = {
+    val contaminated = contaminatedIds(docs, evalDocs, n)
       .withColumn("__contaminated", lit(1L))
-    docs.join(contaminated, Seq(idCol), "left_outer")
-      .groupBy(col(groupCol))
+    docs.join(contaminated, Seq("doc_id"), "left_outer")
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(coalesce(col("__contaminated"), lit(0L))).as("n_contaminated"))
       .withColumn("contamination_rate",
@@ -688,9 +681,8 @@ object Dedup {
     * materializes only the 2^mBits/64 bitset words regardless of eval size.
     */
   def bloomDecontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int = 13,
-                         mBits: Int = 22, numHashes: Int = 4,
-                         textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    applyBloomFilter(docs, buildBloom(evalDocs, n, mBits, numHashes, textCol), textCol)
+                         mBits: Int = 22, numHashes: Int = 4): DataFrame =
+    applyBloomFilter(docs, buildBloom(evalDocs, n, mBits, numHashes))
 
   /** THE bloom probe predicate — drop every document with any fully-set
     * `bloom.n`-gram probe. One copy, shared by [[bloomDecontaminate]] and
@@ -699,10 +691,9 @@ object Dedup {
     * size travels INSIDE the bitset, so a build/probe mismatch cannot be
     * expressed.
     */
-  def applyBloomFilter(docs: DataFrame, bloom: graft.functions.BloomBits,
-                       textCol: String = "text"): DataFrame =
+  def applyBloomFilter(docs: DataFrame, bloom: graft.functions.BloomBits): DataFrame =
     docs.filter(
-      graft.functions.BloomProbe.countContaminatedCol(col(textCol), bloom) === 0)
+      graft.functions.BloomProbe.countContaminatedCol(col("text"), bloom) === 0)
 
   /** Build the eval-gram bloom bitset — the reusable half of
     * [[bloomDecontaminate]] (a long-lived bitset serves every batch run AND
@@ -715,10 +706,9 @@ object Dedup {
     * (which at mBits=30 would be up to 64x the bitset it builds).
     */
   def buildBloom(evalDocs: DataFrame, n: Int = 13, mBits: Int = 22,
-                 numHashes: Int = 4,
-                 textCol: String = "text"): graft.functions.BloomBits = {
+                 numHashes: Int = 4): graft.functions.BloomBits = {
     val words = evalDocs
-      .select(graft.functions.WordShingles.wordShingles(col(textCol), n).as("gram"))
+      .select(graft.functions.WordShingles.wordShingles(col("text"), n).as("gram"))
       .select(explode(graft.functions.BloomProbe.positionsCol(
         col("gram"), mBits, numHashes)).as("pos"))
       .select(shiftright(col("pos"), 6).cast("int").as("w"),
@@ -751,15 +741,14 @@ object Dedup {
     * dup-density, and row_number streams it), one per-doc rollup. No UDFs;
     * the chunker is the shared [[TextStats.chunkDocuments]] generator.
     */
-  def chunkDedup(docs: DataFrame, chunkTokens: Int = 20,
-                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val chunks = TextStats.chunkDocuments(docs, chunkTokens, overlap = 0, textCol, idCol)
+  def chunkDedup(docs: DataFrame, chunkTokens: Int = 20): DataFrame = {
+    val chunks = TextStats.chunkDocuments(docs, chunkTokens, overlap = 0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("chunk_text")))
-      .orderBy(col(idCol), col("chunk_id"))
+      .orderBy(col("doc_id"), col("chunk_id"))
     chunks
       .withColumn("rn", row_number().over(w))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_chunks"),
         sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_kept"),
@@ -778,7 +767,7 @@ object Dedup {
     * within one) marks its k word positions as duplicated; overlapping and
     * adjacent marks merge into maximal spans, which are dropped from the kept
     * text. Returns one row per document:
-    * (idCol, n_words, dup_words, n_dup_spans, dup_fraction, text_kept).
+    * (doc_id, n_words, dup_words, n_dup_spans, dup_fraction, text_kept).
     *
     * Differs from [[chunkDedup]] (C4-style) in granularity and alignment:
     * chunk dedup keeps the FIRST occurrence of fixed, stride-aligned chunks,
@@ -795,10 +784,9 @@ object Dedup {
     * is linear in total tokens + duplicated positions; the global sort of
     * every corpus position that a true suffix array needs never happens.
     */
-  def removeDuplicateSpans(docs: DataFrame, spanTokens: Int = 10,
-                           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val flagged = coveredPositions(docs, spanTokens, textCol, idCol)
-    flagged.groupBy(col("id").as(idCol))
+  def removeDuplicateSpans(docs: DataFrame, spanTokens: Int = 10): DataFrame = {
+    val flagged = coveredPositions(docs, spanTokens)
+    flagged.groupBy(col("id").as("doc_id"))
       .agg(
         count(lit(1)).as("n_words"),
         sum(col("covered")).cast("long").as("dup_words"),
@@ -826,7 +814,6 @@ object Dedup {
     * job).
     */
   private def coveredPositions(docs: DataFrame, spanTokens: Int,
-                               textCol: String, idCol: String,
                                dupGramsOverride: Option[DataFrame] = None): DataFrame = {
     require(spanTokens >= 2, s"spanTokens must be >= 2: got $spanTokens")
     val k = spanTokens
@@ -835,10 +822,10 @@ object Dedup {
     // op-specific literal here would defeat the CacheManager plan match
     // that lets one persisted marking pass serve all of them (the
     // d3/BM25 shared-store pattern — see PipelineQueries.coveredSpansShared)
-    val id = when(col(idCol).isNull, raise_error(lit(
-      s"span dedup: null $idCol — span dedup needs non-null document ids")))
-      .otherwise(col(idCol))
-    val text = coalesce(col(textCol), lit(""))
+    val id = when(col("doc_id").isNull, raise_error(lit(
+      s"span dedup: null doc_id — span dedup needs non-null document ids")))
+      .otherwise(col("doc_id"))
+    val text = coalesce(col("text"), lit(""))
     val wp = docs.select(id.as("id"),
       posexplode(split(text, " ")).as(Seq("pos", "word")))
     val grams = docs.select(id.as("id"),
@@ -876,10 +863,8 @@ object Dedup {
     * Spark's CacheManager plan match serves all of them from one persisted
     * copy (the d3/BM25 shared-store pattern).
     */
-  def spanCoveredPositions(docs: DataFrame, spanTokens: Int = 10,
-                           textCol: String = "text",
-                           idCol: String = "doc_id"): DataFrame =
-    coveredPositions(docs, spanTokens, textCol, idCol)
+  def spanCoveredPositions(docs: DataFrame, spanTokens: Int = 10): DataFrame =
+    coveredPositions(docs, spanTokens)
 
   /** ARBITRARY-LENGTH exact substring dedup — the suffix-array/LCP tier of
     * the dedup matrix (Lee et al. 2022's ExactSubstr criterion), realized
@@ -892,7 +877,7 @@ object Dedup {
     * positions ARE the maximal repeated-substring extents — computed with
     * sorted k-gram groups + run extension, never a driver suffix array.
     *
-    * One output row per maximal span: (idCol, span_pos_first, span_pos_last,
+    * One output row per maximal span: (doc_id, span_pos_first, span_pos_last,
     * span_len, n_same_span, span_hash, span_text) where `n_same_span`
     * counts how many maximal spans corpus-wide share this exact text
     * (verbatim cross-doc repeats cluster; mosaic spans — unions of
@@ -930,12 +915,11 @@ object Dedup {
     * the same bound the marking passes already carry.
     */
   def duplicateSpanExtents(docs: DataFrame, spanTokens: Int = 10,
-                           textCol: String = "text", idCol: String = "doc_id",
                            dupGrams: Option[DataFrame] = None,
                            maxSpanTextTokens: Int = Int.MaxValue): DataFrame = {
     require(maxSpanTextTokens >= 1,
       s"maxSpanTextTokens must be >= 1: got $maxSpanTextTokens")
-    val flagged = coveredPositions(docs, spanTokens, textCol, idCol, dupGrams)
+    val flagged = coveredPositions(docs, spanTokens, dupGrams)
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("id").orderBy("pos")
     val spans = flagged
       .withColumn("span_id", sum(col("span_start")).over(byDoc))
@@ -958,7 +942,7 @@ object Dedup {
       .partitionBy(col("span_hash"))
     spans
       .withColumn("n_same_span", count(lit(1)).over(bySpanHash))
-      .select(col("id").as(idCol), col("span_pos_first"), col("span_pos_last"),
+      .select(col("id").as("doc_id"), col("span_pos_first"), col("span_pos_last"),
         col("span_len"), col("n_same_span"), col("span_hash"), col("span_text"))
   }
 
@@ -971,7 +955,7 @@ object Dedup {
     * holder survives and every other occurrence is cut from its document;
     * mosaic spans that are unique as wholes are their own survivor and
     * stay untouched. One row per document — cut or not:
-    * (idCol, n_words, cut_words, n_cut_spans, text_kept).
+    * (doc_id, n_words, cut_words, n_cut_spans, text_kept).
     *
     * Scale shape: ONE marking pass (shared [[coveredPositions]] chain —
     * gram counts on md5 keys, corpus × small duplicated-gram join, window
@@ -984,10 +968,8 @@ object Dedup {
     * running sum is 0/1) joined back on (doc, pos) — never a pair join,
     * never a driver structure.
     */
-  def spanSurvivorCut(docs: DataFrame, spanTokens: Int = 10,
-                      textCol: String = "text", idCol: String = "doc_id",
-                      dupGrams: Option[DataFrame] = None): DataFrame = {
-    val flagged = coveredPositions(docs, spanTokens, textCol, idCol, dupGrams)
+  def spanSurvivorCut(docs: DataFrame, spanTokens: Int = 10): DataFrame = {
+    val flagged = coveredPositions(docs, spanTokens)
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("id").orderBy("pos")
     val spans = flagged
       .withColumn("span_id", sum(col("span_start")).over(byDoc))
@@ -1019,7 +1001,7 @@ object Dedup {
       .withColumn("cut_start",
         when(col("cut") === 1 &&
           coalesce(lag(col("cut"), 1).over(byDoc), lit(0)) === 0, 1).otherwise(0))
-    marked.groupBy(col("id").as(idCol))
+    marked.groupBy(col("id").as("doc_id"))
       .agg(
         count(lit(1)).as("n_words"),
         sum(col("cut")).cast("long").as("cut_words"),
@@ -1039,13 +1021,12 @@ object Dedup {
     * batches SUM to the corpus counts, so the converged store's
     * `cnt >= 2` grams equal the batch-derived duplicated-gram set exactly.
     */
-  def spanGramCounts(docs: DataFrame, spanTokens: Int,
-                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def spanGramCounts(docs: DataFrame, spanTokens: Int): DataFrame = {
     require(spanTokens >= 2, s"spanTokens must be >= 2: got $spanTokens")
-    val id = when(col(idCol).isNull, raise_error(lit(
-      s"spanGramCounts: null $idCol — span dedup needs non-null document ids")))
-      .otherwise(col(idCol))
-    val text = coalesce(col(textCol), lit(""))
+    val id = when(col("doc_id").isNull, raise_error(lit(
+      s"spanGramCounts: null doc_id — span dedup needs non-null document ids")))
+      .otherwise(col("doc_id"))
+    val text = coalesce(col("text"), lit(""))
     docs.select(id.as("id"),
         graft.functions.WordShingles.wordShinglesWithPos(text, spanTokens)
           .as(Seq("pos", "gram")))
@@ -1073,15 +1054,14 @@ object Dedup {
     * the pair side when it is small). The texts never pair-shuffle more than
     * the candidate set itself.
     */
-  def editVerify(docs: DataFrame, pairs: DataFrame, maxDist: Int = Int.MaxValue,
-                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val d = docs.select(col(idCol), col(textCol))
+  def editVerify(docs: DataFrame, pairs: DataFrame, maxDist: Int = Int.MaxValue): DataFrame = {
+    val d = docs.select(col("doc_id"), col("text"))
     val dist =
       if (maxDist == Int.MaxValue) levenshtein(col("text_a"), col("text_b"))
       else levenshtein(col("text_a"), col("text_b"), maxDist)
     pairs.select("id_a", "id_b")
-      .join(d.select(col(idCol).as("id_a"), col(textCol).as("text_a")), Seq("id_a"))
-      .join(d.select(col(idCol).as("id_b"), col(textCol).as("text_b")), Seq("id_b"))
+      .join(d.select(col("doc_id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
+      .join(d.select(col("doc_id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), dist.as("edit_dist"),
         length(col("text_a")).as("len_a"), length(col("text_b")).as("len_b"))
       .withColumn("edit_sim",
@@ -1099,12 +1079,11 @@ object Dedup {
     * integer outputs; like every verify tier, candidate pairs ONLY — the
     * O(n·m) kernel must never meet corpus × corpus.
     */
-  def damerauVerify(docs: DataFrame, pairs: DataFrame,
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val d = docs.select(col(idCol), col(textCol))
+  def damerauVerify(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val d = docs.select(col("doc_id"), col("text"))
     pairs.select("id_a", "id_b")
-      .join(d.select(col(idCol).as("id_a"), col(textCol).as("text_a")), Seq("id_a"))
-      .join(d.select(col(idCol).as("id_b"), col(textCol).as("text_b")), Seq("id_b"))
+      .join(d.select(col("doc_id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
+      .join(d.select(col("doc_id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         graft.functions.DamerauLevenshtein
           .damerauLevenshtein(col("text_a"), col("text_b")).as("dl_dist"),
@@ -1148,10 +1127,10 @@ object Dedup {
     * SUM chains): map-side combine ships one `bits`-long vector per doc
     * per partition, and md5 runs once per occurrence.
     */
-  def simhash(docs: DataFrame, bits: Int = 16, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def simhash(docs: DataFrame, bits: Int = 16): DataFrame = {
     require(bits <= 32 && bits % 4 == 0, "bits must be a multiple of 4, <= 32")
     docs
-      .select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("token"))
+      .select(col("doc_id").as("id"), explode(split(col("text"), " ")).as("token"))
       .groupBy("id")
       .agg(graft.functions.SimHashAgg.simhash(col("token"), bits).as("simhash"))
   }
@@ -1175,13 +1154,12 @@ object Dedup {
     * means banding never inflates the result.
     */
   def simhashNearDupPairs(docs: DataFrame, bits: Int = 32, nBands: Int = 4,
-                          maxHamming: Int = 2, maxBucket: Int = 64,
-                          textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+                          maxHamming: Int = 2, maxBucket: Int = 64): DataFrame = {
     require(maxHamming < nBands,
       s"completeness needs maxHamming < nBands: $maxHamming >= $nBands")
     require(bits % nBands == 0, s"bits must split into equal bands: $bits / $nBands")
     val bandBits = bits / nBands
-    val hashed = simhash(docs, bits, textCol, idCol)
+    val hashed = simhash(docs, bits)
     val bands = hashed.select(col("id"), col("simhash"), explode(array(
         (0 until nBands).map(b => struct(lit(b).as("band"),
           shiftright(col("simhash"), b * bandBits)

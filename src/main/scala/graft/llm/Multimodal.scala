@@ -220,8 +220,8 @@ object Multimodal {
     * Scale shape: pure map-side mapPartitions like [[imageAHash]] — zero
     * shuffles; O(nBits · pixels) integer work per image.
     */
-  def imageSpectralHash(media: Dataset[MediaRow], nBits: Int = 60): DataFrame = {
-    require(nBits >= 1 && nBits <= 62, s"nBits must be in [1,62]: $nBits")
+  def imageSpectralHash(media: Dataset[MediaRow]): DataFrame = {
+    val nBits = 60
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { rows =>
@@ -542,9 +542,9 @@ object Multimodal {
   /** One synthetic WAV [[MediaRow]] per document id — the oracle-checkable
     * real-audio-decode path (see [[syntheticWav]]).
     */
-  def syntheticWavs(docs: DataFrame, idCol: String = "doc_id"): Dataset[MediaRow] = {
+  def syntheticWavs(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.select(col(idCol)).as[Long].map { id =>
+    docs.select(col("doc_id")).as[Long].map { id =>
       MediaRow(id, "audio", "audio/wav", syntheticWav(id), -1, -1, 0L)
     }
   }
@@ -689,9 +689,9 @@ object Multimodal {
   /** One synthetic BMP [[MediaRow]] per document id — the oracle-checkable
     * real-decode path (see [[syntheticBmp]]).
     */
-  def syntheticBmps(docs: DataFrame, idCol: String = "doc_id"): Dataset[MediaRow] = {
+  def syntheticBmps(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.select(col(idCol)).as[Long].map { id =>
+    docs.select(col("doc_id")).as[Long].map { id =>
       MediaRow(id, "image", "image/bmp", syntheticBmp(id), -1, -1, 0L)
     }
   }
@@ -723,9 +723,9 @@ object Multimodal {
     bos.toByteArray
   }
 
-  def syntheticPngs(docs: DataFrame, idCol: String = "doc_id"): Dataset[MediaRow] = {
+  def syntheticPngs(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.select(col(idCol)).as[Long].map { id =>
+    docs.select(col("doc_id")).as[Long].map { id =>
       MediaRow(id, "image", "image/png", syntheticPng(id), -1, -1, 0L)
     }
   }
@@ -969,9 +969,9 @@ object Multimodal {
     * odd ids Matroska, so ONE query exercises both parsers. Metadata fields
     * are left unknown (-1/0): the parse must derive them from the payload.
     */
-  def syntheticVideos(docs: DataFrame, idCol: String = "doc_id"): Dataset[MediaRow] = {
+  def syntheticVideos(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.select(col(idCol)).as[Long].map { id =>
+    docs.select(col("doc_id")).as[Long].map { id =>
       if (id % 2 == 0)
         MediaRow(id, "video", "video/mp4", syntheticMp4(id), -1, -1, 0L)
       else
@@ -998,9 +998,9 @@ object Multimodal {
     * selectivity. Verification re-checks the EXACT Hamming distance on
     * the full hash, so banding never inflates the result.
     */
-  def aHashNearDupPairs(media: Dataset[MediaRow], bandBits: Int = 10,
-                        nBands: Int = 4, maxHamming: Int = 2,
+  def aHashNearDupPairs(media: Dataset[MediaRow], nBands: Int = 4, maxHamming: Int = 2,
                         maxBucket: Int = 64): DataFrame = {
+    val bandBits = 10
     require(maxHamming < nBands,
       s"completeness needs maxHamming < nBands: $maxHamming >= $nBands")
     // Materialize the decode+hash subtree behind ONE round-robin exchange
@@ -1264,9 +1264,9 @@ object Multimodal {
   /** One synthetic DIB-AVI [[MediaRow]] per document id — the
     * oracle-checkable real-frame-decode path (see [[syntheticAviDib]]).
     */
-  def syntheticAvis(docs: DataFrame, idCol: String = "doc_id"): Dataset[MediaRow] = {
+  def syntheticAvis(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.select(col(idCol)).as[Long].map { id =>
+    docs.select(col("doc_id")).as[Long].map { id =>
       MediaRow(id, "video", "video/x-msvideo", syntheticAviDib(id), -1, -1, 0L)
     }
   }
@@ -1378,9 +1378,9 @@ object Multimodal {
     out.toByteArray
   }
 
-  def syntheticY4ms(docs: DataFrame, idCol: String = "doc_id"): Dataset[MediaRow] = {
+  def syntheticY4ms(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.select(col(idCol)).as[Long].map { id =>
+    docs.select(col("doc_id")).as[Long].map { id =>
       MediaRow(id, "video", "video/x-yuv4mpeg2", syntheticY4m(id), -1, -1, 0L)
     }
   }
@@ -1440,9 +1440,9 @@ object Multimodal {
     baos.toByteArray
   }
 
-  def syntheticGifs(docs: DataFrame, idCol: String = "doc_id"): Dataset[MediaRow] = {
+  def syntheticGifs(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.select(col(idCol)).as[Long].map { id =>
+    docs.select(col("doc_id")).as[Long].map { id =>
       MediaRow(id, "video", "image/gif", syntheticGif(id), -1, -1, 0L)
     }
   }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
 object Retrieval {
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR'09): fused score =
-    * Σ_lists 1/(c + rank), absent-from-list contributes 0. Input rankings
-    * are (idCol, rank) tables; `name` labels each list's rank column in the
+    * Σ_lists 1/(c + rank) with c = 60, absent-from-list contributes 0.
+    * Input rankings are (doc_id, rank) tables; `name` labels each list's rank column in the
     * output (`rank_<name>`, NULL when the doc is missing from that list).
     *
     * The per-list term is materialized in exact integer micro-units
@@ -31,18 +31,17 @@ object Retrieval {
     * every input rank ≤ `maxListLen`): a caller that passes a corpus-sized
     * "ranking" fails loudly instead of silently single-partitioning it.
     */
-  def rrfFuse(rankings: Seq[(String, DataFrame)], k: Int, c: Int = 60,
-              idCol: String = "doc_id", maxListLen: Int = 100000): DataFrame = {
+  def rrfFuse(rankings: Seq[(String, DataFrame)], k: Int, maxListLen: Int = 100000): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse: need at least one ranking")
     require(rankings.map(_._1).distinct.size == rankings.size,
       "rrfFuse: ranking names must be unique")
     require(maxListLen >= 1, s"rrfFuse: maxListLen must be positive: $maxListLen")
     def micro(rank: Column): Column =
-      round(lit(1e6) / (lit(c) + rank)).cast("long")
+      round(lit(1e6) / (lit(60) + rank)).cast("long")
     val sides = rankings.map { case (name, df) =>
-      df.select(col(idCol), col("rank").cast("int").as(s"rank_$name"))
+      df.select(col("doc_id"), col("rank").cast("int").as(s"rank_$name"))
     }
-    val joined = sides.reduce(_.join(_, Seq(idCol), "full_outer"))
+    val joined = sides.reduce(_.join(_, Seq("doc_id"), "full_outer"))
     val score = rankings.map { case (name, _) =>
       val r = col(s"rank_$name")
       graft.ops.Bounded.guard(
@@ -54,9 +53,9 @@ object Retrieval {
     joined
       .withColumn("rrf_micro", score)
       .withColumn("rank", row_number().over(
-        Window.orderBy(col("rrf_micro").desc, col(idCol))))
+        Window.orderBy(col("rrf_micro").desc, col("doc_id"))))
       .filter(col("rank") <= k)
-      .select(col(idCol) +: col("rrf_micro") +: col("rank") +:
+      .select(col("doc_id") +: col("rrf_micro") +: col("rank") +:
         rankings.map { case (name, _) => col(s"rank_$name") }: _*)
   }
 }

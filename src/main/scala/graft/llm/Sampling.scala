@@ -43,30 +43,28 @@ object Sampling {
   /** Train/val/test (or any K-way) split assignment: `cuts` are cumulative
     * fractions with their labels, e.g.
     * `Seq(0.8 -> "train", 0.9 -> "val", 1.0 -> "test")` (must be
-    * monotonically increasing, last = 1.0). Adds `splitCol` with the label.
+    * monotonically increasing, last = 1.0). Adds `split` with the label.
     */
-  def assignSplit(df: DataFrame, idCol: String, cuts: Seq[(Double, String)],
-                  salt: String = "split", splitCol: String = "split"): DataFrame = {
+  def assignSplit(df: DataFrame, idCol: String, cuts: Seq[(Double, String)]): DataFrame = {
     require(cuts.nonEmpty && cuts.last._1 == 1.0, "last cut must be 1.0")
     require(cuts.map(_._1) == cuts.map(_._1).sorted, "cuts must be increasing")
-    val key = hashKey(col(idCol), salt)
+    val key = hashKey(col(idCol), "split")
     val labeled = cuts.init.foldRight(lit(cuts.last._2)) { case ((frac, label), rest) =>
       when(key < lit(hexThreshold(frac)), lit(label)).otherwise(rest)
     }
-    df.withColumn(splitCol, labeled)
+    df.withColumn("split", labeled)
   }
 
   /** Deterministic uniform sample: keep each row iff its hash key falls
     * under `fraction`. Same contract as `df.sample` but reproducible and
     * partitioning-independent.
     */
-  def deterministicSample(df: DataFrame, idCol: String, fraction: Double,
-                          salt: String = "sample"): DataFrame =
-    df.filter(hashKey(col(idCol), salt) < lit(hexThreshold(fraction)))
+  def deterministicSample(df: DataFrame, idCol: String, fraction: Double): DataFrame =
+    df.filter(hashKey(col(idCol), "sample") < lit(hexThreshold(fraction)))
 
   /** Deterministic epoch shuffle — the training-order randomization pass:
     * every row gets a `shard` and a dense 1-based `pos` within that shard,
-    * both fully determined by (salt, epoch, id). The same corpus shuffles
+    * both fully determined by (epoch, id). The same corpus shuffles
     * identically on any engine, cluster size, or partitioning (an exactly
     * reproducible data order is how training runs are replayed/debugged),
     * and bumping `epoch` re-shuffles from scratch without touching the
@@ -83,15 +81,14 @@ object Sampling {
     * (shard, pos) order see the identical global permutation at a fraction
     * of the cost.
     */
-  def epochShuffle(df: DataFrame, idCol: String, epoch: Int, nShards: Int,
-                   salt: String = "epoch"): DataFrame = {
+  def epochShuffle(df: DataFrame, idCol: String, epoch: Int, nShards: Int): DataFrame = {
     require(nShards >= 1, s"nShards must be positive: $nShards")
     require(epoch >= 0, s"epoch must be non-negative: $epoch")
     val reserved = Seq("shuffle_key", "shard", "pos")
     require(!df.columns.exists(reserved.contains),
       s"epochShuffle: input already has one of ${reserved.mkString(", ")}")
     df.withColumn("shuffle_key",
-        md5(concat(lit(s"$salt:$epoch:"), col(idCol).cast("string"))))
+        md5(concat(lit(s"epoch:$epoch:"), col(idCol).cast("string"))))
       .withColumn("shard",
         (conv(substring(col("shuffle_key"), 1, 8), 16, 10).cast("long")
           % nShards).cast("int"))
@@ -108,13 +105,12 @@ object Sampling {
     * [[deterministicSample]].
     */
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-                       rates: Map[String, Double], defaultRate: Double = 1.0,
-                       salt: String = "strata"): DataFrame = {
+                       rates: Map[String, Double], defaultRate: Double = 1.0): DataFrame = {
     val threshold = rates.toSeq.sortBy(_._1).foldRight(lit(hexThreshold(defaultRate))) {
       case ((stratum, rate), rest) =>
         when(col(stratumCol) === lit(stratum), lit(hexThreshold(rate))).otherwise(rest)
     }
-    df.filter(hashKey(col(idCol), salt) < threshold)
+    df.filter(hashKey(col(idCol), "strata") < threshold)
   }
 
   /** Exact-k per-group deterministic sample: the first `k` rows of each
@@ -134,7 +130,7 @@ object Sampling {
     * real rank runs on ≤ 16^h·k rows per group.
     */
   def sampleExactK(df: DataFrame, idCol: String, groupCol: String, k: Int,
-                   salt: String = "exactk", bucketHexChars: Int = 2): DataFrame = {
+                   bucketHexChars: Int = 2): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(bucketHexChars >= 1 && bucketHexChars <= 7,
       s"bucketHexChars must be in [1,7]: $bucketHexChars")
@@ -143,7 +139,7 @@ object Sampling {
       s"sampleExactK: input already has one of ${reserved.mkString(", ")}")
     val w = Window
     val keyed = df
-      .withColumn("ek_key", hashKey(col(idCol), salt))
+      .withColumn("ek_key", hashKey(col(idCol), "exactk"))
       .withColumn("ek_bucket", substring(col("ek_key"), 1, bucketHexChars))
     keyed
       .withColumn("ek_r1", row_number().over(
@@ -163,7 +159,7 @@ object Sampling {
     * priorities per group win, so inclusion odds are approximately
     * proportional to weight ("sample common-crawl PPS by document length /
     * domain trust score"). Deterministic like every sampler here: membership
-    * depends only on (salt, id, weight), never on partitioning or engine.
+    * depends only on (id, weight), never on partitioning or engine.
     *
     * Cross-engine exactness: `u` is the md5 key's first 13 hex chars as an
     * integer — 52 bits, below 2^53, so both `u` and any integral `w ≤ 2^53`
@@ -181,8 +177,7 @@ object Sampling {
     * 1–13, so bucketing is independent of the draw.
     */
   def weightedSampleExactK(df: DataFrame, idCol: String, groupCol: String,
-                           weightCol: Column, k: Int,
-                           salt: String = "wpps", bucketHexChars: Int = 2): DataFrame = {
+                           weightCol: Column, k: Int, bucketHexChars: Int = 2): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(bucketHexChars >= 1 && bucketHexChars <= 7,
       s"bucketHexChars must be in [1,7]: $bucketHexChars")
@@ -191,7 +186,7 @@ object Sampling {
       s"weightedSampleExactK: input already has one of ${reserved.mkString(", ")}")
     val w = Window
     val keyed = df
-      .withColumn("wk_h", md5(concat(lit(salt), lit(":"), col(idCol).cast("string"))))
+      .withColumn("wk_h", md5(concat(lit("wpps"), lit(":"), col(idCol).cast("string"))))
       .withColumn("wk_pri", graft.ops.Bounded.guard(
         conv(substring(col("wk_h"), 1, 13), 16, 10).cast("long").cast("double")
           / weightCol.cast("double"),
@@ -228,8 +223,7 @@ object Sampling {
     * driver state.
     */
   def temperatureMix(df: DataFrame, idCol: String, groupCol: String,
-                     rate: Double, salt: String = "tmix",
-                     bucketHexChars: Int = 2): DataFrame = {
+                     rate: Double, bucketHexChars: Int = 2): DataFrame = {
     require(rate > 0, s"rate must be positive: $rate")
     require(bucketHexChars >= 1 && bucketHexChars <= 7,
       s"bucketHexChars must be in [1,7]: $bucketHexChars")
@@ -241,7 +235,7 @@ object Sampling {
       .select(col(groupCol),
         floor(lit(rate) * sqrt(col("tm_n"))).cast("long").as("tm_budget"))
     val w = Window
-    df.withColumn("tm_key", hashKey(col(idCol), salt))
+    df.withColumn("tm_key", hashKey(col(idCol), "tmix"))
       .withColumn("tm_bucket", substring(col("tm_key"), 1, bucketHexChars))
       .join(broadcast(budgets), Seq(groupCol))
       .withColumn("tm_r1", row_number().over(
@@ -278,15 +272,14 @@ object Sampling {
     */
   def tokenBudgetMix(docs: DataFrame, idCol: String, domainCol: String,
                      tokensCol: Column, budgets: Map[String, Long],
-                     defaultBudget: Long = Long.MaxValue, salt: String = "mix",
-                     bucketHexChars: Int = 2): DataFrame = {
+                     defaultBudget: Long = Long.MaxValue, bucketHexChars: Int = 2): DataFrame = {
     require(bucketHexChars >= 1 && bucketHexChars <= 7,
       s"bucketHexChars must be in [1,7]: $bucketHexChars")
     val reserved = Seq("n_tokens", "cum_tokens", "mix_key", "mix_bucket", "base_tokens")
     require(!docs.columns.exists(reserved.contains),
       s"tokenBudgetMix: input already has one of ${reserved.mkString(", ")}")
     val base = docs
-      .withColumn("mix_key", hashKey(col(idCol), salt))
+      .withColumn("mix_key", hashKey(col(idCol), "mix"))
       .withColumn("mix_bucket", substring(col("mix_key"), 1, bucketHexChars))
       .withColumn("n_tokens", tokensCol.cast("long"))
     val bucketSums = base.groupBy(col(domainCol), col("mix_bucket"))
@@ -336,7 +329,7 @@ object Sampling {
   /** Hashed-n-gram importance scores (DSIR — Xie et al., NeurIPS 2023,
     * "Data Selection for Language Models via Importance Resampling"):
     * featurize every document as hashed unigram+bigram occurrences in
-    * `buckets` buckets, fit bag-of-features models over the TARGET corpus
+    * `buckets` = 256 buckets, fit bag-of-features models over the TARGET corpus
     * (what training data should look like) and the RAW corpus (what it does
     * look like), and score each doc by how much more surprising it is under
     * the raw model than the target model — high score = target-like.
@@ -352,7 +345,7 @@ object Sampling {
     * `int(md5(gram)[0:8]) % buckets` — the fixed feature space that makes
     * BOTH model tables ≤ `buckets` rows no matter the corpus size.
     *
-    * Emits (idCol, n_feats, raw_bits, target_bits, score) for EVERY input
+    * Emits (doc_id, n_feats, raw_bits, target_bits, score) for EVERY input
     * document; feature-less docs (null/empty text) score (0,0,0,0) rather
     * than vanishing. Scale shape: the two model fits are map-combinable
     * aggregates collapsing to ≤ `buckets` rows each (broadcast by
@@ -361,16 +354,15 @@ object Sampling {
     * the only corpus-scale shuffle is the final per-doc aggregate.
     */
   def importanceScores(docs: DataFrame, targetDocs: DataFrame, rawDocs: DataFrame,
-                       buckets: Int = 256, textCol: String = "text",
                        idCol: String = "doc_id"): DataFrame = {
-    require(buckets >= 1, s"buckets must be positive: $buckets")
+    val buckets = 256
     // the internal scored-side alias must not collide with the caller's id
     // column in the final rejoin (the tokenBudgetMix reserved-name rule)
     require(idCol != "dsir_id", "importanceScores: idCol 'dsir_id' is reserved")
     def features(df: DataFrame): DataFrame = {
       def grams(n: Int) = df.select(
         col(idCol).as("dsir_id"),
-        graft.functions.WordShingles.wordShingles(col(textCol), n).as("g"))
+        graft.functions.WordShingles.wordShingles(col("text"), n).as("g"))
       grams(1).union(grams(2)).select(col("dsir_id"),
         (conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long") % buckets).as("b"))
     }
@@ -405,7 +397,7 @@ object Sampling {
   }
 
   /** DSIR selection: [[importanceScores]] plus a `selected` flag on the
-    * global top-`k` documents by (score DESC, idCol ASC) — the paper's
+    * global top-`k` documents by (score DESC, doc_id ASC) — the paper's
     * top-k ablation of importance resampling, made deterministic (ties and
     * membership are content-derived, never partitioning-derived).
     *
@@ -418,42 +410,40 @@ object Sampling {
     * broadcast back onto the full scored frame.
     */
   def dsirSelect(docs: DataFrame, targetDocs: DataFrame, rawDocs: DataFrame,
-                 k: Int, buckets: Int = 256, textCol: String = "text",
-                 idCol: String = "doc_id", salt: String = "dsir",
-                 bucketHexChars: Int = 2): DataFrame = {
+                 k: Int, bucketHexChars: Int = 2): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(bucketHexChars >= 1 && bucketHexChars <= 7,
       s"bucketHexChars must be in [1,7]: $bucketHexChars")
-    require(idCol != "sel_id", "dsirSelect: idCol 'sel_id' is reserved")
     // scoredAll feeds BOTH the top-k rank path and the output join. The
     // static plan shows the scoring subtree twice, but AQE's stage reuse
     // (canonical-plan keyed) shares the per-doc rollup shuffle at runtime;
     // an eager localCheckpoint was A/B-probed at 10x and lost as often as
     // it won (box noise dominates), so the no-pinned-storage shape wins.
-    val scoredAll = importanceScores(docs, targetDocs, rawDocs, buckets, textCol, idCol)
+    val scoredAll = importanceScores(docs, targetDocs, rawDocs)
     val wLocal = Window.partitionBy(col("sel_bucket"))
-      .orderBy(col("score").desc, col(idCol))
+      .orderBy(col("score").desc, col("doc_id"))
     // bounded rows (16^bucketHexChars * k) — the unpartitioned window is
     // fine, and the bound is ENFORCED: gr is the window's own input row
     // count, so guarding gr ≤ bound makes a broken per-bucket pre-filter
     // fail the query instead of silently single-partitioning the corpus
-    val wGlobal = Window.orderBy(col("score").desc, col(idCol))
+    val wGlobal = Window.orderBy(col("score").desc, col("doc_id"))
     val globalBound = (1L << (4 * bucketHexChars)) * k
     val chosen = scoredAll
-      .withColumn("sel_bucket", substring(hashKey(col(idCol), salt), 1, bucketHexChars))
+      .withColumn("sel_bucket", substring(hashKey(col("doc_id"), "dsir"), 1, bucketHexChars))
       .withColumn("lr", row_number().over(wLocal)).filter(col("lr") <= k)
       .withColumn("gr", row_number().over(wGlobal))
       .withColumn("gr", graft.ops.Bounded.guard(col("gr"), col("gr") <= globalBound,
         s"dsirSelect: global top-k window saw more than $globalBound rows — " +
           "the per-bucket pre-filter is broken"))
       .filter(col("gr") <= k)
-      .select(col(idCol).as("sel_id"))
-    scoredAll.join(broadcast(chosen), col(idCol) === col("sel_id"), "left")
+      .select(col("doc_id").as("sel_id"))
+    scoredAll.join(broadcast(chosen), col("doc_id") === col("sel_id"), "left")
       .withColumn("selected", col("sel_id").isNotNull)
       .drop("sel_id")
   }
 
-  /** End-to-end training-shard export: assign splits, shard by content
+  /** End-to-end training-shard export: assign splits (90% train, 10%
+    * val), shard by content
     * hash, pack into fixed-capacity sequences, and materialize as
     * `outDir/split=…/shard=…/part-*.parquet` with rows sorted by
     * (pack_id, id) inside every file — a reader streams whole packs
@@ -462,21 +452,18 @@ object Sampling {
     * cluster size.
     *
     * Scale shape: ONE algorithmic shuffle (the pack window on (split,
-    * shard) keys — numShards × |cuts| uniform groups; scale parallelism by
+    * shard) keys — numShards × 2 uniform groups; scale parallelism by
     * raising numShards) feeding a repartition aligned with the directory
-    * layout, so every write task produces exactly one partition directory;
-    * `maxRecordsPerFile` bounds file sizes against skew.
+    * layout, so every write task produces exactly one partition directory.
     */
   def writeTrainingShards(docs: DataFrame, outDir: String, idCol: String,
                           tokensCol: Column, capacity: Long,
-                          cuts: Seq[(Double, String)] = Seq(0.9 -> "train", 1.0 -> "val"),
-                          numShards: Int = 8,
-                          maxRecordsPerFile: Long = 0L): Unit = {
+                          numShards: Int = 8): Unit = {
     require(numShards > 0 && numShards <= 65536,
       s"numShards must be in [1, 65536] (the shard key has 16 bits): $numShards")
     require(!docs.columns.exists(Seq("split", "shard").contains),
       "writeTrainingShards: input already has a 'split' or 'shard' column")
-    val sharded = assignSplit(docs, idCol, cuts)
+    val sharded = assignSplit(docs, idCol, Seq(0.9 -> "train", 1.0 -> "val"))
       .withColumn("shard",
         conv(substring(hashKey(col(idCol), "shard"), 1, 4), 16, 10)
           .cast("int") % numShards)
@@ -489,7 +476,7 @@ object Sampling {
       .sortWithinPartitions(col("pack_id"), col(idCol))
       .write
       .partitionBy("split", "shard")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", 0L)
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(outDir)
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Exact-determinism strategy: embeddings are quantized to integers
-  * (round(x*scale)) before any arithmetic, so dot products are exact integer
+  * (round(x*1000)) before any arithmetic, so dot products are exact integer
   * sums (all < 2^53 — exact in doubles too) and the derived cosine doubles
   * are bit-identical across engines — which is what lets the DuckDB oracle
   * hash-match floating-point similarity scores.
@@ -29,15 +29,15 @@ object Similarity {
   private def metricName(prefix: String): String =
     s"${prefix}_${metricSeq.incrementAndGet()}"
 
-  /** Quantize an array<float> to array<long> by round(x * scale), with the
+  /** Quantize an array<float> to array<long> by round(x * 1000), with the
     * multiply in DOUBLE. Without the cast Spark multiplies float32×int in
     * FLOAT, and a value like 0.31949999928474426f × 1000f rounds to exactly
     * 319.5f → 320, while double arithmetic (DuckDB, most engines) gives
     * 319.4999… → 319 — a one-ulp quantization flip that surfaced as score
     * mismatches at sf0.1.
     */
-  def quantize(emb: Column, scale: Int = 1000): Column =
-    transform(emb, x => round(x.cast("double") * scale).cast("long"))
+  def quantize(emb: Column): Column =
+    transform(emb, x => round(x.cast("double") * 1000).cast("long"))
 
   /** Per-dimension affine (scalar) quantization stats: (min, max) of each
     * embedding dimension over the corpus — ONE summary aggregate on d
@@ -45,10 +45,9 @@ object Similarity {
     * [[scalarQuantize]]; fit once, reuse across batches (the
     * [[collectQuantizedCentroids]] amortization discipline).
     */
-  def collectScalarQuantStats(vectors: DataFrame,
-                              embCol: String = "embedding"): (Seq[Double], Seq[Double]) = {
+  def collectScalarQuantStats(vectors: DataFrame): (Seq[Double], Seq[Double]) = {
     val stats = vectors
-      .select(posexplode(col(embCol)).as(Seq("i", "x")))
+      .select(posexplode(col("embedding")).as(Seq("i", "x")))
       .groupBy(col("i"))
       .agg(min(col("x").cast("double")).as("mn"), max(col("x").cast("double")).as("mx"))
       .orderBy("i")
@@ -68,17 +67,16 @@ object Similarity {
     * Scale shape: the stats fit is one d-key summary aggregate (or passed
     * in, fit offline on a sample); encoding is a pure MAP-SIDE transform
     * against the 2·d-double literal — zero shuffles, chains inline in any
-    * ingest pipeline. Emits (idCol, codes, code_sum).
+    * ingest pipeline. Emits (vec_id, codes, code_sum).
     */
   def scalarQuantize(vectors: DataFrame, mins: Seq[Double], maxs: Seq[Double],
-                     levels: Int = 255, idCol: String = "vec_id",
-                     embCol: String = "embedding"): DataFrame = {
+                     levels: Int = 255): DataFrame = {
     require(levels >= 1, s"levels must be positive: $levels")
     require(mins.length == maxs.length && mins.nonEmpty,
       s"mins/maxs must be non-empty and equal length: ${mins.length}/${maxs.length}")
     val mnLit = typedlit(mins)
     val spanLit = typedlit(mins.indices.map(i => maxs(i) - mins(i)))
-    val codes = transform(col(embCol), (x, i) => {
+    val codes = transform(col("embedding"), (x, i) => {
       val span = element_at(spanLit, i + 1)
       // clamp to [0, levels]: sample-fit stats (the documented offline
       // mode) can miss corpus extremes, and an out-of-range value must
@@ -95,14 +93,14 @@ object Similarity {
       // non-ANSI evaluation, surfacing far downstream (e.g. as an sqTopK
       // kernel error) instead of here
       .withColumn("codes",
-        when(col(embCol).isNull || size(col(embCol)) =!= mins.length,
+        when(col("embedding").isNull || size(col("embedding")) =!= mins.length,
           raise_error(concat(
             lit(s"scalarQuantize: stats have ${mins.length} dims, vector has "),
-            coalesce(size(col(embCol)).cast("string"), lit("null")))))
-        .when(exists(col(embCol), _.isNull),
+            coalesce(size(col("embedding")).cast("string"), lit("null")))))
+        .when(exists(col("embedding"), _.isNull),
           raise_error(lit("scalarQuantize: embedding contains a null element")))
         .otherwise(codes))
-      .select(col(idCol), col("codes"))
+      .select(col("vec_id"), col("codes"))
       .withColumn("code_sum",
         aggregate(col("codes"), lit(0L), (acc, c) => acc + c))
   }
@@ -153,13 +151,12 @@ object Similarity {
     * billion-vector corpus; an `aggregate`-HOF fold over collected arrays
     * would put whole partitions' vectors through one reducer row.
     */
-  def labelCentroids(vectors: DataFrame, labelCol: String = "label",
-                     embCol: String = "embedding", scale: Int = 1000): DataFrame =
+  def labelCentroids(vectors: DataFrame): DataFrame =
     vectors
-      .select(col(labelCol), posexplode(quantize(col(embCol), scale)).as(Seq("dim", "q")))
-      .groupBy(col(labelCol), col("dim"))
+      .select(col("label"), posexplode(quantize(col("embedding"))).as(Seq("dim", "q")))
+      .groupBy(col("label"), col("dim"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-      .select(col(labelCol), col("dim"),
+      .select(col("label"), col("dim"),
         col("s"), col("n"),
         (col("s").cast("double") / col("n")).as("mean_q"))
 
@@ -168,21 +165,20 @@ object Similarity {
     * flat `Window.partitionBy(query_id)` row_number (any query-wide top-k
     * row is top-k in its own sub-bucket), but no reducer ever sorts one
     * query's whole candidate set. The neighbor-id hash pre-splits every
-    * query into `nBuckets` uniform sub-keys for the first window (the
+    * query into 256 uniform sub-keys for the first window (the
     * [[graft.llm.Sampling.sampleExactK]] two-level discipline); the second
-    * window ranks <= nBuckets·k survivors per query. With a handful of
+    * window ranks <= 256·k survivors per query. With a handful of
     * queries against a 100x corpus, the flat form funnels |corpus| rows
     * through one reducer per query — the fat-key shape this avoids.
     * `order` must totally order candidates within a query (tie-break on
     * neighbor_id) so both levels agree deterministically.
     */
-  private def rankTopK(scored: DataFrame, k: Int, order: Seq[Column],
-                       nBuckets: Int = 256): DataFrame = {
+  private def rankTopK(scored: DataFrame, k: Int, order: Seq[Column]): DataFrame = {
     val reserved = Seq("tk_bucket", "tk_r1", "rank")
     require(!scored.columns.exists(reserved.contains),
       s"rankTopK: input already has one of ${reserved.mkString(", ")}")
     scored
-      .withColumn("tk_bucket", pmod(xxhash64(col("neighbor_id")), lit(nBuckets)))
+      .withColumn("tk_bucket", pmod(xxhash64(col("neighbor_id")), lit(256)))
       .withColumn("tk_r1", row_number().over(
         Window.partitionBy(col("query_id"), col("tk_bucket")).orderBy(order: _*)))
       .filter(col("tk_r1") <= k)
@@ -193,17 +189,15 @@ object Similarity {
   }
 
   /** Brute-force top-k cosine neighbors of `queries` within `corpus`.
-    * Input columns: (idCol, embCol). Output: query_id, neighbor_id, cosine,
+    * Input columns: (vec_id, embedding). Output: query_id, neighbor_id, cosine,
     * rank (1..k), deterministically tie-broken by neighbor id.
     * The corpus side is broadcast when small; otherwise Spark picks a
     * shuffle-replicate-NL join — at scale, prefer [[ivfTopK]].
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                     idCol: String = "vec_id", embCol: String = "embedding",
-                     scale: Int = 1000): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol), scale).as("qv"))
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
       .withColumn("__nq", normQ(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), quantize(col(embCol), scale).as("cv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"), quantize(col("embedding")).as("cv"))
       .withColumn("__nc", normQ(col("cv")))
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -221,11 +215,9 @@ object Similarity {
     * [[bruteForceTopK]]; at corpus scale MIPS reduces to cosine ANN via
     * the norm-augmentation trick and routes through [[ivfTopK]].
     */
-  def mipsTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-               idCol: String = "vec_id", embCol: String = "embedding",
-               scale: Int = 1000): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol), scale).as("qv"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), quantize(col(embCol), scale).as("cv"))
+  def mipsTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"), quantize(col("embedding")).as("cv"))
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot_q", dotLong(col("qv"), col("cv")))
@@ -245,14 +237,12 @@ object Similarity {
     * candidate generation through [[ivfTopK]]'s cells (label filter is a
     * residual predicate on the probed cells) exactly as for plain ANN.
     */
-  def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    labelCol: String = "label", scale: Int = 1000): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(labelCol).as("q_label"),
-      quantize(col(embCol), scale).as("qv"))
+  def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"), col("label").as("q_label"),
+      quantize(col("embedding")).as("qv"))
       .withColumn("__nq", normQ(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(labelCol).as("n_label"),
-      quantize(col(embCol), scale).as("cv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"), col("label").as("n_label"),
+      quantize(col("embedding")).as("cv"))
       .withColumn("__nc", normQ(col("cv")))
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id") && col("q_label") =!= col("n_label"))
@@ -297,20 +287,20 @@ object Similarity {
   }
 
   /** Sign-LSH bucket key: one bit per hyperplane = sign of <v, plane>.
-    * `dims` must equal the embedding length.
+    * The embedding length must be 64.
     */
-  def lshBucket(emb: Column, numPlanes: Int, dims: Int = 64): Column =
-    lshBandBucket(emb, band = 0, planesPerBand = numPlanes, dims = dims)
+  def lshBucket(emb: Column, numPlanes: Int): Column =
+    lshBandBucket(emb, band = 0, planesPerBand = numPlanes)
 
   /** Sign-LSH bucket key for ONE band: bit i = sign of <v, plane> for global
     * plane id `band * planesPerBand + i`. Band 0 with planesPerBand = n is
     * exactly [[lshBucket]](n) — the plane family is shared.
     */
-  def lshBandBucket(emb: Column, band: Int, planesPerBand: Int, dims: Int = 64): Column = {
+  def lshBandBucket(emb: Column, band: Int, planesPerBand: Int): Column = {
     val embD = emb.cast("array<double>")
     val bits = (0 until planesPerBand).map { i =>
       val p = band * planesPerBand + i
-      val plane = typedlit((0 until dims).map(d => planeComponent(p, d)))
+      val plane = typedlit((0 until 64).map(d => planeComponent(p, d)))
       // native fused-loop dot (codegen); accumulation order matches the
       // previous aggregate(zip_with(...)) fold, so signs are bit-identical
       val dotted = graft.functions.ArrayMath.dotDouble(embD, plane)
@@ -331,11 +321,10 @@ object Similarity {
     * Scale shape: map-side only — the plane matrix is a driver-side
     * literal; zero shuffles, chains inline before any bucketing/storage.
     */
-  def randomProjection(vectors: DataFrame, outDims: Int,
-                       idCol: String = "vec_id", embCol: String = "embedding",
-                       dims: Int = 64): DataFrame = {
+  def randomProjection(vectors: DataFrame, outDims: Int): DataFrame = {
+    val dims = 64
     require(outDims > 0, s"outDims must be positive: $outDims")
-    val embD = col(embCol).cast("array<double>")
+    val embD = col("embedding").cast("array<double>")
     // fail loudly on a dimension mismatch: the dot kernel returns NULL for
     // ragged inputs, which here would emit an all-NULL projection for the
     // whole corpus with no error (same per-row discipline as
@@ -347,7 +336,7 @@ object Similarity {
       val plane = typedlit((0 until dims).map(d => planeComponent(p, d)))
       graft.functions.ArrayMath.dotDouble(checked, plane).as(s"r$p")
     }
-    vectors.select(col(idCol) +: comps: _*)
+    vectors.select(col("vec_id") +: comps: _*)
   }
 
   /** IVF (inverted-file) approximate top-k: corpus vectors are partitioned
@@ -359,32 +348,24 @@ object Similarity {
     * data-independent.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              nCentroids: Int = 16, nProbe: Int = 4,
-              idCol: String = "vec_id", embCol: String = "embedding",
-              scale: Int = 1000, fitFraction: Double = 1.0,
-              maxIter: Int = 10): DataFrame = {
+              nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val featurized = corpus.select(col(idCol).as("neighbor_id"),
-      quantize(col(embCol), scale).as("cv"),
-      array_to_vector(col(embCol).cast("array<double>")).as("features"))
+    val featurized = corpus.select(col("vec_id").as("neighbor_id"),
+      quantize(col("embedding")).as("cv"),
+      array_to_vector(col("embedding").cast("array<double>")).as("features"))
     // KMeans.fit persists an UNCACHED input internally for its iterations and
     // unpersists when done — no explicit .cache() here (an explicit one would
     // outlive this query and squat on executor storage; observed contaminating
-    // subsequent benchmark queries). At corpus scale, fit the coarse quantizer
-    // on a sample: centroid quality converges long before the full pass. For
-    // repeated querying at 100 TB, fit ONCE offline and use
-    // [[ivfTopKWithCentroids]] — a fit per query is the wrong amortization.
-    val fitInput =
-      if (fitFraction < 1.0) featurized.sample(withReplacement = false, fitFraction, 42L)
-      else featurized
-    val model = new KMeans().setK(nCentroids).setSeed(42L).setMaxIter(maxIter)
-      .fit(fitInput)
+    // subsequent benchmark queries). For repeated querying at 100 TB, fit
+    // ONCE offline and use [[ivfTopKWithCentroids]] — a fit per query is the
+    // wrong amortization.
+    val model = new KMeans().setK(nCentroids).setSeed(42L).setMaxIter(10)
+      .fit(featurized)
     val assigned = model.transform(featurized)
       .select(col("neighbor_id"), col("cv"), col("prediction").as("cell"))
     val centroids = model.clusterCenters.map(_.toArray.toSeq).toSeq
-    probeAndRank(queries, assigned, quantizeCentroids(centroids, scale), k, nProbe,
-      idCol, embCol, scale)
+    probeAndRank(queries, assigned, quantizeCentroids(centroids), k, nProbe)
   }
 
   /** Driver-side centroid quantization with Spark `round` semantics
@@ -392,9 +373,9 @@ object Similarity {
     * `quantize(col)` would produce on the same values — the premise that
     * lets IVF scoring stay exact-integer end to end.
     */
-  private def quantizeCentroids(centroids: Seq[Seq[Double]], scale: Int): Seq[Seq[Long]] =
+  private def quantizeCentroids(centroids: Seq[Seq[Double]]): Seq[Seq[Long]] =
     centroids.map(_.map(x =>
-      java.math.BigDecimal.valueOf(x * scale)
+      java.math.BigDecimal.valueOf(x * 1000)
         .setScale(0, java.math.RoundingMode.HALF_UP).longValue()))
 
   /** IVF top-k against a PRECOMPUTED coarse quantizer: `centroids(i)` is the
@@ -404,28 +385,24 @@ object Similarity {
     * shuffle) and the query probes `nProbe` cells.
     */
   def ivfTopKWithCentroids(queries: DataFrame, corpus: DataFrame, k: Int,
-                           centroids: Seq[Seq[Double]], nProbe: Int = 4,
-                           idCol: String = "vec_id", embCol: String = "embedding",
-                           scale: Int = 1000): DataFrame =
+                           centroids: Seq[Seq[Double]], nProbe: Int = 4): DataFrame =
     ivfTopKWithQuantizedCentroids(queries, corpus, k,
-      quantizeCentroids(centroids, scale), nProbe, idCol, embCol, scale)
+      quantizeCentroids(centroids), nProbe)
 
   /** [[ivfTopKWithCentroids]] with the coarse quantizer ALREADY in quantized
-    * integer space (each centroid = what `quantize(embCol, scale)` yields on
+    * integer space (each centroid = what `quantize(embedding)` yields on
     * its values). Cell assignment and probing are then exact integer argmin —
     * fully deterministic and expressible in any engine, which is what lets
     * the registry's IVF query carry a DuckDB oracle.
     */
   def ivfTopKWithQuantizedCentroids(queries: DataFrame, corpus: DataFrame, k: Int,
-                                    centroidsQ: Seq[Seq[Long]], nProbe: Int = 4,
-                                    idCol: String = "vec_id", embCol: String = "embedding",
-                                    scale: Int = 1000): DataFrame = {
+                                    centroidsQ: Seq[Seq[Long]], nProbe: Int = 4): DataFrame = {
     // map-side-only assignment over the codegen reference-object centroids —
     // zero shuffle, zero join, no UDF row conversion; the argmin kernel,
     // tie contract, and fail-fast validation live in
     // [[graft.functions.CellAssign]]
-    probeAndRank(queries, ivfAssign(corpus, centroidsQ, idCol, embCol, scale),
-      centroidsQ, k, nProbe, idCol, embCol, scale)
+    probeAndRank(queries, ivfAssign(corpus, centroidsQ),
+      centroidsQ, k, nProbe)
   }
 
   /** The IVF postings build alone: `(neighbor_id, cv, cell)` for every
@@ -435,11 +412,9 @@ object Similarity {
     * persisted store; a store grown by appends is bit-identical to a
     * fresh whole-corpus assignment under the same frozen quantizer.
     */
-  def ivfAssign(corpus: DataFrame, centroidsQ: Seq[Seq[Long]],
-                idCol: String = "vec_id", embCol: String = "embedding",
-                scale: Int = 1000): DataFrame =
+  def ivfAssign(corpus: DataFrame, centroidsQ: Seq[Seq[Long]]): DataFrame =
     corpus
-      .select(col(idCol).as("neighbor_id"), quantize(col(embCol), scale).as("cv"))
+      .select(col("vec_id").as("neighbor_id"), quantize(col("embedding")).as("cv"))
       .withColumn("cell", graft.functions.CellAssign.assignCol(col("cv"), centroidsQ))
 
   /** IVF search over an already-built postings table (the
@@ -448,10 +423,8 @@ object Similarity {
     * maintained incrementally.
     */
   def ivfTopKFromPostings(queries: DataFrame, postings: DataFrame, k: Int,
-                          centroidsQ: Seq[Seq[Long]], nProbe: Int = 4,
-                          idCol: String = "vec_id", embCol: String = "embedding",
-                          scale: Int = 1000): DataFrame =
-    probeAndRank(queries, postings, centroidsQ, k, nProbe, idCol, embCol, scale)
+                          centroidsQ: Seq[Seq[Long]], nProbe: Int = 4): DataFrame =
+    probeAndRank(queries, postings, centroidsQ, k, nProbe)
 
   /** The `id < n` corpus prefix, quantized and collected driver-side as an
     * offline coarse quantizer — the ONE definition of the
@@ -460,12 +433,9 @@ object Similarity {
     * probes, so centroid count and scale can never drift apart between
     * call sites.
     */
-  def collectQuantizedCentroids(vectors: DataFrame, n: Int,
-                                idCol: String = "vec_id",
-                                embCol: String = "embedding",
-                                scale: Int = 1000): Seq[Seq[Long]] =
-    vectors.filter(col(idCol) < n).orderBy(idCol)
-      .select(quantize(col(embCol), scale).as("qc"))
+  def collectQuantizedCentroids(vectors: DataFrame, n: Int): Seq[Seq[Long]] =
+    vectors.filter(col("vec_id") < n).orderBy("vec_id")
+      .select(quantize(col("embedding")).as("qc"))
       .collect().map(_.getSeq[Long](0).toSeq).toSeq
 
   /** Distributed Lloyd's k-means over quantized embeddings, EXACT across
@@ -489,10 +459,8 @@ object Similarity {
     * final assignment against the round-`rounds` centroids with the exact
     * integer squared distance.
     */
-  def kmeansLloyd(vectors: DataFrame, k: Int, rounds: Int,
-                  idCol: String = "vec_id", embCol: String = "embedding",
-                  scale: Int = 1000): DataFrame =
-    kmeansLloydWithStats(vectors, k, rounds, idCol, embCol, scale)._1
+  def kmeansLloyd(vectors: DataFrame, k: Int, rounds: Int): DataFrame =
+    kmeansLloydWithStats(vectors, k, rounds)._1
 
   /** [[kmeansLloyd]] plus the number of update rounds actually executed
     * (the pageRankWithStats observability surface). The loop stops EARLY
@@ -501,14 +469,12 @@ object Similarity {
     * round is identical — `rounds` becomes a budget, not a fixed cost
     * (exactness is unaffected: the update is idempotent at the fixpoint).
     */
-  def kmeansLloydWithStats(vectors: DataFrame, k: Int, rounds: Int,
-                           idCol: String = "vec_id", embCol: String = "embedding",
-                           scale: Int = 1000): (DataFrame, Int) = {
+  def kmeansLloydWithStats(vectors: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    val q = vectors.select(col(idCol).as("vec_id"), quantize(col(embCol), scale).as("qv"))
-    var cents: Seq[Seq[Long]] = collectQuantizedCentroids(vectors, k, idCol, embCol, scale)
-    require(cents.size == k, s"corpus needs $k prefix vectors ($idCol < $k) to seed, " +
+    val q = vectors.select(col("vec_id").as("vec_id"), quantize(col("embedding")).as("qv"))
+    var cents: Seq[Seq[Long]] = collectQuantizedCentroids(vectors, k)
+    require(cents.size == k, s"corpus needs $k prefix vectors (vec_id < $k) to seed, " +
       s"found ${cents.size}")
     var r = 0
     var converged = false
@@ -556,13 +522,11 @@ object Similarity {
     * corpus vector — (`vec_id`, `min_dist2` to the FINAL set, `sel_round`
     * 0..k−1 for chosen vectors, −1 otherwise).
     */
-  def kCenterSelect(vectors: DataFrame, k: Int,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    scale: Int = 1000): DataFrame = {
+  def kCenterSelect(vectors: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val spark = vectors.sparkSession
-    val corp = vectors.select(col(idCol).cast("long").as("vec_id"),
-      quantize(col(embCol), scale).as("qv"))
+    val corp = vectors.select(col("vec_id").cast("long").as("vec_id"),
+      quantize(col("embedding")).as("qv"))
     val seed = corp.orderBy("vec_id").limit(1).collect()
     require(seed.nonEmpty, "kCenterSelect: empty corpus")
     val centers = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])](
@@ -604,11 +568,10 @@ object Similarity {
     * prefix derivation is the deterministic stand-in that keeps every
     * engine bit-equal.
     */
-  def collectPqCodebooks(vectors: DataFrame, numCodewords: Int, numSubspaces: Int,
-                         idCol: String = "vec_id", embCol: String = "embedding",
-                         scale: Int = 1000): Seq[Seq[Seq[Long]]] = {
-    val full = collectQuantizedCentroids(vectors, numCodewords, idCol, embCol, scale)
-    require(full.nonEmpty, s"corpus has no vectors with $idCol < $numCodewords")
+  def collectPqCodebooks(vectors: DataFrame, numCodewords: Int,
+                         numSubspaces: Int): Seq[Seq[Seq[Long]]] = {
+    val full = collectQuantizedCentroids(vectors, numCodewords)
+    require(full.nonEmpty, s"corpus has no vectors with vec_id < $numCodewords")
     sliceIntoCodebooks(full, numSubspaces)
   }
 
@@ -642,13 +605,11 @@ object Similarity {
     * rides the scan as literal codebooks, no join, no shuffle of vectors.
     */
   def trainPqCodebooks(vectors: DataFrame, numCodewords: Int, numSubspaces: Int,
-                       rounds: Int,
-                       idCol: String = "vec_id", embCol: String = "embedding",
-                       scale: Int = 1000): Seq[Seq[Seq[Long]]] = {
+                       rounds: Int): Seq[Seq[Seq[Long]]] = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    var cbs = collectPqCodebooks(vectors, numCodewords, numSubspaces, idCol, embCol, scale)
+    var cbs = collectPqCodebooks(vectors, numCodewords, numSubspaces)
     val sub = cbs.head.head.length
-    val q = vectors.select(quantize(col(embCol), scale).as("qv"))
+    val q = vectors.select(quantize(col("embedding")).as("qv"))
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
@@ -676,7 +637,7 @@ object Similarity {
     cbs
   }
 
-  /** PQ encode (Jégou et al., TPAMI 2011): (idCol, codes) where codes[m] =
+  /** PQ encode (Jégou et al., TPAMI 2011): (vec_id, codes) where codes[m] =
     * index of the nearest codeword (exact integer squared-L2 argmin, tie →
     * lowest index — the [[graft.functions.CellAssign]] contract) of the
     * m-th contiguous subvector. Map-side only, zero shuffles: at 100 TB
@@ -684,13 +645,11 @@ object Similarity {
     * small ints per row (64 dims → 8 codes ≈ 30× smaller), the
     * representation the ADC scan reads instead of the vectors.
     */
-  def pqEncode(vectors: DataFrame, codebooks: Seq[Seq[Seq[Long]]],
-               idCol: String = "vec_id", embCol: String = "embedding",
-               scale: Int = 1000): DataFrame = {
+  def pqEncode(vectors: DataFrame, codebooks: Seq[Seq[Seq[Long]]]): DataFrame = {
     graft.functions.Pq.validateCodebooks(codebooks)
     val sub = codebooks.head.head.length
-    vectors.select(col(idCol), quantize(col(embCol), scale).as("qv"))
-      .select(col(idCol),
+    vectors.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+      .select(col("vec_id"),
         array(codebooks.zipWithIndex.map { case (cbm, m) =>
           graft.functions.CellAssign.assignCol(slice(col("qv"), m * sub + 1, sub), cbm)
         }: _*).as("codes"))
@@ -714,15 +673,13 @@ object Similarity {
     * re-rank of the top candidates where recall matters.
     */
   def pqTopKWithCodebooks(queries: DataFrame, corpus: DataFrame, k: Int,
-                          codebooks: Seq[Seq[Seq[Long]]],
-                          idCol: String = "vec_id", embCol: String = "embedding",
-                          scale: Int = 1000): DataFrame = {
+                          codebooks: Seq[Seq[Seq[Long]]]): DataFrame = {
     graft.functions.Pq.validateCodebooks(codebooks)
     val kw = codebooks.head.length
-    val codes = pqEncode(corpus, codebooks, idCol, embCol, scale)
-      .withColumnRenamed(idCol, "neighbor_id")
-    val q = queries.select(col(idCol).as("query_id"),
-      graft.functions.Pq.lutCol(quantize(col(embCol), scale), codebooks).as("lut"))
+    val codes = pqEncode(corpus, codebooks)
+      .withColumnRenamed("vec_id", "neighbor_id")
+    val q = queries.select(col("vec_id").as("query_id"),
+      graft.functions.Pq.lutCol(quantize(col("embedding")), codebooks).as("lut"))
     val scored = broadcast(q).crossJoin(codes)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc", graft.functions.Pq.adcCol(col("lut"), col("codes"), kw))
@@ -746,12 +703,11 @@ object Similarity {
     * levels² · d ≤ 2^20·d — long-safe for any real dimensionality.
     */
   def sqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-             mins: Seq[Double], maxs: Seq[Double], levels: Int = 255,
-             idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+             mins: Seq[Double], maxs: Seq[Double]): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     def longCodes(df: DataFrame, as: String) =
-      scalarQuantize(df, mins, maxs, levels, idCol, embCol)
-        .select(col(idCol).as(as),
+      scalarQuantize(df, mins, maxs)
+        .select(col("vec_id").as(as),
           transform(col("codes"), _.cast("long")).as(s"${as}_c"))
     val q = longCodes(queries, "query_id")
     val c = longCodes(corpus, "neighbor_id")
@@ -775,15 +731,13 @@ object Similarity {
     * their precision on fine structure instead of cell offsets).
     */
   def collectPqResidualCodebooks(vectors: DataFrame, coarseQ: Seq[Seq[Long]],
-                                 numCodewords: Int, numSubspaces: Int,
-                                 idCol: String = "vec_id", embCol: String = "embedding",
-                                 scale: Int = 1000): Seq[Seq[Seq[Long]]] = {
-    val rows = vectors.filter(col(idCol) < numCodewords).orderBy(idCol)
-      .select(quantize(col(embCol), scale).as("qv"))
+                                 numCodewords: Int, numSubspaces: Int): Seq[Seq[Seq[Long]]] = {
+    val rows = vectors.filter(col("vec_id") < numCodewords).orderBy("vec_id")
+      .select(quantize(col("embedding")).as("qv"))
       .withColumn("cell", graft.functions.CellAssign.assignCol(col("qv"), coarseQ))
       .select(graft.functions.Pq.residualCol(col("qv"), col("cell"), coarseQ).as("r"))
       .collect().map(_.getSeq[Long](0).toSeq).toSeq
-    require(rows.nonEmpty, s"corpus has no vectors with $idCol < $numCodewords")
+    require(rows.nonEmpty, s"corpus has no vectors with vec_id < $numCodewords")
     sliceIntoCodebooks(rows, numSubspaces)
   }
 
@@ -807,9 +761,7 @@ object Similarity {
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 coarseQ: Seq[Seq[Long]], codebooks: Seq[Seq[Seq[Long]]],
-                nProbe: Int = 4,
-                idCol: String = "vec_id", embCol: String = "embedding",
-                scale: Int = 1000): DataFrame = {
+                nProbe: Int = 4): DataFrame = {
     graft.functions.Pq.validateCodebooks(codebooks)
     val kw = codebooks.head.length
     val sub = codebooks.head.head.length
@@ -818,7 +770,7 @@ object Similarity {
         s"numSubspaces ${codebooks.length} * subDim $sub")
     // corpus: (neighbor_id, cell, residual codes) — map-side only
     val assigned = corpus
-      .select(col(idCol).as("neighbor_id"), quantize(col(embCol), scale).as("cv"))
+      .select(col("vec_id").as("neighbor_id"), quantize(col("embedding")).as("cv"))
       .withColumn("cell", graft.functions.CellAssign.assignCol(col("cv"), coarseQ))
       .withColumn("r", graft.functions.Pq.residualCol(col("cv"), col("cell"), coarseQ))
       .select(col("neighbor_id"), col("cell"),
@@ -828,7 +780,7 @@ object Similarity {
     // queries: nProbe nearest cells each ([[probeCells]] — the one probe
     // contract shared with IVF), one LUT per (query, cell) from the
     // query's residual vs that cell's centroid
-    val luts = probeCells(queries, coarseQ, nProbe, idCol, embCol, scale)
+    val luts = probeCells(queries, coarseQ, nProbe)
       .select(col("query_id"), col("cell"),
         graft.functions.Pq.lutCol(
           graft.functions.Pq.residualCol(col("qv"), col("cell"), coarseQ),
@@ -854,15 +806,13 @@ object Similarity {
     * id — one hash join probe per corpus row, no shuffle of the vectors.
     */
   def pqTopKReranked(queries: DataFrame, corpus: DataFrame, k: Int, shortlist: Int,
-                     codebooks: Seq[Seq[Seq[Long]]],
-                     idCol: String = "vec_id", embCol: String = "embedding",
-                     scale: Int = 1000): DataFrame = {
+                     codebooks: Seq[Seq[Seq[Long]]]): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val short = pqTopKWithCodebooks(queries, corpus, shortlist, codebooks, idCol, embCol, scale)
+    val short = pqTopKWithCodebooks(queries, corpus, shortlist, codebooks)
       .select("query_id", "neighbor_id")
-    val qv = queries.select(col(idCol).as("query_id"), quantize(col(embCol), scale).as("qv"))
+    val qv = queries.select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
       .withColumn("__nq", normQ(col("qv")))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), quantize(col(embCol), scale).as("cv"))
+    val cv = corpus.select(col("vec_id").as("neighbor_id"), quantize(col("embedding")).as("cv"))
       .withColumn("__nc", normQ(col("cv")))
     val scored = broadcast(short.join(qv, "query_id")).join(cv, "neighbor_id")
       .withColumn("cosine", cosineQN(col("qv"), col("cv"), col("__nq"), col("__nc")))
@@ -875,7 +825,7 @@ object Similarity {
     * [[ivfTopKWithQuantizedCentroids]] — integer-exact argmin), compare all
     * pairs WITHIN a cell by exact quantized cosine, and greedily drop the
     * higher id of every pair with cosine ≥ `tau`. Returns the kept vectors
-    * as (idCol, cell). Near-duplicate *meanings* — paraphrases, re-crawls,
+    * as (vec_id, cell). Near-duplicate *meanings* — paraphrases, re-crawls,
     * translations embedded close together — dedup here where n-gram methods
     * see distinct texts.
     *
@@ -888,9 +838,7 @@ object Similarity {
     * throughout (static size estimates for them are meaningless — the
     * mis-planned-broadcast lesson).
     */
-  def semanticDedup(vectors: DataFrame, centroidsQ: Seq[Seq[Long]], tau: Double,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    scale: Int = 1000): DataFrame = {
+  def semanticDedup(vectors: DataFrame, centroidsQ: Seq[Seq[Long]], tau: Double): DataFrame = {
     // assigned feeds three consumers (both self-join sides + the anti-join
     // base): materialize once — otherwise each branch re-runs the
     // nCentroids×dims assignment kernel, the CPU-dominant stage (there is
@@ -902,7 +850,7 @@ object Similarity {
     // operator form. The Checkpointer writes a reliable checkpoint once a
     // checkpoint dir is configured.
     val assigned = Checkpointer(vectors
-      .select(col(idCol).as("id"), quantize(col(embCol), scale).as("qv"))
+      .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       .withColumn("cell", graft.functions.CellAssign.assignCol(col("qv"), centroidsQ))
       .withColumn("__nv", normQ(col("qv"))))
     val left = assigned.select(col("cell"), col("id").as("id_a"),
@@ -914,7 +862,7 @@ object Similarity {
       .filter(cosineQN(col("qa"), col("qb"), col("__na"), col("__nb")) >= tau)
       .select(col("id_b").as("id")).distinct()
     assigned.join(drops.hint("merge"), Seq("id"), "left_anti")
-      .select(col("id").as(idCol), col("cell"))
+      .select(col("id").as("vec_id"), col("cell"))
   }
 
   /** THE probe contract, shared by IVF and IVF-PQ (and mirrored by their
@@ -923,11 +871,10 @@ object Similarity {
     * kernel), ties to the LOWEST cell. Returns (query_id, qv, cell) —
     * one row per probed cell. Centroids broadcast; never a corpus touch.
     */
-  private def probeCells(queries: DataFrame, centroidsQ: Seq[Seq[Long]], nProbe: Int,
-                         idCol: String, embCol: String, scale: Int): DataFrame = {
+  private def probeCells(queries: DataFrame, centroidsQ: Seq[Seq[Long]], nProbe: Int): DataFrame = {
     val centDf = queries.sparkSession.createDataFrame(
       centroidsQ.zipWithIndex.map { case (c, i) => (i, c) }).toDF("cell", "qcent")
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol), scale).as("qv"))
+    val q = queries.select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
     val dist2 = dotLong(col("qv"), col("qv")) -
       lit(2L) * dotLong(col("qv"), col("qcent")) +
       dotLong(col("qcent"), col("qcent"))
@@ -948,9 +895,8 @@ object Similarity {
     * rank.
     */
   private def probeAndRank(queries: DataFrame, assigned: DataFrame,
-                           centroidsQ: Seq[Seq[Long]], k: Int, nProbe: Int,
-                           idCol: String, embCol: String, scale: Int): DataFrame = {
-    val probed = probeCells(queries, centroidsQ, nProbe, idCol, embCol, scale)
+                           centroidsQ: Seq[Seq[Long]], k: Int, nProbe: Int): DataFrame = {
+    val probed = probeCells(queries, centroidsQ, nProbe)
     // norm below the join: `assigned` may be an external postings table
     // (ivfTopKFromPostings), so the corpus-side norm is derived here, once
     // per posting row, not per probed pair
@@ -976,9 +922,8 @@ object Similarity {
     * the only exchange carries d(d+1)/2 ≈ 2k groups (d=64). Work is
     * O(n·d²) — inherent to a scatter matrix, and embarrassingly parallel.
     */
-  def secondMoments(vectors: DataFrame, embCol: String = "embedding",
-                    scale: Int = 1000): DataFrame = {
-    val q = vectors.select(quantize(col(embCol), scale).as("qv"))
+  def secondMoments(vectors: DataFrame): DataFrame = {
+    val q = vectors.select(quantize(col("embedding")).as("qv"))
     val ei = q.select(col("qv"), posexplode(col("qv")).as(Seq("i", "qi")))
     ei.select(col("i"), col("qi"), posexplode(col("qv")).as(Seq("j", "qj")))
       .filter(col("i") <= col("j"))
@@ -1082,26 +1027,24 @@ object Similarity {
     *
     * `maxBucket` caps the INIT's same-LSH-bucket pair generation: without
     * it the init joins ALL same-bucket pairs — quadratic in bucket size,
-    * i.e. ~(n/2^numPlanes)² pairs at uniform occupancy and far worse on a
+    * i.e. ~(n/2^4)² pairs at uniform occupancy (4 LSH planes) and far worse on a
     * near-duplicate-heavy corpus where one hot bucket holds a whole dup
     * cluster (round-15 verdict #1: the 100x probe leg had to be cut off).
     * Buckets above the cap are DROPPED from the init — their nodes keep
     * the id-ring floor and the NN-descent rounds (k²-bounded) recover
     * their neighborhoods — and the drop count is published as observed
     * metric `knng_maxbucket_<n>` (the [[Dedup.lshCandidates]] no-silent-
-    * caps discipline). At scale, pair `maxBucket` with a `numPlanes`
-    * that grows as log₂(n / targetBucketSize) so the cap trims only the
-    * skewed tail instead of the whole init.
+    * caps discipline). At scale the plane count would have to grow as
+    * log₂(n / targetBucketSize) for the cap to trim only the skewed tail
+    * instead of the whole init.
     */
   def nnDescentGraph(vectors: DataFrame, k: Int, rounds: Int,
-                     numPlanes: Int = 4, ring: Int = 2,
-                     maxBucket: Long = Long.MaxValue,
-                     idCol: String = "vec_id", embCol: String = "embedding",
-                     scale: Int = 1000): DataFrame = {
+                     maxBucket: Long = Long.MaxValue): DataFrame = {
+    val ring = 2
     require(k >= 1 && rounds >= 0 && ring >= 1, s"bad k/rounds/ring: $k/$rounds/$ring")
-    val qvecs = vectors.select(col(idCol).as("vid"),
-      quantize(col(embCol), scale).as("qv"),
-      lshBucket(col(embCol), numPlanes).as("bucket"))
+    val qvecs = vectors.select(col("vec_id").as("vid"),
+      quantize(col("embedding")).as("qv"),
+      lshBucket(col("embedding"), 4).as("bucket"))
       .withColumn("__nq", normQ(col("qv")))
     // init candidates: same-LSH-bucket pairs (quality) ∪ id-ring (coverage
     // floor — a node in a singleton bucket still seeds candidates). The
@@ -1119,7 +1062,7 @@ object Similarity {
         Seq("mid"))
       .select("id", "neighbor_id")
     // the capped projection both sides of the bucket self-join read: the
-    // keep-set is ≤ 2^numPlanes rows — broadcast semi-filter, no shuffle
+    // keep-set is ≤ 2^4 rows — broadcast semi-filter, no shuffle
     val bkt = {
       val all = qvecs.select(col("vid"), col("bucket"))
       if (maxBucket == Long.MaxValue) all
@@ -1170,8 +1113,8 @@ object Similarity {
 
   /** Deterministic layered graph-ANN search — the serving half of the
     * HNSW-family tier: walk from a deterministic entry point (max level,
-    * then min id) down the layer graphs, greedy (width 1, `upperHops`
-    * steps) on each upper layer, then beam search (width `beam`,
+    * then min id) down the layer graphs, greedy (width 1, 2 steps) on
+    * each upper layer, then beam search (width `beam`,
     * `baseHops` steps) on the base graph, returning each query's top-k of
     * the final beam (self excluded). Every step is candidates = beam ∪
     * neighbors-of-beam, scored with exact integer-quantized cosine,
@@ -1186,21 +1129,18 @@ object Similarity {
     * join, bucketable by id.
     */
   def layeredSearch(queries: DataFrame, layers: Seq[DataFrame],
-                    corpus: DataFrame, k: Int, beam: Int,
-                    upperHops: Int = 2, baseHops: Int = 3,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    scale: Int = 1000): DataFrame = {
+                    corpus: DataFrame, k: Int, beam: Int, baseHops: Int = 3): DataFrame = {
     require(layers.nonEmpty && beam >= k && k >= 1,
       s"layeredSearch: need layers, beam >= k >= 1 (got ${layers.size}/$beam/$k)")
     val maxL = layers.size - 1
-    val cvec = corpus.select(col(idCol).as("node"),
-      quantize(col(embCol), scale).as("cv"))
+    val cvec = corpus.select(col("vec_id").as("node"),
+      quantize(col("embedding")).as("cv"))
       .withColumn("__nc", normQ(col("cv")))
-    val qs = queries.select(col(idCol).as("query_id"),
-      quantize(col(embCol), scale).as("qv"))
+    val qs = queries.select(col("vec_id").as("query_id"),
+      quantize(col("embedding")).as("qv"))
       .withColumn("__nq", normQ(col("qv")))
     val entry = corpus
-      .select(col(idCol).as("node"), hnswLayerOf(col(idCol), maxL).as("lvl"))
+      .select(col("vec_id").as("node"), hnswLayerOf(col("vec_id"), maxL).as("lvl"))
       .orderBy(col("lvl").desc, col("node")).limit(1).select("node")
     // (query_id, node, cosine): the entry scored per query
     def score(cand: DataFrame): DataFrame =
@@ -1222,7 +1162,7 @@ object Similarity {
         .select("query_id", "node", "cosine")
     }
     // greedy hops (width 1) down the upper layers, then the base-layer beam
-    val schedule = (maxL to 1 by -1).flatMap(l => Seq.fill(upperHops)((layers(l), 1))) ++
+    val schedule = (maxL to 1 by -1).flatMap(l => Seq.fill(2)((layers(l), 1))) ++
       Seq.fill(baseHops)((layers(0), beam))
     val cur = Checkpointer.iterate(
         Checkpointer(score(qs.select("query_id").crossJoin(broadcast(entry)))),
@@ -1266,24 +1206,21 @@ object Similarity {
     * ids of `newVectors` must be disjoint from `oldVectors`.
     */
   def knngAppend(graph: DataFrame, oldVectors: DataFrame, newVectors: DataFrame,
-                 k: Int, beam: Int, hops: Int = 3,
-                 numPlanes: Int = 4, maxBucket: Long = Long.MaxValue,
-                 idCol: String = "vec_id", embCol: String = "embedding",
-                 scale: Int = 1000): DataFrame = {
+                 k: Int, beam: Int, hops: Int = 3): DataFrame = {
     require(k >= 1 && beam >= k && hops >= 1, s"bad k/beam/hops: $k/$beam/$hops")
-    val lookup = oldVectors.select(col(idCol), col(embCol))
-      .unionByName(newVectors.select(col(idCol), col(embCol)))
-      .select(col(idCol).as("node"), quantize(col(embCol), scale).as("cv"))
+    val lookup = oldVectors.select(col("vec_id"), col("embedding"))
+      .unionByName(newVectors.select(col("vec_id"), col("embedding")))
+      .select(col("vec_id").as("node"), quantize(col("embedding")).as("cv"))
       .withColumn("__nc", normQ(col("cv")))
-    val qs = newVectors.select(col(idCol).as("query_id"),
-      quantize(col(embCol), scale).as("qv"),
-      lshBucket(col(embCol), numPlanes).as("bucket"))
+    val qs = newVectors.select(col("vec_id").as("query_id"),
+      quantize(col("embedding")).as("qv"),
+      lshBucket(col("embedding"), 4).as("bucket"))
       .withColumn("__nq", normQ(col("qv")))
     // deterministic entry point into the frozen graph: min old id (the
     // layeredSearch discipline without layers — the base graph IS the
     // only layer here; callers with a layered store can search per layer
     // and feed the union as extra hops)
-    val entry = oldVectors.select(min(col(idCol)).as("node"))
+    val entry = oldVectors.select(min(col("vec_id")).as("node"))
     def score(cand: DataFrame): DataFrame =
       cand.join(qs.select("query_id", "qv", "__nq"), Seq("query_id"))
         .join(lookup, Seq("node"))
@@ -1307,20 +1244,8 @@ object Similarity {
     // (per-query windows here are beam-bounded — candidates ≤
     // beam·(k+1) per query before the window, the layeredSearch shape)
     // within-batch candidates: same-bucket pairs among the NEW vectors
-    // (both directions), capped like the fresh build's init
-    val nbkt = {
-      val all = qs.select(col("query_id").as("vid"), col("bucket"))
-      if (maxBucket == Long.MaxValue) all
-      else {
-        val keep = all.groupBy("bucket").agg(count(lit(1)).as("__bn"))
-          .observe(metricName("knng_append_maxbucket"),
-            coalesce(sum(when(col("__bn") > maxBucket, 1L).otherwise(0L)),
-              lit(0L)).as("dropped_buckets"))
-          .filter(col("__bn") <= maxBucket)
-          .select("bucket")
-        all.join(broadcast(keep), Seq("bucket"))
-      }
-    }
+    // (both directions)
+    val nbkt = qs.select(col("query_id").as("vid"), col("bucket"))
     val batchCand = nbkt.select(col("vid").as("query_id"), col("bucket"))
       .join(nbkt.select(col("vid").as("node"), col("bucket")), Seq("bucket"))
       .filter(col("query_id") =!= col("node"))
@@ -1339,12 +1264,11 @@ object Similarity {
   }
 
   def cosineDupPairs(vectors: DataFrame, tau: Double, bands: Int = 4,
-                     planesPerBand: Int = 16,
-                     idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+                     planesPerBand: Int = 16): DataFrame = {
     val bandCols = (0 until bands).map(b =>
-      struct(lit(b).as("band"), lshBandBucket(col(embCol), b, planesPerBand).as("bucket")))
+      struct(lit(b).as("band"), lshBandBucket(col("embedding"), b, planesPerBand).as("bucket")))
     val v = vectors
-      .select(col(idCol).as("id"), quantize(col(embCol)).as("qv"),
+      .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"),
         explode(array(bandCols: _*)).as("bb"))
       .select(col("id"), col("qv"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     // norm rides INSIDE the collected struct (per vector-band row, not per

@@ -29,29 +29,28 @@ object TextStats {
   val Stopwords: Seq[String] = Seq("the", "a", "an", "of", "to", "and", "in", "is", "it", "that")
 
   /** Stopword token count against `words` (array column). */
-  def stopwordCount(words: Column, stopwords: Seq[String] = Stopwords): Column =
-    size(filter(words, w => stopwords.map(s => w === s).reduce(_ || _)))
+  def stopwordCount(words: Column): Column =
+    size(filter(words, w => Stopwords.map(s => w === s).reduce(_ || _)))
 
   /** Split documents into fixed-size overlapping word chunks — the standard
     * context-window preparation step (long docs become multiple training
     * examples; `overlap` preserves cross-boundary context). Emits
-    * (idCol, chunk_id 0-based, chunk_text) — other input columns are
-    * dropped; join them back on idCol when needed. The final chunk may be
+    * (doc_id, chunk_id 0-based, chunk_text) — other input columns are
+    * dropped; join them back on doc_id when needed. The final chunk may be
     * short. Narrow map-side transform: the per-doc chunk fan-out is a
     * generator over a few window starts (not per-token work), so it chains
     * after filtering/dedup without adding a shuffle.
     */
-  def chunkDocuments(docs: DataFrame, chunkTokens: Int, overlap: Int,
-                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def chunkDocuments(docs: DataFrame, chunkTokens: Int, overlap: Int): DataFrame = {
     require(chunkTokens > 0, "chunkTokens must be positive")
     require(overlap >= 0 && overlap < chunkTokens,
       s"overlap must be in [0, chunkTokens): got $overlap of $chunkTokens")
     val stride = chunkTokens - overlap
-    val words = split(col(textCol), " ")
+    val words = split(col("text"), " ")
     // chunks cover every token: ceil((n - overlap) / stride), at least one
     val nChunks = greatest(lit(1),
       ceil((size(words) - lit(overlap)).cast("double") / stride).cast("int"))
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
       posexplode(transform(sequence(lit(0), nChunks - 1),
         i => array_join(slice(words, i * stride + 1, lit(chunkTokens)), " "))))
       .withColumnsRenamed(Map("pos" -> "chunk_id", "col" -> "chunk_text"))
@@ -61,14 +60,14 @@ object TextStats {
     * Columns appended: n_tokens, n_chars_m, avg_word_len, punct_ratio,
     * stopword_ratio, quality_score.
     */
-  def qualityStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val words = split(col(textCol), " ")
+  def qualityStats(docs: DataFrame): DataFrame = {
+    val words = split(col("text"), " ")
     docs
       .withColumn("n_tokens", size(words).cast("long"))
-      .withColumn("n_chars_m", length(col(textCol)).cast("long"))
+      .withColumn("n_chars_m", length(col("text")).cast("long"))
       .withColumn("avg_word_len",
         (col("n_chars_m") - (col("n_tokens") - 1)).cast("double") / col("n_tokens"))
-      .withColumn("punct_ratio", punctCount(col(textCol)).cast("double") / col("n_chars_m"))
+      .withColumn("punct_ratio", punctCount(col("text")).cast("double") / col("n_chars_m"))
       .withColumn("stopword_ratio", stopwordCount(words).cast("double") / col("n_tokens"))
       // crude composite: long-enough docs with moderate punctuation score higher
       .withColumn("quality_score",
@@ -91,19 +90,18 @@ object TextStats {
     * quadratic per-doc HOF fold. Chains after any filter without driver
     * state.
     */
-  def repetitionStats(docs: DataFrame, textCol: String = "text",
-                      idCol: String = "doc_id"): DataFrame = {
-    val words = split(col(textCol), " ")
-    val base = docs.select(col(idCol),
+  def repetitionStats(docs: DataFrame): DataFrame = {
+    val words = split(col("text"), " ")
+    val base = docs.select(col("doc_id"),
       size(words).cast("long").as("n_words"),
       size(array_distinct(words)).cast("long").as("n_distinct"))
-    val bigramCounts = docs.select(col(idCol),
-        graft.functions.WordShingles.wordShingles(col(textCol), 2).as("bigram"))
-      .groupBy(col(idCol), col("bigram")).agg(count(lit(1)).as("c"))
-    val top = bigramCounts.groupBy(col(idCol))
+    val bigramCounts = docs.select(col("doc_id"),
+        graft.functions.WordShingles.wordShingles(col("text"), 2).as("bigram"))
+      .groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("c"))
+    val top = bigramCounts.groupBy(col("doc_id"))
       .agg(max(col("c")).as("top_bigram_count"), sum(col("c")).as("n_bigrams"))
-    base.join(top, Seq(idCol), "left")
-      .select(col(idCol), col("n_words"),
+    base.join(top, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_words"),
         (lit(1.0) - col("n_distinct").cast("double") / col("n_words")).as("dup_word_fraction"),
         coalesce(col("top_bigram_count"), lit(0L)).as("top_bigram_count"),
         coalesce(col("top_bigram_count").cast("double") / col("n_bigrams"), lit(0.0))
@@ -137,26 +135,25 @@ object TextStats {
     * (see [[repetitionStats]]). The final signals⋈repetition join is a
     * per-doc-table join — output bounded by input, planner keeps freedom.
     */
-  def qualityFilter(docs: DataFrame, t: QualityThresholds = QualityThresholds(),
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def qualityFilter(docs: DataFrame, t: QualityThresholds = QualityThresholds()): DataFrame = {
     // NULL text must fail, not vacuously pass: a null signal makes every
     // rule comparison NULL, when(!NULL) skips the reason, and the doc would
     // sail through as "clean". Normalize to "" up front — an empty text then
     // fails too_short/word_len like any other junk row.
-    val docsNn = docs.withColumn(textCol, coalesce(col(textCol), lit("")))
-    val words = split(col(textCol), " ")
+    val docsNn = docs.withColumn("text", coalesce(col("text"), lit("")))
+    val words = split(col("text"), " ")
     val base = docsNn.select(
-      col(idCol),
+      col("doc_id"),
       size(words).cast("long").as("n_tokens"),
-      ((length(col(textCol)) - (size(words) - 1)).cast("double") / size(words))
+      ((length(col("text")) - (size(words) - 1)).cast("double") / size(words))
         .as("avg_word_len"),
       (size(filter(words, w => w.rlike("[A-Za-z]"))).cast("double") / size(words))
         .as("alpha_word_fraction"),
       size(array_distinct(filter(words,
         w => Stopwords.map(s => w === s).reduce(_ || _)))).cast("long")
         .as("n_distinct_stopwords"))
-    val joined = base.join(repetitionStats(docsNn, textCol, idCol)
-      .select(col(idCol), col("dup_word_fraction"), col("top_bigram_fraction")), Seq(idCol))
+    val joined = base.join(repetitionStats(docsNn)
+      .select(col("doc_id"), col("dup_word_fraction"), col("top_bigram_fraction")), Seq("doc_id"))
     val rules: Seq[(String, Column)] = Seq(
       "too_short" -> (col("n_tokens") >= t.minTokens),
       "too_long" -> (col("n_tokens") <= t.maxTokens),
@@ -203,8 +200,8 @@ object TextStats {
       size(regexp_extract_all(text, lit(Ipv4Re), lit(0))).cast("long"),
       size(regexp_extract_all(text, lit(PhoneRe), lit(0))).cast("long"))
 
-  /** Tiny built-in stopword profiles for language ID. Real deployments swap
-    * in larger profiles; the mechanism (marker-hit scoring) is the operator.
+  /** Tiny built-in stopword profiles for language ID; the mechanism
+    * (marker-hit scoring) is the operator.
     */
   val LangProfiles: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "is"),
@@ -223,19 +220,19 @@ object TextStats {
     * struct ONCE as a lambda variable via the `transform(array(x), f => …)`
     * let-binding idiom, again avoiding subtree duplication.
     */
-  def langId(text: Column, profiles: Seq[(String, Seq[String])] = LangProfiles): Column = {
+  def langId(text: Column): Column = {
     val words = split(lower(text), " ")
-    val zero = struct(profiles.indices.map(i => lit(0).as(s"s$i")): _*)
+    val zero = struct(LangProfiles.indices.map(i => lit(0).as(s"s$i")): _*)
     val folded = aggregate(words, zero, (a, w) =>
-      struct(profiles.zipWithIndex.map { case ((_, markers), i) =>
+      struct(LangProfiles.zipWithIndex.map { case ((_, markers), i) =>
         (a.getField(s"s$i") +
           when(markers.map(m => w === m).reduce(_ || _), 1).otherwise(0)).as(s"s$i")
       }: _*))
     val pick = (f: Column) => {
-      val scores = profiles.indices.map(i => f.getField(s"s$i"))
+      val scores = LangProfiles.indices.map(i => f.getField(s"s$i"))
       val maxScore = greatest(scores: _*)
       when(maxScore <= 0, "und").otherwise(
-        profiles.zipWithIndex.foldRight(lit("und")) { case (((lang, _), i), acc) =>
+        LangProfiles.zipWithIndex.foldRight(lit("und")) { case (((lang, _), i), acc) =>
           when(scores(i) === maxScore, lang).otherwise(acc)
         })
     }
@@ -303,12 +300,10 @@ object TextStats {
     * keeps every partition small. The bucket hash is engine-local
     * (never part of the result). Ties break lexicographically.
     */
-  def topTokens(docs: DataFrame, k: Int, groupCol: String = "source",
-                textCol: String = "text", nBuckets: Int = 64): DataFrame = {
+  def topTokens(docs: DataFrame, k: Int, nBuckets: Int = 64): DataFrame = {
     require(k > 0 && nBuckets > 0, s"k and nBuckets must be positive: $k, $nBuckets")
-    groupedTopK(tokenCounts(docs, groupCol, textCol),
-      groupCol, Seq(col("n").desc, col("token")), k, nBuckets)
-      .select(col(groupCol), col("token"), col("n"), col("rank"))
+    groupedTopK(tokenCounts(docs), Seq(col("n").desc, col("token")), k, nBuckets)
+      .select(col("source"), col("token"), col("n"), col("rank"))
   }
 
   /** Corpus-wide heavy hitters via the Misra-Gries sketch + exact recount:
@@ -330,10 +325,10 @@ object TextStats {
     * shuffle is vocabulary-sized — with one k-counter summary per
     * partition; [[topTokens]] remains the exact-everything path.
     */
-  def heavyHitters(docs: DataFrame, k: Int, textCol: String = "text"): DataFrame = {
+  def heavyHitters(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val tokens = docs
-      .select(explode(split(coalesce(col(textCol), lit("")), " ")).as("token"))
+      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("token"))
       .filter(col("token") =!= "")
     val head = tokens.agg(
       graft.functions.MisraGries.sketch(col("token"), k).as("cands"),
@@ -341,7 +336,7 @@ object TextStats {
     val cands: Seq[String] =
       head.getSeq[org.apache.spark.sql.Row](0).map(_.getString(0))
     val nTotal = head.getLong(1)
-    candidateRecount(docs, cands, nTotal, k, textCol)
+    candidateRecount(docs, cands, nTotal, k)
   }
 
   /** The exact-recount second pass of [[heavyHitters]], standalone so a
@@ -353,13 +348,13 @@ object TextStats {
     * GROUP-BY-HAVING answer whatever candidate set the sketch produced.
     */
   def candidateRecount(docs: DataFrame, cands: Seq[String], nTotal: Long,
-                       k: Int, textCol: String = "text"): DataFrame = {
+                       k: Int): DataFrame = {
     if (cands.isEmpty)
       return docs.sparkSession.emptyDataFrame
         .select(lit("").as("token"), lit(0L).as("n"), lit(0L).as("n_total"))
         .limit(0)
     docs
-      .select(explode(split(coalesce(col(textCol), lit("")), " ")).as("token"))
+      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("token"))
       .filter(col("token") =!= "")
       .filter(col("token").isin(cands: _*))
       .groupBy("token").agg(count(lit(1)).as("n"))
@@ -370,11 +365,11 @@ object TextStats {
   /** Per-(group, token) counts — the shared head of [[topTokens]] and
     * [[topKeywords]]. One uniform (group, token) shuffle.
     */
-  private def tokenCounts(docs: DataFrame, groupCol: String, textCol: String): DataFrame =
+  private def tokenCounts(docs: DataFrame): DataFrame =
     docs
-      .select(col(groupCol), explode(split(coalesce(col(textCol), lit("")), " ")).as("token"))
+      .select(col("source"), explode(split(coalesce(col("text"), lit("")), " ")).as("token"))
       .filter(col("token") =!= "")
-      .groupBy(col(groupCol), col("token")).agg(count(lit(1)).as("n"))
+      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("n"))
 
   /** Two-level per-group top-k over a scored summary: per-(group,
     * token-hash-bucket) pre-top-k bounds every window partition, then the
@@ -382,24 +377,24 @@ object TextStats {
     * the flat per-group window (any globally-top-k row is top-k in its own
     * bucket), but no fat-key reducer ever sorts a whole group's vocabulary.
     */
-  private def groupedTopK(scored: DataFrame, groupCol: String,
-                          order: Seq[Column], k: Int, nBuckets: Int): DataFrame = {
+  private def groupedTopK(scored: DataFrame, order: Seq[Column], k: Int,
+                          nBuckets: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     scored
       .withColumn("bkt", pmod(xxhash64(col("token")), lit(nBuckets)))
       .withColumn("r1", row_number().over(
-        w.partitionBy(col(groupCol), col("bkt")).orderBy(order: _*)))
+        w.partitionBy(col("source"), col("bkt")).orderBy(order: _*)))
       .filter(col("r1") <= k)
       .withColumn("rank", row_number().over(
-        w.partitionBy(col(groupCol)).orderBy(order: _*)))
+        w.partitionBy(col("source")).orderBy(order: _*)))
       .filter(col("rank") <= k)
   }
 
   /** Per-group CHARACTERISTIC terms — [[topTokens]] reweighted by the
     * cross-group odds-ratio idf `(2G − 2·gdf + 1)/(2·gdf + 1)`,
     * where gdf = how many groups contain the term and G = total group
-    * count: a term every source uses ("the") scores near tf·scale/(2G),
-    * while a term unique to one source keeps ~tf·scale·2G — the corpus-
+    * count: a term every source uses ("the") scores near tf·10⁶/(2G),
+    * while a term unique to one source keeps ~tf·10⁶·2G — the corpus-
     * governance view ("what is src7 actually full of?"). Same no-libm-log
     * exact-rational discipline as [[graft.ops.TextIndex.rankDocuments]]:
     * every factor an exact integer in a double, one left-associated IEEE
@@ -410,9 +405,7 @@ object TextStats {
     * sized, merge-hinted — the scorePairs mis-broadcast class); G is one
     * scalar; the top-k is the same two-level window.
     */
-  def topKeywords(docs: DataFrame, k: Int, groupCol: String = "source",
-                  textCol: String = "text", nBuckets: Int = 64,
-                  scale: Long = 1000000L): DataFrame = {
+  def topKeywords(docs: DataFrame, k: Int, nBuckets: Int = 64): DataFrame = {
     require(k > 0 && nBuckets > 0, s"k and nBuckets must be positive: $k, $nBuckets")
     // vocabulary-sized result over the corpus-scale tokenize — materialize
     // once (the unigramSurprisal ref-table precedent): it feeds both the
@@ -421,17 +414,17 @@ object TextStats {
     // live until the returned frame is GC'd, so a long-lived session that
     // calls this repeatedly should prefer a configured checkpoint dir
     // (reliable checkpoints: files, not blocks)
-    val counts = Checkpointer(tokenCounts(docs, groupCol, textCol))
+    val counts = Checkpointer(tokenCounts(docs))
     val gdf = counts.groupBy(col("token")).agg(count(lit(1)).as("gdf"))
-    val g = docs.agg(count_distinct(col(groupCol)).as("n_groups"))
+    val g = docs.agg(count_distinct(col("source")).as("n_groups"))
     val score = round(col("n").cast("double")
       * (lit(2) * col("n_groups") - lit(2) * col("gdf") + 1).cast("double")
-      * lit(scale).cast("double") / (lit(2) * col("gdf") + 1).cast("double")).cast("long")
+      * lit(1000000L).cast("double") / (lit(2) * col("gdf") + 1).cast("double")).cast("long")
     val scored = counts.join(gdf.hint("merge"), Seq("token"))
       .crossJoin(broadcast(g))
       .withColumn("score", score)
-    groupedTopK(scored, groupCol, Seq(col("score").desc, col("token")), k, nBuckets)
-      .select(col(groupCol), col("token"), col("n"), col("score"), col("rank"))
+    groupedTopK(scored, Seq(col("score").desc, col("token")), k, nBuckets)
+      .select(col("source"), col("token"), col("n"), col("score"), col("rank"))
   }
 
   /** Unigram-LM surprisal scoring (the CCNet-style "how unlike the
@@ -447,7 +440,7 @@ object TextStats {
     * portable surrogate of −log2 p (a float log would hang the oracle on
     * libm ulp luck, the [[graft.ops.TextIndex.rankDocuments]] lesson).
     *
-    * Emits (idCol, n_tokens, sum_surprisal, avg_surprisal) for EVERY input
+    * Emits (doc_id, n_tokens, sum_surprisal, avg_surprisal) for EVERY input
     * document — token-less docs (null/empty/whitespace text) score
     * (0, 0, null) rather than vanishing, so quality routing can
     * distinguish "unscoreable" from "lost" (the same routed-not-dropped
@@ -458,10 +451,9 @@ object TextStats {
     * (vocabulary side is a candidate broadcast — left to the planner, it
     * is genuinely count-estimable) → per-doc map-combinable rollup.
     */
-  def unigramSurprisal(docs: DataFrame, refDocs: DataFrame,
-                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def unigramSurprisal(docs: DataFrame, refDocs: DataFrame): DataFrame = {
     def tok(df: DataFrame) = df
-      .select(col(idCol), explode(split(coalesce(col(textCol), lit("")), " ")).as("token"))
+      .select(col("doc_id"), explode(split(coalesce(col("text"), lit("")), " ")).as("token"))
       .filter(col("token") =!= "")
     val ref = Checkpointer(tok(refDocs).groupBy("token").agg(count(lit(1)).as("cnt")))
     val tot = ref.agg(sum(col("cnt")).as("n_total"), count(lit(1)).as("v_size"))
@@ -470,11 +462,11 @@ object TextStats {
       .crossJoin(broadcast(tot))
       .withColumn("s",
         length(bin(expr("(n_total + v_size) div (coalesce(cnt, 0L) + 1)"))) - 1)
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("s")).cast("long").as("sum_surprisal"))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
+    docs.select(col("doc_id")).join(scored, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("sum_surprisal"), lit(0L)).as("sum_surprisal"),
         (col("sum_surprisal").cast("double") / col("n_tokens")).as("avg_surprisal"))
@@ -501,10 +493,9 @@ object TextStats {
     * The left token of a window is `substring_index(g, ' ', 1)` — exact,
     * because a 2-field window is left||' '||right by construction.
     */
-  def bigramSurprisal(docs: DataFrame, refDocs: DataFrame,
-                      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def bigramSurprisal(docs: DataFrame, refDocs: DataFrame): DataFrame = {
     def bigrams(df: DataFrame, id: Column) = df.select(id.as("bsid"),
-      graft.functions.WordShingles.wordShingles(col(textCol), 2).as("g"))
+      graft.functions.WordShingles.wordShingles(col("text"), 2).as("g"))
     // corpus-vocabulary-sized result over a corpus-scale subtree,
     // feeding three consumers — materialize once (surprisal precedent)
     val refBig = Checkpointer(bigrams(refDocs, lit(0L)).groupBy("g")
@@ -513,9 +504,9 @@ object TextStats {
       .select(substring_index(col("g"), " ", 1).as("l"), col("big_cnt"))
       .groupBy("l").agg(sum(col("big_cnt")).as("ctx_cnt"))
     val vocab = refDocs.select(
-        graft.functions.WordShingles.wordShingles(col(textCol), 1).as("t"))
+        graft.functions.WordShingles.wordShingles(col("text"), 1).as("t"))
       .agg(count_distinct(col("t")).as("v_size"))
-    val scored = bigrams(docs, col(idCol))
+    val scored = bigrams(docs, col("doc_id"))
       .join(refBig, Seq("g"), "left")
       .withColumn("l", substring_index(col("g"), " ", 1))
       .join(refCtx, Seq("l"), "left")
@@ -525,8 +516,8 @@ object TextStats {
       .groupBy(col("bsid"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("s")).cast("long").as("sum_surprisal"))
-    docs.select(col(idCol)).join(scored, col(idCol) === col("bsid"), "left")
-      .select(col(idCol),
+    docs.select(col("doc_id")).join(scored, col("doc_id") === col("bsid"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         coalesce(col("sum_surprisal"), lit(0L)).as("sum_surprisal"),
         (col("sum_surprisal").cast("double") / col("n_bigrams")).as("avg_surprisal"))
@@ -540,20 +531,19 @@ object TextStats {
     * ceil(2n/3) — no float percentile arithmetic anywhere.
     *
     * Scale shape: a flat percentile is a global sort; instead scores
-    * coarse-bucket by `floor(avg · bucketScale)` (a bounded integer domain —
+    * coarse-bucket by `floor(avg · 64)` (a bounded integer domain —
     * surprisal averages live in [0, ~64] bits), per-bucket counts make a
     * TINY summary whose running sum yields each bucket's base rank, and the
     * deterministic global rank = base + a row_number inside the
     * fine-grained (bucket) window — the [[Sampling.tokenBudgetMix]]
     * two-level discipline. The two threshold rows then broadcast back.
     */
-  def perplexityBuckets(docs: DataFrame, refDocs: DataFrame, bucketScale: Int = 64,
-                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def perplexityBuckets(docs: DataFrame, refDocs: DataFrame): DataFrame = {
+    val bucketScale = 64
     import org.apache.spark.sql.expressions.Window
-    require(bucketScale >= 1, s"bucketScale must be positive: $bucketScale")
     // doc-count-sized result over the corpus-scale scoring subtree; it
     // feeds the rank path twice (counts + ranked rows) and the output join
-    val scored = Checkpointer(bigramSurprisal(docs, refDocs, textCol, idCol))
+    val scored = Checkpointer(bigramSurprisal(docs, refDocs))
     val sc = scored.filter(col("n_bigrams") > 0)
       .withColumn("pb", floor(col("avg_surprisal") * bucketScale).cast("long"))
     // the unpartitioned running-sum window sees one row per DISTINCT coarse
@@ -576,7 +566,7 @@ object TextStats {
     val ranked = sc.join(broadcast(offs), Seq("pb"))
       .crossJoin(broadcast(nTotal))
       .withColumn("rn", col("base") + row_number().over(
-        Window.partitionBy(col("pb")).orderBy(col("avg_surprisal"), col(idCol))))
+        Window.partitionBy(col("pb")).orderBy(col("avg_surprisal"), col("doc_id"))))
     val thresholds = ranked
       .filter(col("rn") === expr("(nn + 2) div 3") ||
         col("rn") === expr("(2 * nn + 2) div 3"))
@@ -624,19 +614,18 @@ object TextStats {
     * per row, no generator blow-up, no shuffle beyond the final per-doc
     * projection); chains inline in any ingest pipeline.
     */
-  def cdcBoundaryStats(docs: DataFrame, w: Int = 16, maskBits: Int = 6,
-                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def cdcBoundaryStats(docs: DataFrame, w: Int = 16, maskBits: Int = 6): DataFrame = {
     require(w > 0, "window must be positive")
     require(maskBits >= 0 && maskBits < 61, s"maskBits must be in [0, 61): $maskBits")
     val modulus = 1L << maskBits
     val hashes = graft.functions.RollingHash.windowHashesCol(
-      coalesce(col(textCol), lit("")), w)
+      coalesce(col("text"), lit("")), w)
     val bPos = filter(
       transform(hashes, (h, i) => when(h % modulus === 0, i + 1)),
       p => p.isNotNull)
     docs
       .withColumn("b", bPos)
-      .select(col(idCol),
+      .select(col("doc_id"),
         size(col("b")).cast("long").as("n_boundaries"),
         array_min(col("b")).cast("long").as("first_boundary"),
         (size(col("b")) + 1).cast("long").as("n_chunks"))
@@ -657,11 +646,10 @@ object TextStats {
     * One shuffle on doc id for the pair join, one on the pair for the
     * count; top-k is a TakeOrdered, not a global sort.
     */
-  def cooccurrenceLift(docs: DataFrame, topK: Int,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def cooccurrenceLift(docs: DataFrame, topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be positive: $topK")
-    val dw = docs.select(col(idCol).as("id"),
-        explode(array_distinct(split(coalesce(col(textCol), lit("")), " "))).as("w"))
+    val dw = docs.select(col("doc_id").as("id"),
+        explode(array_distinct(split(coalesce(col("text"), lit("")), " "))).as("w"))
       .filter(col("w") =!= "")
     val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val vocab = dw.groupBy("w").agg(count(lit(1)).as("n_w"))
@@ -709,15 +697,14 @@ object TextStats {
     *
     * Output: (id, n_tokens, score, mean_w).
     */
-  def hashedLinearScore(docs: DataFrame, weights: Seq[Int],
-                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def hashedLinearScore(docs: DataFrame, weights: Seq[Int]): DataFrame = {
     require(weights.nonEmpty, "hashedLinearScore: weights must be non-empty")
     def hexVal(c: Column): Column = {
       val a = ascii(c)
       a - 48 - when(a >= 97, 39).otherwise(0)
     }
-    val toks = docs.select(col(idCol).as("id"),
-        explode(split(col(textCol), " ")).as("tok"))
+    val toks = docs.select(col("doc_id").as("id"),
+        explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
     val h = md5(col("tok"))
     val bucket = pmod(hexVal(substring(h, 1, 1)) * 16 + hexVal(substring(h, 2, 1)),
@@ -742,13 +729,12 @@ object TextStats {
     * Output: (doc_id, span_id, start_pos, end_pos, n_tokens, span_text);
     * positions are 0-based token indices.
     */
-  def spanCorruption(docs: DataFrame, maskHexDigits: Int = 3,
-                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def spanCorruption(docs: DataFrame, maskHexDigits: Int = 3): DataFrame = {
     require(maskHexDigits >= 1 && maskHexDigits <= 15,
       "spanCorruption: maskHexDigits must be in [1, 15]")
     val hexSet = "0123456789abcdef".take(maskHexDigits).map(_.toString)
-    val toks = docs.select(col(idCol).as("doc_id"),
-        posexplode(split(lower(col(textCol)), "\\s+")).as(Seq("pos", "token")))
+    val toks = docs.select(col("doc_id").as("doc_id"),
+        posexplode(split(lower(col("text")), "\\s+")).as(Seq("pos", "token")))
       .filter(col("token") =!= "")
       .withColumn("pos", col("pos").cast("long"))
     val masked = toks.filter(

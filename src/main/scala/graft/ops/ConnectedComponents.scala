@@ -87,18 +87,16 @@ object ConnectedComponents {
     * final label = min over merged old labels (min of mins = global min,
     * so output is bit-identical to a full recompute).
     *
-    * `oldLabels` must be a full (`idCol`, `component`) labeling of the old
+    * `oldLabels` must be a full (`id`, `component`) labeling of the old
     * graph (component = min member id, [[components]]' contract). Returns
     * the same shape over old ∪ new vertices.
     */
-  def componentsIncremental(oldLabels: DataFrame, newEdges: DataFrame,
-                            srcCol: String = "src", dstCol: String = "dst",
-                            idCol: String = "id"): DataFrame = {
-    val e = newEdges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
+  def componentsIncremental(oldLabels: DataFrame, newEdges: DataFrame): DataFrame = {
+    val e = newEdges.select(col("src").as("__s"), col("dst").as("__d"))
     val collapsed = e
-      .join(oldLabels.select(col(idCol).as("__s"), col("component").as("__cs")),
+      .join(oldLabels.select(col("id").as("__s"), col("component").as("__cs")),
         Seq("__s"), "left")
-      .join(oldLabels.select(col(idCol).as("__d"), col("component").as("__cd")),
+      .join(oldLabels.select(col("id").as("__d"), col("component").as("__cd")),
         Seq("__d"), "left")
       .select(coalesce(col("__cs"), col("__s")).as("src"),
         coalesce(col("__cd"), col("__d")).as("dst"))
@@ -106,12 +104,12 @@ object ConnectedComponents {
       .select(col("id").as("component"), col("component").as("__new"))
     val relabeledOld = oldLabels
       .join(merged, Seq("component"), "left")
-      .select(col(idCol), coalesce(col("__new"), col("component")).as("component"))
-    val newOnly = e.select(col("__s").as(idCol)).union(e.select(col("__d").as(idCol)))
+      .select(col("id"), coalesce(col("__new"), col("component")).as("component"))
+    val newOnly = e.select(col("__s").as("id")).union(e.select(col("__d").as("id")))
       .distinct()
-      .join(oldLabels.select(col(idCol)), Seq(idCol), "left_anti")
-      .join(merged.select(col("component").as(idCol), col("__new")), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("__new"), col(idCol)).as("component"))
+      .join(oldLabels.select(col("id")), Seq("id"), "left_anti")
+      .join(merged.select(col("component").as("id"), col("__new")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__new"), col("id")).as("component"))
     relabeledOld.unionByName(newOnly)
   }
 
@@ -165,17 +163,15 @@ object ConnectedComponents {
     * doc 1. `pairs` is any confirmed-pair table (id_a, id_b); `docs` the
     * corpus it refers to.
     */
-  def dedupByComponents(docs: DataFrame, pairs: DataFrame,
-                        idCol: String = "doc_id",
-                        pairACol: String = "id_a", pairBCol: String = "id_b"): DataFrame = {
-    val comp = components(pairs, pairACol, pairBCol)
+  def dedupByComponents(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val comp = components(pairs, "id_a", "id_b")
     // merge-hint: the component table is duplicate-density-bound — size
     // estimates for it are meaningless, and a mis-planned broadcast of a
     // pathological cluster set OOMs the driver (same taxonomy as the
     // jaccardPairs joins).
     val dropIds = comp.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    docs.join(dropIds.hint("merge"), Seq(idCol), "left_anti")
+      .select(col("id").as("doc_id"))
+    docs.join(dropIds.hint("merge"), Seq("doc_id"), "left_anti")
   }
 
   /** Quality-priority cluster dedup: like [[dedupByComponents]] but the
@@ -192,12 +188,10 @@ object ConnectedComponents {
     * [[dedupByComponents]]'s merge hint).
     */
   def dedupByComponentsKeepBest(docs: DataFrame, pairs: DataFrame,
-                                priorityCol: String, idCol: String = "doc_id",
-                                pairACol: String = "id_a",
-                                pairBCol: String = "id_b"): DataFrame = {
-    val comp = components(pairs, pairACol, pairBCol,
-      vertices = Some(docs.select(col(idCol).as("id"))))
-    keepBestByComponents(docs, comp, priorityCol, idCol)
+                                priorityCol: String): DataFrame = {
+    val comp = components(pairs, "id_a", "id_b",
+      vertices = Some(docs.select(col("doc_id").as("id"))))
+    keepBestByComponents(docs, comp, priorityCol)
   }
 
   /** The keep-best selection alone, over an ALREADY-COMPUTED vertex-closed
@@ -205,12 +199,11 @@ object ConnectedComponents {
     * across several consumers instead of re-running the fixpoint per call.
     */
   def keepBestByComponents(docs: DataFrame, comp: DataFrame,
-                           priorityCol: String,
-                           idCol: String = "doc_id"): DataFrame = {
+                           priorityCol: String): DataFrame = {
     val w = Window.partitionBy(col("component"))
-      .orderBy(col(priorityCol).desc, col(idCol))
+      .orderBy(col(priorityCol).desc, col("doc_id"))
     docs
-      .join(comp.hint("merge").withColumnRenamed("id", idCol), Seq(idCol))
+      .join(comp.hint("merge").withColumnRenamed("id", "doc_id"), Seq("doc_id"))
       .withColumn("cc_rank", row_number().over(w))
       .filter(col("cc_rank") === 1)
       .drop("cc_rank", "component")

@@ -19,10 +19,10 @@ object GraphOps {
     * resolved); otherwise last path segment, resolved through the RO term
     * dictionary when present (reference: OntologyGraphBuilder.java:111-129).
     * `roTerms` columns: term, label — a tiny dimension, always broadcast.
-    * Adds `raw_label` and `label` to `df` based on `predCol`.
+    * Adds `raw_label` and `label` to `df` based on its `predicate` column.
     */
-  def resolvePredicateLabels(df: DataFrame, roTerms: DataFrame, predCol: String = "predicate"): DataFrame = {
-    val pred = UriOps.rewriteUriCol(col(predCol))
+  def resolvePredicateLabels(df: DataFrame, roTerms: DataFrame): DataFrame = {
+    val pred = UriOps.rewriteUriCol(col("predicate"))
     val hasFrag = pred.contains("#")
     val withRaw = df
       .withColumn("raw_label", UriOps.rawPredicateLabelCol(pred))

@@ -29,16 +29,14 @@ import org.apache.spark.sql.functions._
 object GraphTraversal {
 
   /** (id, level) for every node within `maxHops` directed hops of
-    * `sources` (a 1-column DataFrame named `idCol`); level = min hop count,
+    * `sources` (a 1-column DataFrame named `id`); level = min hop count,
     * sources at level 0. Unreached nodes are absent.
     */
-  def bfsLevels(edges: DataFrame, sources: DataFrame, maxHops: Int,
-                srcCol: String = "src", dstCol: String = "dst",
-                idCol: String = "id"): DataFrame = {
+  def bfsLevels(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col(srcCol).as("id"), col(dstCol).as("nid"))
+    val e = edges.select(col("src").as("id"), col("dst").as("nid"))
     val (visited, frontiers) = frontierRounds(
-        Checkpointer(sources.select(col(idCol).as("id")).distinct()
+        Checkpointer(sources.select(col("id").as("id")).distinct()
           .withColumn("level", lit(0))), maxHops, _.isEmpty) { (frontier, visited, h) =>
       e.join(frontier.select("id"), Seq("id"))
         .select(col("nid").as("id")).distinct()
@@ -89,7 +87,7 @@ object GraphTraversal {
     * TOTAL WEIGHT over all ≤ maxHops-hop paths, which for any hop bound ≥
     * the graph's shortest-path hop diameter is the exact SSSP answer.
     *
-    * Integer weights (`weightCol`, cast to long): exact, order-independent
+    * Integer weights (`weight`, cast to long): exact, order-independent
     * sums — the oracle property. Negative weights are fine under a hop
     * bound (no negative-cycle divergence: paths lengthen by at most one
     * edge per round). The round count is the declared bound, NOT a
@@ -99,17 +97,15 @@ object GraphTraversal {
     * than a fail-fast).
     *
     * Scale per round: dist is vertex-sized, edges the big side; the join
-    * shuffles on the source key (pre-bucket the edge table on `srcCol` at
+    * shuffles on the source key (pre-bucket the edge table on `src` at
     * billion-edge scale so every round reuses it). [[Checkpointer]]
     * truncates per-round lineage; one live dist copy at a time.
     */
-  def shortestPaths(edges: DataFrame, sources: DataFrame, maxHops: Int,
-                    srcCol: String = "src", dstCol: String = "dst",
-                    weightCol: String = "weight", idCol: String = "id"): DataFrame = {
+  def shortestPaths(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col(srcCol).as("id"),
-      col(dstCol).as("nid"), col(weightCol).cast("long").as("w"))
-    Checkpointer.iterate(Checkpointer(sources.select(col(idCol).as("id")).distinct()
+    val e = edges.select(col("src").as("id"),
+      col("dst").as("nid"), col("weight").cast("long").as("w"))
+    Checkpointer.iterate(Checkpointer(sources.select(col("id").as("id")).distinct()
         .withColumn("dist", lit(0L))), maxHops, (_, _) => false) { (dist, _) =>
       val relaxed = e.join(dist, Seq("id"))
         .select(col("nid").as("id"), (col("dist") + col("w")).as("dist"))
@@ -125,7 +121,7 @@ object GraphTraversal {
     *
     * Scale shape per round: one vertex-sized ranks ⋈ outdeg join, ONE
     * edge-scale equi-join shuffle (contribs ⋈ edges on src — pre-bucket the
-    * edge table on `srcCol` at billion-edge scale so every round reuses the
+    * edge table on `src` at billion-edge scale so every round reuses the
     * bucketing, as with [[bfsLevels]]) + one map-combinable sum on dst; the
     * dangling-mass term is a scalar aggregate broadcast back. The
     * loop-invariant out-degree table is materialized ONCE before the loop
@@ -141,9 +137,8 @@ object GraphTraversal {
     * checks against a driver-side dense reference at 1e-9.
     */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,
-               srcCol: String = "src", dstCol: String = "dst",
                tolerance: Option[Double] = None): DataFrame =
-    pageRankWithStats(edges, iterations, damping, srcCol, dstCol, tolerance)._1
+    pageRankWithStats(edges, iterations, damping, tolerance)._1
 
   /** Personalized PageRank: random walks restart at the `sources` set
     * instead of uniformly — the "importance relative to THESE seeds"
@@ -160,11 +155,9 @@ object GraphTraversal {
     * refused loudly — a silent all-zero teleport would drain all mass).
     */
   def personalizedPageRank(edges: DataFrame, sources: DataFrame,
-                           iterations: Int, damping: Double = 0.85,
-                           srcCol: String = "src", dstCol: String = "dst",
-                           idCol: String = "id"): DataFrame =
-    pageRankWithStats(edges, iterations, damping, srcCol, dstCol, None,
-      sources = Some(sources.select(col(idCol).as("id"))))._1
+                           iterations: Int, damping: Double = 0.85): DataFrame =
+    pageRankWithStats(edges, iterations, damping,
+      sources = Some(sources.select(col("id").as("id"))))._1
 
   /** [[pageRank]] plus the number of update rounds actually executed — the
     * early-stop observability surface. `tolerance` (when set) stops as soon
@@ -175,14 +168,13 @@ object GraphTraversal {
     * the graph mixes.
     */
   def pageRankWithStats(edges: DataFrame, iterations: Int, damping: Double = 0.85,
-                        srcCol: String = "src", dstCol: String = "dst",
                         tolerance: Option[Double] = None,
                         sources: Option[DataFrame] = None): (DataFrame, Int) = {
     require(iterations >= 0, "iterations must be >= 0")
     require(damping >= 0.0 && damping <= 1.0, s"damping must be in [0,1]: $damping")
     require(tolerance.forall(_ > 0.0), s"tolerance must be positive: $tolerance")
     val eRaw = Checkpointer(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+      edges.select(col("src").as("src"), col("dst").as("dst")).distinct())
     val verticesRaw = Checkpointer(eRaw.select(col("src").as("id"))
       .union(eRaw.select(col("dst").as("id"))).distinct())
     // Dictionary-encode non-integral vertex keys (URI graphs) to dense
@@ -304,9 +296,8 @@ object GraphTraversal {
     * static estimates are meaningless — so both carry MERGE hints (the
     * mis-planned-broadcast lesson); all joins are equi-joins on vertex keys.
     */
-  def triangleCounts(edges: DataFrame, srcCol: String = "src",
-                     dstCol: String = "dst"): DataFrame = {
-    val (deg, perVertex) = triangleCore(edges, srcCol, dstCol)
+  def triangleCounts(edges: DataFrame): DataFrame = {
+    val (deg, perVertex) = triangleCore(edges)
     deg.select(col("v").as("id"))
       .join(perVertex.withColumnRenamed("v", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
@@ -319,9 +310,8 @@ object GraphTraversal {
     * bound), so the only float op is one final division — cross-engine
     * deterministic. Output: (`id`, `degree`, `n_triangles`, `coeff`).
     */
-  def clusteringCoefficients(edges: DataFrame, srcCol: String = "src",
-                             dstCol: String = "dst"): DataFrame = {
-    val (deg, perVertex) = triangleCore(edges, srcCol, dstCol)
+  def clusteringCoefficients(edges: DataFrame): DataFrame = {
+    val (deg, perVertex) = triangleCore(edges)
     deg.select(col("v").as("id"), col("deg").as("degree"))
       .join(perVertex.withColumnRenamed("v", "id"), Seq("id"), "left")
       .select(col("id"), col("degree"),
@@ -337,8 +327,7 @@ object GraphTraversal {
     * undirected edge set, per-vertex triangle counts). See
     * [[triangleCounts]] for the orientation/wedge plan shape notes.
     */
-  private def triangleCore(edges: DataFrame, srcCol: String,
-                           dstCol: String): (DataFrame, DataFrame) = {
+  private def triangleCore(edges: DataFrame): (DataFrame, DataFrame) = {
     // und feeds two consumers (degrees + orientation) and oriented feeds
     // THREE (both wedge sides + the closing-edge probe): materialize each
     // once via the Checkpointer — the formatted plan otherwise re-executes
@@ -346,8 +335,8 @@ object GraphTraversal {
     // reuse fails (the lshCandidates lesson; the Checkpointer writes
     // reliable checkpoints once a checkpoint dir is configured).
     val und = Checkpointer(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
     val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
@@ -398,13 +387,12 @@ object GraphTraversal {
     * same discipline as [[ConnectedComponents]]). Lineage is truncated per
     * round via [[Checkpointer]], one live edge-table copy at a time.
     */
-  def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
-            dstCol: String = "dst", maxIter: Int = 50): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     val core = Checkpointer.untilStable(Checkpointer(edges
-        .select(least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct()), maxIter, eager = true,
         s"kCore(k=$k) did not converge in $maxIter peel rounds — " +
@@ -441,8 +429,7 @@ object GraphTraversal {
     * than silently spinning; one live edge copy at a time via
     * [[Checkpointer]].
     */
-  def kTruss(edges: DataFrame, k: Int, srcCol: String = "src",
-             dstCol: String = "dst", maxIter: Int = 50): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 3, s"kTruss: k must be >= 3 (k=2 keeps every edge): $k")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     // per-edge triangle support over a canonical (a<b) edge set
@@ -479,8 +466,8 @@ object GraphTraversal {
     // the last round's support: at the fixpoint it is the truss's own
     var sup: DataFrame = null
     val truss = Checkpointer.untilStable(Checkpointer(edges
-        .select(least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct()), maxIter, eager = true,
         s"kTruss(k=$k) did not converge in $maxIter peel rounds — " +
@@ -519,14 +506,13 @@ object GraphTraversal {
     * Σ_pivot min(d, cap)².
     */
   def neighborJaccard(edges: DataFrame, minJaccardPct: Int,
-                      maxPivotDegree: Long,
-                      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+                      maxPivotDegree: Long): DataFrame = {
     require(minJaccardPct >= 0 && minJaccardPct <= 100,
       s"minJaccardPct must be in [0,100]: $minJaccardPct")
     require(maxPivotDegree >= 1, s"maxPivotDegree must be >= 1: $maxPivotDegree")
     val und = Checkpointer(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
     // neighbor table, both directions: (v, w) = w is a neighbor of v
@@ -569,13 +555,11 @@ object GraphTraversal {
     * shuffles, and the final anti-join is edge-keyed. Integer div makes
     * every score replay exactly cross-engine.
     */
-  def resourceAllocation(edges: DataFrame, maxPivotDegree: Long,
-                         minRaMicro: Long = 0L,
-                         srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def resourceAllocation(edges: DataFrame, maxPivotDegree: Long): DataFrame = {
     require(maxPivotDegree >= 1, s"maxPivotDegree must be >= 1: $maxPivotDegree")
     val und = Checkpointer(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
     val nb = und.select(col("a").as("v"), col("b").as("w"))
@@ -595,7 +579,7 @@ object GraphTraversal {
       // predicted links only: drop pairs that are already edges
       .join(und.select(col("a").as("v1"), col("b").as("v2")), Seq("v1", "v2"),
         "left_anti")
-      .filter(col("ra_micro") >= minRaMicro)
+      .filter(col("ra_micro") >= 0L)
       .select(col("v1").as("a"), col("v2").as("b"), col("n_common"),
         col("ra_micro"))
   }
@@ -627,10 +611,9 @@ object GraphTraversal {
     * vertex-sized sort, never a data-sized unpartitioned window), and
     * both output columns decode back through vertex-sized joins.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-                       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    val eCaller = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val eCaller = edges.select(col("src").as("src"), col("dst").as("dst"))
     val integral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
@@ -691,10 +674,9 @@ object GraphTraversal {
     *
     * Returns (`id`, `community`) for every vertex with an edge.
     */
-  def louvainLevel(edges: DataFrame, rounds: Int,
-                   srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def louvainLevel(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    val eCaller = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val eCaller = edges.select(col("src").as("src"), col("dst").as("dst"))
     val integral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
@@ -705,8 +687,8 @@ object GraphTraversal {
     val (srcInt, dstInt) = (integral.contains(eCaller.schema("src").dataType),
       integral.contains(eCaller.schema("dst").dataType))
     require(srcInt == dstInt,
-      s"louvainLevel: src/dst types disagree ($srcCol: " +
-        s"${eCaller.schema("src").dataType.simpleString}, $dstCol: " +
+      s"louvainLevel: src/dst types disagree (src: " +
+        s"${eCaller.schema("src").dataType.simpleString}, dst: " +
         s"${eCaller.schema("dst").dataType.simpleString}) — both endpoints " +
         "must be integral, or both non-integral (dictionary-encoded)")
     if (srcInt)
@@ -913,13 +895,12 @@ object GraphTraversal {
     var fwbwAssigned: Long = 0L
   }
 
-  def stronglyConnectedComponents(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", vertices: Option[DataFrame] = None,
-      idCol: String = "id", maxOuter: Int = 20, maxProp: Int = 60,
-      maxTrim: Int = 64, stats: Option[SccStats] = None): DataFrame = {
+  def stronglyConnectedComponents(edges: DataFrame, vertices: Option[DataFrame] = None,
+      maxProp: Int = 60, maxTrim: Int = 64, stats: Option[SccStats] = None): DataFrame = {
+    val maxOuter = 20
     // lazy pair, materialized together by the vertex count (no truncated
     // input is released before it, so the lazy-checkpoint contract holds)
-    var rem = Checkpointer.lazily(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    var rem = Checkpointer.lazily(edges.select(col("src").as("src"), col("dst").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull).distinct())
     var remV = Checkpointer.lazily(rem.select(col("src").as("id"))
       .union(rem.select(col("dst").as("id"))).distinct())
@@ -1022,7 +1003,7 @@ object GraphTraversal {
     vertices match {
       case None => assigned
       case Some(vs) =>
-        vs.select(col(idCol).as("id"))
+        vs.select(col("id").as("id"))
           .join(assigned, Seq("id"), "left")
           .select(col("id"), coalesce(col("scc"), col("id")).as("scc"))
     }
@@ -1133,12 +1114,11 @@ object GraphTraversal {
     * to make every round exchange-free). [[Checkpointer]] truncates the
     * per-round lineage; one live (a, h) pair at a time.
     */
-  def hits(edges: DataFrame, rounds: Int,
-           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def hits(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     // checkpoint the deduped edge table so its distinct() shuffle runs once, not
     // twice per round under the two per-round joins (pageRank discipline)
-    val e = Checkpointer(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val e = Checkpointer(edges.select(col("src").as("src"), col("dst").as("dst")).distinct())
     val vertices = Checkpointer(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     // one round is two checkpoints — authorities from hubs, then hubs from
@@ -1214,11 +1194,10 @@ object GraphTraversal {
     * [[hyperBall]]: same per-round join shape, but per-vertex state is a
     * fixed-size HLL register set instead of the pair set.
     */
-  def neighborhoodFunction(edges: DataFrame, maxT: Int,
-                           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def neighborhoodFunction(edges: DataFrame, maxT: Int): DataFrame = {
     require(maxT >= 0, "neighborhoodFunction: maxT must be >= 0")
     val spark = edges.sparkSession
-    val e = edges.select(col(srcCol).as("w"), col(dstCol).as("nw")).distinct()
+    val e = edges.select(col("src").as("w"), col("dst").as("nw")).distinct()
     val verts = e.select(col("w").as("u")).union(e.select(col("nw").as("u"))).distinct()
     val seed = Checkpointer(verts.select(col("u"), col("u").as("w")))
     // newly reached pairs per round; the first round that reaches none
@@ -1258,11 +1237,10 @@ object GraphTraversal {
     * stores small sets losslessly), so specs can pin equality on small
     * graphs and entries guard a tolerance.
     */
-  def hyperBall(edges: DataFrame, maxT: Int, lgK: Int = 12,
-                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def hyperBall(edges: DataFrame, maxT: Int, lgK: Int = 12): DataFrame = {
     require(maxT >= 0, "hyperBall: maxT must be >= 0")
     val spark = edges.sparkSession
-    val e = edges.select(col(srcCol).as("id"), col(dstCol).as("nid")).distinct()
+    val e = edges.select(col("src").as("id"), col("dst").as("nid")).distinct()
     val verts = e.select(col("id")).union(e.select(col("nid").as("id"))).distinct()
     def estSum(c: DataFrame): Long = c
       .agg(sum(expr("hll_sketch_estimate(sk)"))).head.getLong(0)
@@ -1372,10 +1350,9 @@ object GraphTraversal {
     * maxT small and slice the input for verification tiers, use sketches
     * for global reports.
     */
-  def shortestPathCounts(edges: DataFrame, maxT: Int,
-                         srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def shortestPathCounts(edges: DataFrame, maxT: Int): DataFrame = {
     require(maxT >= 0, "shortestPathCounts: maxT must be >= 0")
-    val e = edges.select(col(srcCol).as("w"), col(dstCol).as("nw")).distinct()
+    val e = edges.select(col("src").as("w"), col("dst").as("nw")).distinct()
     val verts = e.select(col("w").as("u")).union(e.select(col("nw").as("u"))).distinct()
     val (visited, frontiers) = frontierRounds(
         Checkpointer(verts.select(col("u").as("src"), col("u").as("w"),
@@ -1406,9 +1383,8 @@ object GraphTraversal {
     * is |in-ball| × |out-ball|, so the radius bound is the quadratic
     * guard. Output: (`id`, `stress`) for EVERY vertex (0 when on no path).
     */
-  def stressCentrality(edges: DataFrame, maxT: Int,
-                       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val sp = shortestPathCounts(edges, maxT, srcCol, dstCol)
+  def stressCentrality(edges: DataFrame, maxT: Int): DataFrame = {
+    val sp = shortestPathCounts(edges, maxT)
     val a = sp.select(col("src").as("s"), col("w").as("v"),
       col("dist").as("d1"), col("sigma").as("sig1"))
       .filter(col("s") =!= col("v"))
@@ -1467,12 +1443,11 @@ object GraphTraversal {
     * S·2^F = (m − live)·2^F + Σ 2^(F−r), N-hat_micro = α_m·1e6 · m² · 2^F
     * div S·2^F (F = 34 keeps every term in Long range for lgK ≤ 4).
     */
-  def hyperBallExplicit(edges: DataFrame, maxT: Int, lgK: Int = 4,
-                        srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def hyperBallExplicit(edges: DataFrame, maxT: Int, lgK: Int = 4): DataFrame = {
     require(maxT >= 0, "hyperBallExplicit: maxT must be >= 0")
     require(lgK >= 1 && lgK <= 12, s"hyperBallExplicit: lgK out of range: $lgK")
     val m = 1 << lgK
-    val e = edges.select(col(srcCol).as("id"), col(dstCol).as("nid")).distinct()
+    val e = edges.select(col("src").as("id"), col("dst").as("nid")).distinct()
     val verts = e.select(col("id")).union(e.select(col("nid").as("id"))).distinct()
     // j from the first 48 md5 bits (the h48 convention), rank from the next
     // 32: r = 33 - significant-bit-count (bin() drops leading zeros in both

@@ -23,21 +23,21 @@ object Selection {
     * receives the exact row count (read off the histogram summary — no
     * separate count scan) and returns the wanted ranks ascending, so
     * callers can ask for quantile ranks ("ceil(i·n/10)") without a second
-    * pass. Returns (rank, value) rows. `bucketWidth` trades driver summary
-    * size against boundary-bucket scan size.
+    * pass. Returns (rank, value) rows. The bucket width (4096) trades driver
+    * summary size against boundary-bucket scan size.
     *
     * PRECONDITION (guarded, not assumed): the driver summary is bounded by
-    * the number of NON-EMPTY buckets, which is value-range/bucketWidth only
+    * the number of NON-EMPTY buckets, which is value-range/4096 only
     * for clustered domains. On a sparse wide domain (hashes, epoch-micros)
     * non-empty buckets approach the distinct-value count and the collect
-    * would be data-sized — the summary is therefore capped at `maxBuckets`
-    * and the call FAILS LOUDLY past it (raise `bucketWidth`, or pre-map the
-    * domain) instead of silently pulling data to the driver.
+    * would be data-sized — the summary is therefore capped at 2^18
+    * buckets and the call FAILS LOUDLY past it (pre-map the domain)
+    * instead of silently pulling data to the driver.
     */
   def valuesAtRanks(spark: SparkSession, df: DataFrame, valueCol: String,
-                    ranksOf: Long => Seq[Long],
-                    bucketWidth: Long = 4096L,
-                    maxBuckets: Int = 1 << 18): DataFrame = {
+                    ranksOf: Long => Seq[Long]): DataFrame = {
+    val bucketWidth = 4096L
+    val maxBuckets = 1 << 18
     val vals = df.select(col(valueCol).as("__v"))
     val hist = vals.groupBy(expr(s"__v div $bucketWidth").as("b"))
       .agg(count(lit(1)).as("bn"))

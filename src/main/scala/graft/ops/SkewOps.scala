@@ -44,10 +44,10 @@ object SkewOps {
     * spaces (the n=1 gram walk would split them).
     */
   def bloomPrunedJoin(large: DataFrame, small: DataFrame, key: String,
-                      mBits: Int = 20, numHashes: Int = 4): DataFrame = {
+                      mBits: Int = 20): DataFrame = {
     val bloom = graft.llm.Dedup.buildBloom(
       small.select(col(key).cast("string").as("text")),
-      n = 1, mBits = mBits, numHashes = numHashes)
+      n = 1, mBits = mBits)
     large
       .filter(graft.functions.BloomProbe.countContaminatedCol(
         col(key).cast("string"), bloom) > 0)

@@ -29,16 +29,17 @@ object TextIndex {
     if (preserveOriginal) array_union(all, array(s)) else array_distinct(all)
   }
 
-  /** Edge n-grams (prefixes) of each lowercased word, lengths [minN, maxN],
+  /** Edge n-grams (prefixes) of each lowercased word, lengths [3, 12],
     * plus the whole word — the reference's `text_en_no_stem` analyzer
     * (locale en, lowercase, no accent folding beyond lowercase, no stemming,
     * edge-ngram 3..12, preserveOriginal).
     */
-  def edgeNgramsPerWord(s: Column, minN: Int = 3, maxN: Int = 12): Column = {
+  def edgeNgramsPerWord(s: Column): Column = {
     // \s+ split: reference text analyzers tokenize on ANY whitespace (tabs,
     // newlines in OWL definition literals); oracles mirror this with
     // DuckDB's regexp_split_to_array, which has identical empty-field
     // semantics to Java split("\\s+", -1)
+    val (minN, maxN) = (3, 12)
     val words = split(lower(s), "\\s+")
     flatten(transform(words, w =>
       array_union(
@@ -176,19 +177,18 @@ object TextIndex {
     * merge, every row skinny, no arrays; a w-word phrase costs w−1
     * posting-list equi-joins regardless of corpus size.
     */
-  def phraseMatch(docs: DataFrame, phrase: Seq[String],
-                  textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def phraseMatch(docs: DataFrame, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phraseMatch: phrase must be non-empty")
-    val toks = docs.select(col(idCol),
-        posexplode(split(coalesce(col(textCol), lit("")), " ")).as(Seq("pos", "w")))
-      .select(col(idCol), col("pos"), lower(col("w")).as("w"))
+    val toks = docs.select(col("doc_id"),
+        posexplode(split(coalesce(col("text"), lit("")), " ")).as(Seq("pos", "w")))
+      .select(col("doc_id"), col("pos"), lower(col("w")).as("w"))
     def postings(word: String) = toks.filter(col("w") === word.toLowerCase)
-    val first = postings(phrase.head).select(col(idCol), col("pos"))
+    val first = postings(phrase.head).select(col("doc_id"), col("pos"))
     phrase.zipWithIndex.drop(1).foldLeft(first) { case (acc, (word, i)) =>
-      acc.join(postings(word).select(col(idCol), (col("pos") - i).as("pos")),
-        Seq(idCol, "pos"))
+      acc.join(postings(word).select(col("doc_id"), (col("pos") - i).as("pos")),
+        Seq("doc_id", "pos"))
     }
-      .groupBy(idCol).agg(count(lit(1)).as("n_occurrences"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_occurrences"))
   }
 
   /** Whole-DICTIONARY phrase tagging (the FlashText/Aho-Corasick use case
@@ -210,8 +210,7 @@ object TextIndex {
     * Output: (id, phrase, n_matches, first_pos) per document × matched
     * phrase.
     */
-  def dictionaryTag(docs: DataFrame, phrases: Seq[String],
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def dictionaryTag(docs: DataFrame, phrases: Seq[String]): DataFrame = {
     require(phrases.nonEmpty, "dictionaryTag: dictionary must be non-empty")
     require(phrases.forall(_.trim.nonEmpty), "dictionaryTag: blank phrase")
     val spark = docs.sparkSession
@@ -220,8 +219,8 @@ object TextIndex {
       val ws = p.toLowerCase.split("\\s+").filter(_.nonEmpty)
       ws.zipWithIndex.map { case (w, off) => (p, off, w, ws.length) }
     }.toDF("phrase", "offset", "w", "len")
-    val toks = docs.select(col(idCol).as("id"),
-        posexplode(split(lower(coalesce(col(textCol), lit(""))), " "))
+    val toks = docs.select(col("doc_id").as("id"),
+        posexplode(split(lower(coalesce(col("text"), lit(""))), " "))
           .as(Seq("pos", "w")))
       .filter(col("w") =!= "")
     toks.join(broadcast(dict), Seq("w"))
@@ -243,14 +242,13 @@ object TextIndex {
     * Here the key comparison is a codegen'd literal equality the scan
     * pushes down past the explode.
     */
-  def suffixMatch(docs: DataFrame, textCol: String, suffix: String,
-                  idCol: String = "doc_id"): DataFrame = {
+  def suffixMatch(docs: DataFrame, textCol: String, suffix: String): DataFrame = {
     require(suffix.nonEmpty, "suffixMatch: suffix must be non-empty")
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
         explode(split(lower(coalesce(col(textCol), lit(""))), "\\s+")).as("token"))
       .filter(col("token") =!= "")
       .filter(substring(reverse(col("token")), 1, suffix.length) === lit(suffix.reverse))
-      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("n"))
+      .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("n"))
   }
 
   /** Proximity search: documents where `termA` and `termB` occur within
@@ -263,16 +261,15 @@ object TextIndex {
     * with a residual |Δpos| ≤ window filter — per-doc fan-out is
     * occ_A × occ_B of two SPECIFIC terms, never a corpus range join.
     */
-  def proximityMatch(docs: DataFrame, termA: String, termB: String, window: Int,
-                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def proximityMatch(docs: DataFrame, termA: String, termB: String, window: Int): DataFrame = {
     require(window >= 1, s"proximityMatch: window must be >= 1: $window")
-    val toks = docs.select(col(idCol),
-        posexplode(split(coalesce(col(textCol), lit("")), " ")).as(Seq("pos", "w")))
-      .select(col(idCol), col("pos"), lower(col("w")).as("w"))
+    val toks = docs.select(col("doc_id"),
+        posexplode(split(coalesce(col("text"), lit("")), " ")).as(Seq("pos", "w")))
+      .select(col("doc_id"), col("pos"), lower(col("w")).as("w"))
     val a = toks.filter(col("w") === termA.toLowerCase)
-      .select(col(idCol), col("pos").as("pos_a"))
+      .select(col("doc_id"), col("pos").as("pos_a"))
     val b = toks.filter(col("w") === termB.toLowerCase)
-      .select(col(idCol), col("pos").as("pos_b"))
+      .select(col("doc_id"), col("pos").as("pos_b"))
     // equal-term NEAR would otherwise pair every occurrence with itself
     // (gap 0, n_near >= occ) and double-count each mirrored pair; counting
     // each unordered occurrence pair once keeps the semantics meaningful
@@ -280,9 +277,9 @@ object TextIndex {
       if (termA.equalsIgnoreCase(termB))
         col("pos_a") < col("pos_b") && col("pos_b") - col("pos_a") <= window
       else abs(col("pos_a") - col("pos_b")) <= window
-    a.join(b, Seq(idCol))
+    a.join(b, Seq("doc_id"))
       .filter(gapOk)
-      .groupBy(idCol).agg(count(lit(1)).as("n_near"),
+      .groupBy("doc_id").agg(count(lit(1)).as("n_near"),
         min(abs(col("pos_a") - col("pos_b"))).cast("long").as("min_gap"))
   }
 
@@ -291,16 +288,16 @@ object TextIndex {
     * ENGINE-side with the same [[stemEn]] the index uses (so "develops"
     * matches "developing"); per (doc, term) tf is the stemmed-occurrence
     * count, and each term contributes
-    * `round(tf · (2N − 2·df + 1) · scale / (2·df + 1))` — the BM25 odds
+    * `round(tf · (2N − 2·df + 1) · 10⁶ / (2·df + 1))` — the BM25 odds
     * ratio `(N − df + ½)/(df + ½)`, scaled and rounded to a LONG. Why no
     * log: libm `ln` is not bit-identical across engines. Each FACTOR is an
-    * exact integer held in a double (tf, 2N−2df+1, scale — every one
+    * exact integer held in a double (tf, 2N−2df+1, 10⁶ — every one
     * < 2^53 at any real corpus count), the product and division are
     * left-associated IEEE double ops identical on any engine, round() on
     * the same double decides the same way everywhere, and the LONG sum is
     * order-independent — so scores and ranks reproduce bit-for-bit. The
     * arithmetic runs in DOUBLE, not LONG: a long product
-    * tf·(2N−2df+1)·scale overflows 2^63 at web-corpus N with spammy tf,
+    * tf·(2N−2df+1)·10⁶ overflows 2^63 at web-corpus N with spammy tf,
     * which under ANSI mode (the Spark 4 default) kills the query.
     * Rank ties break by id.
     *
@@ -310,20 +307,18 @@ object TextIndex {
     * docs × |query|); top-k is sort+limit (TakeOrderedAndProject — each
     * partition keeps k, no global sort), and the rank window runs on k rows.
     */
-  def rankDocuments(docs: DataFrame, queryTerms: Seq[String], k: Int,
-                    textCol: String = "text", idCol: String = "doc_id",
-                    scale: Long = 1000000L): DataFrame = {
+  def rankDocuments(docs: DataFrame, queryTerms: Seq[String], k: Int): DataFrame = {
     require(queryTerms.nonEmpty, "rankDocuments: query terms must be non-empty")
     require(k > 0, s"rankDocuments: k must be positive: $k")
-    val tf = stemmedQueryTf(docs, queryTerms, textCol, idCol, withDl = false)
+    val tf = stemmedQueryTf(docs, queryTerms, withDl = false)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val termScore = round(col("tf").cast("double")
       * (lit(2) * col("n_docs") - lit(2) * col("df") + 1).cast("double")
-      * lit(scale).cast("double") / (lit(2) * col("df") + 1).cast("double")).cast("long")
+      * lit(1000000L).cast("double") / (lit(2) * col("df") + 1).cast("double")).cast("long")
     rankTopK(tf.join(broadcast(df), Seq("term"))
       .crossJoin(broadcast(n))
-      .groupBy(col(idCol)).agg(sum(termScore).as("score")), k, idCol)
+      .groupBy(col("doc_id")).agg(sum(termScore).as("score")), k)
   }
 
   /** The shared retrieval head: broadcast stemmed query-term table,
@@ -335,23 +330,22 @@ object TextIndex {
     * constant), so BM25's length statistic costs no extra join or shuffle.
     */
   private def stemmedQueryTf(docs: DataFrame, queryTerms: Seq[String],
-                             textCol: String, idCol: String,
                              withDl: Boolean): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val qt = queryTerms.toDF("raw")
       .select(stemEn(foldAccents(lower(col("raw")))).as("term")).distinct()
-    val words = split(lower(coalesce(col(textCol), lit(""))), "\\s+")
+    val words = split(lower(coalesce(col("text"), lit(""))), "\\s+")
     val base =
       if (withDl)
-        docs.select(col(idCol),
+        docs.select(col("doc_id"),
           size(filter(words, w => w =!= "")).cast("long").as("dl"),
           explode(words).as("word"))
-      else docs.select(col(idCol), explode(words).as("word"))
+      else docs.select(col("doc_id"), explode(words).as("word"))
     val tok = base.filter(col("word") =!= "")
       .withColumn("term", stemEn(foldAccents(col("word")))).drop("word")
     val grouped = tok.join(broadcast(qt), Seq("term"))
-      .groupBy(col(idCol), col("term"))
+      .groupBy(col("doc_id"), col("term"))
     if (withDl) grouped.agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
     else grouped.agg(count(lit(1)).as("tf"))
   }
@@ -361,11 +355,11 @@ object TextIndex {
     * persist a scored frame (e.g. one BM25 scoring shared by a lexical and
     * a hybrid-fusion consumer) can rank it without re-deriving scores.
     */
-  def rankTopK(scored: DataFrame, k: Int, idCol: String): DataFrame =
-    scored.orderBy(col("score").desc, col(idCol)).limit(k)
+  def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("score").desc, col("doc_id")).limit(k)
       .withColumn("rank",
         row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col(idCol))))
+          .orderBy(col("score").desc, col("doc_id"))))
 
   /** Full BM25 ranked retrieval (Robertson–Spärck Jones): [[rankDocuments]]'
     * odds-ratio idf extended with tf SATURATION and document-LENGTH
@@ -386,15 +380,12 @@ object TextIndex {
     * scalar aggregate — no new corpus-scale shuffle or join.
     */
   def bm25Rank(docs: DataFrame, queryTerms: Seq[String], k: Int,
-               k1Tenths: Int = 12, bHundredths: Int = 75,
-               textCol: String = "text", idCol: String = "doc_id",
-               scale: Long = 1000000L): DataFrame = {
+               bHundredths: Int = 75): DataFrame = {
     require(k > 0, s"bm25Rank: k must be positive: $k")
-    rankTopK(bm25Scores(docs, queryTerms, k1Tenths, bHundredths,
-      textCol, idCol, scale), k, idCol)
+    rankTopK(bm25Scores(docs, queryTerms, bHundredths), k)
   }
 
-  /** BM25 scoring WITHOUT the ranking tail: (idCol, score) for every
+  /** BM25 scoring WITHOUT the ranking tail: (doc_id, score) for every
     * document matching ≥ 1 query term. Split out so a caller with several
     * ranked consumers (plain BM25 list + hybrid RRF fusion) can persist ONE
     * scored frame — the corpus-scale tokenize/stem/df/length work — and
@@ -402,24 +393,22 @@ object TextIndex {
     * documented on [[bm25Rank]].
     */
   def bm25Scores(docs: DataFrame, queryTerms: Seq[String],
-                 k1Tenths: Int = 12, bHundredths: Int = 75,
-                 textCol: String = "text", idCol: String = "doc_id",
-                 scale: Long = 1000000L): DataFrame = {
+                 bHundredths: Int = 75): DataFrame = {
+    val k1Tenths = 12
     require(queryTerms.nonEmpty, "bm25Scores: query terms must be non-empty")
-    require(k1Tenths >= 0, s"bm25Scores: k1Tenths must be >= 0: $k1Tenths")
     require(bHundredths >= 0 && bHundredths <= 100,
       s"bm25Scores: bHundredths must be in [0,100]: $bHundredths")
-    val tf = stemmedQueryTf(docs, queryTerms, textCol, idCol, withDl = true)
+    val tf = stemmedQueryTf(docs, queryTerms, withDl = true)
     val dfT = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val totals = docs.select(
-        size(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
+        size(filter(split(lower(coalesce(col("text"), lit(""))), "\\s+"),
           w => w =!= "")).cast("long").as("dl"))
       .agg(sum(col("dl")).as("total_len"), count(lit(1)).as("n_docs"))
     // exact-rational fold (num/den both integers in doubles):
     //   num = scale · (2N−2df+1) · 100(10+k1T) · tf · totalLen
     //   den = (2df+1) · (1000·totalLen·tf + k1T(100−bH)·totalLen + k1T·bH·dl·N)
     val termScore = round(
-      lit(scale).cast("double")
+      lit(1000000L).cast("double")
         * (lit(2) * col("n_docs") - lit(2) * col("df") + 1).cast("double")
         * lit(100L * (10 + k1Tenths)).cast("double")
         * col("tf").cast("double") * col("total_len").cast("double")
@@ -430,7 +419,7 @@ object TextIndex {
     ).cast("long")
     tf.join(broadcast(dfT), Seq("term"))
       .crossJoin(broadcast(totals))
-      .groupBy(col(idCol)).agg(sum(termScore).as("score"))
+      .groupBy(col("doc_id")).agg(sum(termScore).as("score"))
   }
 
   /** Persist the token table bucketed by token — the scale path for point
@@ -451,7 +440,7 @@ object TextIndex {
   /** SymSpell-style spelling-correction join: out-of-dictionary words
     * matched to dictionary words at Levenshtein distance EXACTLY 1, via the
     * deletion-neighborhood candidate join — each side expands to itself +
-    * its single-character deletions (len+1 variants, bounded by `maxLen`),
+    * its single-character deletions (len+1 variants, words of 4..20 letters),
     * candidates are variant-key equi-matches, and a final `levenshtein`
     * check discards the false candidates the neighborhood over-generates
     * (e.g. transpositions). The naive alternative is a words × dict cross
@@ -463,8 +452,7 @@ object TextIndex {
     * taken with orderBy+limit, which Spark executes as TakeOrdered (per-
     * partition top-k + driver merge), never a full vocabulary sort.
     */
-  def symspellCorrections(docs: DataFrame, textCol: String, dictSize: Int,
-                          minLen: Int = 4, maxLen: Int = 20): DataFrame = {
+  def symspellCorrections(docs: DataFrame, textCol: String, dictSize: Int): DataFrame = {
     val words = docs.select(explode(
         expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
@@ -472,7 +460,7 @@ object TextIndex {
       .select(col("w").as("dw"))
     val queries = words
       .join(dict, col("w") === col("dw"), "left_anti")
-      .filter(length(col("w")).between(minLen, maxLen))
+      .filter(length(col("w")).between(4, 20))
       .select("w")
     // identity + single deletions: lev(a,b) <= 1 implies the variant sets
     // intersect; the reverse over-generates and is filtered below

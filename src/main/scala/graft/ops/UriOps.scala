@@ -127,15 +127,6 @@ object UriOps {
     when(uri.contains("#"), substring_index(uri, "#", -1))
       .otherwise(substring_index(uri, "/", -1))
 
-  // --------------------------------------------------------------- N6
-
-  /** First YYYY-MM-DD date in a string, null if absent
-    * (reference: OntologyDownloader.java:38,56-68). ISO dates compare
-    * correctly as strings, so version-newer-than = plain `>`.
-    */
-  def dateExtractCol(c: Column): Column =
-    nullif(regexp_extract(c, "(\\d{4}-\\d{2}-\\d{2})", 1), lit(""))
-
   // --------------------------------------------------------------- N7
 
   /** Document id "{coll}/{key}" → collection (before FIRST '/'), null when no

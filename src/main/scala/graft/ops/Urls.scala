@@ -70,11 +70,10 @@ object Urls {
     * last-non-null window carries the current agent — robots files are KB,
     * so every window partition is file-sized, never corpus-sized.
     */
-  def robotsDisallowRules(robots: org.apache.spark.sql.DataFrame,
-                          hostCol: String = "host",
-                          textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    val lines = robots.select(lower(col(hostCol)).as("host"),
-        posexplode(split(coalesce(col(textCol), lit("")), "\n")).as(Seq("ln", "raw")))
+  def robotsDisallowRules(
+      robots: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val lines = robots.select(lower(col("host")).as("host"),
+        posexplode(split(coalesce(col("text"), lit("")), "\n")).as(Seq("ln", "raw")))
       .select(col("host"), col("ln"),
         trim(regexp_replace(col("raw"), "#.*$", "")).as("line"))
     val w = org.apache.spark.sql.expressions.Window
@@ -99,11 +98,10 @@ object Urls {
     * broadcast at any corpus scale) + a per-URL aggregate.
     */
   def robotsVerdict(urls: org.apache.spark.sql.DataFrame,
-                    rules: org.apache.spark.sql.DataFrame,
-                    urlCol: String = "url"): org.apache.spark.sql.DataFrame = {
+                    rules: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val withParts = urls
-      .withColumn("__host", hostOf(col(urlCol)))
-      .withColumn("__path", pathOf(col(urlCol)))
+      .withColumn("__host", hostOf(col("url")))
+      .withColumn("__path", pathOf(col("url")))
     withParts
       .join(broadcast(rules.select(col("host").as("__host"), col("prefix"))),
         Seq("__host"), "left")

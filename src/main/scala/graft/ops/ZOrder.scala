@@ -52,15 +52,15 @@ object ZOrder {
     * contiguous z-range — a compact rectangle-ish region of (x, y) space —
     * and its parquet min/max footer prunes on both dimensions. One range
     * shuffle; the sort is per-partition. The key column is retained under
-    * `zCol` for stats/debugging (callers may drop it before write).
+    * `z_value` for stats/debugging (callers may drop it before write).
     */
   def layoutByZ(df: DataFrame, xCol: String, yCol: String, bits: Int,
-                numFiles: Int, zCol: String = "z_value"): DataFrame = {
+                numFiles: Int): DataFrame = {
     require(numFiles >= 1, s"layoutByZ: numFiles must be >= 1: $numFiles")
-    require(!df.columns.contains(zCol),
-      s"layoutByZ: input already has a column named '$zCol'")
-    df.withColumn(zCol, zValue(col(xCol), col(yCol), bits))
-      .repartitionByRange(numFiles, col(zCol))
-      .sortWithinPartitions(col(zCol))
+    require(!df.columns.contains("z_value"),
+      s"layoutByZ: input already has a column named 'z_value'")
+    df.withColumn("z_value", zValue(col(xCol), col(yCol), bits))
+      .repartitionByRange(numFiles, col("z_value"))
+      .sortWithinPartitions(col("z_value"))
   }
 }

@@ -53,11 +53,12 @@ object OntologyPipeline {
       "usage: OntologyPipeline <oboDir> <outDir> [phenotypePattern] [--last-wins]")
     val lastWins = flags.contains("--last-wins")
     val pattern = if (pos.length >= 3) pos(2) else "cl\\.owl"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+      .master(s"local[$cpus]")
       .appName("graft-ontology-pipeline")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

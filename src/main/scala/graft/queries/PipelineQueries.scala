@@ -2237,7 +2237,7 @@ object PipelineQueries {
     // k1=1.2 / b=0.75 folded as exact integer rationals (avgdl = dl·N /
     // totalLen) so the IEEE double chain reproduces on both engines.
     ("x1_bm25_rank",
-      (s, d) => TextIndex.rankTopK(bm25ScoresShared(s, d), k = 10, "doc_id")
+      (s, d) => TextIndex.rankTopK(bm25ScoresShared(s, d), k = 10)
         .orderBy("doc_id"),
       s"""$Bm25Ctes
         | SELECT doc_id, score, CAST(rank AS INTEGER) AS rank FROM (
@@ -2252,7 +2252,7 @@ object PipelineQueries {
     // is vec 0's embedding; documents and embeddings share ids 1:1.
     ("x1_hybrid_rrf",
       (s, d) => {
-        val lex = TextIndex.rankTopK(bm25ScoresShared(s, d), k = 10, "doc_id")
+        val lex = TextIndex.rankTopK(bm25ScoresShared(s, d), k = 10)
         val e = t(s, d, "embeddings")
         val den = Similarity.bruteForceTopK(e.filter(col("vec_id") === 0), e, k = 10)
           .select(col("neighbor_id").as("doc_id"), col("rank"))

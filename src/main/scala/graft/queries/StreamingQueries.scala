@@ -56,7 +56,7 @@ object StreamingQueries {
     * window are untouched. At 100 TB this is per-query sizing — state
     * partitions should track key cardinality, exactly as done here.
     */
-  private def withStreamShuffle[T](s: SparkSession, parts: Int = 8)(body: => T): T = {
+  private def withStreamShuffle[T](s: SparkSession, parts: Int = 8)(body: => T): T =
     // measured (interleaved fresh-JVM pairs, 10-twin battery at sf0.1, shm
     // scratch in both configs): parts=8 -> 42.3/41.3 s, parts=32 ->
     // 68.0/61.7 s. Entries whose wall is CPU-bound BATCH compute inside the
@@ -64,11 +64,8 @@ object StreamingQueries {
     // store-join foreachBatch sinks) pass parts=0 = keep the session's 32:
     // for them the state-store file churn is noise and the 4x parallelism
     // loss dominates (stream_incremental_cc 4.2 -> 14.4 s under parts=8).
-    // GRAFT_STREAM_PARTS overrides everything (A/B aid); "0" disables.
-    val n = sys.env.getOrElse("GRAFT_STREAM_PARTS", parts.toString)
-    if (n == "0") body
-    else graft.ops.SessionConf.withShufflePartitions(s, n.toInt)(body)
-  }
+    if (parts == 0) body
+    else graft.ops.SessionConf.withShufflePartitions(s, parts)(body)
 
   /** The events two-batch staging (grain-normalized ts, median-ts cut,
     * b1/b2 parquet) is byte-identical across the ~8 twins that replay the

@@ -76,13 +76,12 @@ object StreamingIngest {
     * hash once the watermark passes its event time, so a continuously
     * ingesting 100 TB pipeline holds only one horizon's worth of 16-byte
     * digests per partition, not the full history. `docs` must be a streaming
-    * DataFrame carrying `tsCol` (event time).
+    * DataFrame carrying `ts` (event time).
     */
-  def streamingExactDedup(docs: DataFrame, watermark: String = "10 minutes",
-                          textCol: String = "text", tsCol: String = "ts"): DataFrame =
+  def streamingExactDedup(docs: DataFrame, watermark: String = "10 minutes"): DataFrame =
     docs
-      .withColumn("content_hash", md5(col(textCol)))
-      .withWatermark(tsCol, watermark)
+      .withColumn("content_hash", md5(col("text")))
+      .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("content_hash")
 
   /** Streaming gap-based sessionization — the incremental analog of
@@ -96,14 +95,12 @@ object StreamingIngest {
     * `diff < gap`, the batch operator at `diff <= gap` — identical for every
     * gap that doesn't exactly equal an inter-event delta.
     */
-  def streamingSessionStats(events: DataFrame, gap: String, watermark: String,
-                            keyCol: String = "user_id", tsCol: String = "ts",
-                            valueCol: String = "value"): DataFrame =
+  def streamingSessionStats(events: DataFrame, gap: String, watermark: String): DataFrame =
     events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n_events"), sum(col(valueCol)).as("sum_value"))
-      .select(col(keyCol), col("session_window.start").as("start_ts"),
+      .withWatermark("ts", watermark)
+      .groupBy(session_window(col("ts"), gap), col("user_id"))
+      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+      .select(col("user_id"), col("session_window.start").as("start_ts"),
         col("n_events"), col("sum_value"))
 
   /** Session stats with a PER-EVENT dynamic gap (session_window's
@@ -117,14 +114,12 @@ object StreamingIngest {
     */
   def streamingDynamicSessionStats(events: DataFrame,
                                    gapExpr: org.apache.spark.sql.Column,
-                                   watermark: String,
-                                   keyCol: String = "user_id", tsCol: String = "ts",
-                                   valueCol: String = "value"): DataFrame =
+                                   watermark: String): DataFrame =
     events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gapExpr), col(keyCol))
-      .agg(count(lit(1)).as("n_events"), sum(col(valueCol)).as("sum_value"))
-      .select(col(keyCol), col("session_window.start").as("start_ts"),
+      .withWatermark("ts", watermark)
+      .groupBy(session_window(col("ts"), gapExpr), col("user_id"))
+      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+      .select(col("user_id"), col("session_window.start").as("start_ts"),
         col("n_events"), col("sum_value"))
 
   /** Streaming near-duplicate candidate detection — the continuous-ingestion
@@ -150,15 +145,11 @@ object StreamingIngest {
     * a hive partition column, which the store probe drops.
     */
   def startNearDupCandidateStream(docs: DataFrame, sigStoreDir: String,
-                                  pairsDir: String, checkpointDir: String,
-                                  shingleN: Int = 3, numHashes: Int = 12,
-                                  bands: Int = 4, textCol: String = "text",
-                                  idCol: String = "doc_id"): StreamingQuery =
+                                  pairsDir: String, checkpointDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processNearDupBatch(batch, batchId, sigStoreDir, pairsDir,
-          shingleN, numHashes, bands, textCol, idCol)
+        processNearDupBatch(batch, batchId, sigStoreDir, pairsDir)
       }
       .start()
 
@@ -168,17 +159,16 @@ object StreamingIngest {
     * idempotence the stream relies on).
     */
   private[graft] def processNearDupBatch(batch: DataFrame, batchId: Long,
-                                             sigStoreDir: String, pairsDir: String,
-                                             shingleN: Int = 3, numHashes: Int = 12,
-                                             bands: Int = 4, textCol: String = "text",
-                                             idCol: String = "doc_id"): Unit = {
+                                             sigStoreDir: String, pairsDir: String): Unit = {
+    val bands = 4
+    val numHashes = 12
     val spark = batch.sparkSession
     // materialized ONCE per batch (probed for candidates AND appended
     // to the store — incrementalCandidates is told not to re-checkpoint)
     // and released when the batch is done: a streaming loop that pins a
     // copy per micro-batch leaks block storage over continuous ingestion
     val incSigs = graft.llm.Dedup.minhashSignatures(
-      graft.llm.Dedup.wordShingles(batch, shingleN, textCol, idCol), numHashes)
+      graft.llm.Dedup.wordShingles(batch, 3), numHashes)
       .localCheckpoint(true)
     try {
       val store = new org.apache.hadoop.fs.Path(sigStoreDir)
@@ -368,9 +358,8 @@ object StreamingIngest {
     * ride in the continuous query as one codegen reference object.
     * Stream-equals-batch by construction (the spec pins it).
     */
-  def streamingDecontaminate(docs: DataFrame, bloom: graft.functions.BloomBits,
-                             textCol: String = "text"): DataFrame =
-    graft.llm.Dedup.applyBloomFilter(docs, bloom, textCol)
+  def streamingDecontaminate(docs: DataFrame, bloom: graft.functions.BloomBits): DataFrame =
+    graft.llm.Dedup.applyBloomFilter(docs, bloom)
 
   /** Custom streaming state via `mapGroupsWithState`: per-source running
     * corpus statistics (doc count, total whitespace tokens), updated every
@@ -379,12 +368,11 @@ object StreamingIngest {
     * window). Emit in `update` output mode; state is one (long, long) pair
     * per source, so memory is bounded by source cardinality.
     */
-  def runningSourceStats(docs: DataFrame, textCol: String = "text",
-                         srcCol: String = "source"): DataFrame = {
+  def runningSourceStats(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.{Encoders, Row}
-    val pairs = docs.select(col(srcCol).cast("string").as("source"),
-      size(split(col(textCol), "\\s+")).as("n_tokens"))
+    val pairs = docs.select(col("source").cast("string").as("source"),
+      size(split(col("text"), "\\s+")).as("n_tokens"))
     implicit val inEnc = Encoders.product[(String, Int)]
     implicit val stEnc = Encoders.product[(Long, Long)]
     implicit val outEnc = Encoders.product[(String, Long, Long)]
@@ -445,17 +433,17 @@ object StreamingIngest {
       .toDF("event_type", "day", "n", "cusum_micro", "shifted", "emit_seq")
   }
 
-  /** Spark's NATIVE watermarked stream-stream join — the ±`rangeMinutes`
+  /** Spark's NATIVE watermarked stream-stream join — the ±5-minute
     * purchase↔click interval join ([[graft.queries.TemporalQueries.IntervalJoinSql]])
     * as two watermarked branches of the event stream joined on user +
     * event-time range. Unlike the `flatMapGroupsWithState` twins, ALL
     * state management is Spark's own stream-stream join state store:
     * each side buffers only rows young enough to still find partners,
     * and the time-range condition is what lets the watermark evict —
-    * the core scale property (state is bounded by `delayMinutes` of
-    * stream volume per side, never by stream length).
+    * the core scale property (state is bounded by the 10-minute watermark
+    * delay of stream volume per side, never by stream length).
     *
-    * Convergence contract: with `delayMinutes` ≥ `rangeMinutes`, a
+    * Convergence contract: with the delay covering the range, a
     * time-ordered micro-batch replay emits EXACTLY the batch operator's
     * pair set — a batch-1 purchase still matches a batch-2 click because
     * the watermark (max batch-1 time − delay) cannot pass any purchase
@@ -463,12 +451,9 @@ object StreamingIngest {
     * ever provisional; cross-batch pairs simply surface in the later
     * batch.
     */
-  def streamingIntervalJoin(events: DataFrame,
-                            rangeMinutes: Int = 5,
-                            delayMinutes: Int = 10): DataFrame = {
-    require(delayMinutes >= rangeMinutes,
-      s"watermark delay ($delayMinutes m) must cover the join range " +
-        s"($rangeMinutes m) or cross-batch pairs are evicted early")
+  def streamingIntervalJoin(events: DataFrame): DataFrame = {
+    val rangeMinutes = 5
+    val delayMinutes = 10
     val typed = events.select(
       col("user_id").cast("long").as("user_id"),
       col("event_id").cast("long").as("event_id"),
@@ -496,7 +481,7 @@ object StreamingIngest {
     * NULL-padded row for an unmatched purchase emits ONLY when the
     * watermark passes the end of its join window — Spark can't know "no
     * click will come" any earlier, so outer results are intrinsically
-    * delayed by `delayMinutes` + `rangeMinutes` of event time. State and
+    * delayed by delay + range (15 minutes) of event time. State and
     * eviction are identical to the inner form (bounded by delay × stream
     * rate per side); the output is what differs.
     *
@@ -505,12 +490,9 @@ object StreamingIngest {
     * replay must append a watermark-advancing flush batch (one far-future
     * event per side; the caller filters its sentinel ids from the sink).
     */
-  def streamingIntervalJoinOuter(events: DataFrame,
-                                 rangeMinutes: Int = 5,
-                                 delayMinutes: Int = 10): DataFrame = {
-    require(delayMinutes >= rangeMinutes,
-      s"watermark delay ($delayMinutes m) must cover the join range " +
-        s"($rangeMinutes m) or cross-batch pairs are evicted early")
+  def streamingIntervalJoinOuter(events: DataFrame): DataFrame = {
+    val rangeMinutes = 5
+    val delayMinutes = 10
     val typed = events.select(
       col("user_id").cast("long").as("user_id"),
       col("event_id").cast("long").as("event_id"),
@@ -533,7 +515,7 @@ object StreamingIngest {
   }
 
   /** Streaming backward as-of enrichment via `flatMapGroupsWithState`: each
-    * `leftType` event is emitted with the latest `rightType` value at or
+    * `purchase` event is emitted with the latest `click` value at or
     * before its timestamp for the same user — the streaming twin of
     * [[graft.ops.TemporalOps.asofJoinBackward]] (matching its at-tie and
     * click-tie semantics: right rows apply before left rows at equal ts,
@@ -554,9 +536,7 @@ object StreamingIngest {
     * likewise not retro-applied — use the batch operator for unordered
     * data.
     */
-  def streamingAsofEnrich(events: DataFrame,
-                          rightType: String = "click",
-                          leftType: String = "purchase"): DataFrame = {
+  def streamingAsofEnrich(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.streaming.OutputMode
     import org.apache.spark.sql.Encoders
@@ -587,16 +567,16 @@ object StreamingIngest {
           // right rows sort before left rows at equal ts (the batch
           // operator's __tag ordering); event_id totalizes the order
           val sorted = rows.toArray
-            .sortBy(e => (e._3, if (e._4 == rightType) 0 else 1, e._2))
+            .sortBy(e => (e._3, if (e._4 == "click") 0 else 1, e._2))
           val out = Vector.newBuilder[(Long, Long, Option[Double])]
           for (e <- sorted) {
-            if (e._4 == rightType) {
+            if (e._4 == "click") {
               if (has && e._3 == lastTs)
                 // MAX over equal-ts rights ignores nulls, like the batch
                 // pre-aggregation's max(value)
                 lastV = (lastV.toSeq ++ e._5.toSeq).reduceOption(math.max(_: Double, _: Double))
               else { lastTs = e._3; lastV = e._5; has = true }
-            } else if (e._4 == leftType) {
+            } else if (e._4 == "purchase") {
               out += ((user, e._2, if (has) lastV else None))
             }
           }
@@ -625,15 +605,12 @@ object StreamingIngest {
     * under at-least-once delivery.
     */
   def startAttributionStream(events: DataFrame, touchStoreDir: String,
-                             attribDir: String, checkpointDir: String,
-                             touchTypes: Seq[String] = Seq("click", "view"),
-                             purchaseType: String = "purchase",
-                             lookbackUs: Long = 604800000000L): StreamingQuery =
+                             attribDir: String, checkpointDir: String): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processAttributionBatch(batch, batchId, touchStoreDir, attribDir,
-          touchTypes, purchaseType, lookbackUs)
+          Seq("click", "view"), "purchase", 604800000000L)
       }
       .start()
 
