@@ -17,7 +17,7 @@ object Bench {
     * control chars (< 0x20): an embedded newline/tab in an error message or
     * string metric would otherwise break the line-oriented JSON parser.
     */
-  private def jstr(s: String): String = "\"" + s.flatMap {
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -326,17 +326,8 @@ object Bench {
     }
     def remainingSec: Double = timeBudget - (System.nanoTime() - tMain0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.ops.SessionConf.cpus
+    val spark = graft.ops.SessionConf.localSession()
     // The deliberately-unpartitioned summary windows would spam hundreds of
     // audited-benign `No Partition Defined` WARNs into the bench tail,
     // hiding a future REAL offender. Detection now lives in
@@ -346,7 +337,6 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    graft.functions.GraftExtensions.register(spark)
     // per-entry jobs, task CPU, shuffle and spill (bench_out.json
     // `entryStats`): each entry's plan construction and execution run
     // under the job groups "[<entry>] prep" and "[<entry>] exec"

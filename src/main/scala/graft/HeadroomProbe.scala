@@ -33,20 +33,12 @@ object HeadroomProbe {
     val dest = args.drop(1).headOption.getOrElse(
       sys.error("usage: HeadroomProbe <srcDir> <destDir> [mult]"))
     val mult = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // getOrCreate RETURNS an already-active session (e.g. the shared test
     // session when invoked from a spec) — remember whether this main owns
     // the session, and only stop what it created
     val hadActive = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).exists(!_.sparkContext.isStopped)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.ops.SessionConf.localSession()
 
     def rd(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def stride(df: DataFrame, c: String): Long =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit aid: print `.explain("formatted")` for registry queries.
   * Usage: runMain graft.PlanDump <sfDir> <queryName...>
@@ -245,17 +244,8 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ops.SessionConf.localSession()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.register(spark)
     if (args.drop(1).headOption.contains("--audit-windows")) {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         val n = try unpartitionedWindows(fn(spark, sfDir))

@@ -52,8 +52,9 @@ case class CharNgramsExpr(child: Expression, minN: Int, maxN: Int, preserveOrigi
 }
 
 object CharNgrams {
-  /** Column API: select(charNgramTokens(col, 3, 4, true)) yields rows (token). */
-  def charNgramTokens(c: Column, minN: Int, maxN: Int, preserveOriginal: Boolean): Column =
+  /** Column API: select(charNgramTokens(col)) yields rows (token): the
+    * n-grams for n in [3, 4] plus the original. */
+  def charNgramTokens(c: Column): Column =
     GraftColumnBridge.column(CharNgramsExpr(
-      GraftColumnBridge.expression(c), minN, maxN, preserveOriginal))
+      GraftColumnBridge.expression(c), 3, 4, true))
 }

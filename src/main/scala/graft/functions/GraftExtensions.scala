@@ -44,11 +44,11 @@ object GraftExtensions {
       case other => throw new IllegalArgumentException(
         s"$name: expected an integer literal, got '$other' (${other.getClass.getSimpleName})")
     }
-  private def boolArg(name: String, e: Expression): Boolean =
-    configArg(name, "boolean", e) match {
+  private def boolArg(e: Expression): Boolean =
+    configArg("char_ngrams", "boolean", e) match {
       case b: Boolean => b
       case other => throw new IllegalArgumentException(
-        s"$name: expected a boolean literal, got '$other' (${other.getClass.getSimpleName})")
+        s"char_ngrams: expected a boolean literal, got '$other' (${other.getClass.getSimpleName})")
     }
 
   private[functions] val All: Seq[FunctionDescription] = Seq(
@@ -64,7 +64,7 @@ object GraftExtensions {
       es => WordShinglesExpr(es(0), intArg("word_shingles", es(1)))),
     fn("char_ngrams", classOf[CharNgramsExpr], 4,
       es => CharNgramsExpr(es(0), intArg("char_ngrams", es(1)),
-        intArg("char_ngrams", es(2)), boolArg("char_ngrams", es(3)))),
+        intArg("char_ngrams", es(2)), boolArg(es(3)))),
     fn("edge_ngrams", classOf[EdgeNgramsExpr], 3,
       es => EdgeNgramsExpr(es(0), intArg("edge_ngrams", es(1)),
         intArg("edge_ngrams", es(2)))),

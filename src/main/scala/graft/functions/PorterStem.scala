@@ -228,7 +228,7 @@ object PorterStem {
     * columns `<keys>, w` (w lowercased). All CTE names carry `tag` so two
     * pipelines can coexist in one query.
     */
-  def sqlCtes(wordsCte: String, keys: String, tag: String, outCte: String): String = {
+  def sqlCtes(keys: String, tag: String, outCte: String): String = {
     // AS MATERIALIZED is load-bearing: DuckDB inlines CTE projections into
     // their consumers, and every step references `cur` many times — inlined,
     // each reference re-expands the entire upstream CASE chain and the plan
@@ -238,7 +238,7 @@ object PorterStem {
     // imperative kernel.
     def step(name: String, from: String, curExpr: String, extra: String = ""): String =
       s" $name AS MATERIALIZED (SELECT $keys, w, $curExpr AS cur$extra FROM $from)"
-    val p0 = step(s"p0$tag", wordsCte,
+    val p0 = step(s"p0$tag", "words",
       s"CASE WHEN length(w) >= 3 AND w LIKE 'y%' THEN 'Y' || substr(w, 2) ELSE w END")
     val p1a = step(s"p1a$tag", s"p0$tag",
       s"""CASE WHEN length(w) < 3 THEN cur

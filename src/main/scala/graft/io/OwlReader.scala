@@ -197,7 +197,7 @@ object OwlReader {
       }
       null
     }
-    def plainAttr(nsUri: String, local: String): String = r.getAttributeValue(nsUri, local)
+    def xmlLang: String = r.getAttributeValue(XmlNs, "lang")
 
     /** Parse a node element (subject position). Reader is ON its START_ELEMENT;
       * consumes through its END_ELEMENT. Returns the node's id (URI or blank).
@@ -206,7 +206,7 @@ object OwlReader {
       */
     def parseNodeElement(inheritedLang: String): (String, Boolean) = { // (id, isBlank)
       val tagUri = qnameUri(r.getNamespaceURI, r.getLocalName)
-      val nodeLang = effLang(plainAttr(XmlNs, "lang"), inheritedLang)
+      val nodeLang = effLang(xmlLang, inheritedLang)
       val about = rdfAttr("about")
       val nodeId = rdfAttr("nodeID")
       val rdfId = rdfAttr("ID")
@@ -255,7 +255,7 @@ object OwlReader {
       val nodeId = rdfAttr("nodeID")
       val parseType = rdfAttr("parseType")
       val datatype = rdfAttr("datatype")
-      val lang = effLang(plainAttr(XmlNs, "lang"), inheritedLang)
+      val lang = effLang(xmlLang, inheritedLang)
 
       if (resource != null) {
         emitUri(subj, pred, resource)
@@ -352,7 +352,7 @@ object OwlReader {
       // xml:lang on the root (or any ancestor) is inherited by descendants
       while (r.hasNext && r.getEventType != XMLStreamConstants.START_ELEMENT) r.next()
       if (r.getEventType == XMLStreamConstants.START_ELEMENT) {
-        val rootLang = effLang(plainAttr(XmlNs, "lang"), null)
+        val rootLang = effLang(xmlLang, null)
         var depth = 1
         while (depth > 0 && r.hasNext) {
           r.next() match {

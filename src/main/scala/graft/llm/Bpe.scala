@@ -173,12 +173,12 @@ object Bpe {
     (rules.toSeq, rounds)
   }
 
-  /** Learned rules as a DataFrame — the registry/bench surface. */
-  def trainMergesDf(docs: DataFrame, numMerges: Int,
-                    maxBatch: Int = 1): DataFrame = {
+  /** Learned rules (8 merges, at most 4 per batch) as a DataFrame — the
+    * registry/bench surface. */
+  def trainMergesDf(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    trainMerges(docs, numMerges, maxBatch)
+    trainMerges(docs, 8, 4)
       .toDF("rank", "left", "right", "merged", "pair_count")
   }
 

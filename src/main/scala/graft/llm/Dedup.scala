@@ -336,7 +336,7 @@ object Dedup {
     * Output: (id, kept_text, n_units, n_kept) — emptied documents remain
     * with kept_text = '' so the caller decides their fate.
     */
-  def unitDedup(docs: DataFrame, sep: String, joinSep: String = " | "): DataFrame = {
+  def unitDedup(docs: DataFrame, sep: String): DataFrame = {
     val units = docs.select(col("doc_id").as("id"),
         posexplode(split(col("text"), java.util.regex.Pattern.quote(sep)))
           .as(Seq("pos", "unit")))
@@ -349,7 +349,7 @@ object Dedup {
     val keptAgg = kept.groupBy("id").agg(
       count(lit(1)).as("n_kept"),
       array_join(transform(array_sort(collect_list(struct(col("pos"), col("unit")))),
-        x => x.getField("unit")), joinSep).as("kept_text"))
+        x => x.getField("unit")), " | ").as("kept_text"))
     total.join(keptAgg, Seq("id"), "left")
       .select(col("id"), coalesce(col("kept_text"), lit("")).as("kept_text"),
         col("n_units"), coalesce(col("n_kept"), lit(0L)).as("n_kept"))
@@ -405,8 +405,8 @@ object Dedup {
     *
     * Output on both routes: (id_a, id_b, n_inter, n_a, n_b, route).
     */
-  def prefixFilterPairsAuto(shingles: DataFrame, minJaccardPct: Int,
-      maxDF: Long = 1000L): DataFrame = {
+  def prefixFilterPairsAuto(shingles: DataFrame): DataFrame = {
+    val minJaccardPct = 70
     val (nTokens, nPostings, medianDf, p99Df) = dfSkewStats(shingles)
     val meanDf = nPostings.toDouble / math.max(1L, nTokens)
     val skewRatio = p99Df.toDouble / math.max(1L, medianDf)
@@ -414,7 +414,7 @@ object Dedup {
       prefixFilterPairs(shingles, minJaccardPct)
         .withColumn("route", lit("prefix_exact"))
     else
-      jaccardPairs(shingles, minJaccardPct / 100.0, maxDF)
+      jaccardPairs(shingles, minJaccardPct / 100.0, 1000L)
         .select(col("id_a"), col("id_b"), col("n_inter"),
           col("sz_a").as("n_a"), col("sz_b").as("n_b"),
           lit("maxdf_capped").as("route"))
@@ -551,9 +551,8 @@ object Dedup {
     * md5-hex derived, so the estimate is engine-portable and the oracle
     * reproduces it exactly.
     */
-  def estimateJaccard(signatures: DataFrame, pairs: DataFrame,
-                      numHashes: Int): DataFrame = {
-    require(numHashes >= 1, s"numHashes must be positive: $numHashes")
+  def estimateJaccard(signatures: DataFrame, pairs: DataFrame): DataFrame = {
+    val numHashes = 12
     def side(suffix: String) = signatures.select(
       col("id").as(s"id_$suffix") +:
         (0 until numHashes).map(j => col(s"h$j").as(s"${suffix}_h$j")): _*)
@@ -644,12 +643,12 @@ object Dedup {
   /** Decontamination GOVERNANCE row: per-group contamination counts and
     * rates instead of the filtered corpus — "which sources leak eval data,
     * and how badly" is the question a pipeline owner asks before deciding
-    * what to drop. Same n-gram/broadcast discipline as [[decontaminate]]
+    * what to drop. Same n-gram (n = 5)/broadcast discipline as [[decontaminate]]
     * (the eval side broadcasts, the corpus side never shuffles before the
     * group-sized aggregate).
     */
-  def contaminationReport(docs: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame = {
-    val contaminated = contaminatedIds(docs, evalDocs, n)
+  def contaminationReport(docs: DataFrame, evalDocs: DataFrame): DataFrame = {
+    val contaminated = contaminatedIds(docs, evalDocs, 5)
       .withColumn("__contaminated", lit(1L))
     docs.join(contaminated, Seq("doc_id"), "left_outer")
       .groupBy(col("source"))
@@ -670,7 +669,7 @@ object Dedup {
     *
     * Bloom semantics are one-sided: every truly contaminated document is
     * dropped, plus a deterministic false-positive fringe (rate
-    * ≈ (set_bits / 2^mBits)^numHashes — size mBits for the eval-gram
+    * ≈ (set_bits / 2^mBits)^4 with 4 hashes — size mBits for the eval-gram
     * volume). The hash schedule is the engine-portable md5-prefix
     * double-hash ([[graft.functions.BloomProbe.positionsCol]]), so the
     * DuckDB oracle reproduces survivors — false positives included —
@@ -681,8 +680,8 @@ object Dedup {
     * materializes only the 2^mBits/64 bitset words regardless of eval size.
     */
   def bloomDecontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int = 13,
-                         mBits: Int = 22, numHashes: Int = 4): DataFrame =
-    applyBloomFilter(docs, buildBloom(evalDocs, n, mBits, numHashes))
+                         mBits: Int = 22): DataFrame =
+    applyBloomFilter(docs, buildBloom(evalDocs, n, mBits))
 
   /** THE bloom probe predicate — drop every document with any fully-set
     * `bloom.n`-gram probe. One copy, shared by [[bloomDecontaminate]] and
@@ -705,8 +704,8 @@ object Dedup {
     * footprint of the bitset itself, never a per-position Array[Long]
     * (which at mBits=30 would be up to 64x the bitset it builds).
     */
-  def buildBloom(evalDocs: DataFrame, n: Int = 13, mBits: Int = 22,
-                 numHashes: Int = 4): graft.functions.BloomBits = {
+  def buildBloom(evalDocs: DataFrame, n: Int = 13, mBits: Int = 22): graft.functions.BloomBits = {
+    val numHashes = 4
     val words = evalDocs
       .select(graft.functions.WordShingles.wordShingles(col("text"), n).as("gram"))
       .select(explode(graft.functions.BloomProbe.positionsCol(
@@ -861,10 +860,10 @@ object Dedup {
     * [[removeDuplicateSpans]], [[duplicateSpanExtents]] and
     * [[spanSurvivorCut]] each build this IDENTICAL subtree internally, and
     * Spark's CacheManager plan match serves all of them from one persisted
-    * copy (the d3/BM25 shared-store pattern).
+    * copy (the d3/BM25 shared-store pattern). Spans are 8 tokens.
     */
-  def spanCoveredPositions(docs: DataFrame, spanTokens: Int = 10): DataFrame =
-    coveredPositions(docs, spanTokens)
+  def spanCoveredPositions(docs: DataFrame): DataFrame =
+    coveredPositions(docs, 8)
 
   /** ARBITRARY-LENGTH exact substring dedup — the suffix-array/LCP tier of
     * the dedup matrix (Lee et al. 2022's ExactSubstr criterion), realized
@@ -1041,11 +1040,11 @@ object Dedup {
     * small in-word edits (typos, entity swaps, template fills) that word
     * n-gram Jaccard either misses or over-penalizes.
     *
-    * `maxDist` is the scale control: Spark's 3-arg `levenshtein` runs the
-    * band-limited DP (O(maxDist·len) per pair, not O(len²)) and returns -1
-    * above the bound — at a 100 TB corpus unbounded edit distance on a
-    * false-positive candidate pair (two unrelated 100 KB docs) is the cost
-    * bomb, and a verifier only needs "≤ maxDist or not". `edit_sim`
+    * The bound maxDist = 6 is the scale control: Spark's 3-arg `levenshtein`
+    * runs the band-limited DP (O(maxDist·len) per pair, not O(len²)) and
+    * returns -1 above the bound — at a 100 TB corpus unbounded edit distance
+    * on a false-positive candidate pair (two unrelated 100 KB docs) is the
+    * cost bomb, and a verifier only needs "≤ maxDist or not". `edit_sim`
     * (1 − dist/max(len)) is NULL on capped pairs: unknowable is not 0.
     *
     * Shape: candidate pairs are sketch-bounded (LSH band width), corpus-
@@ -1054,15 +1053,13 @@ object Dedup {
     * the pair side when it is small). The texts never pair-shuffle more than
     * the candidate set itself.
     */
-  def editVerify(docs: DataFrame, pairs: DataFrame, maxDist: Int = Int.MaxValue): DataFrame = {
+  def editVerify(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"), col("text"))
-    val dist =
-      if (maxDist == Int.MaxValue) levenshtein(col("text_a"), col("text_b"))
-      else levenshtein(col("text_a"), col("text_b"), maxDist)
     pairs.select("id_a", "id_b")
       .join(d.select(col("doc_id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
       .join(d.select(col("doc_id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), dist.as("edit_dist"),
+      .select(col("id_a"), col("id_b"),
+        levenshtein(col("text_a"), col("text_b"), 6).as("edit_dist"),
         length(col("text_a")).as("len_a"), length(col("text_b")).as("len_b"))
       .withColumn("edit_sim",
         when(col("edit_dist") >= 0,
@@ -1153,11 +1150,11 @@ object Dedup {
     * no selectivity). The exact full-hash Hamming verify on every candidate
     * means banding never inflates the result.
     */
-  def simhashNearDupPairs(docs: DataFrame, bits: Int = 32, nBands: Int = 4,
-                          maxHamming: Int = 2, maxBucket: Int = 64): DataFrame = {
+  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 2, maxBucket: Int = 64): DataFrame = {
+    val bits = 32
+    val nBands = 4
     require(maxHamming < nBands,
       s"completeness needs maxHamming < nBands: $maxHamming >= $nBands")
-    require(bits % nBands == 0, s"bits must split into equal bands: $bits / $nBands")
     val bandBits = bits / nBands
     val hashed = simhash(docs, bits)
     val bands = hashed.select(col("id"), col("simhash"), explode(array(

@@ -320,15 +320,16 @@ object Multimodal {
     * sample with pure index arithmetic (src_x = x·srcW div dstW — no
     * filtering kernel, so every output pixel is an exact copy of a
     * reproducible source pixel an oracle can name), re-encode as 24-bit
-    * BMP. The output payload round-trips through the same real decode
+    * BMP `w` pixels wide and 2 high. The output payload round-trips through the same real decode
     * path ([[decodeImage]]), which is what the m_image_resize entry
     * checks end to end. Payloads that don't decode fall back to the
     * deterministic byte-truncate stub ([[resize]] semantics) rather than
     * failing the batch. Map-side `mapPartitions` (codec work) — zero
     * shuffles.
     */
-  def resizeImages(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
+  def resizeImages(media: Dataset[MediaRow], w: Int): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
+    val h = 2
     media.mapPartitions { rows =>
       rows.map { r =>
         val img = try javax.imageio.ImageIO.read(
@@ -487,15 +488,15 @@ object Multimodal {
   }
 
   /** REAL audio decimation (the audio sibling of [[resizeImages]]): decode
-    * 16-bit PCM mono → keep every `factor`-th sample (index arithmetic, no
+    * 16-bit PCM mono → keep every 2nd sample (index arithmetic, no
     * filter kernel — every output sample is an exact copy of a nameable
-    * source sample) → re-encode at rate/factor → the next decode reads the
+    * source sample) → re-encode at rate/2 → the next decode reads the
     * re-assembled container. Non-decodable payloads pass through unchanged
     * (the downstream feature pass reports them `decoded=false`).
     */
-  def decimateAudio(media: Dataset[MediaRow], factor: Int): Dataset[MediaRow] = {
-    require(factor >= 1, "decimateAudio: factor must be >= 1")
+  def decimateAudio(media: Dataset[MediaRow]): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
+    val factor = 2
     media.mapPartitions { rows =>
       rows.map { r =>
         val dec = if (r.media_type == "audio") decodeSamples(r.bytes) else None
@@ -616,19 +617,18 @@ object Multimodal {
 
   /** Windowed audio energy/peak over REAL decoded PCM — the audio sibling
     * of [[sampleFrames]]: decode (javax.sound.sampled), split the sample
-    * stream into fixed `windowSamples`-sized windows (last window ragged),
+    * stream into fixed 16-sample windows (last window ragged),
     * emit one row per window. Map-side only (`mapPartitions` is justified:
     * codec work, no Catalyst form); undecodable or non-audio payloads emit
     * nothing — they are [[extractAudioFeatures]]' sentinel rows' job.
     */
-  def audioEnergyWindows(media: Dataset[MediaRow], windowSamples: Int): Dataset[AudioWindow] = {
-    require(windowSamples >= 1, s"audioEnergyWindows: windowSamples >= 1: $windowSamples")
+  def audioEnergyWindows(media: Dataset[MediaRow]): Dataset[AudioWindow] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
       rows.flatMap { r =>
         val au = if (r.media_type == "audio") decodeSamples(r.bytes) else None
         au.toSeq.flatMap { case (_, samples) =>
-          samples.grouped(windowSamples).zipWithIndex.map { case (w, i) =>
+          samples.grouped(16).zipWithIndex.map { case (w, i) =>
             var energy = 0L; var peak = 0L
             w.foreach { s =>
               energy += s.toLong * s.toLong
@@ -948,14 +948,13 @@ object Multimodal {
       id.map(_.toByte) ++ Array((0x80 | payload.length).toByte) ++ payload
     }
     def u16(v: Int): Array[Byte] = Array((v >> 8).toByte, v.toByte)
-    def u32be(v: Long): Array[Byte] =
-      Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def f64(v: Double): Array[Byte] = {
       val bits = java.lang.Double.doubleToLongBits(v)
       (7 to 0 by -1).map(i => (bits >> (8 * i)).toByte).toArray
     }
     val info = elem(Array(0x15, 0x49, 0xa9, 0x66),
-      elem(Array(0x2a, 0xd7, 0xb1), u32be(1000000L)) ++ // TimestampScale: 1 ms
+      // TimestampScale: 1 ms = 1000000 ns, u32 big-endian
+      elem(Array(0x2a, 0xd7, 0xb1), Array[Byte](0x00, 0x0f, 0x42, 0x40)) ++
         elem(Array(0x44, 0x89), f64(durMs.toDouble)))   // Duration in ticks
     val video = elem(Array(0xe0),
       elem(Array(0xb0), u16(w)) ++ elem(Array(0xba), u16(h)))
@@ -998,9 +997,10 @@ object Multimodal {
     * selectivity. Verification re-checks the EXACT Hamming distance on
     * the full hash, so banding never inflates the result.
     */
-  def aHashNearDupPairs(media: Dataset[MediaRow], nBands: Int = 4, maxHamming: Int = 2,
+  def aHashNearDupPairs(media: Dataset[MediaRow], nBands: Int = 4,
                         maxBucket: Int = 64): DataFrame = {
     val bandBits = 10
+    val maxHamming = 2
     require(maxHamming < nBands,
       s"completeness needs maxHamming < nBands: $maxHamming >= $nBands")
     // Materialize the decode+hash subtree behind ONE round-robin exchange

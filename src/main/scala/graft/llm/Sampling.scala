@@ -100,13 +100,13 @@ object Sampling {
 
   /** Stratified deterministic sample: per-stratum keep rates (e.g. a target
     * domain mix — downsample common-crawl, keep all of books). Strata absent
-    * from `rates` use `defaultRate`. The rate lookup is a literal when-chain
+    * from `rates` are kept whole (rate 1.0). The rate lookup is a literal when-chain
     * (broadcast-free, codegen'd); membership is as reproducible as
     * [[deterministicSample]].
     */
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-                       rates: Map[String, Double], defaultRate: Double = 1.0): DataFrame = {
-    val threshold = rates.toSeq.sortBy(_._1).foldRight(lit(hexThreshold(defaultRate))) {
+                       rates: Map[String, Double]): DataFrame = {
+    val threshold = rates.toSeq.sortBy(_._1).foldRight(lit(hexThreshold(1.0))) {
       case ((stratum, rate), rest) =>
         when(col(stratumCol) === lit(stratum), lit(hexThreshold(rate))).otherwise(rest)
     }
@@ -270,7 +270,7 @@ object Sampling {
     * base offset. Same answer as the flat window (bucket = key prefix, so
     * (bucket, key) order IS key order), but every shuffle is uniform.
     */
-  def tokenBudgetMix(docs: DataFrame, idCol: String, domainCol: String,
+  def tokenBudgetMix(docs: DataFrame, domainCol: String,
                      tokensCol: Column, budgets: Map[String, Long],
                      defaultBudget: Long = Long.MaxValue, bucketHexChars: Int = 2): DataFrame = {
     require(bucketHexChars >= 1 && bucketHexChars <= 7,
@@ -279,7 +279,7 @@ object Sampling {
     require(!docs.columns.exists(reserved.contains),
       s"tokenBudgetMix: input already has one of ${reserved.mkString(", ")}")
     val base = docs
-      .withColumn("mix_key", hashKey(col(idCol), "mix"))
+      .withColumn("mix_key", hashKey(col("doc_id"), "mix"))
       .withColumn("mix_bucket", substring(col("mix_key"), 1, bucketHexChars))
       .withColumn("n_tokens", tokensCol.cast("long"))
     val bucketSums = base.groupBy(col(domainCol), col("mix_bucket"))
@@ -291,7 +291,7 @@ object Sampling {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .drop("bucket_tokens")
     val inBucket = Window.partitionBy(col(domainCol), col("mix_bucket"))
-      .orderBy(col("mix_key"), col(idCol))
+      .orderBy(col("mix_key"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val budgetCol = budgets.toSeq.sortBy(_._1).foldRight(lit(defaultBudget)) {
       case ((domain, b), rest) => when(col(domainCol) === lit(domain), lit(b)).otherwise(rest)

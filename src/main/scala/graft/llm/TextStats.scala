@@ -602,8 +602,8 @@ object TextStats {
 
   /** Content-defined chunk boundary statistics: a position is a boundary
     * when its `w`-char Karp–Rabin window hash matches the mask
-    * (hash % 2^maskBits == 0) — the classic CDC primitive (expected chunk
-    * length 2^maskBits) that keeps chunk boundaries stable under inserts,
+    * (hash % 2^6 == 0) — the classic CDC primitive (expected chunk
+    * length 2^6) that keeps chunk boundaries stable under inserts,
     * where fixed-width chunking ([[chunkDocuments]]) shifts every boundary
     * after an edit. Emits per document: `n_boundaries`, `first_boundary`
     * (1-based window start, NULL when none), and `n_chunks`
@@ -614,10 +614,9 @@ object TextStats {
     * per row, no generator blow-up, no shuffle beyond the final per-doc
     * projection); chains inline in any ingest pipeline.
     */
-  def cdcBoundaryStats(docs: DataFrame, w: Int = 16, maskBits: Int = 6): DataFrame = {
+  def cdcBoundaryStats(docs: DataFrame, w: Int = 16): DataFrame = {
     require(w > 0, "window must be positive")
-    require(maskBits >= 0 && maskBits < 61, s"maskBits must be in [0, 61): $maskBits")
-    val modulus = 1L << maskBits
+    val modulus = 1L << 6
     val hashes = graft.functions.RollingHash.windowHashesCol(
       coalesce(col("text"), lit("")), w)
     val bPos = filter(
@@ -733,7 +732,7 @@ object TextStats {
     require(maskHexDigits >= 1 && maskHexDigits <= 15,
       "spanCorruption: maskHexDigits must be in [1, 15]")
     val hexSet = "0123456789abcdef".take(maskHexDigits).map(_.toString)
-    val toks = docs.select(col("doc_id").as("doc_id"),
+    val toks = docs.select(col("doc_id"),
         posexplode(split(lower(col("text")), "\\s+")).as(Seq("pos", "token")))
       .filter(col("token") =!= "")
       .withColumn("pos", col("pos").cast("long"))

@@ -115,7 +115,7 @@ object ConnectedComponents {
 
   /** Component assignment: one row per node reachable from an edge —
     * `(id, component)` with component = MIN node id of the component. Pass
-    * `vertices` (a 1-column DataFrame named `idCol`) to also emit isolated
+    * `vertices` (a 1-column DataFrame named `id`) to also emit isolated
     * nodes (component = own id) — the dedup path passes the full corpus so
     * non-duplicated documents appear as their own singleton cluster.
     *
@@ -124,8 +124,7 @@ object ConnectedComponents {
     * returning a partially-contracted, silently wrong labeling.
     */
   def components(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-                 vertices: Option[DataFrame] = None, idCol: String = "id",
-                 maxIter: Int = 30): DataFrame = {
+                 vertices: Option[DataFrame] = None, maxIter: Int = 30): DataFrame = {
     // BATCHED rounds: two star alternations per checkpoint+fingerprint.
     // Every driver job costs ~60 ms of fixed latency regardless of task
     // size (measured, PLANS.md round 13), so per-round actions dominate
@@ -149,7 +148,7 @@ object ConnectedComponents {
     vertices match {
       case None => assigned
       case Some(vs) =>
-        vs.select(col(idCol).as("id"))
+        vs.select(col("id"))
           .join(assigned, Seq("id"), "left")
           .select(col("id"), coalesce(col("component"), col("id")).as("component"))
     }

@@ -201,7 +201,7 @@ object GraphOps {
     * download/rebuild cycle ("what changed between CL 2024-01 and
     * 2024-04"): one row per key present in either snapshot with
     * `change` ∈ added | removed | changed | unchanged and both value
-    * tuples. Keys are `keyCols`; `valueCols` define equality (null-safe:
+    * tuples. The key is `key`; `valueCols` define equality (null-safe:
     * a null-to-value transition is `changed`, not a match).
     *
     * Scale shape: ONE full-outer co-partitioned equi-join on the key —
@@ -211,19 +211,18 @@ object GraphOps {
     * ship only the delta.
     */
   def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame,
-                   keyCols: Seq[String], valueCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "snapshotDiff: keyCols must be non-empty")
-    val o = oldSnap.select((keyCols ++ valueCols).map(col): _*)
+                   valueCols: Seq[String]): DataFrame = {
+    val o = oldSnap.select(("key" +: valueCols).map(col): _*)
       .withColumn("__in_old", lit(true))
       .withColumnsRenamed(valueCols.map(c => c -> s"old_$c").toMap)
-    val n = newSnap.select((keyCols ++ valueCols).map(col): _*)
+    val n = newSnap.select(("key" +: valueCols).map(col): _*)
       .withColumn("__in_new", lit(true))
       .withColumnsRenamed(valueCols.map(c => c -> s"new_$c").toMap)
     // foldLeft, not reduce: an empty valueCols is a valid presence-only
     // diff (added/removed/unchanged; 'changed' unreachable by construction)
     val same = valueCols.map(c => col(s"old_$c") <=> col(s"new_$c"))
       .foldLeft(lit(true))(_ && _)
-    o.join(n, keyCols, "full_outer")
+    o.join(n, Seq("key"), "full_outer")
       .withColumn("change",
         when(col("__in_old").isNull, "added")
           .when(col("__in_new").isNull, "removed")

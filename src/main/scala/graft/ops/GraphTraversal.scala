@@ -36,7 +36,7 @@ object GraphTraversal {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e = edges.select(col("src").as("id"), col("dst").as("nid"))
     val (visited, frontiers) = frontierRounds(
-        Checkpointer(sources.select(col("id").as("id")).distinct()
+        Checkpointer(sources.select(col("id")).distinct()
           .withColumn("level", lit(0))), maxHops, _.isEmpty) { (frontier, visited, h) =>
       e.join(frontier.select("id"), Seq("id"))
         .select(col("nid").as("id")).distinct()
@@ -105,7 +105,7 @@ object GraphTraversal {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e = edges.select(col("src").as("id"),
       col("dst").as("nid"), col("weight").cast("long").as("w"))
-    Checkpointer.iterate(Checkpointer(sources.select(col("id").as("id")).distinct()
+    Checkpointer.iterate(Checkpointer(sources.select(col("id")).distinct()
         .withColumn("dist", lit(0L))), maxHops, (_, _) => false) { (dist, _) =>
       val relaxed = e.join(dist, Seq("id"))
         .select(col("nid").as("id"), (col("dist") + col("w")).as("dist"))
@@ -157,7 +157,7 @@ object GraphTraversal {
   def personalizedPageRank(edges: DataFrame, sources: DataFrame,
                            iterations: Int, damping: Double = 0.85): DataFrame =
     pageRankWithStats(edges, iterations, damping,
-      sources = Some(sources.select(col("id").as("id"))))._1
+      sources = Some(sources.select(col("id"))))._1
 
   /** [[pageRank]] plus the number of update rounds actually executed — the
     * early-stop observability surface. `tolerance` (when set) stops as soon
@@ -174,7 +174,7 @@ object GraphTraversal {
     require(damping >= 0.0 && damping <= 1.0, s"damping must be in [0,1]: $damping")
     require(tolerance.forall(_ > 0.0), s"tolerance must be positive: $tolerance")
     val eRaw = Checkpointer(
-      edges.select(col("src").as("src"), col("dst").as("dst")).distinct())
+      edges.select(col("src"), col("dst")).distinct())
     val verticesRaw = Checkpointer(eRaw.select(col("src").as("id"))
       .union(eRaw.select(col("dst").as("id"))).distinct())
     // Dictionary-encode non-integral vertex keys (URI graphs) to dense
@@ -613,7 +613,7 @@ object GraphTraversal {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    val eCaller = edges.select(col("src").as("src"), col("dst").as("dst"))
+    val eCaller = edges.select(col("src"), col("dst"))
     val integral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
@@ -676,7 +676,7 @@ object GraphTraversal {
     */
   def louvainLevel(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    val eCaller = edges.select(col("src").as("src"), col("dst").as("dst"))
+    val eCaller = edges.select(col("src"), col("dst"))
     val integral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
@@ -843,7 +843,7 @@ object GraphTraversal {
       .filter(col("__ca") === col("__cb"))
       .select(col("a"), col("b"))
     ConnectedComponents.components(intra, "a", "b",
-        vertices = Some(labels.select(col("id"))), idCol = "id")
+        vertices = Some(labels.select(col("id"))))
       .select(col("id"), col("component").as("community"))
   }
 
@@ -900,7 +900,7 @@ object GraphTraversal {
     val maxOuter = 20
     // lazy pair, materialized together by the vertex count (no truncated
     // input is released before it, so the lazy-checkpoint contract holds)
-    var rem = Checkpointer.lazily(edges.select(col("src").as("src"), col("dst").as("dst"))
+    var rem = Checkpointer.lazily(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull).distinct())
     var remV = Checkpointer.lazily(rem.select(col("src").as("id"))
       .union(rem.select(col("dst").as("id"))).distinct())
@@ -1003,7 +1003,7 @@ object GraphTraversal {
     vertices match {
       case None => assigned
       case Some(vs) =>
-        vs.select(col("id").as("id"))
+        vs.select(col("id"))
           .join(assigned, Seq("id"), "left")
           .select(col("id"), coalesce(col("scc"), col("id")).as("scc"))
     }
@@ -1118,7 +1118,7 @@ object GraphTraversal {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     // checkpoint the deduped edge table so its distinct() shuffle runs once, not
     // twice per round under the two per-round joins (pageRank discipline)
-    val e = Checkpointer(edges.select(col("src").as("src"), col("dst").as("dst")).distinct())
+    val e = Checkpointer(edges.select(col("src"), col("dst")).distinct())
     val vertices = Checkpointer(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     // one round is two checkpoints — authorities from hubs, then hubs from
@@ -1143,7 +1143,7 @@ object GraphTraversal {
   }
 
   /** Deterministic random walks (the node2vec/DeepWalk corpus generator):
-    * from each start, `steps` transitions where step t out of node u picks
+    * from each start, 3 transitions where step t out of node u picks
     * neighbor index md5(walk:t:u) mod outdegree — a cross-engine-
     * reproducible "random" choice, so walk corpora are stable across
     * reruns and engines (no RNG state on executors). Per step: ONE
@@ -1153,10 +1153,9 @@ object GraphTraversal {
     * filter. Walks reaching a sink (no out-edges) are dropped by the
     * inner join — only complete walks are emitted.
     *
-    * Output: (walk_id, v0 .. v\<steps\>), wide format.
+    * Output: (walk_id, v0 .. v3), wide format.
     */
-  def randomWalks(edges: DataFrame, starts: DataFrame, steps: Int): DataFrame = {
-    require(steps >= 1, "randomWalks: steps must be >= 1")
+  def randomWalks(edges: DataFrame, starts: DataFrame): DataFrame = {
     val wN = org.apache.spark.sql.expressions.Window
       .partitionBy("__s").orderBy("__d")
     val nbrs = edges.select(col("src").as("__s"), col("dst").as("__d")).distinct()
@@ -1164,7 +1163,7 @@ object GraphTraversal {
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("__s")))
     var cur = starts.select(col("walk_id"), col("start").as("v0"))
-    for (t <- 1 to steps) {
+    for (t <- 1 to 3) {
       val prev = s"v${t - 1}"
       val pick = conv(substring(md5(concat_ws(":",
           col("walk_id"), lit(t), col(prev))), 1, 8), 16, 10)
@@ -1227,7 +1226,7 @@ object GraphTraversal {
     * neighbor endpoint, then `hll_union_agg` per vertex (map-combinable,
     * partial sketches merge associatively) — and N(t) is the sum of
     * per-vertex estimates. Per-round cost is edge-scale with O(2^lgK)
-    * bytes per vertex regardless of reachable-set size, which is what
+    * bytes per vertex (lgK = 12) regardless of reachable-set size, which is what
     * makes distance distributions computable on billion-vertex graphs
     * where [[neighborhoodFunction]]'s exact pair set cannot exist.
     *
@@ -1237,7 +1236,7 @@ object GraphTraversal {
     * stores small sets losslessly), so specs can pin equality on small
     * graphs and entries guard a tolerance.
     */
-  def hyperBall(edges: DataFrame, maxT: Int, lgK: Int = 12): DataFrame = {
+  def hyperBall(edges: DataFrame, maxT: Int): DataFrame = {
     require(maxT >= 0, "hyperBall: maxT must be >= 0")
     val spark = edges.sparkSession
     val e = edges.select(col("src").as("id"), col("dst").as("nid")).distinct()
@@ -1248,7 +1247,7 @@ object GraphTraversal {
     // round t estimates N(t − 1) from its input before extending it, so
     // the estimates run in round order: N(0), round 1, N(1), round 2, …
     val counters = Checkpointer.iterate(Checkpointer(verts.groupBy("id")
-        .agg(expr(s"hll_sketch_agg(id, $lgK)").as("sk"))), maxT, (_, _) => false) { (counters, t) =>
+        .agg(expr("hll_sketch_agg(id, 12)").as("sk"))), maxT, (_, _) => false) { (counters, t) =>
       ests(t - 1) = estSum(counters)
       val contrib = e.join(counters.select(col("id").as("nid"), col("sk")), Seq("nid"))
         .select(col("id"), col("sk"))
@@ -1266,7 +1265,7 @@ object GraphTraversal {
     * KDD'16 — public algorithm): the next hop from `cur` given `prev` is
     * drawn with weight `wReturn` for the return candidate (cand = prev),
     * `wCommon` for candidates ADJACENT to prev (a directed edge
-    * prev→cand exists), and `wFar` otherwise — integer weights standing
+    * prev→cand exists), and 1 otherwise — integer weights standing
     * in for node2vec's 1/p, 1, 1/q (e.g. p=2, q=4 scaled by 4 →
     * 2/4/1). Step 1 has no prev and is uniform (the [[randomWalks]]
     * rule).
@@ -1283,12 +1282,11 @@ object GraphTraversal {
     * over the ≤ out-degree candidate rows; the range filter collapses
     * the fan-out to exactly one row per live walk. Walks reaching a sink
     * are dropped by the inner join — only complete walks are emitted.
-    * Output: (walk_id, v0 .. v\<steps\>), wide format.
+    * Output: (walk_id, v0 .. v3), wide format.
     */
-  def node2vecWalks(edges: DataFrame, starts: DataFrame, steps: Int,
-                    wReturn: Long, wCommon: Long, wFar: Long): DataFrame = {
-    require(steps >= 1, "node2vecWalks: steps must be >= 1")
-    require(wReturn > 0 && wCommon > 0 && wFar > 0,
+  def node2vecWalks(edges: DataFrame, starts: DataFrame,
+                    wReturn: Long, wCommon: Long): DataFrame = {
+    require(wReturn > 0 && wCommon > 0,
       "node2vecWalks: weights must be positive integers")
     val e = edges.select(col("src").as("__s"), col("dst").as("__d")).distinct()
     val wN = org.apache.spark.sql.expressions.Window
@@ -1306,7 +1304,7 @@ object GraphTraversal {
       .filter(col("idx") === pick1)
       .drop("__s", "idx", "deg")
       .withColumnRenamed("__d", "v1")
-    for (t <- 2 to steps) {
+    for (t <- 2 to 3) {
       val prev = s"v${t - 2}"
       val c = s"v${t - 1}"
       val adj = e.select(col("__s").as("__ps"), col("__d").as("__pd"),
@@ -1320,7 +1318,7 @@ object GraphTraversal {
         .withColumn("__w",
           when(col("__d") === col(prev), lit(wReturn))
             .when(col("__adj").isNotNull, lit(wCommon))
-            .otherwise(lit(wFar)))
+            .otherwise(lit(1L)))
         .withColumn("__cum", sum(col("__w")).over(wCum))
         .withColumn("__tot", sum(col("__w")).over(wWalk))
         .withColumn("__r", conv(substring(md5(concat_ws(":",
@@ -1432,7 +1430,7 @@ object GraphTraversal {
     * 32-bit md5 window), and a round is `max(r)` per `(id, j)` over the
     * vertex's own registers ∪ its out-neighbors' registers — the same
     * edge-scale join + map-combinable aggregate shape as [[hyperBall]],
-    * with O(2^lgK) register rows per vertex. Every step is integer md5
+    * with O(2^lgK) register rows per vertex (lgK = 4). Every step is integer md5
     * arithmetic, so a SQL engine can replay the full state evolution and
     * hash-match it — the KMV/count-min oracle pattern extended to the
     * graph sketch (closes the "HyperBall guarded only vs exact" gap).
@@ -1443,10 +1441,9 @@ object GraphTraversal {
     * S·2^F = (m − live)·2^F + Σ 2^(F−r), N-hat_micro = α_m·1e6 · m² · 2^F
     * div S·2^F (F = 34 keeps every term in Long range for lgK ≤ 4).
     */
-  def hyperBallExplicit(edges: DataFrame, maxT: Int, lgK: Int = 4): DataFrame = {
+  def hyperBallExplicit(edges: DataFrame, maxT: Int): DataFrame = {
     require(maxT >= 0, "hyperBallExplicit: maxT must be >= 0")
-    require(lgK >= 1 && lgK <= 12, s"hyperBallExplicit: lgK out of range: $lgK")
-    val m = 1 << lgK
+    val m = 1 << 4
     val e = edges.select(col("src").as("id"), col("dst").as("nid")).distinct()
     val verts = e.select(col("id")).union(e.select(col("nid").as("id"))).distinct()
     // j from the first 48 md5 bits (the h48 convention), rank from the next

@@ -13,7 +13,7 @@ object ScdOps {
 
   /** Collapse consecutive no-op versions and emit effective ranges.
     *
-    * Input: one row per (key, version seq) — `seqCol` must be unique per
+    * Input: one row per (key, version seq) — `seq` must be unique per
     * key (a change sequence number, an event time) and totally orders the
     * key's versions. Output: the input's columns minus collapsed no-ops,
     * plus `valid_from` (the version's seq), `valid_to` (next retained
@@ -28,14 +28,13 @@ object ScdOps {
     * driver state. The no-op filter runs BEFORE the range window, so the
     * second pass only touches retained versions.
     */
-  def buildHistory(df: DataFrame, keyCol: String, seqCol: String,
-                   attrCols: Seq[String]): DataFrame = {
+  def buildHistory(df: DataFrame, keyCol: String, attrCols: Seq[String]): DataFrame = {
     require(attrCols.nonEmpty, "buildHistory: attrCols must be non-empty")
     val reserved = Seq("valid_from", "valid_to", "is_current", "__attrs", "__prev")
     require(!df.columns.exists(reserved.contains),
       s"buildHistory: input already has one of ${reserved.mkString(", ")}")
     val attrs: Column = struct(attrCols.map(col): _*)
-    val ord = Window.partitionBy(col(keyCol)).orderBy(col(seqCol))
+    val ord = Window.partitionBy(col(keyCol)).orderBy(col("seq"))
     val retained = df
       .withColumn("__prev", lag(attrs, 1).over(ord))
       // null-safe struct compare: first version (prev null) is always
@@ -43,8 +42,8 @@ object ScdOps {
       .filter(!(col("__prev") <=> attrs))
       .drop("__prev")
     retained
-      .withColumn("valid_from", col(seqCol))
-      .withColumn("valid_to", lead(col(seqCol), 1).over(ord) - 1)
+      .withColumn("valid_from", col("seq"))
+      .withColumn("valid_to", lead(col("seq"), 1).over(ord) - 1)
       .withColumn("is_current", col("valid_to").isNull)
   }
 }

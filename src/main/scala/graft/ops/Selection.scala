@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object Selection {
 
-  /** Values at 1-based ranks of `valueCol` (a LONG column). `ranksOf`
+  /** Values at 1-based ranks of column `c` (a LONG column). `ranksOf`
     * receives the exact row count (read off the histogram summary — no
     * separate count scan) and returns the wanted ranks ascending, so
     * callers can ask for quantile ranks ("ceil(i·n/10)") without a second
@@ -34,11 +34,10 @@ object Selection {
     * buckets and the call FAILS LOUDLY past it (pre-map the domain)
     * instead of silently pulling data to the driver.
     */
-  def valuesAtRanks(spark: SparkSession, df: DataFrame, valueCol: String,
-                    ranksOf: Long => Seq[Long]): DataFrame = {
+  def valuesAtRanks(spark: SparkSession, df: DataFrame, ranksOf: Long => Seq[Long]): DataFrame = {
     val bucketWidth = 4096L
     val maxBuckets = 1 << 18
-    val vals = df.select(col(valueCol).as("__v"))
+    val vals = df.select(col("c").as("__v"))
     val hist = vals.groupBy(expr(s"__v div $bucketWidth").as("b"))
       .agg(count(lit(1)).as("bn"))
       .orderBy("b").limit(maxBuckets + 1).collect() // bucket-count-sized summary

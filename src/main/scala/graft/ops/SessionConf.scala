@@ -57,4 +57,28 @@ object SessionConf {
 
   def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
     scoped(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
+
+  /** Cores of every main's local master, and its shuffle partition count:
+    * `SPARK_GRAFT_CPUS`, else the processor count.
+    */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+
+  /** The session the mains run in: graft extensions registered,
+    * `local[cpus]` with as many shuffle partitions, UTC, no UI, WARN
+    * logging. An already active session is returned with these settings
+    * applied (`getOrCreate`).
+    */
+  def localSession(): SparkSession = {
+    val spark = SparkSession.builder()
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftExtensions.register(spark)
+    spark
+  }
 }

@@ -53,17 +53,17 @@ object Sketches {
     conv(substring(md5(c.cast("string")), 1, 12), 16, 10).cast("long") + 1L
 
   /** Depth-`dName` cell index in [0, width): 3 hex chars sliced from ONE
-    * md5 of the key (hex in column `hexName`) — the hash is paid once per
+    * md5 of the key (hex in column `__cms_hex`) — the hash is paid once per
     * ROW, not once per row×depth (the [[dyadicBucket]] economics applied
     * to the flat sketch; the per-(d, key) rehash was 4x the build's hash
     * cost at depth 4). Width must divide 4096 so the slice maps exactly
     * uniformly; depth·3 must fit md5's 32 hex chars.
     */
-  def cmsBucket(dName: String, hexName: String, width: Int): Column =
-    conv(expr(s"substring($hexName, 1 + $dName * 3, 3)"), 16, 10)
+  def cmsBucket(dName: String, width: Int): Column =
+    conv(expr(s"substring(__cms_hex, 1 + $dName * 3, 3)"), 16, 10)
       .cast("long") % width
 
-  /** Build count-min cells `(grain…, d, w, cnt)` over `rows(keyCol)`.
+  /** Build count-min cells `(grain…, d, w, cnt)` over `rows("key")`.
     * The ×depth explode happens map-side and collapses immediately into
     * the bounded-cardinality partial aggregate: the shuffle carries at
     * most `partitions · depth · width` pre-combined cells, never data-
@@ -71,16 +71,16 @@ object Sketches {
     * independent sketch per grain value — the storage layout a 100-TB
     * table wants (sketch beside each partition, roll up on demand).
     */
-  def countMinCells(rows: DataFrame, keyCol: String, depth: Int, width: Int,
+  def countMinCells(rows: DataFrame, depth: Int, width: Int,
                     grain: Seq[String] = Nil): DataFrame = {
     require(depth >= 1 && depth * 3 <= 32,
       s"countMinCells: depth out of [1, 10]: $depth")
     require(width >= 1 && 4096 % width == 0,
       s"countMinCells: width must divide 4096: $width")
     rows
-      .withColumn("__cms_hex", md5(col(keyCol).cast("string")))
+      .withColumn("__cms_hex", md5(col("key").cast("string")))
       .withColumn("d", explode(expr(s"sequence(0, ${depth - 1})")))
-      .withColumn("w", cmsBucket("d", "__cms_hex", width))
+      .withColumn("w", cmsBucket("d", width))
       .groupBy((grain :+ "d" :+ "w").map(col): _*)
       .agg(count(lit(1)).as("cnt"))
   }
@@ -91,20 +91,19 @@ object Sketches {
   def countMinMerge(cells: DataFrame): DataFrame =
     cells.groupBy("d", "w").agg(sum("cnt").as("cnt"))
 
-  /** Point-estimate every probe row's `keyCol` against a merged cells
+  /** Point-estimate every probe row's `key` against a merged cells
     * grid: min over the depth cells the key hashes into. The grid is
     * `depth·width` rows — broadcast, so probing is map-side against the
     * probe table. All probe columns are carried through; the estimate
     * lands in `cms_est`. A key whose cell row is absent was never
     * inserted: estimate 0.
     */
-  def countMinLookup(cells: DataFrame, probes: DataFrame, keyCol: String,
-                     depth: Int, width: Int): DataFrame = {
+  def countMinLookup(cells: DataFrame, probes: DataFrame, depth: Int, width: Int): DataFrame = {
     val probeCols = probes.columns
     probes
-      .withColumn("__cms_hex", md5(col(keyCol).cast("string")))
+      .withColumn("__cms_hex", md5(col("key").cast("string")))
       .withColumn("__d", explode(expr(s"sequence(0, ${depth - 1})")))
-      .withColumn("__w", cmsBucket("__d", "__cms_hex", width))
+      .withColumn("__w", cmsBucket("__d", width))
       .join(broadcast(cells.select(col("d").as("__d"), col("w").as("__w"),
         col("cnt"))), Seq("__d", "__w"), "left")
       .groupBy(probeCols.map(col): _*)
@@ -129,18 +128,18 @@ object Sketches {
     g.agg(count(lit(1)).as("n_exact"), expr(s"top_k(-hv, hv, $k)").as("bk"))
   }
 
-  /** Distinct-count estimate from a bottom-k array column (by NAME — the
+  /** Distinct-count estimate from the bottom-k array column `bk` (by NAME — the
     * division runs in exact long arithmetic via SQL `div`): exact size
     * when the sketch never filled, else (k−1)·2⁴⁸ div h₍ₖ₎.
     */
-  def kmvEstimate(bkCol: String, k: Int): Column = {
+  def kmvEstimate(k: Int): Column = {
     // (k-1) << 48 must stay in Long range: k-1 < 2^15 (the shift keeps the
     // top 16 bits clear, one of them the sign) — past that the numerator
     // silently wraps negative and every estimate is garbage
     require(k >= 2 && k <= 32768, s"kmvEstimate: k out of [2, 32768]: $k")
     val num = (k - 1L) << HashBits
-    expr(s"CASE WHEN size($bkCol) < $k THEN CAST(size($bkCol) AS BIGINT) " +
-      s"ELSE $num div element_at($bkCol, $k).id END")
+    expr(s"CASE WHEN size(bk) < $k THEN CAST(size(bk) AS BIGINT) " +
+      s"ELSE $num div element_at(bk, $k).id END")
   }
 
   /** Merge per-group bottom-k arrays into one global bottom-k: explode
@@ -213,7 +212,7 @@ object Sketches {
     * exactly across partitions, files, or micro-batches (the count-min
     * additivity argument verbatim). Output: (`s`, `z`), `reps` rows.
     */
-  def amsCells(rows: DataFrame, keyCol: String, reps: Int): DataFrame = {
+  def amsCells(rows: DataFrame, reps: Int): DataFrame = {
     require(reps >= 1 && reps <= 32, s"amsCells: reps out of [1, 32]: $reps")
     // ONE md5 per row, sign s = bit s of the first 8 hex chars (32 bits):
     // slicing one strong hash into `reps` sign functions — across keys
@@ -222,7 +221,7 @@ object Sketches {
     // md5s/row measured as the entry's whole cost at sf0.1: 8.0 s -> 2.6 s
     // for identical semantics). Project the hash first so an input column
     // named "s"/"sgn" can never be clobbered by the sketch plumbing.
-    rows.select(conv(substring(md5(col(keyCol).cast("string")), 1, 8), 16, 10)
+    rows.select(conv(substring(md5(col("key").cast("string")), 1, 8), 16, 10)
         .cast("long").as("__ams_h"))
       .withColumn("s", explode(expr(s"sequence(0, ${reps - 1})")))
       .withColumn("sgn",
@@ -260,12 +259,12 @@ object Sketches {
     * the build's hash cost for depth 4). Width must divide 4096 so the
     * slice maps exactly uniformly.
     */
-  private def dyadicBucket(hexName: String, dName: String, width: Int): Column =
-    conv(expr(s"substring($hexName, 1 + $dName * 3, 3)"), 16, 10)
+  private def dyadicBucket(width: Int): Column =
+    conv(expr("substring(__hx, 1 + d * 3, 3)"), 16, 10)
       .cast("long") % width
 
   /** Dyadic count-min cells `(grain…, lvl, d, w, cnt)` for integer
-    * `valueCol` ∈ [0, 2^bits) — the per-row bound is EXECUTABLE (a value
+    * `u` ∈ [0, 2^bits) — the per-row bound is EXECUTABLE (a value
     * outside the declared universe fails loudly; silently hashing it
     * would corrupt every rank above it).
     *
@@ -276,14 +275,14 @@ object Sketches {
     * per input row×level instead measured 19.5 s vs 3 s at sf0.1 for
     * identical cells; at 100 TB the difference is the whole build.
     */
-  def dyadicCells(rows: DataFrame, valueCol: String, bits: Int, depth: Int,
+  def dyadicCells(rows: DataFrame, bits: Int, depth: Int,
                   width: Int, grain: Seq[String] = Nil): DataFrame = {
     require(bits >= 1 && bits <= 30, s"dyadicCells: bits out of [1,30]: $bits")
     require(depth >= 1 && depth * 3 <= 32,
       s"dyadicCells: depth out of [1,10]: $depth")
     require(width >= 1 && 4096 % width == 0,
       s"dyadicCells: width must divide 4096: $width")
-    val u = col(valueCol)
+    val u = col("u")
     rows
       .select((grain.map(col) :+
         Bounded.guard(u.cast("long"), u >= 0 && u < (1L << bits),
@@ -296,7 +295,7 @@ object Sketches {
       .withColumn("__hx", md5(concat(col("lvl").cast("string"), lit(":"),
         col("node").cast("string"))))
       .withColumn("d", explode(expr(s"sequence(0, ${depth - 1})")))
-      .withColumn("w", dyadicBucket("__hx", "d", width))
+      .withColumn("w", dyadicBucket(width))
       .groupBy((grain :+ "lvl" :+ "d" :+ "w").map(col): _*)
       .agg(sum(col("__nc")).as("cnt"))
   }
@@ -328,7 +327,7 @@ object Sketches {
       .withColumn("__hx", md5(concat(col("lvl").cast("string"), lit(":"),
         col("node").cast("string"))))
       .withColumn("d", explode(expr(s"sequence(0, ${depth - 1})")))
-      .withColumn("w", dyadicBucket("__hx", "d", width))
+      .withColumn("w", dyadicBucket(width))
       .join(broadcast(cells), (grain ++ Seq("lvl", "d", "w")), "left")
       .groupBy((grain ++ Seq("lvl", "node")).map(col): _*)
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))

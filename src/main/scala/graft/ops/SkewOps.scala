@@ -18,10 +18,10 @@ object SkewOps {
     * uniform random-free salt (hash of all columns mod factor — deterministic,
     * no RNG state), the small side is replicated once per salt value. Result
     * equals the plain inner join, but the shuffle spreads each hot key over
-    * `saltFactor` reducers.
+    * `saltFactor` = 8 reducers.
     */
-  def saltedJoin(large: DataFrame, small: DataFrame, keys: Seq[String],
-                 saltFactor: Int): DataFrame = {
+  def saltedJoin(large: DataFrame, small: DataFrame, keys: Seq[String]): DataFrame = {
+    val saltFactor = 8
     val salted = large.withColumn("__salt",
       pmod(xxhash64(large.columns.map(col).toIndexedSeq: _*), lit(saltFactor)).cast("int"))
     val replicated = small.withColumn("__salt",
@@ -54,12 +54,21 @@ object SkewOps {
       .join(small, Seq(key))
   }
 
-  /** Materialization fence between an expensive subtree and a global sort.
+  /** Round-robin redistribution to the default parallelism, for two jobs.
     *
-    * `orderBy` plans as a range exchange, and a range exchange computes its
-    * partition bounds by SAMPLING its child — a separate job that executes
-    * the child subtree once, before the real output pass executes it AGAIN
-    * (profiled r16: j9's 32M-pair Jaro-Winkler scoring and m_png's
+    * Input spread: the testdata parquet files have a SINGLE row group, so
+    * Spark cannot split them and every scan is one task. For queries whose
+    * pre-shuffle stage is CPU-heavy (shingle/token explodes, hashing, the
+    * vtuple parse), redistribute the (tiny) input first; the exchange also
+    * becomes the shared materialization point reused by self-join
+    * branches. On a real cluster the input would already arrive in
+    * thousands of splits and this is a near-no-op relative to the
+    * downstream work.
+    *
+    * Sort fence: `orderBy` plans as a range exchange, and a range exchange
+    * computes its partition bounds by SAMPLING its child — a separate job
+    * that executes the child subtree once, before the real output pass
+    * executes it AGAIN (profiled r16: j9's 32M-pair Jaro-Winkler scoring and m_png's
     * ImageIO decode each ran twice, 2 × ~6 s jobs per entry). Under AQE
     * every exchange is a materialized query stage, so inserting a
     * round-robin exchange here makes the sampling and the output pass both
@@ -73,17 +82,17 @@ object SkewOps {
     * pointless (one wasted small exchange) when the sort input is already
     * a materialized exchange/aggregate output.
     */
-  def sortFence(df: DataFrame): DataFrame =
+  def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** One-row key-skew report: exact median/p99/max of the per-key row-count
-    * distribution via the cumulative-HISTOGRAM shape (the s15 registry
-    * entry's machinery, shared with Dedup.dfSkewStats). The only window
-    * runs on the count histogram — bounded by #distinct counts =
-    * O(√rows) — never on the data-sized key table.
+  /** One-row key-skew report over `user_id`: exact median/p99/max of the
+    * per-key row-count distribution via the cumulative-HISTOGRAM shape (the
+    * s15 registry entry's machinery, shared with Dedup.dfSkewStats). The
+    * only window runs on the count histogram — bounded by #distinct counts
+    * = O(√rows) — never on the data-sized key table.
     */
-  def keySkewReport(df: DataFrame, keyCol: String): DataFrame = {
-    val counts = df.groupBy(keyCol).agg(count(lit(1)).as("cnt"))
+  def keySkewReport(df: DataFrame): DataFrame = {
+    val counts = df.groupBy("user_id").agg(count(lit(1)).as("cnt"))
     val summary = counts.groupBy("cnt").agg(count(lit(1)).as("freq"))
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("cnt"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)

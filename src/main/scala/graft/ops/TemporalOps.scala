@@ -91,23 +91,22 @@ object TemporalOps {
     * `tolerance` ages out matches further than `tolerance` AFTER the left
     * row, and ties among equal-ts right rows resolve to the LAST by
     * `rightTieCol` in the negated order, i.e. deterministically.
-    * `tsCol` must be a (possibly negative) epoch-µs long; Long.MinValue is
+    * `tsn` must be a (possibly negative) epoch-µs long; Long.MinValue is
     * refused implicitly (negation would overflow) by the epoch domain.
     */
   def asofJoinForward(left: DataFrame, right: DataFrame,
-                      keyCol: String, tsCol: String,
-                      valueCol: String, asOfCol: String,
+                      keyCol: String, valueCol: String, asOfCol: String,
                       rightTieCol: String,
                       tolerance: Option[Long] = None): DataFrame = {
     val neg = asofJoinBackward(
-      left.withColumn(tsCol, -col(tsCol)),
-      right.withColumn(tsCol, -col(tsCol)),
-      keyCol, tsCol, valueCol, asOfCol, rightTieCol, tolerance)
-    neg.withColumn(tsCol, -col(tsCol))
+      left.withColumn("tsn", -col("tsn")),
+      right.withColumn("tsn", -col("tsn")),
+      keyCol, "tsn", valueCol, asOfCol, rightTieCol, tolerance)
+    neg.withColumn("tsn", -col("tsn"))
   }
 
   /** Gap-based sessionization: within each key, a new session starts when
-    * the gap to the previous event exceeds `gap` (same units as `tsCol`).
+    * the gap to the previous event exceeds `gap` (same units as `tsn`).
     * Returns the input plus `session_no` (1-based per key, in time order).
     * One shuffle on the key; the lag + running-sum pair is the batch
     * equivalent of Structured Streaming's session_window (the streaming
@@ -115,18 +114,17 @@ object TemporalOps {
     * `tieCol` makes ordering — and therefore session numbering — total and
     * deterministic when events share a timestamp.
     */
-  def sessionize(events: DataFrame, keyCol: String, tsCol: String,
-                 gap: Long, tieCol: String): DataFrame = {
+  def sessionize(events: DataFrame, keyCol: String, gap: Long, tieCol: String): DataFrame = {
     require(gap >= 0, s"sessionize: gap must be non-negative, got $gap")
     val reserved = Seq("session_no", "__prev", "__new")
     require(!events.columns.exists(reserved.contains),
       s"sessionize: input already has one of ${reserved.mkString(", ")}")
-    val ord = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
+    val ord = Window.partitionBy(col(keyCol)).orderBy(col("tsn"), col(tieCol))
     val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     events
-      .withColumn("__prev", lag(col(tsCol), 1).over(ord))
+      .withColumn("__prev", lag(col("tsn"), 1).over(ord))
       .withColumn("__new",
-        when(col("__prev").isNull || col(tsCol) - col("__prev") > gap, 1L).otherwise(0L))
+        when(col("__prev").isNull || col("tsn") - col("__prev") > gap, 1L).otherwise(0L))
       .withColumn("session_no", sum(col("__new")).over(run))
       .drop("__prev", "__new")
   }
@@ -134,11 +132,11 @@ object TemporalOps {
   /** Per-session aggregates over [[sessionize]] output: event count and
     * span bounds — the typical downstream of sessionization.
     */
-  def sessionStats(sessions: DataFrame, keyCol: String, tsCol: String): DataFrame =
+  def sessionStats(sessions: DataFrame, keyCol: String): DataFrame =
     sessions.groupBy(col(keyCol), col("session_no"))
       .agg(count(lit(1)).as("n_events"),
-        min(col(tsCol)).as("start_ts"),
-        max(col(tsCol)).as("end_ts"))
+        min(col("tsn")).as("start_ts"),
+        max(col("tsn")).as("end_ts"))
 
   /** Point-in-interval join via time-bucket replication: every point row
     * is matched with every interval row of the same key whose
@@ -217,15 +215,15 @@ object TemporalOps {
     * cast to TIMESTAMP first, which under the session's pinned UTC zone is
     * an exact relabeling and matches DuckDB's grain-agnostic `epoch_us(ts)`.
     */
-  def epochMicros(df: DataFrame, colName: String): Column =
-    df.schema(colName).dataType match {
-      case LongType => expr(s"$colName div 1000")
-      case TimestampType => unix_micros(col(colName))
+  def epochMicros(df: DataFrame): Column =
+    df.schema("ts").dataType match {
+      case LongType => expr("ts div 1000")
+      case TimestampType => unix_micros(col("ts"))
       case TimestampNTZType =>
         requireUtcSession(df, "epochMicros")
-        unix_micros(col(colName).cast(TimestampType))
+        unix_micros(col("ts").cast(TimestampType))
       case other => throw new IllegalArgumentException(
-        s"epochMicros: column '$colName' has unsupported event-time type $other " +
+        s"epochMicros: column 'ts' has unsupported event-time type $other " +
           "(expected epoch-nanos LONG, TIMESTAMP, or TIMESTAMP_NTZ)")
     }
 
@@ -257,15 +255,15 @@ object TemporalOps {
     * TimestampType, not a long). Exact µs relabeling under a UTC session
     * zone, mirroring [[epochMicros]] case-for-case.
     */
-  def asTimestamp(df: DataFrame, colName: String): Column =
-    df.schema(colName).dataType match {
-      case LongType => timestamp_micros(expr(s"$colName div 1000"))
-      case TimestampType => col(colName)
+  def asTimestamp(df: DataFrame): Column =
+    df.schema("ts").dataType match {
+      case LongType => timestamp_micros(expr("ts div 1000"))
+      case TimestampType => col("ts")
       case TimestampNTZType =>
         requireUtcSession(df, "asTimestamp")
-        col(colName).cast(TimestampType)
+        col("ts").cast(TimestampType)
       case other => throw new IllegalArgumentException(
-        s"asTimestamp: column '$colName' has unsupported event-time type $other " +
+        s"asTimestamp: column 'ts' has unsupported event-time type $other " +
           "(expected epoch-nanos LONG, TIMESTAMP, or TIMESTAMP_NTZ)")
     }
 
@@ -274,7 +272,7 @@ object TemporalOps {
     * observed day, the day's aggregate where one exists, and the latest
     * prior day's aggregate carried forward across the gaps.
     *
-    * Daily observation is `max(centsCol)` per (key, day) — commutative and
+    * Daily observation is `max(cents)` over `ts_us` days per (key, day) — commutative and
     * map-side combinable, so the first shuffle arrives pre-aggregated. The
     * spine is generated DISTRIBUTED, per key (`sequence` + `explode` on the
     * key's own [dmin, dmax] bounds): no driver-side calendar, no global
@@ -294,12 +292,11 @@ object TemporalOps {
     * `filled_cents` is never null — each key's first spine day is by
     * construction an observed day.
     */
-  def gapFillDaily(df: DataFrame, keyCol: String, tsUsCol: String,
-                   centsCol: String, maxSpanDays: Int = 3700): DataFrame = {
+  def gapFillDaily(df: DataFrame, keyCol: String, maxSpanDays: Int = 3700): DataFrame = {
     require(maxSpanDays > 0, s"gapFillDaily: maxSpanDays must be positive, got $maxSpanDays")
     val obs = df
-      .select(col(keyCol), expr(s"$tsUsCol div ${86400L * 1000000L}").as("day"),
-        col(centsCol).cast("long").as("__cents"))
+      .select(col(keyCol), expr(s"ts_us div ${86400L * 1000000L}").as("day"),
+        col("cents").cast("long").as("__cents"))
       .groupBy(col(keyCol), col("day"))
       .agg(max(col("__cents")).as("day_cents"))
     val bounds = obs.groupBy(col(keyCol))
@@ -323,17 +320,16 @@ object TemporalOps {
     * join. Returns (key, gid, ms, me) with gid dense in run order.
     * `idCol` is the unique tie-break so the window order is total.
     */
-  def mergeIntervals(iv: DataFrame, keyCol: String, stCol: String,
-                     enCol: String, idCol: String): DataFrame = {
+  def mergeIntervals(iv: DataFrame, keyCol: String, idCol: String): DataFrame = {
     val wo = Window.partitionBy(keyCol)
-      .orderBy(col(stCol), col(enCol), col(idCol))
-    val prevMax = max(col(enCol))
+      .orderBy(col("st"), col("en"), col(idCol))
+    val prevMax = max(col("en"))
       .over(wo.rowsBetween(Window.unboundedPreceding, -1))
     iv.withColumn("__new_grp",
-        when(prevMax.isNull || col(stCol) > prevMax, 1L).otherwise(0L))
+        when(prevMax.isNull || col("st") > prevMax, 1L).otherwise(0L))
       .withColumn("gid", sum(col("__new_grp")).over(wo))
       .groupBy(col(keyCol), col("gid"))
-      .agg(min(col(stCol)).as("ms"), max(col(enCol)).as("me"))
+      .agg(min(col("st")).as("ms"), max(col("en")).as("me"))
   }
 
   /** Coverage gaps: the holes BETWEEN a key's merged interval runs
@@ -342,9 +338,8 @@ object TemporalOps {
     * single run (no interior hole) are absent — the head/tail are
     * unbounded, not gaps.
     */
-  def coverageGaps(iv: DataFrame, keyCol: String, stCol: String,
-                   enCol: String, idCol: String): DataFrame = {
-    val runs = mergeIntervals(iv, keyCol, stCol, enCol, idCol)
+  def coverageGaps(iv: DataFrame, keyCol: String, idCol: String): DataFrame = {
+    val runs = mergeIntervals(iv, keyCol, idCol)
     val wg = Window.partitionBy(keyCol).orderBy(col("ms"))
     runs.withColumn("gap_us", col("ms") - lag(col("me"), 1).over(wg))
       .filter(col("gap_us").isNotNull)
@@ -382,6 +377,6 @@ object TemporalOps {
     // (a no-op for µs/NTZ files)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$dir/events.parquet")
-    ev.withColumn("ts_us", epochMicros(ev, "ts"))
+    ev.withColumn("ts_us", epochMicros(ev))
   }
 }

@@ -13,20 +13,20 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  /** Character n-grams of `s` for n in [minN, maxN], plus the original when
-    * `preserveOriginal` — the reference's "n-gram" analyzer semantics.
+  /** Character n-grams of `s` for n in [3, 4], plus the original — the
+    * reference's "n-gram" analyzer semantics (preserveOriginal).
     * Implemented with sequence+transform: stays in whole-stage codegen.
     * Emits one array column; explode downstream.
     */
-  def charNgrams(s: Column, minN: Int, maxN: Int, preserveOriginal: Boolean): Column = {
-    val grams = (minN to maxN).map { n =>
+  def charNgrams(s: Column): Column = {
+    val grams = (3 to 4).map { n =>
       // guard: Spark's sequence(1, 0) descends instead of returning empty
       val hi = length(s) - (n - 1)
       val idxs = when(hi >= 1, sequence(lit(1), hi)).otherwise(array().cast("array<int>"))
       transform(idxs, i => s.substr(i, lit(n)))
     }
     val all = grams.reduce(concat(_, _))
-    if (preserveOriginal) array_union(all, array(s)) else array_distinct(all)
+    array_union(all, array(s))
   }
 
   /** Edge n-grams (prefixes) of each lowercased word, lengths [3, 12],
@@ -105,7 +105,7 @@ object TextIndex {
     // trailing distinct gives the same token set — see CharNgramsExpr
     val ngram = exploded.select(col("collection"), col("key"), col("field"),
       lit("n-gram").as("analyzer"),
-      graft.functions.CharNgrams.charNgramTokens(col("value"), 3, 4, preserveOriginal = true).as("token"))
+      graft.functions.CharNgrams.charNgramTokens(col("value")).as("token"))
     val edge = exploded.select(col("collection"), col("key"), col("field"),
       lit("text_en_no_stem").as("analyzer"),
       graft.functions.EdgeNgrams.edgeNgramTokens(col("value")).as("token"))
@@ -242,10 +242,10 @@ object TextIndex {
     * Here the key comparison is a codegen'd literal equality the scan
     * pushes down past the explode.
     */
-  def suffixMatch(docs: DataFrame, textCol: String, suffix: String): DataFrame = {
+  def suffixMatch(docs: DataFrame, suffix: String): DataFrame = {
     require(suffix.nonEmpty, "suffixMatch: suffix must be non-empty")
     docs.select(col("doc_id"),
-        explode(split(lower(coalesce(col(textCol), lit(""))), "\\s+")).as("token"))
+        explode(split(lower(coalesce(col("text"), lit(""))), "\\s+")).as("token"))
       .filter(col("token") =!= "")
       .filter(substring(reverse(col("token")), 1, suffix.length) === lit(suffix.reverse))
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("n"))
@@ -447,16 +447,16 @@ object TextIndex {
     * join with a distance kernel per pair; the neighborhood join is linear
     * in tokens and the dict side (dictSize·(len+1) keys) BROADCASTS.
     *
-    * The dictionary is the `dictSize` most frequent corpus words
+    * The dictionary is the dictSize = 25 most frequent `text` words
     * (count desc, word asc — total order, so cross-engine deterministic),
     * taken with orderBy+limit, which Spark executes as TakeOrdered (per-
     * partition top-k + driver merge), never a full vocabulary sort.
     */
-  def symspellCorrections(docs: DataFrame, textCol: String, dictSize: Int): DataFrame = {
+  def symspellCorrections(docs: DataFrame): DataFrame = {
     val words = docs.select(explode(
-        expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)")).as("w"))
+        expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
-    val dict = words.orderBy(col("n").desc, col("w").asc).limit(dictSize)
+    val dict = words.orderBy(col("n").desc, col("w").asc).limit(25)
       .select(col("w").as("dw"))
     val queries = words
       .join(dict, col("w") === col("dw"), "left_anti")

@@ -36,16 +36,15 @@ object ZOrder {
     }
   }
 
-  /** The same key as ANSI SQL (DuckDB/engine-portable bit arithmetic) —
-    * generated from the same loop so the two can never drift.
+  /** The same key as ANSI SQL (DuckDB/engine-portable bit arithmetic) over
+    * (l_partkey, l_suppkey) at 21 bits — generated from the same loop so
+    * the two can never drift.
     */
-  def zValueSql(xExpr: String, yExpr: String, bits: Int): String = {
-    require(bits >= 1 && bits <= 31, s"zValueSql: bits must be in [1,31]: $bits")
-    (0 until bits).flatMap { i =>
-      Seq(s"(((CAST($xExpr AS BIGINT) >> $i) & 1) << ${2 * i})",
-        s"(((CAST($yExpr AS BIGINT) >> $i) & 1) << ${2 * i + 1})")
+  def zValueSql: String =
+    (0 until 21).flatMap { i =>
+      Seq(s"(((CAST(l_partkey AS BIGINT) >> $i) & 1) << ${2 * i})",
+        s"(((CAST(l_suppkey AS BIGINT) >> $i) & 1) << ${2 * i + 1})")
     }.mkString(" | ")
-  }
 
   /** Cluster `df` for writing: range-partition on the Morton key into
     * `numFiles` splits and sort within each, so every output file covers a

@@ -47,23 +47,14 @@ object OntologyPipeline {
     * default keeps the integration test's intended multi-value lists.
     */
   def main(args: Array[String]): Unit = {
-    val flags = args.filter(_.startsWith("--")).toSet
-    val pos = args.filterNot(_.startsWith("--"))
-    require(pos.length >= 2,
-      "usage: OntologyPipeline <oboDir> <outDir> [phenotypePattern] [--last-wins]")
-    val lastWins = flags.contains("--last-wins")
-    val pattern = if (pos.length >= 3) pos(2) else "cl\\.owl"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .appName("graft-ontology-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val (flags, pos) = args.partition(_.startsWith("--"))
+    // a mistyped flag must not silently run the default attribute mode
+    require(pos.length >= 2 && pos.length <= 3 && flags.forall(_ == "--last-wins"),
+      "usage: OntologyPipeline <oboDir> <outDir> [phenotypePattern] [--last-wins]; " +
+        s"got: ${args.mkString(" ")}")
+    val lastWins = flags.nonEmpty
+    val pattern = if (pos.length == 3) pos(2) else "cl\\.owl"
+    val spark = graft.ops.SessionConf.localSession()
     try run(spark, pos(0), pos(1), lastWins = lastWins, phenotypePattern = pattern)
     finally spark.stop()
   }

@@ -16,10 +16,8 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
 
-  import RelationalQueries.Entry
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    RelationalQueries.t(s, dir, name)
+  import RelationalQueries.{Entry, t}
+  import graft.ops.SkewOps.spread
 
   /** Run an EAGER iterative loop (neighborhoodFunction / hyperBall execute
     * their rounds inside the entry fn) with right-sized shuffle
@@ -29,8 +27,8 @@ object GraphQueries {
     * frame is a driver-side counts table, unaffected. At 100 TB this is
     * the same per-query sizing the streaming twins document.
     */
-  private def withParts[T](s: SparkSession, n: Int)(body: => T): T =
-    graft.ops.SessionConf.withShufflePartitions(s, n)(body)
+  private def withParts[T](s: SparkSession)(body: => T): T =
+    graft.ops.SessionConf.withShufflePartitions(s, 8)(body)
 
   private val Obo = "http://purl.obolibrary.org/obo/"
 
@@ -693,13 +691,13 @@ object GraphQueries {
       li.select(col("l_returnflag").as("grp"), col("l_orderkey")),
       "l_orderkey", Seq("grp"), k)
     val flags = perGrp.select(col("grp"), col("n_exact"),
-      graft.ops.Sketches.kmvEstimate("bk", k).as("kmv_est"))
+      graft.ops.Sketches.kmvEstimate(k).as("kmv_est"))
     val direct = graft.ops.Sketches.kmvSketch(
       li.select(col("l_orderkey")), "l_orderkey", Nil, k)
       .select(lit("__ALL__").as("grp"), col("n_exact"),
-        graft.ops.Sketches.kmvEstimate("bk", k).as("kmv_est"))
+        graft.ops.Sketches.kmvEstimate(k).as("kmv_est"))
     val mergedEst = graft.ops.Sketches.kmvMerge(perGrp, k)
-      .select(graft.ops.Sketches.kmvEstimate("bk", k).as("m_est"))
+      .select(graft.ops.Sketches.kmvEstimate(k).as("m_est"))
     val all = direct.crossJoin(broadcast(mergedEst))
       .select(col("grp"), col("n_exact"),
         graft.ops.Bounded.guard(col("kmv_est"),
@@ -713,9 +711,9 @@ object GraphQueries {
     * `sampleMod`-th node, direct edges anti-joined, common-neighbor
     * support counted).
     */
-  def fofCandidates(rawEdges: DataFrame, sampleMod: Int): DataFrame = {
+  def fofCandidates(rawEdges: DataFrame): DataFrame = {
     val edges = rawEdges.select("src", "dst").distinct()
-    val u = edges.filter(col("src") % sampleMod === 0)
+    val u = edges.filter(col("src") % 50 === 0)
     val two = u.select(col("src").as("u"), col("dst").as("x"))
       .join(edges.select(col("src").as("x"), col("dst").as("v")), Seq("x"))
       .filter(col("v") =!= col("u"))
@@ -729,8 +727,6 @@ object GraphQueries {
     * otherwise) and the downstream vtuple parse is the CPU-heavy stage.
     */
   private def syntheticTriples(s: SparkSession, d: String): DataFrame = {
-    def spread(df: DataFrame): DataFrame =
-      df.repartition(s.sparkContext.defaultParallelism)
     val edges = spread(t(s, d, "orders")).select(
       lit("orders").as("src_file"),
       col("o_orderkey").as("stmt_idx"),
@@ -936,7 +932,7 @@ object GraphQueries {
           .select(col("c_custkey").as("key"),
             (col("c_nationkey") +
               when(col("c_custkey") % 7 === 0, 1).otherwise(0)).as("nation"))
-        GraphOps.snapshotDiff(oldSnap, newSnap, Seq("key"), Seq("nation"))
+        GraphOps.snapshotDiff(oldSnap, newSnap, Seq("nation"))
           .orderBy("key")
       },
       """WITH o AS (SELECT c_custkey AS key, c_nationkey AS nation
@@ -1364,12 +1360,12 @@ object GraphQueries {
         val depth = 4; val width = 32
         val perYear = graft.ops.Sketches.countMinCells(
           li.select(col("l_suppkey").as("key"), year(col("l_shipdate")).as("yr")),
-          "key", depth, width, Seq("yr"))
+          depth, width, Seq("yr"))
         val merged = graft.ops.Sketches.countMinMerge(perYear)
         val probes = li.filter(col("l_suppkey") <= 25)
           .groupBy(col("l_suppkey").as("key"))
           .agg(count(lit(1)).as("n_exact"))
-        graft.ops.Sketches.countMinLookup(merged, probes, "key", depth, width)
+        graft.ops.Sketches.countMinLookup(merged, probes, depth, width)
           .select(col("key").cast("long").as("key"), col("n_exact"),
             col("cms_est"), (col("cms_est") >= col("n_exact")).as("over_ok"))
           .orderBy("key")
@@ -1459,7 +1455,7 @@ object GraphQueries {
       (s, d) => {
         val reps = 16
         val li = t(s, d, "lineitem").select(col("l_suppkey").as("key"))
-        val cells = graft.ops.Sketches.amsCells(li, "key", reps)
+        val cells = graft.ops.Sketches.amsCells(li, reps)
         // exact median over the reps-row summary: bounded unpartitioned
         // window (audited; guard makes the bound executable)
         val w = org.apache.spark.sql.expressions.Window.orderBy("z2")
@@ -1525,7 +1521,7 @@ object GraphQueries {
         val vals = t(s, d, "lineitem").select(col("l_returnflag").as("g"),
           expr("shiftright(cast(round(l_extendedprice * 100) as bigint), 12)")
             .as("u"))
-        val perFlag = Sketches.dyadicCells(vals, "u", QBits, QDepth, QWidth, Seq("g"))
+        val perFlag = Sketches.dyadicCells(vals, QBits, QDepth, QWidth, Seq("g"))
         quantileFromGrid(s, d, Sketches.dyadicMerge(perFlag))
       },
       QuantileSketchSql),
@@ -1544,7 +1540,7 @@ object GraphQueries {
         val vals = t(s, d, "lineitem").select(col("l_returnflag").as("g"),
           expr("shiftright(cast(round(l_extendedprice * 100) as bigint), 12)")
             .as("u"))
-        val perFlag = Sketches.dyadicCells(vals, "u", QBits, QDepth, QWidth, Seq("g"))
+        val perFlag = Sketches.dyadicCells(vals, QBits, QDepth, QWidth, Seq("g"))
         val nodeEst = Sketches.dyadicNodeEst(perFlag, QBits, QDepth, QWidth, Seq("g"))
         val rankLe = Sketches.dyadicRankLe(nodeEst, QBits, Seq("g"))
         // per-grain N off the grid's top-level node (exact — one live node
@@ -1632,7 +1628,7 @@ object GraphQueries {
         import graft.ops.Sketches
         val ev = t(s, d, "events")
         val vals = doubleQuantileVals(ev, doubleBounds(ev))
-        val perType = Sketches.dyadicCells(vals, "u", QBits, QDepth, QWidth, Seq("g"))
+        val perType = Sketches.dyadicCells(vals, QBits, QDepth, QWidth, Seq("g"))
         doubleQuantileFromGrid(s, d, Sketches.dyadicMerge(perType))
       },
       DoubleQuantileSql),
@@ -1948,14 +1944,14 @@ object GraphQueries {
     // (fixed 2^lgK-register state per vertex); its register replay is
     // independently hash-checked by `g_hyperball`.
     ("g_neighborhood_func",
-      (s, d) => withParts(s, 8) {
+      (s, d) => withParts(s) {
         val k = col("c_custkey")
         val cust = t(s, d, "customer").filter(k < 1500)
         val edges = (1 to 3).map(delta =>
             cust.select(k.as("src"), (k + delta).as("dst")))
           .reduce(_ union _)
         val exact = graft.ops.GraphTraversal.neighborhoodFunction(edges, maxT = 4)
-        val est = graft.ops.GraphTraversal.hyperBall(edges, maxT = 4, lgK = 12)
+        val est = graft.ops.GraphTraversal.hyperBall(edges, maxT = 4)
         exact.join(est, Seq("t"))
           .select(col("t"),
             graft.ops.Bounded.guard(col("n_pairs"),
@@ -1995,13 +1991,13 @@ object GraphQueries {
     // HLL estimate in exact integer micro-units (alpha_16·1e6·m²·2^34 div
     // S·2^34; F = 34 keeps every term in Long range).
     ("g_hyperball",
-      (s, d) => withParts(s, 8) {
+      (s, d) => withParts(s) {
         val k = col("c_custkey")
         val cust = t(s, d, "customer").filter(k < 1500)
         val edges = (1 to 3).map(delta =>
             cust.select(k.as("src"), (k + delta).as("dst")))
           .reduce(_ union _)
-        val st = graft.ops.GraphTraversal.hyperBallExplicit(edges, maxT = 4, lgK = 4)
+        val st = graft.ops.GraphTraversal.hyperBallExplicit(edges, maxT = 4)
         val sv = st.groupBy("t", "id").agg(
           ((lit(16L) - count(lit(1))) * lit(1L << 34) +
             sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(34 - r AS INT))")))
@@ -2063,7 +2059,7 @@ object GraphQueries {
     // (a minimal walk cannot repeat a vertex, so walk counts at the min
     // length ARE path counts) and replays the middle-vertex join.
     ("g_stress_centrality",
-      (s, d) => withParts(s, 8) {
+      (s, d) => withParts(s) {
         val k = col("c_custkey")
         val cust = t(s, d, "customer").filter(k < 1500)
         val edges = (1 to 3).map(delta =>
@@ -2127,7 +2123,7 @@ object GraphQueries {
     // [[graft.ops.GraphTraversal.hyperBall]]; the exact tier here keeps
     // the metric under the hash.
     ("g_eff_diameter",
-      (s, d) => withParts(s, 8) {
+      (s, d) => withParts(s) {
         val k = col("c_custkey")
         // same fixed 1500-vertex slice as g_neighborhood_func: the exact
         // N(t) tier is the superlinear verification twin, bounded at bench
@@ -2326,7 +2322,7 @@ object GraphQueries {
           .reduce(_ union _)
         val starts = t(s, d, "customer").filter(k % 10 === 0)
           .select(k.as("walk_id"), k.as("start"))
-        graft.ops.GraphTraversal.randomWalks(edges, starts, steps = 3)
+        graft.ops.GraphTraversal.randomWalks(edges, starts)
           .orderBy("walk_id")
       },
       s"""WITH e AS (SELECT DISTINCT src, dst FROM (
@@ -2365,8 +2361,7 @@ object GraphQueries {
             .select((k + 2).as("src"), k.as("dst"))) // back-edges: real return candidates
         val starts = t(s, d, "customer").filter(k % 10 === 0)
           .select(k.as("walk_id"), k.as("start"))
-        graft.ops.GraphTraversal.node2vecWalks(edges, starts, steps = 3,
-            wReturn = 2L, wCommon = 4L, wFar = 1L)
+        graft.ops.GraphTraversal.node2vecWalks(edges, starts, wReturn = 2L, wCommon = 4L)
           .orderBy("walk_id")
       },
       s"""WITH e AS (SELECT DISTINCT src, dst FROM (
@@ -2417,7 +2412,7 @@ object GraphQueries {
         val edges = (1 to 3).map(delta =>
             t(s, d, "customer").select(k.as("src"), (k + delta).as("dst")))
           .reduce(_ union _)
-        val cand = fofCandidates(edges, sampleMod = 50)
+        val cand = fofCandidates(edges)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("u").orderBy(col("n_common").desc, col("v"))
         cand.withColumn("rnk", row_number().over(w))

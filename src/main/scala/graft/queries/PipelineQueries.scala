@@ -12,29 +12,8 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  import RelationalQueries.Entry
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    RelationalQueries.t(s, dir, name)
-
-  /** The driver's testdata parquet files have a SINGLE row group, so Spark
-    * cannot split them — every scan is one task. For queries whose pre-shuffle
-    * stage is CPU-heavy (shingle/token explodes, hashing), redistribute the
-    * (tiny) input first; the round-robin exchange also becomes the shared
-    * materialization point reused by self-join branches. On a real cluster
-    * the input would already arrive in thousands of splits and this is a
-    * near-no-op relative to the downstream work.
-    */
-  private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** [[graft.ops.SkewOps.sortFence]]: materialize an expensive subtree
-    * before a final global sort — the range exchange's boundary sampling
-    * otherwise re-executes the subtree (r16 profiling: the image/audio
-    * decode kernels and pair scorers under a bare `.orderBy` each ran as
-    * TWO full jobs per entry; the fence cuts the second).
-    */
-  private def fence(df: DataFrame): DataFrame = graft.ops.SkewOps.sortFence(df)
+  import RelationalQueries.{Entry, t}
+  import graft.ops.SkewOps.spread
 
   /** The d23 maximal-run substring-dedup oracle — replays the whole chain
     * (k-gram marking, coverage, island numbering, per-island extents +
@@ -271,7 +250,7 @@ object PipelineQueries {
     * round to one evaluation — the chain is referenced multiply per level
     * and would otherwise re-inline exponentially.
     */
-  private def bpeTrainCtes(rounds: Int): String = {
+  private def bpeTrainCtes: String = {
     val head =
       """WITH w AS MATERIALIZED (
         |   SELECT word, COUNT(*) AS n FROM (
@@ -279,7 +258,7 @@ object PipelineQueries {
         |   WHERE word <> '' GROUP BY word),
         | v0 AS MATERIALIZED (
         |   SELECT word, regexp_replace(word, '(.)', '|\1|', 'g') AS repr, n FROM w)""".stripMargin
-    val steps = (1 to rounds).map { k =>
+    val steps = (1 to 8).map { k =>
       s""" p$k AS MATERIALIZED (
          |   SELECT l, r, SUM(n) AS total FROM (
          |     SELECT syms[i] AS l, syms[i + 1] AS r, n FROM (
@@ -376,7 +355,7 @@ object PipelineQueries {
     """WITH words AS (SELECT doc_id, strip_accents(w) AS w
       |   FROM (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS w
       |         FROM documents) WHERE w <> '')""".stripMargin +
-      graft.functions.PorterStem.sqlCtes("words", "doc_id", "c", "tokfin") +
+      graft.functions.PorterStem.sqlCtes("doc_id", "c", "tokfin") +
       """, tok AS (SELECT doc_id, cur AS term FROM tokfin),
       | tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
       |        WHERE term IN ('join', 'vector', 'the') GROUP BY 1, 2),
@@ -529,7 +508,7 @@ object PipelineQueries {
     */
   private def coveredSpansShared(s: SparkSession, d: String): DataFrame =
     sharedStore(s, "covered_spans", d)(
-      Dedup.spanCoveredPositions(spread(t(s, d, "documents")), 8))
+      Dedup.spanCoveredPositions(spread(t(s, d, "documents"))))
 
   /** The duplicate-cluster labeling d8/d16/d20 all serve from: ONE
     * vertex-closed connected-components run over the corpus's confirmed
@@ -583,15 +562,15 @@ object PipelineQueries {
     * — the [[graft.llm.Similarity.planeComponent]] family in-database
     * (the sim_lsh_buckets replay, factored for reuse).
     */
-  private def nnPlanesCtes(numPlanes: Int): String =
-    s"""planes AS (
+  private def nnPlanesCtes: String =
+    """planes AS (
        |   SELECT p, dd,
        |          ((strpos('0123456789abcdef', substr(h,1,1))-1)*4096
        |         + (strpos('0123456789abcdef', substr(h,2,1))-1)*256
        |         + (strpos('0123456789abcdef', substr(h,3,1))-1)*16
        |         + (strpos('0123456789abcdef', substr(h,4,1))-1) - 32768) / 4096.0 AS comp
        |   FROM (SELECT p, dd, substr(md5('plane' || p || ':' || dd), 1, 4) AS h
-       |         FROM (SELECT unnest(generate_series(0,${numPlanes - 1})) AS p),
+       |         FROM (SELECT unnest(generate_series(0,3)) AS p),
        |              (SELECT unnest(generate_series(0,63)) AS dd))),
        | plv AS (SELECT p, list(comp ORDER BY dd) AS plane FROM planes GROUP BY p)""".stripMargin
 
@@ -666,8 +645,8 @@ object PipelineQueries {
   }
 
   /** The knng oracle's full CTE prefix (planes + untagged graph chain). */
-  private def nnDescentSqlCtes(k: Int, rounds: Int): String =
-    nnPlanesCtes(4) + ",\n " + nnDescentSqlGraph(k, rounds)
+  private def nnDescentSqlCtes: String =
+    nnPlanesCtes + ",\n " + nnDescentSqlGraph(16, 4)
 
   /** One search hop as a CTE: candidates = `prev` ∪ its `graph` neighbors,
     * rescored, top-`width` per query. Mirrors
@@ -724,7 +703,7 @@ object PipelineQueries {
       ("h2", "g2_l1", "h3", 1), ("h3", "g2_l1", "h4", 1)) ++
       (5 to 9).map(i => (s"h${i - 1}", "g3", s"h$i", 24)))
       .map { case (p, g, o, w) => hnswHopSql(p, g, o, w) }
-    s"""WITH ${nnPlanesCtes(4)},
+    s"""WITH ${nnPlanesCtes},
        | $lv,
        | ${graphs.mkString(",\n ")},
        |${head},
@@ -779,7 +758,7 @@ object PipelineQueries {
         |          SELECT id, neighbor_id, cosine FROM g2_b
         |          UNION ALL SELECT id, neighbor_id, cosine FROM nf
         |          UNION ALL SELECT id, neighbor_id, cosine FROM rv))""".stripMargin
-    s"""WITH ${nnPlanesCtes(4)},
+    s"""WITH ${nnPlanesCtes},
        | ${nnDescentSqlGraph(k = 12, rounds = 2, tag = "_b",
             filter = "vec_id >= 50")},
        |${head},
@@ -793,23 +772,23 @@ object PipelineQueries {
   }
 
   /** The sim_pq_trained oracle: seeds = prefix subvector slices (cw0),
-    * then `rounds` unrolled per-subspace Lloyd rounds (integer argmin with
+    * then two unrolled per-subspace Lloyd rounds (integer argmin with
     * ties to the lowest codeword, truncating-division updates, emptied
     * codewords carried), then encode + ADC top-5 with the FINAL codebooks.
     * Mirrors [[graft.llm.Similarity.trainPqCodebooks]] +
     * [[graft.llm.Similarity.pqTopKWithCodebooks]] parameter-for-parameter
     * (16 codewords × 8 subspaces × 8 dims, queries vec_id < 20).
     */
-  private def pqTrainedSql(rounds: Int): String = {
-    def argmin(src: String, cb: String, out: String): String =
+  private def pqTrainedSql: String = {
+    def argmin(cb: String, out: String): String =
       s""" $out AS MATERIALIZED (SELECT vec_id, m, j, v FROM (
          |    SELECT s.vec_id, s.m, c.j, s.v,
          |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
          |             list_dot_product(s.v, s.v) - 2*list_dot_product(s.v, c.c)
          |               + list_dot_product(c.c, c.c), c.j) AS rn
-         |    FROM $src s JOIN $cb c USING (m)) WHERE rn = 1)""".stripMargin
-    val roundCtes = (1 to rounds).map { r =>
-      argmin("csub", s"cw${r - 1}", s"a$r") + s""",
+         |    FROM csub s JOIN $cb c USING (m)) WHERE rn = 1)""".stripMargin
+    val roundCtes = (1 to 2).map { r =>
+      argmin(s"cw${r - 1}", s"a$r") + s""",
          | u$r AS (SELECT m, j, i AS pos, CAST(SUM(v[i]) AS BIGINT) AS sx, COUNT(*) AS n
          |         FROM a$r, LATERAL (SELECT unnest(generate_series(1, len(v))) AS i) g
          |         GROUP BY m, j, i),
@@ -826,7 +805,7 @@ object PipelineQueries {
        |          v AS c
        |        FROM csub WHERE vec_id < 16),
        |$roundCtes,
-       |${argmin("csub", s"cw$rounds", "asg")},
+       |${argmin("cw2", "asg")},
        | qsub AS (SELECT vec_id AS query_id, m, v FROM csub WHERE vec_id < 20),
        | adcp AS (SELECT qs.query_id, a.vec_id AS neighbor_id,
        |                 CAST(SUM(list_dot_product(qs.v, qs.v)
@@ -834,7 +813,7 @@ object PipelineQueries {
        |                   + list_dot_product(c.c, c.c)) AS BIGINT) AS adc
        |          FROM qsub qs
        |          JOIN asg a ON qs.m = a.m
-       |          JOIN cw$rounds c ON c.m = a.m AND c.j = a.j
+       |          JOIN cw2 c ON c.m = a.m AND c.j = a.j
        |          WHERE qs.query_id <> a.vec_id
        |          GROUP BY 1, 2)
        | SELECT query_id, neighbor_id, adc, CAST(rank AS INTEGER) AS rank
@@ -939,7 +918,7 @@ object PipelineQueries {
     // route literal; at sf0.1 the same corpus crosses to maxdf_capped —
     // the bench exercises the protective route the judge asked for.
     ("d19_dedup_auto_route",
-      (s, d) => Dedup.prefixFilterPairsAuto(shinglesShared(s, d), minJaccardPct = 70)
+      (s, d) => Dedup.prefixFilterPairsAuto(shinglesShared(s, d))
         .orderBy("id_a", "id_b"),
       s"""WITH sh AS ($ShinglesSql),
          | dfx AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle),
@@ -1021,7 +1000,7 @@ object PipelineQueries {
         // sharing entries are order-dependent by design.
         val sigs = sigsShared(s, d)
         Dedup.estimateJaccard(sigs,
-            Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 3), 12)
+            Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 3))
           .orderBy("id_a", "id_b")
       },
       s"""$JaccardEstimateCtes
@@ -1040,7 +1019,7 @@ object PipelineQueries {
       (s, d) => {
         val sigs = sigsShared(s, d)
         val hist = Dedup.estimateJaccard(sigs,
-            Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 3), 12)
+            Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 3))
           .groupBy("n_agree").agg(count(lit(1)).as("n_pairs"))
         val w = org.apache.spark.sql.expressions.Window
           .orderBy(col("n_agree").desc)
@@ -1066,8 +1045,7 @@ object PipelineQueries {
     // pairs report -1 dist and NULL sim — unknowable is not zero.
     ("d13_edit_verify",
       (s, d) => Dedup.editVerify(spread(t(s, d, "documents")),
-          Dedup.lshCandidates(sigsShared(s, d), bands = 4, rowsPerBand = 3),
-          maxDist = 6)
+          Dedup.lshCandidates(sigsShared(s, d), bands = 4, rowsPerBand = 3))
         .orderBy("id_a", "id_b"),
       s"""$LshCandCtes,
          | tx AS (SELECT cand.id_a, cand.id_b, da.text AS text_a, db.text AS text_b
@@ -1226,7 +1204,7 @@ object PipelineQueries {
         val docsDf = spread(t(s, d, "documents"))
         Dedup.contaminationReport(
             docsDf.filter(col("doc_id") % 20 =!= 0),
-            docsDf.filter(col("doc_id") % 20 === 0), n = 5)
+            docsDf.filter(col("doc_id") % 20 === 0))
           .orderBy("source")
       },
       s"""$DecontamCtes
@@ -1252,7 +1230,7 @@ object PipelineQueries {
         Dedup.bloomDecontaminate(
             docsDf.filter(col("doc_id") % 20 =!= 0),
             docsDf.filter(col("doc_id") % 20 === 0), n = 5,
-            mBits = 16, numHashes = 4)
+            mBits = 16)
           .select("doc_id", "source")
           .orderBy("doc_id")
       },
@@ -1283,7 +1261,7 @@ object PipelineQueries {
     // candidate path). The oracle replays hash + banding + gate + verify.
     ("d22_simhash_neardup",
       (s, d) => Dedup.simhashNearDupPairs(spread(t(s, d, "documents")),
-          bits = 32, nBands = 4, maxHamming = 2, maxBucket = 64)
+          maxHamming = 2, maxBucket = 64)
         .orderBy("id_a", "id_b"),
       """WITH tok AS (SELECT doc_id AS id, word AS token, COUNT(*) AS w
         |             FROM (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents)
@@ -1406,7 +1384,7 @@ object PipelineQueries {
     ("sim_hard_negatives",
       (s, d) => {
         val e = t(s, d, "embeddings")
-        Similarity.hardNegatives(e.filter(col("vec_id") % 25 === 0), e, k = 3)
+        Similarity.hardNegatives(e.filter(col("vec_id") % 25 === 0), e)
           .orderBy("query_id", "rank")
       },
       """WITH q AS (SELECT vec_id AS query_id, label AS q_label,
@@ -1496,7 +1474,7 @@ object PipelineQueries {
       (s, d) => Similarity.nnDescentGraph(t(s, d, "embeddings"), k = 16, rounds = 4)
         .filter(col("id") < 40)
         .orderBy("id", "rank"),
-      s"""WITH ${nnDescentSqlCtes(k = 16, rounds = 4)}
+      s"""WITH ${nnDescentSqlCtes}
          | SELECT id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
          | FROM g4 WHERE id < 40 ORDER BY id, rank""".stripMargin),
 
@@ -1548,7 +1526,7 @@ object PipelineQueries {
           rounds = 4, maxBucket = 32)
         .filter(col("id") < 40)
         .orderBy("id", "rank"),
-      s"""WITH ${nnPlanesCtes(4)},
+      s"""WITH ${nnPlanesCtes},
          | ${nnDescentSqlGraph(k = 16, rounds = 4, maxBucket = 32)}
          | SELECT id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
          | FROM g4 WHERE id < 40 ORDER BY id, rank""".stripMargin),
@@ -1601,14 +1579,14 @@ object PipelineQueries {
       (s, d) => Similarity.kmeansLloyd(t(s, d, "embeddings"), k = 8, rounds = 2)
         .orderBy("vec_id"),
       {
-        def dist(v: String, c: String) =
-          s"list_dot_product($v, $v) - 2*list_dot_product($v, $c) + list_dot_product($c, $c)"
+        val dist =
+          "list_dot_product(corp.cv, corp.cv) - 2*list_dot_product(corp.cv, c.ce) + list_dot_product(c.ce, c.ce)"
         def round(r: Int) =
           s""",
              | a$r AS MATERIALIZED (SELECT vec_id, cv, cell FROM (
              |     SELECT corp.vec_id, corp.cv, c.cell,
              |            ROW_NUMBER() OVER (PARTITION BY corp.vec_id
-             |              ORDER BY ${dist("corp.cv", "c.ce")}, c.cell) AS rn
+             |              ORDER BY $dist, c.cell) AS rn
              |     FROM corp CROSS JOIN c${r - 1} c) WHERE rn = 1),
              | u$r AS MATERIALIZED (SELECT cell, i AS pos,
              |            CAST(SUM(cv[i]) AS BIGINT) AS s, COUNT(*) AS n
@@ -1625,9 +1603,9 @@ object PipelineQueries {
            |        cv AS ce FROM corp WHERE vec_id < 8)${round(1)}${round(2)}
            | SELECT vec_id, cell, CAST(${"dist2"} AS BIGINT) AS dist2 FROM (
            |   SELECT vec_id, cell, dist2 FROM (
-           |     SELECT corp.vec_id, c.cell, ${dist("corp.cv", "c.ce")} AS dist2,
+           |     SELECT corp.vec_id, c.cell, $dist AS dist2,
            |            ROW_NUMBER() OVER (PARTITION BY corp.vec_id
-           |              ORDER BY ${dist("corp.cv", "c.ce")}, c.cell) AS rn
+           |              ORDER BY $dist, c.cell) AS rn
            |     FROM corp CROSS JOIN c2 c) WHERE rn = 1)
            | ORDER BY vec_id""".stripMargin
       }),
@@ -1646,13 +1624,13 @@ object PipelineQueries {
       (s, d) => Similarity.kCenterSelect(t(s, d, "embeddings"), k = 4)
         .orderBy("vec_id"),
       {
-        def dist(v: String, c: String) =
-          s"list_dot_product($v, $v) - 2*list_dot_product($v, $c) + list_dot_product($c, $c)"
+        val dist =
+          "list_dot_product(corp.cv, corp.cv) - 2*list_dot_product(corp.cv, c.ce) + list_dot_product(c.ce, c.ce)"
         def round(r: Int) =
           s""",
              | m$r AS MATERIALIZED (SELECT vec_id, cv, md FROM (
              |     SELECT corp.vec_id, corp.cv,
-             |            MIN(${dist("corp.cv", "c.ce")}) OVER (PARTITION BY corp.vec_id) AS md,
+             |            MIN($dist) OVER (PARTITION BY corp.vec_id) AS md,
              |            ROW_NUMBER() OVER (PARTITION BY corp.vec_id ORDER BY c.rnd) AS rn
              |     FROM corp CROSS JOIN c${r - 1} c) WHERE rn = 1),
              | p$r AS (SELECT vec_id, cv FROM (
@@ -1669,7 +1647,7 @@ object PipelineQueries {
            |        CAST(COALESCE(sel.rnd, -1) AS BIGINT) AS sel_round
            | FROM (SELECT vec_id, md FROM (
            |         SELECT corp.vec_id,
-           |                MIN(${dist("corp.cv", "c.ce")}) OVER (PARTITION BY corp.vec_id) AS md,
+           |                MIN($dist) OVER (PARTITION BY corp.vec_id) AS md,
            |                ROW_NUMBER() OVER (PARTITION BY corp.vec_id ORDER BY c.rnd) AS rn
            |         FROM corp CROSS JOIN c3 c) WHERE rn = 1) mf
            | LEFT JOIN c3 sel ON sel.cid = mf.vec_id
@@ -1881,8 +1859,7 @@ object PipelineQueries {
     // 2 bands x 4 planes here keeps the oracle's plane table small; at scale
     // the defaults (4 x 16) give ~256k fine-grained group keys.
     ("sim_dup_pairs",
-      (s, d) => Similarity.cosineDupPairs(t(s, d, "embeddings"), tau = 0.2,
-          bands = 2, planesPerBand = 4)
+      (s, d) => Similarity.cosineDupPairs(t(s, d, "embeddings"), tau = 0.2)
         .orderBy("id_a", "id_b"),
       """WITH planes AS (
         |   SELECT p, dd,
@@ -2008,7 +1985,7 @@ object PipelineQueries {
         .filter(col("doc_id") < 100)
         .select(col("doc_id"), substring(col("text"), 1, 40).as("s"))
         .select(col("doc_id"),
-          size(TextIndex.charNgrams(col("s"), 3, 4, preserveOriginal = true)).cast("long").as("n_tokens"))
+          size(TextIndex.charNgrams(col("s"))).cast("long").as("n_tokens"))
         .orderBy("doc_id"),
       """WITH s AS (SELECT doc_id, substr(text, 1, 40) AS s FROM documents WHERE doc_id < 100),
         | toks AS (
@@ -2044,7 +2021,7 @@ object PipelineQueries {
     // a prefix point-lookup — the reversed-field index trick, expressed as
     // a codegen'd literal filter here and a bucketed posting key at scale.
     ("x1_suffix_wildcard",
-      (s, d) => graft.ops.TextIndex.suffixMatch(t(s, d, "documents"), "text", "er")
+      (s, d) => graft.ops.TextIndex.suffixMatch(t(s, d, "documents"), "er")
         .orderBy("doc_id", "token"),
       """WITH words AS (SELECT doc_id,
         |       unnest(regexp_split_to_array(lower(text), '\s+')) AS token
@@ -2066,7 +2043,7 @@ object PipelineQueries {
       """WITH words AS (SELECT DISTINCT doc_id, strip_accents(w) AS w FROM (
         |   SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS w
         |   FROM documents WHERE doc_id < 100))""".stripMargin +
-        graft.functions.PorterStem.sqlCtes("words", "doc_id", "a", "stemmed") +
+        graft.functions.PorterStem.sqlCtes("doc_id", "a", "stemmed") +
         " SELECT DISTINCT doc_id, cur AS token FROM stemmed ORDER BY doc_id, token"),
 
     // ---- X2: the SQL surface (native functions via spark.sql) -----------
@@ -2123,7 +2100,7 @@ object PipelineQueries {
         |        LATERAL (SELECT unnest(generate_series(3, greatest(least(length(rawwords.w),12),3))) AS n) g
         |   UNION
         |   SELECT key, 'text_en_no_stem', w FROM rawwords)""".stripMargin +
-        graft.functions.PorterStem.sqlCtes("words", "key", "b", "stemfin") +
+        graft.functions.PorterStem.sqlCtes("key", "b", "stemfin") +
         """, stem AS (SELECT key, 'text_en' AS analyzer, cur AS token FROM stemfin),
         | ident AS (SELECT key, 'identity' AS analyzer, v AS token FROM s),
         | allt AS (SELECT * FROM ngram UNION SELECT * FROM edge
@@ -2218,7 +2195,7 @@ object PipelineQueries {
       """WITH words AS (SELECT doc_id, strip_accents(w) AS w
         |   FROM (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS w
         |         FROM documents) WHERE w <> '')""".stripMargin +
-        graft.functions.PorterStem.sqlCtes("words", "doc_id", "c", "tokfin") +
+        graft.functions.PorterStem.sqlCtes("doc_id", "c", "tokfin") +
         """, tok AS (SELECT doc_id, cur AS term FROM tokfin),
         | tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
         |        WHERE term IN ('join', 'vector', 'the') GROUP BY 1, 2),
@@ -2328,7 +2305,7 @@ object PipelineQueries {
     // ---- stratified deterministic sample (target domain mix) ------------
     ("t_stratified_sample",
       (s, d) => Sampling.stratifiedSample(t(s, d, "documents"), "doc_id", "source",
-          Map("src0" -> 0.25, "src1" -> 0.5), defaultRate = 1.0)
+          Map("src0" -> 0.25, "src1" -> 0.5))
         .select("doc_id", "source")
         .orderBy("doc_id"),
       s"""SELECT doc_id, source FROM documents
@@ -2932,7 +2909,7 @@ object PipelineQueries {
     // of every distinct unit survives in its global-first (id, pos) home,
     // documents reassemble from surviving units in original order.
     ("t_paragraph_dedup",
-      (s, d) => Dedup.unitDedup(t(s, d, "documents"), " the ", " | ")
+      (s, d) => Dedup.unitDedup(t(s, d, "documents"), " the ")
         .orderBy("id"),
       """WITH w AS (SELECT doc_id AS id, string_split(text, ' the ') AS us FROM documents),
         | u AS (SELECT id, i - 1 AS pos, us[i] AS unit
@@ -3152,7 +3129,8 @@ object PipelineQueries {
 
     // ---- multimodal plumbing: binary payloads + stub features ----------
     ("m_media_features",
-      (s, d) => fence(Multimodal.extractFeatures(Multimodal.documentsAsMedia(spread(t(s, d, "documents"))))
+      (s, d) => spread(Multimodal.extractFeatures(
+          Multimodal.documentsAsMedia(spread(t(s, d, "documents"))))
         .select("media_id", "byte_len", "content_hash", "frame_count"))
         .orderBy("media_id"),
       """SELECT doc_id AS media_id,
@@ -3169,7 +3147,7 @@ object PipelineQueries {
     // detail hash-mismatches. decoded=true proves no row fell back to the
     // stub.
     ("m_image_decode",
-      (s, d) => fence(Multimodal.extractFeatures(
+      (s, d) => spread(Multimodal.extractFeatures(
           Multimodal.syntheticBmps(spread(t(s, d, "documents"))))
         .select("media_id", "img_w", "img_h", "px_sum", "decoded"))
         .orderBy("media_id"),
@@ -3181,7 +3159,7 @@ object PipelineQueries {
     // BMP oracle arithmetic transfers verbatim — raw (BMP), lossless (PNG)
     // and lossy (JPEG, fixture-golden) image paths are now all real.
     ("m_png_decode",
-      (s, d) => fence(Multimodal.extractFeatures(
+      (s, d) => spread(Multimodal.extractFeatures(
           Multimodal.syntheticPngs(spread(t(s, d, "documents"))))
         .select("media_id", "img_w", "img_h", "px_sum", "decoded"))
         .orderBy("media_id"),
@@ -3195,7 +3173,7 @@ object PipelineQueries {
     // synthetic-BMP channel formula (channel k of pixel i =
     // (doc_id·31 + i·7 + k·13) mod 256).
     ("m_image_channel_stats",
-      (s, d) => fence(Multimodal.imageChannelStats(
+      (s, d) => spread(Multimodal.imageChannelStats(
           Multimodal.syntheticBmps(spread(t(s, d, "documents"))))
         .toDF()
         .select("media_id", "n_px", "r_sum", "g_sum", "b_sum",
@@ -3226,7 +3204,7 @@ object PipelineQueries {
     // the synthetic-BMP pixel formula. Identical hashes downstream are
     // duplicate candidates (the d1 groupBy shape on a perceptual key).
     ("m_image_ahash",
-      (s, d) => fence(Multimodal.imageAHash(
+      (s, d) => spread(Multimodal.imageAHash(
           Multimodal.syntheticBmps(spread(t(s, d, "documents")))))
         .orderBy("media_id"),
       """WITH p AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 3 AS h
@@ -3254,9 +3232,9 @@ object PipelineQueries {
     // decode→resize→encode→decode cycle bit-exact, because the oracle
     // recomputes each sampled source pixel from doc_id alone.
     ("m_image_resize",
-      (s, d) => fence(Multimodal.extractFeatures(
+      (s, d) => spread(Multimodal.extractFeatures(
           Multimodal.resizeImages(
-            Multimodal.syntheticBmps(spread(t(s, d, "documents"))), 3, 2))
+            Multimodal.syntheticBmps(spread(t(s, d, "documents"))), 3))
         .select("media_id", "img_w", "img_h", "px_sum", "decoded"))
         .orderBy("media_id"),
       """WITH p AS (SELECT doc_id, 4 + doc_id % 5 AS w0, 3 + doc_id % 3 AS h0
@@ -3324,7 +3302,7 @@ object PipelineQueries {
     // Complements m_image_ahash: spatial mean-threshold vs frequency
     // envelope on the SAME real-decode plumbing.
     ("m_image_whash",
-      (s, d) => fence(Multimodal.imageSpectralHash(
+      (s, d) => spread(Multimodal.imageSpectralHash(
           Multimodal.syntheticBmps(spread(t(s, d, "documents")))))
         .orderBy("media_id"),
       """WITH p AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 3 AS h
@@ -3353,7 +3331,7 @@ object PipelineQueries {
     // the oracle recomputes frame count and the exact signed-sample sum
     // from the construction. decoded=true proves no row fell back.
     ("m_audio_decode",
-      (s, d) => fence(Multimodal.extractAudioFeatures(
+      (s, d) => spread(Multimodal.extractAudioFeatures(
           Multimodal.syntheticWavs(spread(t(s, d, "documents"))))
         .select("media_id", "sample_rate", "n_channels", "n_frames",
           "sample_sum", "decoded"))
@@ -3375,8 +3353,8 @@ object PipelineQueries {
     // recomputes every window from the synthetic waveform formula, so the
     // decode + windowing + integer kernels are all under the hash.
     ("m_audio_energy",
-      (s, d) => fence(Multimodal.audioEnergyWindows(
-          Multimodal.syntheticWavs(spread(t(s, d, "documents"))), 16)
+      (s, d) => spread(Multimodal.audioEnergyWindows(
+          Multimodal.syntheticWavs(spread(t(s, d, "documents"))))
         .toDF()).orderBy("media_id", "win_idx"),
       """WITH p AS (SELECT doc_id, 40 + doc_id % 25 AS n FROM documents),
         | s AS (SELECT doc_id, i // 16 AS win_idx,
@@ -3395,9 +3373,9 @@ object PipelineQueries {
     // sample_sum proves the whole decode→decimate→encode→decode cycle
     // bit-exact: the oracle recomputes each kept sample from doc_id alone.
     ("m_audio_decimate",
-      (s, d) => fence(Multimodal.extractAudioFeatures(
+      (s, d) => spread(Multimodal.extractAudioFeatures(
           Multimodal.decimateAudio(
-            Multimodal.syntheticWavs(spread(t(s, d, "documents"))), 2))
+            Multimodal.syntheticWavs(spread(t(s, d, "documents")))))
         .select("media_id", "sample_rate", "n_channels", "n_frames",
           "sample_sum", "decoded"))
         .orderBy("media_id"),
@@ -3515,7 +3493,7 @@ object PipelineQueries {
     // construction. fakeDecode now covers ONLY H.264-class codecs the
     // sandbox JDK cannot have.
     ("m_gif_frames",
-      (s, d) => fence(Multimodal.decodeGifFrames(
+      (s, d) => spread(Multimodal.decodeGifFrames(
           Multimodal.syntheticGifs(spread(t(s, d, "documents"))))
         .toDF()).orderBy("media_id", "frame_idx"),
       """WITH p AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 3 AS h,
@@ -3936,7 +3914,7 @@ object PipelineQueries {
     // supplementary-plane text the window CONTENTS differ by design; the
     // kernel's own surrogate handling is pinned separately by its spec.
     ("t_cdc_chunks",
-      (s, d) => TextStats.cdcBoundaryStats(t(s, d, "documents"), w = 16, maskBits = 6)
+      (s, d) => TextStats.cdcBoundaryStats(t(s, d, "documents"), w = 16)
         .orderBy("doc_id"),
       s"""WITH pw(k, p) AS (VALUES ${
             val m = (BigInt(1) << 61) - 1
@@ -4198,9 +4176,9 @@ object PipelineQueries {
     // that proof end-to-end against an independent engine, on top of
     // TextPipelineSpec's hand-computed pins.
     ("t_bpe_merges",
-      (s, d) => Bpe.trainMergesDf(t(s, d, "documents"), numMerges = 8, maxBatch = 4)
+      (s, d) => Bpe.trainMergesDf(t(s, d, "documents"))
         .orderBy("rank"),
-      s"""${bpeTrainCtes(8)}
+      s"""${bpeTrainCtes}
          | SELECT * FROM (
          |   ${(1 to 8).map(k =>
               s"""SELECT ${k - 1} AS "rank", l AS "left", r AS "right", l || r AS merged, CAST(total AS BIGINT) AS pair_count FROM m$k""")
@@ -4230,7 +4208,7 @@ object PipelineQueries {
             array_join(col("toks"), ",").as("tokens"))
           .orderBy("doc_id")
       },
-      s"""${bpeTrainCtes(8)},
+      s"""${bpeTrainCtes},
          | vt AS MATERIALIZED (
          |   SELECT word, string_split(trim(repr, '|'), '||') AS toks FROM v8),
          | dw AS (SELECT doc_id, i, words[i] AS word FROM (
@@ -4314,7 +4292,7 @@ object PipelineQueries {
     // two-level form because the bucket is a prefix of the ordering key.
     ("t_domain_mix",
       (s, d) => Sampling.tokenBudgetMix(t(s, d, "documents"),
-          idCol = "doc_id", domainCol = "source",
+          domainCol = "source",
           tokensCol = size(split(col("text"), " ")),
           budgets = Map("src0" -> 2000L, "src1" -> 5000L), defaultBudget = 10000L)
         .select("doc_id", "source", "n_tokens", "cum_tokens")
@@ -4384,12 +4362,11 @@ object PipelineQueries {
     ("sim_pq_trained",
       (s, d) => {
         val e = t(s, d, "embeddings")
-        val cbs = Similarity.trainPqCodebooks(e, numCodewords = 16,
-          numSubspaces = 8, rounds = 2)
+        val cbs = Similarity.trainPqCodebooks(e)
         Similarity.pqTopKWithCodebooks(e.filter(col("vec_id") < 20), e, k = 5, cbs)
           .orderBy("query_id", "rank")
       },
-      pqTrainedSql(rounds = 2)),
+      pqTrainedSql),
 
     // ---- IVF-PQ: coarse pruning + residual codes (the FAISS shape) ------
     // 4 coarse cells (first-4-vector centroids), nProbe=2; residual PQ
@@ -4565,7 +4542,7 @@ object PipelineQueries {
                 substring(col("fw"), 1, 1), expr("substr(fw, 3)")))
               .otherwise(col("text")))
           .drop("fw")
-        TextIndex.symspellCorrections(corrupted, "text", dictSize = 25)
+        TextIndex.symspellCorrections(corrupted)
           .orderBy("word", "suggestion")
       },
       """WITH src AS (SELECT doc_id, text,

@@ -66,7 +66,7 @@ object RelationalQueries {
     * depends on the cache. Dropped in finally.
     */
   private[queries] def pinnedDiamond(s: SparkSession, shared: DataFrame,
-      top: DataFrame, factName: String, what: String): DataFrame = {
+      top: DataFrame, what: String): DataFrame = {
     shared.persist()
     try {
       val dest = graft.ops.Scratch.dir("diamond").toString + s"/$what"
@@ -122,7 +122,7 @@ object RelationalQueries {
       val nodes = walk(qe.executedPlan)
       val factScans = nodes.count {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.rootPaths.exists(_.toString.contains(factName))
+          f.relation.location.rootPaths.exists(_.toString.contains("lineitem"))
         case _ => false
       }
       val cacheReads = nodes.count(
@@ -136,7 +136,7 @@ object RelationalQueries {
       require(factScans == 0 && cartesians == 0 &&
           (cacheReads >= 1 || provedEmpty),
         s"$what: a consumer bypassed the persisted diamond frame " +
-          s"($factName scans=$factScans, cache reads=$cacheReads, " +
+          s"(lineitem scans=$factScans, cache reads=$cacheReads, " +
           s"cartesians=$cartesians) — the fact would scan twice")
       s.read.parquet(dest)
     } finally shared.unpersist()
@@ -145,17 +145,17 @@ object RelationalQueries {
   /** The g_copurchase_pairs core (distinct basket-item pairs, basket-DEPTH
     * cap applied BEFORE pairing, support count + threshold).
     */
-  def copurchasePairs(lineitem: DataFrame, cap: Int, minSupport: Long): DataFrame = {
+  def copurchasePairs(lineitem: DataFrame): DataFrame = {
     val bp = lineitem
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"))
       .distinct()
     val capped = bp.withColumn("bsz", count(lit(1)).over(Window.partitionBy("okey")))
-      .filter(col("bsz") <= cap)
+      .filter(col("bsz") <= 15)
     capped.select(col("okey"), col("pkey").as("p1"))
       .join(capped.select(col("okey"), col("pkey").as("p2")), Seq("okey"))
       .filter(col("p1") < col("p2"))
       .groupBy("p1", "p2").agg(count(lit(1)).as("n_baskets"))
-      .filter(col("n_baskets") >= minSupport)
+      .filter(col("n_baskets") >= 2L)
   }
 
   val all: Seq[Entry] = Seq(
@@ -290,7 +290,7 @@ object RelationalQueries {
           .select(col("o_custkey").as("custkey"), col("o_totalprice"))
         val cust = t(s, d, "customer")
           .select(col("c_custkey").as("custkey"), col("c_nationkey"))
-        graft.ops.SkewOps.saltedJoin(orders, cust, Seq("custkey"), saltFactor = 8)
+        graft.ops.SkewOps.saltedJoin(orders, cust, Seq("custkey"))
           .groupBy(col("c_nationkey"))
           .agg(count(lit(1)).as("n_orders"),
             sum(round(col("o_totalprice") * 100).cast("long")).as("revenue_cents"))
@@ -338,7 +338,7 @@ object RelationalQueries {
     // scalar — no aggregation-order hazard. maxBlockRows exercises the
     // runtime block-size guard on the real data.
     ("j9_blocked_er",
-      (s, d) => graft.ops.SkewOps.sortFence(
+      (s, d) => graft.ops.SkewOps.spread(
           graft.ops.EntityResolution.blockedNamePairs(
             t(s, d, "part").select("p_partkey", "p_name", "p_brand"),
             blockCols = Seq("p_brand"), keyCol = "p_partkey", nameCol = "p_name",
@@ -855,7 +855,7 @@ object RelationalQueries {
     // histogram when the full shape is wanted; this row is the
     // decision-sized version.
     ("s15_key_skew_report",
-      (s, d) => graft.ops.SkewOps.keySkewReport(t(s, d, "events"), "user_id"),
+      (s, d) => graft.ops.SkewOps.keySkewReport(t(s, d, "events")),
       """WITH c AS (SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY 1),
         |  s AS (SELECT cnt, COUNT(*) AS freq FROM c GROUP BY 1),
         |  cum AS (SELECT cnt, freq,
@@ -978,7 +978,7 @@ object RelationalQueries {
           .withColumn("cents", col("cents") + 20000L)
           .withColumn("seq", lit(2L))
         graft.ops.ScdOps.buildHistory(
-            v0.unionByName(v1).unionByName(v2), "k", "seq", Seq("cents"))
+            v0.unionByName(v1).unionByName(v2), "k", Seq("cents"))
           .select(col("k"), col("cents"), col("valid_from"), col("valid_to"),
             col("is_current"))
           .orderBy("k", "valid_from")
@@ -1021,7 +1021,7 @@ object RelationalQueries {
           .withColumn("cents", col("cents") + 20000L)
           .withColumn("seq", lit(2L))
         val hist = graft.ops.ScdOps.buildHistory(
-            v0.unionByName(v1).unionByName(v2), "k", "seq", Seq("cents"))
+            v0.unionByName(v1).unionByName(v2), "k", Seq("cents"))
           .select(col("k"), col("valid_from").as("vseq"), col("cents"))
         val facts = t(s, d, "orders")
           .select(col("o_orderkey"), col("o_custkey").as("k"),
@@ -1450,7 +1450,7 @@ object RelationalQueries {
         .agg(sum(col("z_value")).as("z_sum"), count(lit(1)).as("n"))
         .orderBy("l_partkey"),
       s"""SELECT l_partkey,
-         |        CAST(SUM(${graft.ops.ZOrder.zValueSql("l_partkey", "l_suppkey", 21)}) AS BIGINT) AS z_sum,
+         |        CAST(SUM(${graft.ops.ZOrder.zValueSql}) AS BIGINT) AS z_sum,
          |        COUNT(*) AS n
          | FROM lineitem GROUP BY l_partkey ORDER BY l_partkey""".stripMargin),
 
@@ -2920,8 +2920,7 @@ object RelationalQueries {
             col("p_partkey"), col("p_name"), col("cost_c2"))
           .orderBy(desc("acct_c2"), col("s_name"), col("p_partkey"))
           .limit(100)
-        pinnedDiamond(s, offered, top, "lineitem",
-            "q2_min_cost_supplier")
+        pinnedDiamond(s, offered, top, "q2_min_cost_supplier")
           .orderBy(desc("acct_c2"), col("s_name"), col("p_partkey"))
       },
       """WITH catalog AS (SELECT l_partkey, l_suppkey,
@@ -3018,8 +3017,7 @@ object RelationalQueries {
         val top = vals.join(broadcast(thr))
           .filter(col("value_c2") > col("thr"))
           .select(col("p_partkey"), col("value_c2"))
-        pinnedDiamond(s, vals, top, "lineitem",
-            "q11_important_values")
+        pinnedDiamond(s, vals, top, "q11_important_values")
           .orderBy(desc("value_c2"), col("p_partkey"))
       },
       """WITH vals AS (SELECT l_partkey AS p_partkey,
@@ -3122,8 +3120,7 @@ object RelationalQueries {
             col("l_suppkey") === col("s_suppkey"))
           .select(col("s_suppkey"), col("s_name"), col("total_c4"))
         // bounded: only max-revenue ties survive the equality probe
-        pinnedDiamond(s, rev, top, "lineitem",
-            "q15_top_supplier")
+        pinnedDiamond(s, rev, top, "q15_top_supplier")
           .orderBy("s_suppkey")
       },
       """WITH rev AS (SELECT l_suppkey,
@@ -3202,8 +3199,7 @@ object RelationalQueries {
           .join(dominant, col("s_suppkey") === col("l_suppkey"), "left_semi")
           .select(col("s_name"),
             round(col("s_acctbal") * 100).cast("long").as("acct_c2"))
-        pinnedDiamond(s, qty99, top, "lineitem",
-            "q20_dominant_suppliers")
+        pinnedDiamond(s, qty99, top, "q20_dominant_suppliers")
           .orderBy("s_name")
       },
       """WITH qty99 AS (SELECT l_partkey, l_suppkey,
@@ -3240,7 +3236,7 @@ object RelationalQueries {
         // decile i boundary = value at 1-based rank ceil(i*n/10); n comes
         // off the selection op's own histogram — no extra count scan
         var ranks: Seq[Long] = Nil
-        val at = graft.ops.Selection.valuesAtRanks(s, cents, "c",
+        val at = graft.ops.Selection.valuesAtRanks(s, cents,
           n => { ranks = (1 to 9).map(i => (i * n + 9) / 10); ranks })
         at.join(broadcast(s.createDataFrame(
               ranks.zipWithIndex.map { case (k, i) => (k, i + 1L) })
@@ -3269,7 +3265,7 @@ object RelationalQueries {
     // hidden). Pair fan-out is then ≤ C(cap,2) per basket — linear in
     // baskets at any scale.
     ("g_copurchase_pairs",
-      (s, d) => copurchasePairs(t(s, d, "lineitem"), cap = 15, minSupport = 2)
+      (s, d) => copurchasePairs(t(s, d, "lineitem"))
         .orderBy("p1", "p2"),
       """WITH bp AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS pkey
         |            FROM lineitem),

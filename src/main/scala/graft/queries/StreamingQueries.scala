@@ -89,7 +89,7 @@ object StreamingQueries {
     SharedStores(s, "staged_events", d) {
       val base = java.nio.file.Files.createTempDirectory(stagedRoot, "events")
       val raw = TemporalOps.loadEvents(s, d)
-      val evTs = raw.withColumn("ts", TemporalOps.asTimestamp(raw, "ts")).drop("ts_us")
+      val evTs = raw.withColumn("ts", TemporalOps.asTimestamp(raw)).drop("ts_us")
       val cutUs = evTs.select(unix_micros(col("ts")).as("us"))
         .stat.approxQuantile("us", Array(0.5), 0.0)(0).toLong
       evTs.filter(unix_micros(col("ts")) <= cutUs).coalesce(4)
@@ -244,12 +244,11 @@ object StreamingQueries {
     * already follows). The converged state is the max-version dir.
     */
   private def foldVersioned(s: SparkSession, store: String, batchId: Long,
-                            cells: DataFrame, keyCols: Seq[String],
-                            cntCol: String): Unit =
+                            cells: DataFrame, keyCols: Seq[String]): Unit =
     foldVersionedWith(s, store, batchId) {
       case None => cells
       case Some(prior) => prior.unionByName(cells)
-        .groupBy(keyCols.map(col): _*).agg(sum(col(cntCol)).as(cntCol))
+        .groupBy(keyCols.map(col): _*).agg(sum(col("cnt")).as("cnt"))
     }
 
   /** General form of [[foldVersioned]] for non-additive folds (incremental
@@ -341,7 +340,7 @@ object StreamingQueries {
     // at epoch 0 would silently vanish from batch 1
     val docs = s.read.parquet(s"$d/documents.parquet")
       .withColumn("ts", timestamp_micros((col("doc_id") + lit(86400L)) * 1000000L))
-    replayStaged(s, docs, docs, "append")(build)
+    replayStaged(s, docs, docs)(build)
   }
 
   /** Stage two pre-built frames as consecutive micro-batches of a file
@@ -349,9 +348,9 @@ object StreamingQueries {
     * run `build` over the stream, return the memory sink.
     */
   private def replayStaged(s: SparkSession, b1: DataFrame, b2: DataFrame,
-                           mode: String, parts: Int = 8)
+                           parts: Int = 8)
                           (build: DataFrame => DataFrame): DataFrame =
-    replayBatches(s, Seq(b1, b2), mode, parts)(build)
+    replayBatches(s, Seq(b1, b2), parts)(build)
 
   /** The N-batch generalization of [[replayStaged]]: each frame becomes one
     * micro-batch, written only after every earlier batch is fully processed.
@@ -360,7 +359,7 @@ object StreamingQueries {
     * advances the watermark past the tail windows.
     */
   private def replayBatches(s: SparkSession, batches: Seq[DataFrame],
-                            mode: String, parts: Int = 8)
+                            parts: Int = 8)
                            (build: DataFrame => DataFrame): DataFrame = {
     require(batches.nonEmpty, "replayBatches: need at least one batch")
     val base = scratchDir("graft-stream-staged")
@@ -373,7 +372,7 @@ object StreamingQueries {
         val stream = s.readStream.schema(schema)
           .option("recursiveFileLookup", "true").parquet(in.toString)
         val nm = s"stream_oracle_${runSeq.incrementAndGet()}"
-        val q = build(stream).writeStream.outputMode(mode)
+        val q = build(stream).writeStream.outputMode("append")
           .option("checkpointLocation", base.resolve("ckpt").toString)
           .format("memory").queryName(nm).start()
         try {
@@ -434,7 +433,7 @@ object StreamingQueries {
   private def windowAggBuild(st: DataFrame): DataFrame =
     StreamingIngest.windowedEventCounts(
       st.withColumn("value", round(col("value") * 1000000L).cast("long")),
-      "1 hour", "1 hour", "10 minutes")
+      "1 hour")
 
   private def windowAggShape(sess: DataFrame): DataFrame = sess
     .select(unix_micros(col("win_start")).as("win_start_us"),
@@ -520,7 +519,7 @@ object StreamingQueries {
           val in = base.resolve("in")
           java.nio.file.Files.createDirectories(in)
           val raw = TemporalOps.loadEvents(s, d)
-          raw.withColumn("ts", TemporalOps.asTimestamp(raw, "ts")).drop("ts_us")
+          raw.withColumn("ts", TemporalOps.asTimestamp(raw)).drop("ts_us")
             .repartition(4).write.parquet(s"$in/all")
           val schema = s.read.parquet(s"$in/all").schema
           withStreamShuffle(s) {
@@ -616,7 +615,7 @@ object StreamingQueries {
       (s, d) => replayTwoBatches(s, d, "complete") { st =>
         StreamingIngest.windowedEventCounts(
           st.withColumn("value", round(col("value") * 1000000L).cast("long")),
-          "1 hour", "30 minutes", "10 minutes")
+          "30 minutes")
       }
         .select(unix_micros(col("win_start")).as("win_start_us"),
           col("event_type"), col("n").as("n_events"),
@@ -641,8 +640,7 @@ object StreamingQueries {
       (s, d) => {
         val sess = replayTwoBatches(s, d, "complete") { st =>
           StreamingIngest.streamingSessionStats(
-            st.withColumn("value", round(col("value") * 1000000L).cast("long")),
-            "30 minutes", "10 minutes")
+            st.withColumn("value", round(col("value") * 1000000L).cast("long")))
         }
         sess
           .withColumn("session_no", row_number().over(
@@ -687,7 +685,7 @@ object StreamingQueries {
         val sess = replayTwoBatches(s, d, "complete", parts = 0) { st =>
           StreamingIngest.streamingDynamicSessionStats(
             st.withColumn("value", round(col("value") * 1000000L).cast("long")),
-            gap, "10 minutes")
+            gap)
         }
         sess
           .withColumn("session_no", row_number().over(
@@ -761,12 +759,12 @@ object StreamingQueries {
       (s, d) => {
         val docsAll = s.read.parquet(s"$d/documents.parquet")
         val bloom = graft.llm.Dedup.buildBloom(
-          docsAll.filter(col("doc_id") % 20 === 0), n = 5, mBits = 16, numHashes = 4)
+          docsAll.filter(col("doc_id") % 20 === 0), n = 5, mBits = 16)
         val corpus = docsAll.filter(col("doc_id") % 20 =!= 0)
         val cut = corpus.stat.approxQuantile("doc_id", Array(0.5), 0.0)(0).toLong
         replayStaged(s,
             corpus.filter(col("doc_id") <= cut),
-            corpus.filter(col("doc_id") > cut), "append", parts = 0)(st =>
+            corpus.filter(col("doc_id") > cut), parts = 0)(st =>
           StreamingIngest.streamingDecontaminate(st, bloom))
           .select("doc_id", "source")
           .orderBy("doc_id")
@@ -816,7 +814,7 @@ object StreamingQueries {
             val q = StreamingIngest.startEntityMatchStream(stream,
               s"$base/store", s"$base/matches", s"$base/ckpt",
               blockCols = Seq("p_brand"), keyCol = "p_partkey",
-              nameCol = "p_name", minSim = 0.9)
+              nameCol = "p_name")
             try {
               q.processAllAvailable()
               part.filter(col("p_partkey") % 2 === 1).coalesce(4).write.parquet(s"$in/b2")
@@ -862,9 +860,7 @@ object StreamingQueries {
             val stream = s.readStream.schema(schema)
               .option("recursiveFileLookup", "true").parquet(in.toString)
             val q = StreamingIngest.startSortedErStream(stream,
-              s"$base/rows", s"$base/pairs", s"$base/touched", s"$base/ckpt",
-              blockCol = "p_brand", keyCol = "p_partkey",
-              nameCol = "p_name", minSim = 0.9, window = 10)
+              s"$base/rows", s"$base/pairs", s"$base/touched", s"$base/ckpt")
             try {
               q.processAllAvailable()
               part.filter(col("p_partkey") % 2 === 1).coalesce(4).write.parquet(s"$in/b2")
@@ -975,11 +971,11 @@ object StreamingQueries {
         val li = s.read.parquet(s"$d/lineitem.parquet")
         val cells = replayLinked(s, stagedLineitem(s, d), "complete", parts = 0) { st =>
           graft.ops.Sketches.countMinCells(
-            st.select(col("l_suppkey").as("key")), "key", 4, 32)
+            st.select(col("l_suppkey").as("key")), 4, 32)
         }
         val probes = li.filter(col("l_suppkey") <= 25)
           .groupBy(col("l_suppkey").as("key")).agg(count(lit(1)).as("n_exact"))
-        graft.ops.Sketches.countMinLookup(cells, probes, "key", 4, 32)
+        graft.ops.Sketches.countMinLookup(cells, probes, 4, 32)
           .select(col("key").cast("long").as("key"), col("n_exact"),
             col("cms_est"), (col("cms_est") >= col("n_exact")).as("over_ok"))
           .orderBy("key")
@@ -1017,10 +1013,10 @@ object StreamingQueries {
                              batchId: Long) =>
               if (!batch.isEmpty) {
                 val cells = graft.ops.Sketches.dyadicCells(
-                  GraphQueries.quantileVals(batch.toDF()), "u",
+                  GraphQueries.quantileVals(batch.toDF()),
                   GraphQueries.QBits, GraphQueries.QDepth, GraphQueries.QWidth)
                 foldVersioned(s, store, batchId, cells,
-                  Seq("lvl", "d", "w"), "cnt")
+                  Seq("lvl", "d", "w"))
               }
             }
             .start()
@@ -1067,10 +1063,10 @@ object StreamingQueries {
               if (!batch.isEmpty) {
                 val vals = GraphQueries.doubleQuantileVals(batch.toDF(), bounds)
                   .select(col("u"))
-                val cells = graft.ops.Sketches.dyadicCells(vals, "u",
+                val cells = graft.ops.Sketches.dyadicCells(vals,
                   GraphQueries.QBits, GraphQueries.QDepth, GraphQueries.QWidth)
                 foldVersioned(s, store, batchId, cells,
-                  Seq("lvl", "d", "w"), "cnt")
+                  Seq("lvl", "d", "w"))
               }
             }
             .start()
@@ -1288,7 +1284,7 @@ object StreamingQueries {
                 batch.toDF().select("doc_id", "text")
                   .write.mode("overwrite").parquet(s"$dstore/batch=$batchId")
                 val cells = graft.llm.Dedup.spanGramCounts(batch.toDF(), k)
-                foldVersioned(s, gstore, batchId, cells, Seq("gram"), "cnt")
+                foldVersioned(s, gstore, batchId, cells, Seq("gram"))
               }
             }
             .start()
@@ -1359,13 +1355,13 @@ object StreamingQueries {
           .agg(countDistinct(col("l_orderkey")).as("n_exact"))
         val flags = perGrp.join(exact, Seq("grp"))
           .select(col("grp"), col("n_exact"),
-            graft.ops.Sketches.kmvEstimate("bk", k).as("kmv_est"))
+            graft.ops.Sketches.kmvEstimate(k).as("kmv_est"))
         val directAll = graft.ops.Sketches.kmvSketch(
           li.select(col("l_orderkey")), "l_orderkey", Nil, k)
           .select(col("n_exact"),
-            graft.ops.Sketches.kmvEstimate("bk", k).as("kmv_est"))
+            graft.ops.Sketches.kmvEstimate(k).as("kmv_est"))
         val mergedEst = graft.ops.Sketches.kmvMerge(perGrp, k)
-          .select(graft.ops.Sketches.kmvEstimate("bk", k).as("m_est"))
+          .select(graft.ops.Sketches.kmvEstimate(k).as("m_est"))
         val all = directAll.crossJoin(broadcast(mergedEst))
           .select(lit("__ALL__").as("grp"), col("n_exact"),
             graft.ops.Bounded.guard(col("kmv_est"),
@@ -1563,7 +1559,7 @@ object StreamingQueries {
           .withColumn("cents", col("cents") + 20000L)
           .withColumn("seq", lit(2L))
         val hist = graft.ops.ScdOps.buildHistory(
-            v0.unionByName(v1).unionByName(v2), "hk", "seq", Seq("cents"))
+            v0.unionByName(v1).unionByName(v2), "hk", Seq("cents"))
           .select(col("hk"), col("valid_from"), col("valid_to"), col("cents"))
         val staged = stagedOrders(s, d)
         replayLinked(s, staged, "append") { stream =>

@@ -145,7 +145,7 @@ object TemporalQueries {
     TemporalOps.gapFillDaily(
       ev.filter(col("event_type") === "purchase")
         .withColumn("cents", round(col("value") * 100).cast("long")),
-      "user_id", "ts_us", "cents")
+      "user_id")
 
   /** The clicks-into-purchase-windows interval join of the
     * ts_interval_join registry entry. Input events must carry `ts_us`
@@ -169,7 +169,7 @@ object TemporalQueries {
     * Input: (user_id, event_id, event_type, tsn).
     */
   def pathNgramsTop(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sess = TemporalOps.sessionize(e, keyCol = "user_id", tsCol = "tsn",
+    val sess = TemporalOps.sessionize(e, keyCol = "user_id",
       gap = 1800000000L, tieCol = "event_id")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"), col("session_no"))
@@ -241,9 +241,9 @@ object TemporalQueries {
       (s, d) => {
         val e = TemporalOps.loadEvents(s, d)
           .select(col("user_id"), col("event_id"), col("ts_us").as("tsn"))
-        val sess = TemporalOps.sessionize(e, keyCol = "user_id", tsCol = "tsn",
+        val sess = TemporalOps.sessionize(e, keyCol = "user_id",
           gap = 1800000000L, tieCol = "event_id")
-        TemporalOps.sessionStats(sess, "user_id", "tsn")
+        TemporalOps.sessionStats(sess, "user_id")
           .select(col("user_id"), col("session_no"), col("n_events"),
             col("start_ts").as("start_us"), col("end_ts").as("end_us"))
           .orderBy("user_id", "session_no")
@@ -274,7 +274,7 @@ object TemporalQueries {
       (s, d) => {
         val ev = TemporalOps.loadEvents(s, d)
         ev.groupBy(
-            window(TemporalOps.asTimestamp(ev, "ts"), "1 hour").as("win"),
+            window(TemporalOps.asTimestamp(ev), "1 hour").as("win"),
             col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(round(col("value") * 1000000L).cast("long")).as("value_micro"))
@@ -318,13 +318,13 @@ object TemporalQueries {
           .select(col("user_id"), col("ts_us").as("tsn"), col("ts_us").as("purch_v"))
         val step1 = TemporalOps.asofJoinForward(
             signups.withColumn("tsn", col("signup_ts")), clicks,
-            keyCol = "user_id", tsCol = "tsn", valueCol = "click_v",
+            keyCol = "user_id", valueCol = "click_v",
             asOfCol = "click_ts", rightTieCol = "click_v")
           .drop("tsn")
         val converted = step1.filter(col("click_ts").isNotNull)
         val step2 = TemporalOps.asofJoinForward(
             converted.withColumn("tsn", col("click_ts")), purchases,
-            keyCol = "user_id", tsCol = "tsn", valueCol = "purch_v",
+            keyCol = "user_id", valueCol = "purch_v",
             asOfCol = "purchase_ts", rightTieCol = "purch_v")
           .drop("tsn")
         step2.unionByName(
@@ -402,8 +402,7 @@ object TemporalQueries {
         val ev = TemporalOps.loadEvents(s, d)
           .select(concat(col("user_id"), lit("#"), col("event_type")).as("k"),
             col("event_id"), col("ts_us").as("tsn"))
-        TemporalOps.sessionize(ev, keyCol = "k", tsCol = "tsn",
-            gap = 10000000L, tieCol = "event_id")
+        TemporalOps.sessionize(ev, keyCol = "k", gap = 10000000L, tieCol = "event_id")
           .groupBy(col("k"), col("session_no"))
           .agg(min(struct(col("tsn"), col("event_id"))).as("first"))
           .select(col("k"), col("session_no"), col("first.event_id").as("kept_event_id"))
@@ -483,7 +482,7 @@ object TemporalQueries {
           .filter(col("event_type") === "click")
           .select(col("user_id"), col("event_id"), col("ts_us").as("st"),
             (col("ts_us") + 300000000L).as("en"))
-        TemporalOps.mergeIntervals(iv, "user_id", "st", "en", "event_id")
+        TemporalOps.mergeIntervals(iv, "user_id", "event_id")
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_merged"),
             sum(col("me") - col("ms")).as("covered_us"))
@@ -971,7 +970,7 @@ object TemporalQueries {
           .filter(col("event_type") === "click")
           .select(col("user_id"), col("event_id"), col("ts_us").as("st"),
             (col("ts_us") + 300000000L).as("en"))
-        TemporalOps.coverageGaps(iv, "user_id", "st", "en", "event_id")
+        TemporalOps.coverageGaps(iv, "user_id", "event_id")
           .orderBy("user_id")
       },
       """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS st,

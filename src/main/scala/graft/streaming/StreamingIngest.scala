@@ -57,14 +57,14 @@ object StreamingIngest {
 
   /** Event-time windowed aggregation with a watermark — the generalized
     * streaming surface (SURVEY §2.7): tumbling/sliding window counts + sums
-    * per event type. `events` must carry a timestamp column `ts`; late data
-    * beyond `watermark` is dropped, bounding state.
+    * per event type over 1-hour windows. `events` must carry a timestamp
+    * column `ts`; late data beyond the 10-minute watermark is dropped,
+    * bounding state.
     */
-  def windowedEventCounts(events: DataFrame, windowDur: String, slide: String,
-                          watermark: String): DataFrame =
+  def windowedEventCounts(events: DataFrame, slide: String): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur, slide), col("event_type"))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour", slide), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
       .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
         col("event_type"), col("n"), col("total"))
@@ -87,7 +87,7 @@ object StreamingIngest {
   /** Streaming gap-based sessionization — the incremental analog of
     * [[graft.ops.TemporalOps.sessionize]], via Spark's native
     * `session_window`: a session extends while consecutive events are less
-    * than `gap` apart; the watermark closes sessions and EVICTS their state,
+    * than `gap` = 30 minutes apart; the 10-minute watermark closes sessions and EVICTS their state,
     * so a continuously ingesting pipeline holds only open sessions, not the
     * full history. Emits one row per closed/updated session:
     * (key, start_ts = first event, n_events, sum_value).
@@ -95,10 +95,10 @@ object StreamingIngest {
     * `diff < gap`, the batch operator at `diff <= gap` — identical for every
     * gap that doesn't exactly equal an inter-event delta.
     */
-  def streamingSessionStats(events: DataFrame, gap: String, watermark: String): DataFrame =
+  def streamingSessionStats(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
       .select(col("user_id"), col("session_window.start").as("start_ts"),
         col("n_events"), col("sum_value"))
@@ -113,10 +113,9 @@ object StreamingIngest {
     * replays.
     */
   def streamingDynamicSessionStats(events: DataFrame,
-                                   gapExpr: org.apache.spark.sql.Column,
-                                   watermark: String): DataFrame =
+                                   gapExpr: org.apache.spark.sql.Column): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), gapExpr), col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
       .select(col("user_id"), col("session_window.start").as("start_ts"),
@@ -205,8 +204,8 @@ object StreamingIngest {
   }
 
   /** Continuous entity resolution: every micro-batch of incoming entities
-    * (a) probes the PERSISTED reference store for fuzzy matches inside its
-    * blocking keys and (b) becomes part of that store for later batches —
+    * (a) probes the PERSISTED reference store for fuzzy matches
+    * (Jaro-Winkler ≥ 0.9) inside its blocking keys and (b) becomes part of that store for later batches —
     * the near-dup candidate loop ([[startNearDupCandidateStream]]) with
     * the LSH sketch replaced by the blocking-join + Jaro-Winkler verify
     * tier ([[graft.ops.EntityResolution]]). Same store discipline: the
@@ -223,12 +222,12 @@ object StreamingIngest {
   def startEntityMatchStream(entities: DataFrame, refStoreDir: String,
                              matchesDir: String, checkpointDir: String,
                              blockCols: Seq[String], keyCol: String,
-                             nameCol: String, minSim: Double): StreamingQuery =
+                             nameCol: String): StreamingQuery =
     entities.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processEntityMatchBatch(batch, batchId, refStoreDir, matchesDir,
-          blockCols, keyCol, nameCol, minSim)
+          blockCols, keyCol, nameCol)
       }
       .start()
 
@@ -238,7 +237,7 @@ object StreamingIngest {
   private[graft] def processEntityMatchBatch(batch: DataFrame, batchId: Long,
                                              refStoreDir: String, matchesDir: String,
                                              blockCols: Seq[String], keyCol: String,
-                                             nameCol: String, minSim: Double): Unit = {
+                                             nameCol: String): Unit = {
     val spark = batch.sparkSession
     val inc = batch
       .select((blockCols :+ keyCol :+ nameCol).map(col): _*)
@@ -265,7 +264,7 @@ object StreamingIngest {
           ref.join(in, blockCols)
             .withColumn("sim",
               graft.functions.JaroWinkler.jaroWinkler(col("name_ref"), col("name_in")))
-            .filter(col("sim") >= minSim)
+            .filter(col("sim") >= 0.9)
         } else {
           val empty = inc.limit(0)
           empty.select(blockCols.map(col) :+
@@ -294,17 +293,17 @@ object StreamingIngest {
     * over the full corpus; per-batch work is Σ|touched block| · window —
     * bounded, because SNM exists for FIXED-CARDINALITY blocking keys
     * (each block re-pairs in linear time, and only when it changes).
+    * Blocks are `p_brand`, keys `p_partkey`, names `p_name`; pairs need
+    * Jaro-Winkler ≥ 0.9 within a window of 10.
     */
   def startSortedErStream(entities: DataFrame, rowStoreDir: String,
                           pairsDir: String, manifestDir: String,
-                          checkpointDir: String, blockCol: String,
-                          keyCol: String, nameCol: String, minSim: Double,
-                          window: Int): StreamingQuery =
+                          checkpointDir: String): StreamingQuery =
     entities.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processSortedErBatch(batch, batchId, rowStoreDir, pairsDir,
-          manifestDir, blockCol, keyCol, nameCol, minSim, window)
+          manifestDir, "p_brand", "p_partkey", "p_name", 0.9, 10)
       }
       .start()
 
@@ -457,7 +456,7 @@ object StreamingIngest {
     val typed = events.select(
       col("user_id").cast("long").as("user_id"),
       col("event_id").cast("long").as("event_id"),
-      graft.ops.TemporalOps.asTimestamp(events, "ts").as("ts"),
+      graft.ops.TemporalOps.asTimestamp(events).as("ts"),
       col("event_type").cast("string").as("event_type"))
     val purchases = typed.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
@@ -496,7 +495,7 @@ object StreamingIngest {
     val typed = events.select(
       col("user_id").cast("long").as("user_id"),
       col("event_id").cast("long").as("event_id"),
-      graft.ops.TemporalOps.asTimestamp(events, "ts").as("ts"),
+      graft.ops.TemporalOps.asTimestamp(events).as("ts"),
       col("event_type").cast("string").as("event_type"))
     val purchases = typed.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
@@ -551,7 +550,7 @@ object StreamingIngest {
     val typed = events.select(
         col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
-        unix_micros(graft.ops.TemporalOps.asTimestamp(events, "ts")).as("ts_us"),
+        unix_micros(graft.ops.TemporalOps.asTimestamp(events)).as("ts_us"),
         col("event_type").cast("string").as("event_type"),
         col("value").cast("double").as("value"))
       .na.drop(Seq("user_id", "event_id", "ts_us"))
@@ -588,7 +587,8 @@ object StreamingIngest {
 
   /** Streaming first/last-touch attribution through a persisted touch
     * store — the continuous-marketing-pipeline twin of the batch
-    * `ts_attribution` window pass. Each micro-batch: the batch's touch
+    * `ts_attribution` window pass (touches are click/view events within
+    * 7 days before a purchase). Each micro-batch: the batch's touch
     * events land in `touchStoreDir/batch=<n>`; the batch's purchases are
     * BROADCAST against the accumulated store (plus the batch's own
     * earlier touches) and aggregated per purchase — the store is
@@ -609,8 +609,7 @@ object StreamingIngest {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processAttributionBatch(batch, batchId, touchStoreDir, attribDir,
-          Seq("click", "view"), "purchase", 604800000000L)
+        processAttributionBatch(batch, batchId, touchStoreDir, attribDir)
       }
       .start()
 
@@ -619,14 +618,12 @@ object StreamingIngest {
     * (`event_id`, `user_id`, `event_type`, `ts_us`).
     */
   private[graft] def processAttributionBatch(batch: DataFrame, batchId: Long,
-                                             touchStoreDir: String, attribDir: String,
-                                             touchTypes: Seq[String], purchaseType: String,
-                                             lookbackUs: Long): Unit = {
+                                             touchStoreDir: String, attribDir: String): Unit = {
     val spark = batch.sparkSession
     val inc = batch.select("event_id", "user_id", "event_type", "ts_us")
       .localCheckpoint(true)
     try {
-      val incTouches = inc.filter(col("event_type").isin(touchTypes: _*))
+      val incTouches = inc.filter(col("event_type").isin("click", "view"))
       val store = new org.apache.hadoop.fs.Path(touchStoreDir)
       val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val pastBatches = if (fs.exists(store)) {
@@ -639,13 +636,13 @@ object StreamingIngest {
         if (pastBatches.nonEmpty)
           spark.read.parquet(pastBatches: _*).unionByName(incTouches)
         else incTouches
-      val purchases = inc.filter(col("event_type") === purchaseType)
+      val purchases = inc.filter(col("event_type") === "purchase")
       val p = broadcast(purchases.select(col("event_id").as("p_id"),
         col("user_id").as("p_user"), col("ts_us").as("p_ts")))
       val touchStruct = struct(col("ts_us"), col("event_id"), col("event_type"))
       val agg = touches.join(p,
           col("user_id") === col("p_user") &&
-            col("ts_us") < col("p_ts") && col("ts_us") >= col("p_ts") - lookbackUs)
+            col("ts_us") < col("p_ts") && col("ts_us") >= col("p_ts") - 604800000000L)
         .groupBy(col("p_id"))
         .agg(max(touchStruct).as("last_s"), min(touchStruct).as("first_s"),
           count(lit(1)).as("n"))

@@ -708,7 +708,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val starts = Seq(0L, 1L, 2L, 3L).map(i => (i, i)).toDF("walk_id", "start")
     val adj = Map(0L -> Set(1L, 2L), 1L -> Set(2L, 3L), 2L -> Set(3L, 9L),
       3L -> Set(0L))
-    val got = graft.ops.GraphTraversal.randomWalks(edges, starts, steps = 3)
+    val got = graft.ops.GraphTraversal.randomWalks(edges, starts)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     assert(got.nonEmpty && got.length <= 4) // at most one row per start
@@ -719,7 +719,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
     // determinism: a different physical layout yields byte-identical walks
     val re = graft.ops.GraphTraversal.randomWalks(
-        edges.repartition(7, col("dst")), starts.repartition(3), steps = 3)
+        edges.repartition(7, col("dst")), starts.repartition(3))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     assert(re.sorted.toSeq == got.sorted.toSeq)
@@ -758,7 +758,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(nc == Map(0 -> 3L, 1 -> 6L, 2 -> 9L, 3 -> 9L))
     // DataSketches HLL stores small sets losslessly: HyperBall is exact here
-    val hb = graft.ops.GraphTraversal.hyperBall(path, maxT = 4, lgK = 12)
+    val hb = graft.ops.GraphTraversal.hyperBall(path, maxT = 4)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert((0 to 4).forall(t => hb(t) == nf(t)), hb.toString)
   }
@@ -823,8 +823,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
     val starts = Seq((0L, 0L), (1L, 1L), (2L, 2L), (3L, 3L)).toDF("walk_id", "start")
     val got = graft.ops.GraphTraversal.node2vecWalks(
-        edges.toDF("src", "dst"), starts, steps = 3,
-        wReturn = 2L, wCommon = 4L, wFar = 1L)
+        edges.toDF("src", "dst"), starts, wReturn = 2L, wCommon = 4L)
       .collect().map(r => r.getLong(0) -> (0 to 3).map(i => r.getLong(i + 1))).toMap
     val want = Seq(0L, 1L, 2L, 3L)
       .flatMap(id => replay(id, 3, 2L, 4L, 1L).map(id -> _)).toMap
@@ -834,7 +833,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // return weight at r < wReturn for all md5 draws under tot < 2^32)
     val ret = graft.ops.GraphTraversal.node2vecWalks(
         edges.toDF("src", "dst"), Seq((0L, 0L)).toDF("walk_id", "start"),
-        steps = 3, wReturn = 1000000000L, wCommon = 1L, wFar = 1L)
+        wReturn = 1000000000L, wCommon = 1L)
       .collect()(0)
     // columns: (walk_id, v0, v1, v2, v3) — v2 must return to v0's value 0,
     // v3 back to v1
@@ -876,7 +875,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         .map { case (j, xs) => (j, xs.map(_._2).max) }
     } yield (t, v, j, rs)).toSet
     val got = graft.ops.GraphTraversal.hyperBallExplicit(
-        edges.toDF("src", "dst"), maxT = maxT, lgK = 4)
+        edges.toDF("src", "dst"), maxT = maxT)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
     assert(got == expected, s"got=${got.size} expected=${expected.size}")

@@ -156,7 +156,7 @@ class GraphOpsSpec extends AnyFunSuite {
       (6L, None)).toDF("key", "v")
     val newSnap = Seq((1L, Some("a")), (2L, Some("x")), (3L, None), (5L, Some("e")),
       (6L, None)).toDF("key", "v")
-    val got = graft.ops.GraphOps.snapshotDiff(oldSnap, newSnap, Seq("key"), Seq("v"))
+    val got = graft.ops.GraphOps.snapshotDiff(oldSnap, newSnap, Seq("v"))
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(got == Map(
       1L -> "unchanged",

@@ -93,7 +93,7 @@ class LlmOpsSpec extends AnyFunSuite {
       3L -> "q r s t u v")                      // disjoint from 1 -> est 0.0
     val sigs = Dedup.minhashSignatures(Dedup.wordShingles(d, 3), 12)
     val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
-    val est = Dedup.estimateJaccard(sigs, pairs, 12)
+    val est = Dedup.estimateJaccard(sigs, pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     assert(est((1L, 2L)) == 1.0)
     assert(est((1L, 3L)) == 0.0)
@@ -106,14 +106,14 @@ class LlmOpsSpec extends AnyFunSuite {
     val sh = Dedup.wordShingles(many, 3)
     val exact = Dedup.jaccardPairs(sh, 0.0).select("id_a", "id_b", "jaccard")
     val sigs2 = Dedup.minhashSignatures(sh, 12)
-    val joined = Dedup.estimateJaccard(sigs2, exact.select("id_a", "id_b"), 12)
+    val joined = Dedup.estimateJaccard(sigs2, exact.select("id_a", "id_b"))
       .join(exact, Seq("id_a", "id_b"))
       .select(avg(abs(col("est_jaccard") - col("jaccard"))))
       .head.getDouble(0)
     assert(joined < 2.0 / math.sqrt(12), s"mean |est - exact| too high: $joined")
     // a pair referencing an id with no signature surfaces as NULL, not a drop
     val withGhost = Seq((1L, 2L), (1L, 999L)).toDF("id_a", "id_b")
-    val ghost = Dedup.estimateJaccard(sigs, withGhost, 12).collect()
+    val ghost = Dedup.estimateJaccard(sigs, withGhost).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.isNullAt(3)).toMap
     assert(ghost.size == 2 && !ghost((1L, 2L)) && ghost((1L, 999L)))
   }
@@ -331,8 +331,7 @@ class LlmOpsSpec extends AnyFunSuite {
       2L -> "alpha beta gamma delta epsilon zeta eta theta",
       3L -> "alpha beta gamma delta epsilon zeta eta iota",
       4L -> "zz yy xx ww vv uu tt ss")
-    val got = Dedup.simhashNearDupPairs(d, bits = 32, nBands = 4,
-        maxHamming = 3, maxBucket = 64)
+    val got = Dedup.simhashNearDupPairs(d, maxHamming = 3, maxBucket = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     // identical texts share the full 32-bit signature
     assert(got.exists { case (a, b, h) => a == 1L && b == 2L && h == 0 })
@@ -348,7 +347,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(Dedup.simhashNearDupPairs(d, maxBucket = 0).isEmpty)
     // completeness precondition is enforced, not silently violated
     assertThrows[IllegalArgumentException](
-      Dedup.simhashNearDupPairs(d, nBands = 4, maxHamming = 4))
+      Dedup.simhashNearDupPairs(d, maxHamming = 4))
   }
 
   // --------------------------------------------------------- similarity
@@ -398,7 +397,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val media = graft.llm.Multimodal.syntheticWavs(
       Seq(3L, 7L).toDF("doc_id"))
     val got = graft.llm.Multimodal.extractAudioFeatures(
-        graft.llm.Multimodal.decimateAudio(media, 2))
+        graft.llm.Multimodal.decimateAudio(media))
       .collect().map(a => a.media_id -> ((a.sample_rate, a.n_frames, a.sample_sum)))
       .toMap
     // reference: sample i of doc d is ((d*31 + i*7) % 65536) - 32768,
@@ -696,7 +695,7 @@ class LlmOpsSpec extends AnyFunSuite {
       0L -> Seq.fill(64)(0.25f),
       1L -> Seq.fill(64)(0.25f),
       2L -> (Seq.fill(32)(1f) ++ Seq.fill(32)(-1f)))
-    val pairs = Similarity.cosineDupPairs(v, tau = 0.99, bands = 2, planesPerBand = 4)
+    val pairs = Similarity.cosineDupPairs(v, tau = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSet == Set((0L, 1L)))
   }
@@ -708,7 +707,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val mk = (base: Float, id: Long) =>
       (id, Seq.tabulate(64)(d => base + 0.0001f * ((id + d) % 5)))
     val v = vecs(((0L until 6L).map(i => mk(0.4f, i)) ++ (6L until 12L).map(i => mk(-0.4f, i))): _*)
-    val banded = Similarity.cosineDupPairs(v, tau = 0.9, bands = 2, planesPerBand = 4)
+    val banded = Similarity.cosineDupPairs(v, tau = 0.9)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // within-cluster pairs are near-duplicates and must all be found
     val expected = (for (a <- 0L until 6L; b <- a + 1 until 6L) yield (a, b)).toSet ++
@@ -1135,7 +1134,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val zsh = Dedup.wordShingles(zipf, 3)
     val (zv, zp, zmed, zp99) = Dedup.dfSkewStats(zsh)
     assert(zmed == 1L && zp99 == 31L, s"fixture drifted: median=$zmed p99=$zp99")
-    val zr = Dedup.prefixFilterPairsAuto(zsh, 70)
+    val zr = Dedup.prefixFilterPairsAuto(zsh)
     assert(zr.select("route").distinct().collect().map(_.getString(0)).toSeq == Seq("prefix_exact"))
     // the gated output matches the direct exact tier, route column aside
     val zdirect = Dedup.prefixFilterPairs(zsh, 70)
@@ -1152,7 +1151,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val (uv, up, umed, up99) = Dedup.dfSkewStats(ush)
     assert(up99.toDouble / umed < 4.0 && up.toDouble / uv > 8.0,
       s"fixture drifted: v=$uv p=$up med=$umed p99=$up99")
-    val ur = Dedup.prefixFilterPairsAuto(ush, 70, maxDF = 1000L)
+    val ur = Dedup.prefixFilterPairsAuto(ush)
     assert(ur.select("route").distinct().collect().map(_.getString(0)).toSeq == Seq("maxdf_capped"))
     // with maxDF above every df the capped route IS exact jaccard — check
     // against the all-pairs truth on the same frame
@@ -1452,7 +1451,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("resizeImages: real NN resample, position-exact pixels, BMP roundtrip") {
     val id = 9L // source 8x3 (w=4+9%5=8, h=3+9%3=3)
     val rows = Multimodal.syntheticBmps(docs(id -> "x"))
-    val out = Multimodal.resizeImages(rows, 3, 2).collect()(0)
+    val out = Multimodal.resizeImages(rows, 3).collect()(0)
     assert(out.width == 3 && out.height == 2 && out.mime == "image/bmp")
     // decode the re-encoded BMP through the real path and check EVERY
     // pixel equals the named source pixel of the formula image
@@ -1468,7 +1467,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // non-decodable payload: deterministic byte-truncate fallback, no throw
     val junk = rows.map(r => r.copy(bytes = Array[Byte](1, 2, 3, 4, 5)))(
       org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val fb = Multimodal.resizeImages(junk, 2, 2).collect()(0)
+    val fb = Multimodal.resizeImages(junk, 2).collect()(0)
     assert(fb.bytes.toSeq == Seq[Byte](1, 2, 3, 4) && fb.width == 2)
   }
 
@@ -1605,7 +1604,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val n = (40 + id % 25).toInt // 57 samples -> windows of 16,16,16,9
     def sample(i: Int): Long = ((id * 31 + i * 7) % 65536) - 32768
     val got = Multimodal.audioEnergyWindows(
-        Multimodal.syntheticWavs(docs(id -> "x")), 16)
+        Multimodal.syntheticWavs(docs(id -> "x")))
       .collect().map(w => (w.win_idx, w.n_samples, w.energy, w.peak)).sortBy(_._1)
     val want = (0 until n).map(i => (i / 16, sample(i)))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -1616,7 +1615,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // corrupt payloads emit nothing (sentinels are extractAudioFeatures' job)
     assert(Multimodal.audioEnergyWindows(
       Multimodal.syntheticWavs(docs(7L -> "x")).map(r =>
-        r.copy(bytes = r.bytes.take(10))), 16).isEmpty)
+        r.copy(bytes = r.bytes.take(10)))).isEmpty)
   }
 
   test("MP4 box walk parses the hand-assembled container to the formula dims") {
@@ -1697,7 +1696,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(gated.isEmpty)
     // the pigeonhole precondition is enforced, not assumed
     intercept[IllegalArgumentException] {
-      Multimodal.aHashNearDupPairs(bmpRows(Seq(1L -> 1L)), nBands = 2, maxHamming = 2)
+      Multimodal.aHashNearDupPairs(bmpRows(Seq(1L -> 1L)), nBands = 2)
     }
   }
 
@@ -1884,11 +1883,11 @@ class LlmOpsSpec extends AnyFunSuite {
         .agg(org.apache.spark.sql.functions.avg("recall"))
         .collect()(0).getDouble(0)
     val prefix = Similarity.collectPqCodebooks(e, 16, 8)
-    val trained = Similarity.trainPqCodebooks(e, 16, 8, rounds = 2)
+    val trained = Similarity.trainPqCodebooks(e)
     assert(trained != prefix, "training did not move the codebooks at all")
     // order-freedom: sums are associative, argmin/truncation exact — the
     // trained books are a pure function of the vector multiset
-    val trained2 = Similarity.trainPqCodebooks(e.repartition(7), 16, 8, rounds = 2)
+    val trained2 = Similarity.trainPqCodebooks(e.repartition(7))
     assert(trained == trained2)
     val rp = recallOf(prefix)
     val rt = recallOf(trained)

@@ -258,6 +258,22 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("the CLI rejects an unknown flag or a fourth argument before any session starts") {
+    val out = Files.createTempDirectory("graft-pipeline-cli")
+    try {
+      val javaBin = new java.io.File(sys.props("java.home"), "bin/java").getPath
+      for (bad <- Seq(Seq("--lastwins"), Seq("macrophage\\.owl", "extra"))) {
+        val cmd = Seq(javaBin, "-Xmx512m", "-cp", sys.props("java.class.path"),
+          "graft.pipeline.OntologyPipeline", TestSpark.oboDir, out.toString) ++ bad
+        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+        val log = new String(p.getInputStream.readAllBytes(), "UTF-8")
+        assert(p.waitFor() != 0, log.takeRight(2000))
+        assert(log.contains("usage: OntologyPipeline"), log.takeRight(2000))
+        assert(!log.contains("Running Spark version"), log.takeRight(2000))
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+  }
+
   test("a phenotype pattern that matches no file writes no phenotypes dir") {
     withTempDir("graft-fused") { out =>
       OntologyPipeline.run(spark, TestSpark.oboDir, out.toString, phenotypePattern = "no-such-file\\.owl")

@@ -18,7 +18,7 @@ class ScdSpec extends AnyFunSuite {
       (1L, 0L, "A"), (1L, 5L, "A"), (1L, 9L, "B"),
       (2L, 3L, "X"))
       .toDF("k", "seq", "v")
-    val got = ScdOps.buildHistory(vs, "k", "seq", Seq("v"))
+    val got = ScdOps.buildHistory(vs, "k", Seq("v"))
       .select("k", "v", "valid_from", "valid_to", "is_current")
       .collect().map(r => (r.getLong(0), r.getString(1),
         r.getLong(2), if (r.isNullAt(3)) null else r.getLong(3), r.getBoolean(4)))
@@ -35,7 +35,7 @@ class ScdSpec extends AnyFunSuite {
       (1L, 0L, null.asInstanceOf[String]), (1L, 1L, null.asInstanceOf[String]),
       (1L, 2L, "A"), (1L, 3L, null.asInstanceOf[String]))
       .toDF("k", "seq", "v")
-    val got = ScdOps.buildHistory(vs, "k", "seq", Seq("v"))
+    val got = ScdOps.buildHistory(vs, "k", Seq("v"))
       .select("valid_from", "valid_to").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1)))
       .sortBy(_._1)
@@ -47,7 +47,7 @@ class ScdSpec extends AnyFunSuite {
     val vs = Seq(
       (1L, 0L, "A", 10L), (1L, 1L, "A", 10L), (1L, 2L, "A", 20L), (1L, 3L, "B", 20L))
       .toDF("k", "seq", "a", "b")
-    val got = ScdOps.buildHistory(vs, "k", "seq", Seq("a", "b"))
+    val got = ScdOps.buildHistory(vs, "k", Seq("a", "b"))
       .select("valid_from").collect().map(_.getLong(0)).sorted
     assert(got.toSeq == Seq(0L, 2L, 3L))
   }

@@ -25,9 +25,9 @@ class SketchSpec extends AnyFunSuite {
     // but the property we assert is only >=; exactness asserted where
     // the min cell holds exactly one key's mass
     val cells = Sketches.countMinMerge(
-      Sketches.countMinCells(rows, "key", 4, 512, Seq("g")))
+      Sketches.countMinCells(rows, 4, 512, Seq("g")))
     val probes = rows.select("key").distinct()
-    val est = Sketches.countMinLookup(cells, probes, "key", 4, 512)
+    val est = Sketches.countMinLookup(cells, probes, 4, 512)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est.keySet == exact.keySet)
     exact.foreach { case (k, n) => assert(est(k) >= n, s"under-estimate for $k") }
@@ -39,17 +39,17 @@ class SketchSpec extends AnyFunSuite {
   test("count-min merged-by-grain cells equal the direct whole-input cells") {
     val rows = keyed(140).toDF("key", "g").repartition(3)
     val merged = Sketches.countMinMerge(
-        Sketches.countMinCells(rows, "key", 3, 16, Seq("g")))
+        Sketches.countMinCells(rows, 3, 16, Seq("g")))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val direct = Sketches.countMinCells(rows, "key", 3, 16)
+    val direct = Sketches.countMinCells(rows, 3, 16)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(merged == direct)
   }
 
   test("count-min estimate of an absent key is zero") {
     val rows = keyed(20).toDF("key", "g")
-    val cells = Sketches.countMinCells(rows, "key", 4, 64)
-    val est = Sketches.countMinLookup(cells, Seq("nope").toDF("key"), "key", 4, 64)
+    val cells = Sketches.countMinCells(rows, 4, 64)
+    val est = Sketches.countMinLookup(cells, Seq("nope").toDF("key"), 4, 64)
       .collect()
     // an absent key can collide into occupied cells; the estimate is
     // >= 0 and both engines agree — here width 64 with 7 live keys
@@ -70,7 +70,7 @@ class SketchSpec extends AnyFunSuite {
     assert(nEx == Map("g0" -> 40L, "g1" -> 40L, "g2" -> 40L))
     // exact below k
     val small = Sketches.kmvSketch(rows.filter(col("id") < 9), "id", Seq("grp"), k)
-      .select(col("grp"), Sketches.kmvEstimate("bk", k).as("est"))
+      .select(col("grp"), Sketches.kmvEstimate(k).as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     small.foreach { case (g, est) =>
       val truth = rows.filter(col("grp") === g && col("id") < 9)
@@ -79,9 +79,9 @@ class SketchSpec extends AnyFunSuite {
     }
     // merged bottom-k == direct global bottom-k, hence equal estimates
     val direct = Sketches.kmvSketch(rows, "id", Nil, k)
-      .select(Sketches.kmvEstimate("bk", k).as("est")).head().getLong(0)
+      .select(Sketches.kmvEstimate(k).as("est")).head().getLong(0)
     val merged = Sketches.kmvMerge(perGrp, k)
-      .select(Sketches.kmvEstimate("bk", k).as("est")).head().getLong(0)
+      .select(Sketches.kmvEstimate(k).as("est")).head().getLong(0)
     assert(merged == direct)
     // the estimate is in a sane band around the truth (90 distinct)
     assert(direct > 30 && direct < 270, s"estimate far off: $direct")
@@ -92,7 +92,7 @@ class SketchSpec extends AnyFunSuite {
     val base = (0 until 500).map(i => ("x", i * 31 % 400))
     val ests = Seq(1, 3, 8).map { p =>
       Sketches.kmvSketch(base.toDF("grp", "id").repartition(p), "id", Seq("grp"), 32)
-        .select(Sketches.kmvEstimate("bk", 32).as("est")).head().getLong(0)
+        .select(Sketches.kmvEstimate(32).as("est")).head().getLong(0)
     }
     assert(ests.distinct.size == 1, s"partitioning changed the estimate: $ests")
   }
@@ -161,7 +161,7 @@ class SketchSpec extends AnyFunSuite {
     val expected = (0 until reps).map(sk => sk -> keys.map(sign(sk, _)).sum).toMap
     for (parts <- Seq(1, 4)) {
       val cells = Sketches.amsCells(
-          keys.toDF("key").repartition(parts), "key", reps)
+          keys.toDF("key").repartition(parts), reps)
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       assert(cells == expected, s"parts=$parts: $cells")
     }
@@ -178,9 +178,9 @@ class SketchSpec extends AnyFunSuite {
     def cellMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
     val merged = Sketches.dyadicMerge(
-      Sketches.dyadicCells(rows, "u", bits, depth, width, Seq("g")))
+      Sketches.dyadicCells(rows, bits, depth, width, Seq("g")))
     assert(cellMap(merged) ==
-      cellMap(Sketches.dyadicCells(rows.select("u"), "u", bits, depth, width)))
+      cellMap(Sketches.dyadicCells(rows.select("u"), bits, depth, width)))
     // ranks: never below exact (count-min one-sidedness — NOT monotone in
     // v: adjacent prefixes decompose through different levels whose
     // collision mass differs, a documented property of dyadic CM ranges),
@@ -197,7 +197,7 @@ class SketchSpec extends AnyFunSuite {
     assert(ranks((1L << bits) - 1) == vals.size.toLong)
     // a value outside the declared universe fails loudly, never hashes
     val oob = intercept[Exception] {
-      Sketches.dyadicCells(Seq(5000L).toDF("u"), "u", bits, depth, width).collect()
+      Sketches.dyadicCells(Seq(5000L).toDF("u"), bits, depth, width).collect()
     }
     assert(oob.getMessage.contains("universe") ||
       Option(oob.getCause).exists(_.getMessage.contains("universe")))

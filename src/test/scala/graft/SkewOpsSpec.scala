@@ -39,7 +39,7 @@ class SkewOpsSpec extends AnyFunSuite {
 
   test("salted join equals plain join") {
     val plain = skewed.join(dim, Seq("key"))
-    val salted = SkewOps.saltedJoin(skewed, dim, Seq("key"), saltFactor = 8)
+    val salted = SkewOps.saltedJoin(skewed, dim, Seq("key"))
     assert(salted.count() == plain.count())
     assert(salted.exceptAll(plain.select(salted.columns.toIndexedSeq.map(col): _*)).isEmpty)
   }

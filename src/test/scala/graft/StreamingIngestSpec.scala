@@ -237,7 +237,7 @@ class StreamingIngestSpec extends AnyFunSuite {
         .option("recursiveFileLookup", "true").parquet(in.toString)
       val q = StreamingIngest.startEntityMatchStream(stream,
         s"$base/store", s"$base/matches", s"$base/ckpt",
-        blockCols = Seq("country"), keyCol = "id", nameCol = "name", minSim = 0.9)
+        blockCols = Seq("country"), keyCol = "id", nameCol = "name")
       try {
         q.processAllAvailable()
         // batch 2: the US twin must match doc 1 through the STORE; the DE
@@ -253,7 +253,7 @@ class StreamingIngestSpec extends AnyFunSuite {
         // replay idempotence: re-running the SAME batchId overwrites, never
         // duplicates — matches and store are unchanged
         StreamingIngest.processEntityMatchBatch(b2, 1L,
-          s"$base/store", s"$base/matches", Seq("country"), "id", "name", 0.9)
+          s"$base/store", s"$base/matches", Seq("country"), "id", "name")
         val again = spark.read.parquet(s"$base/matches")
           .select("key_ref", "key_in").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -305,7 +305,7 @@ class StreamingIngestSpec extends AnyFunSuite {
             (203L, 3L, "click", 7 * hour))
           .toDF("event_id", "user_id", "event_type", "ts_us")
         StreamingIngest.processAttributionBatch(b2, 1L, s"$base/touches",
-          s"$base/attrib", Seq("click", "view"), "purchase", 604800000000L)
+          s"$base/attrib")
         assert(spark.read.parquet(s"$base/attrib").count() == 3)
         // 3 batch-1 touches + 1 batch-2 touch — replay did not duplicate
         assert(spark.read.parquet(s"$base/touches").count() == 4)
@@ -367,7 +367,7 @@ class StreamingIngestSpec extends AnyFunSuite {
       val schema = spark.read.parquet(s"$in/b1").schema
       val stream = spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(in.toString)
-      val q = graft.ops.Sketches.countMinCells(stream, "key", 3, 8)
+      val q = graft.ops.Sketches.countMinCells(stream, 3, 8)
         .writeStream.outputMode("complete").format("memory")
         .queryName("cms_stream").start()
       try {
@@ -377,7 +377,7 @@ class StreamingIngestSpec extends AnyFunSuite {
         val streamed = spark.table("cms_stream")
           .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
         val direct = graft.ops.Sketches.countMinCells(
-            (b1 ++ b2).toDF("key"), "key", 3, 8)
+            (b1 ++ b2).toDF("key"), 3, 8)
           .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
         assert(streamed == direct) // cell-sum merge across batches is exact
         // the state store is the grid itself: bounded by depth*width
@@ -489,7 +489,7 @@ class StreamingIngestSpec extends AnyFunSuite {
         .otherwise("15 minutes")
       val q = StreamingIngest.streamingDynamicSessionStats(
           spark.readStream.schema(schema).parquet(s"$base/in"),
-          gap, "10 minutes")
+          gap)
         .writeStream.outputMode("complete").format("memory")
         .queryName("dyn_sess").start()
       try {
@@ -513,10 +513,10 @@ class StreamingIngestSpec extends AnyFunSuite {
         base.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
       val schema = spark.read.parquet(base.toString).schema
       def asTs(df: org.apache.spark.sql.DataFrame) = // any grain -> µs timestamp
-        df.withColumn("ts", graft.ops.TemporalOps.asTimestamp(df, "ts"))
+        df.withColumn("ts", graft.ops.TemporalOps.asTimestamp(df))
 
       val stream = asTs(spark.readStream.schema(schema).parquet(base.toString))
-      val sess = StreamingIngest.streamingSessionStats(stream, "30 minutes", "10 minutes")
+      val sess = StreamingIngest.streamingSessionStats(stream)
       val q = sess.writeStream.outputMode("complete").format("memory")
         .queryName("sess_stats").start()
       try {
@@ -530,11 +530,11 @@ class StreamingIngestSpec extends AnyFunSuite {
         // integer µs
         val ev = spark.read.parquet(base.toString)
         val e = ev.select(col("user_id"), col("event_id"),
-          graft.ops.TemporalOps.epochMicros(ev, "ts").as("tsn"))
+          graft.ops.TemporalOps.epochMicros(ev).as("tsn"))
         val batch = graft.ops.TemporalOps.sessionStats(
-            graft.ops.TemporalOps.sessionize(e, "user_id", "tsn",
+            graft.ops.TemporalOps.sessionize(e, "user_id",
               gap = 1800000000L - 1, tieCol = "event_id"),
-            "user_id", "tsn")
+            "user_id")
           .select("user_id", "start_ts", "n_events") // start µs -> epoch ms
           .collect().map(r => (r.getLong(0), r.getLong(1) / 1000) -> r.getLong(2)).toMap
         assert(streamed == batch && streamed.nonEmpty)
@@ -550,7 +550,7 @@ class StreamingIngestSpec extends AnyFunSuite {
       // back to TIMESTAMP(NANOS) parquet must read as long, not throw
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      val evTs = raw.withColumn("ts", graft.ops.TemporalOps.asTimestamp(raw, "ts"))
+      val evTs = raw.withColumn("ts", graft.ops.TemporalOps.asTimestamp(raw))
       // split at the median event time: every right row a batch-1 left row
       // could match is itself in batch 1, so replay order respects the
       // operator's cross-batch event-time contract
@@ -595,10 +595,10 @@ class StreamingIngestSpec extends AnyFunSuite {
         base.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
       val schema = spark.read.parquet(base.toString).schema
       def asTs(df: org.apache.spark.sql.DataFrame) = // any grain -> timestamp
-        df.withColumn("ts", graft.ops.TemporalOps.asTimestamp(df, "ts"))
+        df.withColumn("ts", graft.ops.TemporalOps.asTimestamp(df))
 
       val stream = asTs(spark.readStream.schema(schema).parquet(base.toString))
-      val agg = StreamingIngest.windowedEventCounts(stream, "1 hour", "1 hour", "10 minutes")
+      val agg = StreamingIngest.windowedEventCounts(stream, "1 hour")
       val q = agg.writeStream.outputMode("complete").format("memory")
         .queryName("win_counts").start()
       try {

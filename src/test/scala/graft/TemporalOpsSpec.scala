@@ -67,11 +67,11 @@ class TemporalOpsSpec extends AnyFunSuite {
     // key 1: events at 0, 10, 1000, 1005 with gap 100 -> sessions 1,1,2,2
     val e = Seq((1L, 0L, 1L), (1L, 10L, 2L), (1L, 1000L, 3L), (1L, 1005L, 4L),
       (2L, 0L, 5L)).toDF("k", "tsn", "eid")
-    val sess = TemporalOps.sessionize(e, "k", "tsn", gap = 100L, tieCol = "eid")
+    val sess = TemporalOps.sessionize(e, "k", gap = 100L, tieCol = "eid")
     val got = sess.select("eid", "session_no").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 2L, 5L -> 1L))
-    val stats = TemporalOps.sessionStats(sess, "k", "tsn")
+    val stats = TemporalOps.sessionStats(sess, "k")
       .filter($"k" === 1 && $"session_no" === 2).collect()(0)
     assert(stats.getAs[Long]("n_events") == 2L)
     assert(stats.getAs[Long]("start_ts") == 1000L && stats.getAs[Long]("end_ts") == 1005L)
@@ -102,8 +102,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(29)
     val rows = (0 until 400).map(i =>
       (rnd.nextInt(6).toLong, rnd.nextInt(5000).toLong, i.toLong))
-    val got = TemporalOps.sessionize(rows.toDF("k", "tsn", "eid"), "k", "tsn",
-        gap = 50L, tieCol = "eid")
+    val got = TemporalOps.sessionize(rows.toDF("k", "tsn", "eid"), "k", gap = 50L, tieCol = "eid")
       .select("eid", "session_no").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     rows.groupBy(_._1).foreach { case (_, evs) =>
       var prev = Long.MinValue; var sess = 0L
@@ -120,7 +119,7 @@ class TemporalOpsSpec extends AnyFunSuite {
       .toDF("k", "tsn", "tag")
     val right = Seq((1L, 10L, 1.0), (1L, 15L, 2.0), (1L, 40L, 3.0), (2L, 60L, 9.0))
       .toDF("k", "tsn", "v")
-    val got = TemporalOps.asofJoinForward(left, right, "k", "tsn", "v", "asof_v", "tsn")
+    val got = TemporalOps.asofJoinForward(left, right, "k", "v", "asof_v", "tsn")
       .select("tag", "asof_v", "tsn").collect()
       .map(r => r.getString(0) ->
         ((if (r.isNullAt(1)) null else r.getDouble(1)), r.getLong(2))).toMap
@@ -133,10 +132,10 @@ class TemporalOpsSpec extends AnyFunSuite {
   test("asofJoinForward tolerance ages out matches too far in the future") {
     val left = Seq((1L, 10L, 100L)).toDF("k", "tsn", "id")
     val right = Seq((1L, 25L, 7.0)).toDF("k", "tsn", "v")
-    val near = TemporalOps.asofJoinForward(left, right, "k", "tsn", "v", "av", "tsn",
+    val near = TemporalOps.asofJoinForward(left, right, "k", "v", "av", "tsn",
       tolerance = Some(15L)).select("av").collect()(0)
     assert(near.getDouble(0) == 7.0)
-    val far = TemporalOps.asofJoinForward(left, right, "k", "tsn", "v", "av", "tsn",
+    val far = TemporalOps.asofJoinForward(left, right, "k", "v", "av", "tsn",
       tolerance = Some(14L)).select("av").collect()(0)
     assert(far.isNullAt(0))
   }
@@ -151,7 +150,7 @@ class TemporalOpsSpec extends AnyFunSuite {
       (k, t, rs.map(_._3).max) }.toSeq
     val got = TemporalOps.asofJoinForward(
         left.toDF("k", "tsn", "id"), rightAgg.toDF("k", "tsn", "v"),
-        "k", "tsn", "v", "av", "tsn")
+        "k", "v", "av", "tsn")
       .select("id", "av").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     left.foreach { case (k, t, id) =>
@@ -329,7 +328,7 @@ class TemporalOpsSpec extends AnyFunSuite {
       }
     }.toMap
     for (width <- Seq(1, 2)) {
-      val got = Sampling.tokenBudgetMix(docs, "doc_id", "domain",
+      val got = Sampling.tokenBudgetMix(docs, "domain",
           size(split(col("text"), " ")), budgets, defaultBudget = 100L,
           bucketHexChars = width)
         .select("doc_id", "cum_tokens").collect()
@@ -342,26 +341,26 @@ class TemporalOpsSpec extends AnyFunSuite {
     val docs = Seq((1L, "a", "w w"), (2L, "b", "w w w")).toDF("doc_id", "domain", "text")
     val tokens = size(split(col("text"), " "))
     // zero budget: no doc STARTS inside it
-    val none = Sampling.tokenBudgetMix(docs, "doc_id", "domain", tokens, Map("a" -> 0L, "b" -> 0L))
+    val none = Sampling.tokenBudgetMix(docs, "domain", tokens, Map("a" -> 0L, "b" -> 0L))
     assert(none.count() == 0)
     // domain absent from the map: defaultBudget applies (MaxValue keeps all)
-    val all = Sampling.tokenBudgetMix(docs, "doc_id", "domain", tokens, Map("a" -> 100L))
+    val all = Sampling.tokenBudgetMix(docs, "domain", tokens, Map("a" -> 100L))
     assert(all.count() == 2)
     // empty input frame round-trips
-    val empty = Sampling.tokenBudgetMix(docs.limit(0), "doc_id", "domain", tokens, Map.empty)
+    val empty = Sampling.tokenBudgetMix(docs.limit(0), "domain", tokens, Map.empty)
     assert(empty.count() == 0)
   }
 
   test("tokenBudgetMix: overshoot is bounded by one document per domain") {
     val docs = (0L until 200L).map(i => (i, "d", "t " * 10)).toDF("doc_id", "domain", "text")
-    val kept = Sampling.tokenBudgetMix(docs, "doc_id", "domain",
+    val kept = Sampling.tokenBudgetMix(docs, "domain",
         size(split(col("text"), " ")), Map("d" -> 101L))
       .select("n_tokens").collect().map(_.getLong(0))
     // 11-token docs; budget 101: docs starting at 0,11,...,99 kept -> 10 docs
     assert(kept.length == 10 && kept.sum == 110L) // overshoot 9 < one doc
     intercept[IllegalArgumentException] {
       Sampling.tokenBudgetMix(docs.withColumn("n_tokens", lit(1L)),
-        "doc_id", "domain", lit(1L), Map("d" -> 10L))
+        "domain", lit(1L), Map("d" -> 10L))
     }
   }
 
@@ -535,18 +534,17 @@ class TemporalOpsSpec extends AnyFunSuite {
         val df = spark.read.parquet(s"$base/$variant")
         assert(df.schema("ts").dataType == expectType(variant), variant)
         val got = df.select(col("user_id"), col("event_id"),
-            TemporalOps.epochMicros(df, "ts").as("us"))
+            TemporalOps.epochMicros(df).as("us"))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(got == expected, s"epochMicros($variant)")
         val gotTs = df.select(col("user_id"), col("event_id"),
-            unix_micros(TemporalOps.asTimestamp(df, "ts")).as("us"))
+            unix_micros(TemporalOps.asTimestamp(df)).as("us"))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(gotTs == expected, s"asTimestamp($variant)")
         // end-to-end through an operator: identical sessionization
         val e = df.select(col("user_id"), col("event_id"),
-          TemporalOps.epochMicros(df, "ts").as("tsn"))
-        val sess = TemporalOps.sessionize(e, "user_id", "tsn",
-            gap = 1800000000L, tieCol = "event_id")
+          TemporalOps.epochMicros(df).as("tsn"))
+        val sess = TemporalOps.sessionize(e, "user_id", gap = 1800000000L, tieCol = "event_id")
           .select("user_id", "event_id", "session_no")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(sess == Set((1L, 1L, 1L), (1L, 2L, 1L), (1L, 3L, 2L), (2L, 4L, 1L)),
@@ -555,15 +553,15 @@ class TemporalOpsSpec extends AnyFunSuite {
       // unsupported grain fails loudly, not with a wrong answer
       val bad = micros.toDF("user_id", "event_id", "us")
         .select(col("user_id"), col("us").cast("string").as("ts"))
-      intercept[IllegalArgumentException](TemporalOps.epochMicros(bad, "ts"))
-      intercept[IllegalArgumentException](TemporalOps.asTimestamp(bad, "ts"))
+      intercept[IllegalArgumentException](TemporalOps.epochMicros(bad))
+      intercept[IllegalArgumentException](TemporalOps.asTimestamp(bad))
       // NTZ normalization under a non-UTC session zone would shift every
       // instant by the zone offset — must refuse, not relabel wrongly
       val ntz = spark.read.parquet(s"$base/ntz")
       spark.conf.set("spark.sql.session.timeZone", "America/New_York")
       try {
-        intercept[IllegalArgumentException](TemporalOps.epochMicros(ntz, "ts"))
-        intercept[IllegalArgumentException](TemporalOps.asTimestamp(ntz, "ts"))
+        intercept[IllegalArgumentException](TemporalOps.epochMicros(ntz))
+        intercept[IllegalArgumentException](TemporalOps.asTimestamp(ntz))
       } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
       // and the real testdata loads through the single ingestion point
       val ev = TemporalOps.loadEvents(spark, "/root/testdata/sf0.001")
@@ -580,7 +578,7 @@ class TemporalOpsSpec extends AnyFunSuite {
       ("A", 10 * us + 111L, 5L), ("A", 10 * us + 222L, 9L),
       ("A", 13 * us + 1L, 7L), ("B", 20 * us, 4L)
     ).toDF("k", "ts_us", "cents")
-    val got = TemporalOps.gapFillDaily(ev, "k", "ts_us", "cents")
+    val got = TemporalOps.gapFillDaily(ev, "k")
       .orderBy("k", "day")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
     assert(got.toSeq == Seq(
@@ -592,10 +590,10 @@ class TemporalOpsSpec extends AnyFunSuite {
     val us = 86400L * 1000000L
     val ev = Seq(("A", 0L, 1L), ("A", 50 * us, 2L)).toDF("k", "ts_us", "cents")
     val e = intercept[Exception](
-      TemporalOps.gapFillDaily(ev, "k", "ts_us", "cents", maxSpanDays = 10).count())
+      TemporalOps.gapFillDaily(ev, "k", maxSpanDays = 10).count())
     assert(e.getMessage != null || e.getCause != null) // raised, not silent
     // and the same span passes when the caller raises the guard explicitly
-    assert(TemporalOps.gapFillDaily(ev, "k", "ts_us", "cents", maxSpanDays = 50)
+    assert(TemporalOps.gapFillDaily(ev, "k", maxSpanDays = 50)
       .count() == 51)
   }
 
@@ -605,7 +603,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val iv = Seq(("A", 0L, 10L, 1L), ("A", 5L, 20L, 2L), ("A", 20L, 30L, 3L),
       ("A", 2L, 4L, 4L), ("A", 40L, 50L, 5L), ("B", 0L, 1L, 6L))
       .toDF("k", "st", "en", "id")
-    val got = TemporalOps.mergeIntervals(iv, "k", "st", "en", "id")
+    val got = TemporalOps.mergeIntervals(iv, "k", "id")
       .select("k", "ms", "me").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     assert(got == Seq(("A", 0L, 30L), ("A", 40L, 50L), ("B", 0L, 1L)))
@@ -615,7 +613,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val iv = Seq(("A", 0L, 10L, 1L), ("A", 15L, 20L, 2L), ("A", 100L, 110L, 3L),
       ("B", 0L, 5L, 4L), ("B", 3L, 9L, 5L)) // B merges to one run → no gaps
       .toDF("k", "st", "en", "id")
-    val got = TemporalOps.coverageGaps(iv, "k", "st", "en", "id")
+    val got = TemporalOps.coverageGaps(iv, "k", "id")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == Seq(("A", 2L, 85L, 80L))) // gaps 10→15 (5) and 20→100 (80)
   }

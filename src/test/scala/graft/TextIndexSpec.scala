@@ -11,14 +11,14 @@ class TextIndexSpec extends AnyFunSuite {
 
   test("char n-grams 3..4 with preserveOriginal") {
     val got = Seq("abcde").toDF("s")
-      .select(TextIndex.charNgrams($"s", 3, 4, preserveOriginal = true).as("g"))
+      .select(TextIndex.charNgrams($"s").as("g"))
       .collect()(0).getSeq[String](0).toSet
     assert(got == Set("abc", "bcd", "cde", "abcd", "bcde", "abcde"))
   }
 
   test("char n-grams on short string yields only original when preserved") {
     val got = Seq("ab").toDF("s")
-      .select(TextIndex.charNgrams($"s", 3, 4, preserveOriginal = true).as("g"))
+      .select(TextIndex.charNgrams($"s").as("g"))
       .collect()(0).getSeq[String](0).toSet
     assert(got == Set("ab"))
   }
@@ -35,9 +35,9 @@ class TextIndexSpec extends AnyFunSuite {
     val texts = (0 until 200).map(i =>
       (i.toLong, (0 until rnd.nextInt(12)).map(_ => "abc ".charAt(rnd.nextInt(4))).mkString))
     val df = texts.toDF("id", "s")
-    val gen = df.select($"id", graft.functions.CharNgrams.charNgramTokens($"s", 3, 4, true).as("t"))
+    val gen = df.select($"id", graft.functions.CharNgrams.charNgramTokens($"s").as("t"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val arr = df.select($"id", explode(TextIndex.charNgrams($"s", 3, 4, preserveOriginal = true)).as("t"))
+    val arr = df.select($"id", explode(TextIndex.charNgrams($"s")).as("t"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(gen == arr)
   }
@@ -61,9 +61,9 @@ class TextIndexSpec extends AnyFunSuite {
     val texts = (0 until 100).map(i =>
       (i.toLong, (0 until rnd.nextInt(10)).map(_ => alpha(rnd.nextInt(alpha.size))).mkString))
     val df = texts.toDF("id", "s")
-    val gen = df.select($"id", graft.functions.CharNgrams.charNgramTokens($"s", 3, 4, true).as("t"))
+    val gen = df.select($"id", graft.functions.CharNgrams.charNgramTokens($"s").as("t"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val arr = df.select($"id", explode(TextIndex.charNgrams($"s", 3, 4, preserveOriginal = true)).as("t"))
+    val arr = df.select($"id", explode(TextIndex.charNgrams($"s")).as("t"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(gen == arr)
     // no emitted token may contain a lone surrogate (a split pair)
@@ -445,7 +445,7 @@ class TextIndexSpec extends AnyFunSuite {
       (3L, "nothing here matches"),  // 'here'? no — ends 're'; none end 'er'
       (4L, null.asInstanceOf[String])
     ).toDF("doc_id", "text")
-    val got = TextIndex.suffixMatch(docs, "text", "er")
+    val got = TextIndex.suffixMatch(docs, "er")
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == Map(
       (1L, "customer") -> 1L, (1L, "order") -> 1L, (1L, "filter") -> 1L,

@@ -354,7 +354,7 @@ class TextPipelineSpec extends AnyFunSuite {
       val clean = Dedup.decontaminate(deduped, evalDocs, n = 5)
       // 4. token-budget mix + split + pack + shard export
       val mixed = Sampling.tokenBudgetMix(clean.withColumn("domain", lit("web")),
-        "doc_id", "domain",
+        "domain",
         graft.llm.TextStats.tokenCount(col("text")), Map.empty, defaultBudget = Long.MaxValue)
       Sampling.writeTrainingShards(mixed.drop("n_tokens", "cum_tokens"),
         s"$base/shards", "doc_id", TextStats.tokenCount(col("text")).cast("long"),
@@ -549,7 +549,7 @@ class TextPipelineSpec extends AnyFunSuite {
     def model(s: String): Seq[Int] =
       TextStats.windowHashes(s, w).toSeq.zipWithIndex
         .collect { case (h, i) if h % mod == 0 => i + 1 }
-    val got = TextStats.cdcBoundaryStats(texts.toDF("doc_id", "text"), w, 6)
+    val got = TextStats.cdcBoundaryStats(texts.toDF("doc_id", "text"), w)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3)))).toMap
     texts.foreach { case (id, s) =>

@@ -133,7 +133,7 @@ class WarcHtmlSpec extends AnyFunSuite {
       (2L, "gamma delta SEP unique two"),                // cross-doc dup of doc 1's unit
       (3L, "alpha beta")                                 // fully duplicated -> emptied
     ).toDF("doc_id", "text")
-    val got = graft.llm.Dedup.unitDedup(d, " SEP ", " | ")
+    val got = graft.llm.Dedup.unitDedup(d, " SEP ")
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got(1L) == (("alpha beta | gamma delta", 3L, 2L)))
     assert(got(2L) == (("unique two", 2L, 1L)))

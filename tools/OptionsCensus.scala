@@ -1,5 +1,5 @@
-// Options census: which defaulted `def` parameters of the program does any
-// caller set?
+// Options census: which `def` parameters of the program does any caller set,
+// and to how many values?
 //
 // Type-checks the given source roots with the Scala compiler (up to the
 // typer phase, no class files) and walks every call. After the typer, named
@@ -7,6 +7,13 @@
 // argument is a call to the method's `$default$N` getter, so a parameter
 // counts as set by a call exactly when its argument is anything else. Eta
 // expansion and forwarding count as setting, recursion too.
+//
+// Every call also gives the parameter a value: the argument's text, or the
+// default's text when the argument is omitted. A value is a literal when it
+// is a constant or a collection of constants: `4`, `"ts"`, `-1.0`,
+// `Long.MaxValue`, `Seq("a", "b")`, but not `col("id")` (constants compare
+// by value, so `4` passed to a Long reads `4L`). A recursive call that
+// passes the parameter itself adds no value.
 //
 // Build and run from the repository root, with SPARK_JARS the Spark jars
 // directory (build.sbt's `unmanagedBase`) and TEST_JARS the ':'-separated
@@ -20,10 +27,16 @@
 //     bench=perfbench/src > census.tsv
 //
 // The first root (`main`) holds the definitions that are counted. Output:
-// one tab-separated row per defaulted parameter (position, method,
-// parameter, default, calls per root that set it, up to three of the
-// argument texts), then a `#` summary on stderr: defaulted parameters,
-// parameters no root sets, parameters only non-`main`/non-`bench` roots set.
+// one tab-separated row per `def` parameter (position, method, parameter,
+// default or `-`, calls per root that set it, calls per root, the value
+// class, up to three of the value texts). The value class is `one-literal`
+// (every call passes the same literal), `one-literal-no-main` (the same, but
+// no `main` caller), `one-value` (one text that is not a literal), `many`,
+// `no-call`, or `override` for a method that overrides another or is
+// overridden (not all of its callers are in sight). Then a `#` summary on
+// stderr: defaulted parameters, defaulted parameters no root sets,
+// defaulted parameters only non-`main`/non-`bench` roots set, all
+// parameters, and parameters with one literal value and a `main` caller.
 import java.io.File
 
 import scala.collection.mutable
@@ -65,25 +78,32 @@ object OptionsCensus {
     // A parameter is keyed by (method, parameter list, index) so an override's
     // call counts for the parameter its base method declares.
     type Key = (Symbol, Int, Int)
-    final case class Param(key: Key, where: String, owner: String, name: String, default: String)
+    final case class Param(key: Key, where: String, owner: String, name: String,
+                           default: Option[Tree], counted: Boolean)
     val params = mutable.LinkedHashMap[Key, Param]()
+    val paramOf = mutable.Map[Symbol, Key]()
     val synthRhs = mutable.Map[Symbol, Tree]()
+    val overridden = mutable.Set[Symbol]()
     def text(t: Tree): String =
       if (t.pos.isRange) new String(t.pos.source.content, t.pos.start, t.pos.end - t.pos.start) else t.toString
 
     for (u <- units) u.body.foreach {
       case vd: ValDef if vd.symbol != null && (vd.symbol.isSynthetic || vd.symbol.isArtifact) =>
         synthRhs(vd.symbol) = vd.rhs
-      case dd: DefDef if rootOf(u) == mainRoot && !dd.symbol.isSynthetic && !dd.symbol.isConstructor =>
-        // An override's `input: InternalRow` inherits its default (no rhs):
-        // the option is the overridden method's, not the program's.
-        for ((list, li) <- dd.vparamss.zipWithIndex; (vd, pi) <- list.zipWithIndex
-             if vd.symbol.hasDefault && !vd.rhs.isEmpty) {
-          val key = (dd.symbol, li, pi)
-          val line = vd.pos.source.offsetToLine(vd.pos.point) + 1
-          val where = s"${u.source.file.path}:$line"
-          params(key) = Param(key, where, s"${dd.symbol.owner.name.decoded}.${dd.name.decoded}",
-            vd.name.decoded, text(vd.rhs))
+      case dd: DefDef if dd.symbol != null =>
+        overridden ++= dd.symbol.allOverriddenSymbols
+        if (rootOf(u) == mainRoot && !dd.symbol.isSynthetic && !dd.symbol.isConstructor) {
+          for ((list, li) <- dd.vparamss.zipWithIndex; (vd, pi) <- list.zipWithIndex) {
+            val key = (dd.symbol, li, pi)
+            val line = vd.pos.source.offsetToLine(vd.pos.point) + 1
+            val where = s"${u.source.file.path}:$line"
+            // An override's `input: InternalRow` inherits its default (no rhs):
+            // the option is the overridden method's, not the program's.
+            val default = if (vd.symbol.hasDefault && !vd.rhs.isEmpty) Some(vd.rhs) else None
+            params(key) = Param(key, where, s"${dd.symbol.owner.name.decoded}.${dd.name.decoded}",
+              vd.name.decoded, default, dd.symbol.allOverriddenSymbols.isEmpty)
+            paramOf(vd.symbol) = key
+          }
         }
       case _ =>
     }
@@ -98,16 +118,31 @@ object OptionsCensus {
       case TypeApply(f, _) => listIndex(f)
       case _ => 0
     }
-    def isDefaultArg(t: Tree): Boolean = t match {
-      case Typed(e, _) => isDefaultArg(e)
-      case i: Ident if synthRhs.contains(i.symbol) => isDefaultArg(synthRhs(i.symbol))
-      case _ =>
-        val s = funSym(t)
-        s != null && s != NoSymbol && s.name.decoded.contains("$default$")
+    def resolve(t: Tree): Tree = t match {
+      case Typed(e, _) => resolve(e)
+      case i: Ident if synthRhs.contains(i.symbol) => resolve(synthRhs(i.symbol))
+      case _ => t
+    }
+    def isDefaultArg(t: Tree): Boolean = {
+      val s = funSym(resolve(t))
+      s != null && s != NoSymbol && s.name.decoded.contains("$default$")
+    }
+    // A constant, or a collection of constants.
+    def isLiteral(t: Tree): Boolean = resolve(t) match {
+      case _: Literal => true
+      case a @ Apply(_, args) if a.tpe != null &&
+          (a.tpe.typeSymbol.isNonBottomSubClass(definitions.IterableClass) ||
+           a.tpe.typeSymbol == definitions.ArrayClass) => args.forall(isLiteral)
+      case _ => false
+    }
+    def valueText(t: Tree): String = resolve(t) match {
+      case Literal(c) => c.escapedStringValue
+      case r => text(r).replaceAll("\\s+", " ")
     }
 
     val sets = mutable.Map[Key, mutable.Map[String, Int]]()
-    val argTexts = mutable.Map[Key, mutable.LinkedHashSet[String]]()
+    val calls = mutable.Map[Key, mutable.Map[String, Int]]()
+    val values = mutable.Map[Key, mutable.LinkedHashMap[String, Boolean]]()
     for (u <- units; root = rootOf(u)) u.body.foreach {
       case Apply(fun, args) =>
         val m = funSym(fun)
@@ -115,27 +150,51 @@ object OptionsCensus {
           val li = listIndex(fun)
           for (target <- m +: m.allOverriddenSymbols; (arg, pi) <- args.zipWithIndex) {
             val key = (target, li, pi)
-            if (params.contains(key) && !isDefaultArg(arg)) {
-              val byRoot = sets.getOrElseUpdate(key, mutable.Map().withDefaultValue(0))
-              byRoot(root) += 1
-              argTexts.getOrElseUpdate(key, mutable.LinkedHashSet()) += text(arg).replaceAll("\\s+", " ")
+            params.get(key).foreach { p =>
+              calls.getOrElseUpdate(key, mutable.Map().withDefaultValue(0))(root) += 1
+              val default = isDefaultArg(arg)
+              if (!default) {
+                sets.getOrElseUpdate(key, mutable.Map().withDefaultValue(0))(root) += 1
+              }
+              val self = resolve(arg) match {
+                case i: Ident => paramOf.get(i.symbol).contains(key)
+                case _ => false
+              }
+              if (!self) {
+                val v = if (default) p.default.get else arg
+                values.getOrElseUpdate(key, mutable.LinkedHashMap()) += valueText(v) -> isLiteral(v)
+              }
             }
           }
         }
       case _ =>
     }
 
-    var unset, testOnly = 0
+    var unset, testOnly, oneLiteral = 0
     for (p <- params.values) {
-      val byRoot = sets.getOrElse(p.key, Map.empty[String, Int])
-      if (byRoot.isEmpty) unset += 1
-      else if (!byRoot.contains(mainRoot) && !byRoot.contains("bench")) testOnly += 1
-      val counts = roots.map { case (n, _) => s"$n=${byRoot.getOrElse(n, 0)}" }.mkString(" ")
-      val samples = argTexts.get(p.key).map(_.take(3).mkString(" | ")).getOrElse("")
-      println(Seq(p.where, p.owner, p.name, p.default, counts, samples).mkString("\t"))
+      val setBy = sets.getOrElse(p.key, Map.empty[String, Int])
+      val calledBy = calls.getOrElse(p.key, Map.empty[String, Int])
+      val vs = values.getOrElse(p.key, Map.empty[String, Boolean])
+      if (p.default.nonEmpty) {
+        if (setBy.isEmpty) unset += 1
+        else if (!setBy.contains(mainRoot) && !setBy.contains("bench")) testOnly += 1
+      }
+      val cls =
+        if (!p.counted || overridden.contains(p.key._1)) "override"
+        else if (vs.isEmpty) "no-call"
+        else if (vs.size > 1) "many"
+        else if (!vs.head._2) "one-value"
+        else if (calledBy.contains(mainRoot)) { oneLiteral += 1; "one-literal" }
+        else "one-literal-no-main"
+      def perRoot(m: collection.Map[String, Int]) = roots.map { case (n, _) => s"$n=${m.getOrElse(n, 0)}" }.mkString(" ")
+      val default = p.default.map(d => text(d)).getOrElse("-")
+      println(Seq(p.where, p.owner, p.name, default, perRoot(setBy), perRoot(calledBy), cls,
+        vs.keys.take(3).mkString(" | ")).mkString("\t"))
     }
-    Console.err.println(s"# defaulted def parameters in $mainRoot: ${params.size}")
+    Console.err.println(s"# defaulted def parameters in $mainRoot: ${params.values.count(_.default.nonEmpty)}")
     Console.err.println(s"# set by no caller: $unset")
     Console.err.println(s"# set only by roots other than $mainRoot/bench: $testOnly")
+    Console.err.println(s"# def parameters in $mainRoot: ${params.size}")
+    Console.err.println(s"# one literal value in use, with a $mainRoot caller: $oneLiteral")
   }
 }
