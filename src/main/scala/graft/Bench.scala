@@ -125,7 +125,7 @@ object Bench {
                             cpus: String,
                             onlyQueries: Seq[String] = Nil,
                             extraEnv: Map[String, String] = Map.empty,
-                            timeoutSec: Long = 900): Either[String, LegTimes] = {
+                            timeoutSec: Long): Either[String, LegTimes] = {
     val benchOut = java.io.File.createTempFile("bench_ab_", ".json")
     benchOut.deleteOnExit()
     val javaBin = new java.io.File(new java.io.File(sys.props("java.home"), "bin"), "java").getPath
@@ -148,7 +148,7 @@ object Bench {
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         val root = om.readTree(java.nio.file.Files.readAllBytes(benchOut.toPath))
         def asMap(node: com.fasterxml.jackson.databind.JsonNode): Map[String, Double] = {
-          val it = node.fields()
+          val it = node.properties().iterator()
           val m = scala.collection.mutable.Map.empty[String, Double]
           while (it.hasNext) { val e = it.next(); m(e.getKey) = e.getValue.asDouble() }
           m.toMap
@@ -432,7 +432,7 @@ object Bench {
       val degraded = if (hasMetrics && !drainedOk)
         Seq(jstr("_attribution_degraded") + ":true") else Seq.empty
       val metrics = newKeys.toArray(Array.empty[String]).sorted
-        .map(k => jstr(k) + ":" + observed.get(k)) ++ degraded
+        .map(k => jstr(k) + ":" + observed.get(k)).toIndexedSeq ++ degraded
       val rowsOut =
         if (!recordRowsOut || err.isDefined) None
         else prep.toOption.map { case (df, _) =>
@@ -702,7 +702,7 @@ object Bench {
             val q = root.get("queries")
             if (sfOk && cal > 0 && q != null && !contam) {
               histCals += cal
-              val it = q.fields()
+              val it = q.properties().iterator()
               while (it.hasNext) {
                 val e = it.next(); val v = e.getValue.asDouble()
                 if (v >= 0) {

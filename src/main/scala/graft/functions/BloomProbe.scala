@@ -144,22 +144,6 @@ final class BloomBits(val bits: Array[Long], val n: Int, val mBits: Int,
 
 object BloomProbe {
 
-  /** Build the bitset from probe positions (as produced by
-    * [[positionsCol]] over the eval grams — already deduplicated or not,
-    * either works).
-    */
-  def buildBits(positions: Iterable[Long], n: Int, mBits: Int,
-                numHashes: Int): BloomBits = {
-    val words = 1 << (mBits - 6).max(0)
-    val bits = new Array[Long](words)
-    val mask = (1L << mBits) - 1L
-    positions.foreach { p =>
-      require(p >= 0 && p <= mask, s"position out of range for mBits=$mBits: $p")
-      bits((p >>> 6).toInt) |= 1L << (p & 63L)
-    }
-    new BloomBits(bits, n, mBits, numHashes)
-  }
-
   /** Column form of the probe-position schedule: array of `numHashes`
     * positions for a gram column — the EXACT same arithmetic the kernel
     * probes with ((h1 + i·h2) mod 2^mBits on md5-hex-prefix integers), kept

@@ -11,10 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native codegen BPE encoder: applies a learned merge-rule sequence with
   * the standard min-rank loop (repeatedly merge the LOWEST-rank adjacent
   * pair until none remains) — the tokenize path every downstream token
-  * count/budget/packing operator would run over the WHOLE corpus, promoted
-  * from the UDF form (graft.llm.Bpe.tokenize, kept as the spec's reference
-  * implementation) to stay inside whole-stage codegen with the rank table
-  * as a codegen reference object (the CellAssign precedent).
+  * count/budget/packing operator would run over the WHOLE corpus, kept
+  * inside whole-stage codegen with the rank table as a codegen reference
+  * object (the CellAssign precedent); the specs compare it against a UDF
+  * reference implementation of the same loop.
   *
   * Per-word cost is proportional to the word, not the vocabulary: the
   * min-rank scan is O(word) per merge step with a nested hash lookup per

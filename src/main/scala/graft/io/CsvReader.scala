@@ -32,7 +32,7 @@ object CsvReader {
       .withColumn("cs", from_csv(col("value"), withCorrupt,
         Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "corrupt_record",
           "delimiter" -> ",")))
-      .select(schema.fieldNames.map(f => col(s"cs.`$f`").as(f)) :+
+      .select(schema.fieldNames.toIndexedSeq.map(f => col(s"cs.`$f`").as(f)) :+
         when(col("cs").isNull, col("value"))
           .otherwise(col("cs.corrupt_record")).as("corrupt_record"): _*)
   }

@@ -50,7 +50,7 @@ object JsonlReader {
       .filter(length(trim(col("value"))) > 0)
       .withColumn("js", from_json(col("value"), withCorrupt,
         Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "corrupt_record")))
-      .select(schema.fieldNames.map(f => col(s"js.`$f`").as(f)) :+
+      .select(schema.fieldNames.toIndexedSeq.map(f => col(s"js.`$f`").as(f)) :+
         // a null struct cannot carry its corrupt field: fall back to the raw line
         when(col("js").isNull, col("value"))
           .otherwise(col("js.corrupt_record")).as("corrupt_record"): _*)

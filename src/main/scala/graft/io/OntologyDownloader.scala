@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 /** S4/S5: ontology acquisition with a version gate and archive rotation
   * (reference: OntologyDownloader.java:25-133). Driver-side IO, not a

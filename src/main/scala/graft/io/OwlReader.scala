@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayInputStream
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import scala.collection.mutable
 
 /** OWL (RDF/XML) sources → relational DataFrames.
@@ -47,10 +47,10 @@ object OwlReader {
     * one task per file via the binaryFile source.
     *
     * `permissive=true` routes unparseable files to a skip (logged on the
-    * executor) instead of failing the job — at corpus scale one corrupt file
-    * must not kill the run; pair with [[corruptFiles]] to audit what was
-    * dropped. Default is fail-fast, matching the reference, and the failure
-    * names the file (and, for an XML error, its line and column).
+    * executor, which names the file) instead of failing the job — at corpus
+    * scale one corrupt file must not kill the run. Default is fail-fast,
+    * matching the reference, and the failure names the file (and, for an
+    * XML error, its line and column).
     */
   def triples(spark: SparkSession, paths: Seq[String], permissive: Boolean = false): Dataset[TripleRow] = {
     import spark.implicits._
@@ -66,15 +66,6 @@ object OwlReader {
             s"cannot parse $name at line ${at.getLineNumber}, column ${at.getColumnNumber}: ${e.getMessage}", e)
         case e: Exception => throw new java.io.IOException(s"cannot parse $name: ${e.getMessage}", e)
       }
-    }
-  }
-
-  /** Audit of unparseable files: (src_file, error). Empty when all parse. */
-  def corruptFiles(spark: SparkSession, paths: Seq[String]): Dataset[(String, String)] = {
-    import spark.implicits._
-    binaryFiles(spark, paths).flatMap { case (name, bytes) =>
-      try { parseTriples(name, bytes); None }
-      catch { case e: Exception => Some((name, String.valueOf(e.getMessage))) }
     }
   }
 

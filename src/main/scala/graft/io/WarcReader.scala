@@ -3,7 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.io.{BufferedInputStream, ByteArrayInputStream, EOFException, InputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, InputStream}
 import java.util.zip.GZIPInputStream
 import scala.collection.mutable
 

@@ -1,12 +1,13 @@
 package graft.llm
 
 import graft.ops.Checkpointer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Byte-pair-encoding merge training and tokenization — the
-  * vocabulary-construction step of a tokenizer pipeline, run where the
-  * corpus lives instead of shipping text to a separate trainer.
+/** Byte-pair-encoding merge training — the vocabulary-construction step
+  * of a tokenizer pipeline, run where the corpus lives instead of shipping
+  * text to a separate trainer. Encoding with the learned rules is
+  * [[graft.functions.BpeEncodeExpr]].
   *
   * Scale shape (the part that matters at 100 TB): the corpus is scanned
   * ONCE into a (word, count) frequency table — vocabulary-sized, millions
@@ -180,47 +181,5 @@ object Bpe {
     import spark.implicits._
     trainMerges(docs, 8, 4)
       .toDF("rank", "left", "right", "merged", "pair_count")
-  }
-
-  /** Tokenize with a learned rule sequence — the standard BPE encode
-    * (the min-rank loop every production tokenizer uses): repeatedly merge
-    * the LOWEST-rank adjacent pair present in the word until none remains.
-    * Per-word cost is proportional to the word, not the vocabulary — a
-    * 32k-rule vocabulary must not mean 32k array scans per word on a
-    * corpus-scale map path. New pairs created by a merge contain the
-    * merged symbol, so in the common case (merged strings unambiguous
-    * across rules) this reproduces an in-order rule replay exactly; where
-    * two rules yield the same merged string the min-rank loop is the
-    * canonical semantics. Pure function of (text, rules); exposed as a
-    * map-side UDF column.
-    */
-  def tokenize(merges: Seq[(String, String)]): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    // first occurrence wins on a duplicated (left, right) rule — training
-    // can never emit one (a merged pair's count drops to zero), but a
-    // hand-supplied table can, and the native BpeEncoder resolves to the
-    // FIRST rank; plain .toMap would keep the LAST and silently diverge
-    val rank: Map[(String, String), Int] = merges.zipWithIndex.reverse.toMap
-    udf { (text: String) =>
-      if (text == null) Seq.empty[String]
-      else text.split(" ").filter(_.nonEmpty).toSeq.flatMap { w =>
-        var symbols: Seq[String] = w.split("").toSeq
-        var done = false
-        while (!done && symbols.length >= 2) {
-          var bestRank = Int.MaxValue
-          var i = 0
-          while (i < symbols.length - 1) {
-            val p = rank.getOrElse((symbols(i), symbols(i + 1)), Int.MaxValue)
-            if (p < bestRank) bestRank = p
-            i += 1
-          }
-          if (bestRank == Int.MaxValue) done = true
-          else {
-            val (l, r) = merges(bestRank)
-            symbols = mergeOnce(symbols, l, r)
-          }
-        }
-        symbols
-      }
-    }
   }
 }

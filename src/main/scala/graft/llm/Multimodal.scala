@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
@@ -272,19 +272,6 @@ object Multimodal {
     }.toDF("media_id", "whash", "n_bits", "decoded")
   }
 
-  /** "Resize" stub for payloads with no decoder (the fallback path of
-    * [[resizeImages]]): truncates the payload deterministically to w*h
-    * bytes — preserving the plumbing contract (binary in → smaller binary
-    * out + updated metadata).
-    */
-  def resize(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.map { r =>
-      val target = math.min(r.bytes.length, w * h)
-      r.copy(bytes = java.util.Arrays.copyOf(r.bytes, target), width = w, height = h)
-    }
-  }
-
   /** Hand-rolled 24-bit BMP encoder (the [[syntheticBmp]] layout
     * generalized to arbitrary pixels): bottom-up BGR rows, 4-byte row
     * padding. `rgb` is row-major TOP-DOWN 0xRRGGBB.
@@ -322,10 +309,9 @@ object Multimodal {
     * reproducible source pixel an oracle can name), re-encode as 24-bit
     * BMP `w` pixels wide and 2 high. The output payload round-trips through the same real decode
     * path ([[decodeImage]]), which is what the m_image_resize entry
-    * checks end to end. Payloads that don't decode fall back to the
-    * deterministic byte-truncate stub ([[resize]] semantics) rather than
-    * failing the batch. Map-side `mapPartitions` (codec work) — zero
-    * shuffles.
+    * checks end to end. Payloads that don't decode fall back to a
+    * deterministic truncation to at most `w`·2 bytes rather than failing
+    * the batch. Map-side `mapPartitions` (codec work) — zero shuffles.
     */
   def resizeImages(media: Dataset[MediaRow], w: Int): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
@@ -357,25 +343,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Frame-sample stub for video rows: every `everyMs` ms → one "frame"
-    * (a deterministic byte slice). Non-video rows pass through unchanged
-    * with a single frame. Output: (media_id, frame_idx, frame_bytes).
-    */
-  def sampleFrames(media: Dataset[MediaRow], everyMs: Long): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.flatMap { r =>
-      val n = if (r.media_type == "video" && r.duration_ms > 0)
-        math.max(1, (r.duration_ms / everyMs).toInt) else 1
-      val span = math.max(r.bytes.length / math.max(n, 1), 1)
-      (0 until n).map { i =>
-        val from = math.min(i * span, math.max(r.bytes.length - 1, 0))
-        val until = math.min(from + span, r.bytes.length)
-        (r.media_id, i, java.util.Arrays.copyOfRange(r.bytes, from, until))
-      }
-    }.toDF("media_id", "frame_idx", "frame_bytes")
   }
 
   /** Extracted audio feature row: `decoded` marks rows whose fields came
@@ -616,8 +583,8 @@ object Multimodal {
       peak: Long)
 
   /** Windowed audio energy/peak over REAL decoded PCM — the audio sibling
-    * of [[sampleFrames]]: decode (javax.sound.sampled), split the sample
-    * stream into fixed 16-sample windows (last window ragged),
+    * of [[decodeVideoFrames]]: decode (javax.sound.sampled), split the
+    * sample stream into fixed 16-sample windows (last window ragged),
     * emit one row per window. Map-side only (`mapPartitions` is justified:
     * codec work, no Catalyst form); undecodable or non-audio payloads emit
     * nothing — they are [[extractAudioFeatures]]' sentinel rows' job.
@@ -1169,7 +1136,7 @@ object Multimodal {
   def aviPx(docId: Long, f: Int, i: Int, c: Int): Int =
     (((docId * 31 + f * 101 + i * 7 + c * 13) % 256) + 256).toInt % 256
 
-  private def packAvi(handler: String, compression: Int, w: Int, h: Int,
+  private[llm] def packAvi(handler: String, compression: Int, w: Int, h: Int,
                       frames: Seq[Array[Byte]]): Array[Byte] = {
     val strh = java.nio.ByteBuffer.allocate(64).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     strh.put("strh".getBytes("ISO-8859-1")).putInt(56)
@@ -1234,31 +1201,6 @@ object Multimodal {
       out
     }
     packAvi("DIB ", 0, w, h, frames)
-  }
-
-  /** A REAL motion-JPEG AVI: the same logical frames as
-    * [[syntheticAviDib]], each JPEG-encoded through `javax.imageio` — the
-    * genuine lossy codec path (frames decode to APPROXIMATELY the [[aviPx]]
-    * values; exact goldens come from committed fixtures, not arithmetic).
-    */
-  def syntheticAviMjpeg(docId: Long): Array[Byte] = {
-    val (w, h, n) = aviDims(docId)
-    val frames = (0 until n).map { f =>
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var i = 0
-      while (i < w * h) {
-        img.setRGB(i % w, i / w, (aviPx(docId, f, i, 0) << 16) |
-          (aviPx(docId, f, i, 1) << 8) | aviPx(docId, f, i, 2))
-        i += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
-      bos.toByteArray
-    }
-    // 'MJPG' biCompression fourcc, little-endian in the struct field
-    val mjpg = ('M'.toInt) | ('J'.toInt << 8) | ('P'.toInt << 16) | ('G'.toInt << 24)
-    packAvi("MJPG", mjpg, w, h, frames)
   }
 
   /** One synthetic DIB-AVI [[MediaRow]] per document id — the

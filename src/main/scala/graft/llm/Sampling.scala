@@ -55,13 +55,6 @@ object Sampling {
     df.withColumn("split", labeled)
   }
 
-  /** Deterministic uniform sample: keep each row iff its hash key falls
-    * under `fraction`. Same contract as `df.sample` but reproducible and
-    * partitioning-independent.
-    */
-  def deterministicSample(df: DataFrame, idCol: String, fraction: Double): DataFrame =
-    df.filter(hashKey(col(idCol), "sample") < lit(hexThreshold(fraction)))
-
   /** Deterministic epoch shuffle — the training-order randomization pass:
     * every row gets a `shard` and a dense 1-based `pos` within that shard,
     * both fully determined by (epoch, id). The same corpus shuffles
@@ -101,8 +94,9 @@ object Sampling {
   /** Stratified deterministic sample: per-stratum keep rates (e.g. a target
     * domain mix — downsample common-crawl, keep all of books). Strata absent
     * from `rates` are kept whole (rate 1.0). The rate lookup is a literal when-chain
-    * (broadcast-free, codegen'd); membership is as reproducible as
-    * [[deterministicSample]].
+    * (broadcast-free, codegen'd); a row is kept iff its hash key falls
+    * under its stratum's rate, so membership is reproducible and
+    * partitioning-independent, unlike `df.sample`.
     */
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
                        rates: Map[String, Double]): DataFrame = {

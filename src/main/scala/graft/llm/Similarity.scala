@@ -113,26 +113,19 @@ object Similarity {
   def dotLong(a: Column, b: Column): Column =
     graft.functions.ArrayMath.dotLong(a, b)
 
-  /** Cosine similarity from quantized vectors: exact int dot / sqrt-norm
-    * product. Division and sqrt are IEEE-deterministic on exact inputs.
-    */
-  def cosineQ(qa: Column, qb: Column): Column =
-    dotLong(qa, qb).cast("double") /
-      (sqrt(dotLong(qa, qa).cast("double")) * sqrt(dotLong(qb, qb).cast("double")))
-
-  /** The per-vector norm factor of [[cosineQ]]: sqrt of the exact integer
-    * self-dot. Precompute it ONCE per vector in the projection BELOW a
-    * pair-scale join and feed [[cosineQN]] — [[cosineQ]] inlined at a join
-    * output recomputes both self-dots for EVERY pair (candidate-scale ×
-    * 2 extra dot kernels, the dominant expression cost of the ANN tier).
+  /** The per-vector norm factor of [[cosineQN]]: sqrt of the exact
+    * integer self-dot. Precompute it ONCE per vector in the projection
+    * BELOW a pair-scale join — recomputing both self-dots at the join
+    * output costs 2 extra dot kernels for EVERY pair (the dominant
+    * expression cost of the ANN tier).
     */
   def normQ(q: Column): Column = sqrt(dotLong(q, q).cast("double"))
 
-  /** [[cosineQ]] with the two norm factors precomputed ([[normQ]]): the
-    * same IEEE operations on the same values in the same order — sqrt per
-    * side, one multiply, one divide — so results are BIT-IDENTICAL to
-    * [[cosineQ]]; only where the sqrt evaluates moves (per vector, not per
-    * pair).
+  /** Cosine similarity from quantized vectors with the two norm factors
+    * precomputed ([[normQ]]): exact int dot / sqrt-norm product. Division
+    * and sqrt are IEEE-deterministic on exact inputs, and the operations
+    * are the same wherever the norms evaluate (sqrt per side, one
+    * multiply, one divide).
     */
   def cosineQN(qa: Column, qb: Column, na: Column, nb: Column): Column =
     dotLong(qa, qb).cast("double") / (na * nb)
@@ -192,7 +185,8 @@ object Similarity {
     * Input columns: (vec_id, embedding). Output: query_id, neighbor_id, cosine,
     * rank (1..k), deterministically tie-broken by neighbor id.
     * The corpus side is broadcast when small; otherwise Spark picks a
-    * shuffle-replicate-NL join — at scale, prefer [[ivfTopK]].
+    * shuffle-replicate-NL join — at scale, prefer
+    * [[ivfTopKWithQuantizedCentroids]].
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
@@ -213,7 +207,8 @@ object Similarity {
     * to end, no float anywhere — so ranking and oracle agreement are
     * arithmetic identities. Same exact calibration tier as
     * [[bruteForceTopK]]; at corpus scale MIPS reduces to cosine ANN via
-    * the norm-augmentation trick and routes through [[ivfTopK]].
+    * the norm-augmentation trick and routes through
+    * [[ivfTopKWithQuantizedCentroids]].
     */
   def mipsTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
@@ -234,8 +229,9 @@ object Similarity {
     * ranking so the k slots are all negatives.
     *
     * This is the exact calibration tier; at corpus scale route the
-    * candidate generation through [[ivfTopK]]'s cells (label filter is a
-    * residual predicate on the probed cells) exactly as for plain ANN.
+    * candidate generation through [[ivfTopKWithQuantizedCentroids]]'s
+    * cells (label filter is a residual predicate on the probed cells)
+    * exactly as for plain ANN.
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"), col("label").as("q_label"),
@@ -339,61 +335,17 @@ object Similarity {
     vectors.select(col("vec_id") +: comps: _*)
   }
 
-  /** IVF (inverted-file) approximate top-k: corpus vectors are partitioned
-    * into `nCentroids` Voronoi cells by seeded KMeans; each query probes only
-    * its `nProbe` nearest cells and ranks exact cosine within them. The
-    * coarse quantizer turns the all-pairs cross join into an equi-join on
-    * cell id — the centroid table is tiny and broadcast. Complements
-    * [[lshBucket]] routing: IVF adapts to the data distribution, LSH is
-    * data-independent.
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val featurized = corpus.select(col("vec_id").as("neighbor_id"),
-      quantize(col("embedding")).as("cv"),
-      array_to_vector(col("embedding").cast("array<double>")).as("features"))
-    // KMeans.fit persists an UNCACHED input internally for its iterations and
-    // unpersists when done — no explicit .cache() here (an explicit one would
-    // outlive this query and squat on executor storage; observed contaminating
-    // subsequent benchmark queries). For repeated querying at 100 TB, fit
-    // ONCE offline and use [[ivfTopKWithCentroids]] — a fit per query is the
-    // wrong amortization.
-    val model = new KMeans().setK(nCentroids).setSeed(42L).setMaxIter(10)
-      .fit(featurized)
-    val assigned = model.transform(featurized)
-      .select(col("neighbor_id"), col("cv"), col("prediction").as("cell"))
-    val centroids = model.clusterCenters.map(_.toArray.toSeq).toSeq
-    probeAndRank(queries, assigned, quantizeCentroids(centroids), k, nProbe)
-  }
-
-  /** Driver-side centroid quantization with Spark `round` semantics
-    * (BigDecimal HALF_UP), so a quantized centroid equals what
-    * `quantize(col)` would produce on the same values — the premise that
-    * lets IVF scoring stay exact-integer end to end.
-    */
-  private def quantizeCentroids(centroids: Seq[Seq[Double]]): Seq[Seq[Long]] =
-    centroids.map(_.map(x =>
-      java.math.BigDecimal.valueOf(x * 1000)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()))
-
-  /** IVF top-k against a PRECOMPUTED coarse quantizer: `centroids(i)` is the
-    * center of cell i. This is the steady-state 100 TB path — the quantizer
-    * is fit once (offline, on a sample) and amortized over every query batch;
-    * cell assignment is then a map-side-only argmin kernel (no fit job, no
-    * shuffle) and the query probes `nProbe` cells.
-    */
-  def ivfTopKWithCentroids(queries: DataFrame, corpus: DataFrame, k: Int,
-                           centroids: Seq[Seq[Double]], nProbe: Int = 4): DataFrame =
-    ivfTopKWithQuantizedCentroids(queries, corpus, k,
-      quantizeCentroids(centroids), nProbe)
-
-  /** [[ivfTopKWithCentroids]] with the coarse quantizer ALREADY in quantized
-    * integer space (each centroid = what `quantize(embedding)` yields on
-    * its values). Cell assignment and probing are then exact integer argmin —
-    * fully deterministic and expressible in any engine, which is what lets
-    * the registry's IVF query carry a DuckDB oracle.
+  /** IVF (inverted-file) approximate top-k against a PRECOMPUTED coarse
+    * quantizer: corpus vectors fall into Voronoi cells around
+    * `centroidsQ(i)`, each query probes only its `nProbe` nearest cells and
+    * ranks exact cosine within them. This is the steady-state 100 TB path —
+    * the quantizer is fit once (offline, on a sample) and amortized over
+    * every query batch. Centroids are in quantized integer space (each =
+    * what `quantize(embedding)` yields on its values), so cell assignment
+    * and probing are exact integer argmin — fully deterministic and
+    * expressible in any engine, which is what lets the registry's IVF query
+    * carry a DuckDB oracle. Complements [[lshBucket]] routing: IVF adapts
+    * to the data distribution, LSH is data-independent.
     */
   def ivfTopKWithQuantizedCentroids(queries: DataFrame, corpus: DataFrame, k: Int,
                                     centroidsQ: Seq[Seq[Long]], nProbe: Int = 4): DataFrame = {

@@ -11,16 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(split(text, " "))
-
-  /** BPE-ish subword count: tokens matched by a wordpiece-style regex —
-    * letter runs, digit runs, or single non-space symbols. A cheap proxy for
-    * tokenizer budget estimation at corpus scale.
-    */
-  def bpeishTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
-
   /** Punctuation character count. */
   def punctCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[\\.,;:!\\?'\"()\\[\\]{}-]"), lit(0)))

@@ -154,48 +154,25 @@ object ConnectedComponents {
     }
   }
 
-  /** Cluster-resolved near-duplicate removal: keep exactly the component
-    * root (min id) of every duplicate cluster. Unlike the pairwise greedy
-    * drop ([[graft.llm.Dedup.removeNearDuplicates]]'s last stage, which
-    * drops the higher id of each confirmed PAIR), this is transitive: a
-    * cluster {1,2,3} confirmed only through pairs (1,3),(2,3) keeps just
-    * doc 1. `pairs` is any confirmed-pair table (id_a, id_b); `docs` the
-    * corpus it refers to.
-    */
-  def dedupByComponents(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val comp = components(pairs, "id_a", "id_b")
-    // merge-hint: the component table is duplicate-density-bound — size
-    // estimates for it are meaningless, and a mis-planned broadcast of a
-    // pathological cluster set OOMs the driver (same taxonomy as the
-    // jaccardPairs joins).
-    val dropIds = comp.filter(col("id") =!= col("component"))
-      .select(col("id").as("doc_id"))
-    docs.join(dropIds.hint("merge"), Seq("doc_id"), "left_anti")
-  }
-
-  /** Quality-priority cluster dedup: like [[dedupByComponents]] but the
-    * survivor of each duplicate cluster is the row with the HIGHEST
-    * `priorityCol` (ties break to the lowest id) instead of the lowest id —
-    * the keep-longest / keep-highest-quality policy production near-dedup
-    * pipelines actually want (the canonical-id rule discards a clean
-    * original whenever a truncated copy has a smaller id).
+  /** Quality-priority cluster dedup over an ALREADY-COMPUTED vertex-closed
+    * labeling (`id`, `component`; callers share one CC run across several
+    * consumers): the survivor of each duplicate cluster is the row with
+    * the HIGHEST `priorityCol`, ties to the lowest id — the keep-longest /
+    * keep-highest-quality policy production near-dedup pipelines want (the
+    * canonical-id rule discards a clean original whenever a truncated copy
+    * has a smaller id; a constant priority keeps the min id). Unlike the
+    * pairwise greedy drop ([[graft.llm.Dedup.removeNearDuplicates]]'s last
+    * stage, which drops the higher id of each confirmed PAIR), this is
+    * transitive: a cluster {1,2,3} confirmed only through pairs (1,3),(2,3)
+    * keeps one doc.
     *
     * Singletons (docs in no pair) survive trivially via the vertex-closed
-    * component labeling. The per-cluster winner is one window ranked over
+    * labeling. The per-cluster winner is one window ranked over
     * `component` — partition width is cluster size, which the candidate
-    * tier already bounds (the same cluster-density argument as
-    * [[dedupByComponents]]'s merge hint).
-    */
-  def dedupByComponentsKeepBest(docs: DataFrame, pairs: DataFrame,
-                                priorityCol: String): DataFrame = {
-    val comp = components(pairs, "id_a", "id_b",
-      vertices = Some(docs.select(col("doc_id").as("id"))))
-    keepBestByComponents(docs, comp, priorityCol)
-  }
-
-  /** The keep-best selection alone, over an ALREADY-COMPUTED vertex-closed
-    * labeling (`id`, `component`) — for callers that share one CC run
-    * across several consumers instead of re-running the fixpoint per call.
+    * tier already bounds. Merge hint: the component table is
+    * duplicate-density-bound — size estimates for it are meaningless, and
+    * a mis-planned broadcast of a pathological cluster set OOMs the driver
+    * (same taxonomy as the jaccardPairs joins).
     */
   def keepBestByComponents(docs: DataFrame, comp: DataFrame,
                            priorityCol: String): DataFrame = {

@@ -1242,7 +1242,7 @@ object GraphTraversal {
     val e = edges.select(col("src").as("id"), col("dst").as("nid")).distinct()
     val verts = e.select(col("id")).union(e.select(col("nid").as("id"))).distinct()
     def estSum(c: DataFrame): Long = c
-      .agg(sum(expr("hll_sketch_estimate(sk)"))).head.getLong(0)
+      .agg(sum(expr("hll_sketch_estimate(sk)"))).head().getLong(0)
     val ests = Array.ofDim[Long](maxT + 1)
     // round t estimates N(t − 1) from its input before extending it, so
     // the estimates run in round order: N(0), round 1, N(1), round 2, …

@@ -41,12 +41,4 @@ object Normalize {
     SourceSpecialCases.foldLeft(null: Column) { case (acc, (raw, norm)) =>
       if (acc == null) when(source === raw, norm) else acc.when(source === raw, norm)
     }.otherwise(upper(source))
-
-  /** Pure forms for unit tests mirroring the reference matrices
-    * (OntologyGraphBuilderTest.java:186-254).
-    */
-  def normalizeEdgeLabel(label: String): String =
-    LabelSpecialCases.getOrElse(label, label.toUpperCase.replace(" ", "_"))
-  def normalizeEdgeSource(source: String): String =
-    SourceSpecialCases.getOrElse(source, source.toUpperCase)
 }

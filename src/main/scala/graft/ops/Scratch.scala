@@ -153,22 +153,20 @@ object Scratch {
     * and shutdown-hooked: allocating bare dirs in java.io.tmpdir would
     * escape both cleanup mechanisms (no liveness lock for the sweep, no
     * hook), re-creating the litter failure mode for exactly the runs that
-    * fill tmpfs (review finding, round 12).
+    * fill tmpfs (review finding, round 12). The lazy val holds the
+    * (channel, lock) pair beside the path — the strong reference
+    * [[rootLock]] explains.
     */
-  @volatile private var fallbackLock:
-    (java.nio.channels.FileChannel, java.nio.channels.FileLock) = null
-  private lazy val fallbackRoot: Path = {
-    val (r, lk) = mkRoot(diskTmp)
-    fallbackLock = lk
-    r
-  }
+  private lazy val fallback:
+      (Path, (java.nio.channels.FileChannel, java.nio.channels.FileLock)) =
+    mkRoot(diskTmp)
 
   def dir(prefix: String): Path = {
     // re-check headroom per allocation: tmpfs filling mid-run fails over
     // to disk tmp (slower, but never an opaque ENOSPC inside a write)
     if (root.startsWith("/dev/shm") &&
         root.toFile.getUsableSpace < MinFreeBytes / 4)
-      Files.createTempDirectory(fallbackRoot, prefix)
+      Files.createTempDirectory(fallback._1, prefix)
     else Files.createTempDirectory(root, prefix)
   }
 }

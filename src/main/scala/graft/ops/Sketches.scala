@@ -106,7 +106,7 @@ object Sketches {
       .withColumn("__w", cmsBucket("__d", width))
       .join(broadcast(cells.select(col("d").as("__d"), col("w").as("__w"),
         col("cnt"))), Seq("__d", "__w"), "left")
-      .groupBy(probeCols.map(col): _*)
+      .groupBy(probeCols.toIndexedSeq.map(col): _*)
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_est"))
   }
 

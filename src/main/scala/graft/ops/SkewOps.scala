@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hub-heavy joins (SURVEY §7.5: upper-ontology terms
@@ -104,17 +104,5 @@ object SkewOps {
         max(col("max_cnt")).as("max_cnt"),
         min(when(col("cum") * 2 >= col("n_keys"), col("cnt"))).as("median_cnt"),
         min(when(col("cum") * 100 >= col("n_keys") * 99, col("cnt"))).as("p99_cnt"))
-  }
-
-  /** Per-key frequency profile — the diagnostic used to decide whether
-    * salting is warranted: top-N keys by row count with their share.
-    */
-  def keySkewProfile(df: DataFrame, keys: Seq[String], topN: Int = 10): DataFrame = {
-    val total = df.count()
-    df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-      .withColumn("share", col("n") / lit(total.toDouble))
-      .orderBy(col("n").desc)
-      .limit(topN)
   }
 }

@@ -361,9 +361,9 @@ object TextIndex {
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("score").desc, col("doc_id"))))
 
-  /** Full BM25 ranked retrieval (Robertson–Spärck Jones): [[rankDocuments]]'
-    * odds-ratio idf extended with tf SATURATION and document-LENGTH
-    * normalization —
+  /** BM25 scoring for ranked retrieval (Robertson–Spärck Jones):
+    * [[rankDocuments]]' odds-ratio idf extended with tf SATURATION and
+    * document-LENGTH normalization —
     * `idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))` — so a term's 50th
     * occurrence adds ~nothing and long documents stop winning on bulk.
     * k1/b arrive as integer tenths/hundredths (default 12/75 = the classic
@@ -378,19 +378,12 @@ object TextIndex {
     * (no join against a corpus-sized length table — a mis-estimated
     * broadcast there is the scorePairs OOM class), and (totalLen, N) is one
     * scalar aggregate — no new corpus-scale shuffle or join.
-    */
-  def bm25Rank(docs: DataFrame, queryTerms: Seq[String], k: Int,
-               bHundredths: Int = 75): DataFrame = {
-    require(k > 0, s"bm25Rank: k must be positive: $k")
-    rankTopK(bm25Scores(docs, queryTerms, bHundredths), k)
-  }
-
-  /** BM25 scoring WITHOUT the ranking tail: (doc_id, score) for every
-    * document matching ≥ 1 query term. Split out so a caller with several
-    * ranked consumers (plain BM25 list + hybrid RRF fusion) can persist ONE
+    *
+    * Scoring only: (doc_id, score) for every document matching ≥ 1 query
+    * term; [[rankTopK]] ranks it. Split so a caller with several ranked
+    * consumers (plain BM25 list + hybrid RRF fusion) can persist ONE
     * scored frame — the corpus-scale tokenize/stem/df/length work — and
-    * rank it per consumer over ≤ matching-docs rows. Scoring semantics
-    * documented on [[bm25Rank]].
+    * rank it per consumer over ≤ matching-docs rows.
     */
   def bm25Scores(docs: DataFrame, queryTerms: Seq[String],
                  bHundredths: Int = 75): DataFrame = {

@@ -147,19 +147,13 @@ object UriOps {
   def fileStemCol(fname: Column): Column =
     when(fname.contains("."), regexp_replace(fname, "\\.[^.]*$", "")).otherwise(fname)
 
-  /** Filename suffix from the LAST '.' (inclusive), '' when none —
-    * the column form of [[fileSuffix]].
-    */
+  /** Filename suffix from the LAST '.' (inclusive), '' when none. */
   def fileSuffixCol(fname: Column): Column =
     regexp_extract(fname, "(\\.[^.]*)$", 1)
 
-  /** Pure forms used driver-side. */
+  /** Driver-side form of [[fileStemCol]]. */
   def fileStem(fname: String): String = {
     val i = fname.lastIndexOf('.')
     if (i < 0) fname else fname.substring(0, i)
-  }
-  def fileSuffix(fname: String): String = {
-    val i = fname.lastIndexOf('.')
-    if (i < 0) "" else fname.substring(i)
   }
 }

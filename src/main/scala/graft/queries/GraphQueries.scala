@@ -2134,7 +2134,7 @@ object GraphQueries {
           .reduce(_ union _)
         val nf = graft.ops.GraphTraversal.neighborhoodFunction(edges, maxT = 4)
         val w = org.apache.spark.sql.expressions.Window.orderBy("t")
-        val tot = nf.agg(max(col("n_pairs"))).head.getLong(0) // 1 driver long
+        val tot = nf.agg(max(col("n_pairs"))).head().getLong(0) // 1 driver long
         // the unpartitioned lag runs over maxT+1 = 5 rows by construction —
         // guarded row-level so a regression fails loudly (the Pareto idiom)
         nf.withColumn("prev", lag(graft.ops.Bounded.guard(col("n_pairs"),

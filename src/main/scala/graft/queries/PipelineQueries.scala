@@ -1563,9 +1563,7 @@ object PipelineQueries {
     // 16 corpus vectors, Spark-quantized and collected driver-side, so both
     // engine and oracle derive identical integer centroids from the data and
     // the whole query (argmin assignment, probe, cosine rank) is exact —
-    // hence the DuckDB oracle. The KMeans-fit variant ([[Similarity.ivfTopK]])
-    // stays covered by the recall spec in LlmOpsSpec (centroids are
-    // engine-internal, inherently not oracle-expressible).
+    // hence the DuckDB oracle.
     // ---- Lloyd's k-means, exact across engines --------------------------
     // 2 full assignment+update rounds at k=8 over the quantized embedding
     // corpus: integer argmin assignment (ties to lowest cell) and

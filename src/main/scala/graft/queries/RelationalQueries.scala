@@ -1711,7 +1711,7 @@ object RelationalQueries {
           .select(col("l_orderkey"), col("l_quantity").cast("long").as("qty"))
         // data-relative granularity (two 1-value driver scalars, replayed
         // by the oracle): ~30 small files, bins of ~5 files each
-        val span = li.agg(max(col("l_orderkey"))).head.getLong(0) / 30L + 1L
+        val span = li.agg(max(col("l_orderkey"))).head().getLong(0) / 30L + 1L
         li.withColumn("fid", expr(s"l_orderkey div $span"))
           .repartition(col("fid"))
           .write.partitionBy("fid").parquet(s"$base/small")
@@ -1719,7 +1719,7 @@ object RelationalQueries {
         val nBefore = small.select(ifn()).distinct().count()
         val inv = small.groupBy("fid").agg(count(lit(1)).as("size_rows"))
         val Array(tr, nf) = inv.agg(sum(col("size_rows")), count(lit(1)))
-          .head.toSeq.map(_.toString.toLong).toArray
+          .head().toSeq.map(_.toString.toLong).toArray
         val cap = 5L * (tr / nf)
         val plan = graft.ops.PrefixOps
           .exclusivePrefixSum(inv, "fid", "size_rows", "start_off")
@@ -1776,7 +1776,7 @@ object RelationalQueries {
         val mBits = 1 << 18
         val base = graft.ops.Scratch.dir("graft-bloomskip").toString
         val o = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val span = o.agg(max(col("o_orderkey"))).head.getLong(0) / 30L + 1L
+        val span = o.agg(max(col("o_orderkey"))).head().getLong(0) / 30L + 1L
         o.withColumn("fid", expr(s"o_orderkey div $span"))
           .repartition(col("fid"))
           .write.partitionBy("fid").parquet(s"$base/files")
@@ -1801,12 +1801,12 @@ object RelationalQueries {
         // manifest-level prune: ONLY the kept fid directories are read, and
         // the pruned scan must find every match the full scan finds — a
         // bloom false negative fails HERE, not as a silent missing row
-        val matched = s.read.parquet(keptFids.map(f => s"$base/files/fid=$f"): _*)
+        val matched = s.read.parquet(keptFids.toIndexedSeq.map(f => s"$base/files/fid=$f"): _*)
           .filter(col("o_custkey") === probeKey).count()
         val full = files.filter(col("o_custkey") === probeKey).count()
         require(matched == full, s"s34_bloom_file_skip: pruned scan found " +
           s"$matched of $full matches — the bloom produced a false negative")
-        val perKept = files.filter(col("fid").isin(keptFids: _*))
+        val perKept = files.filter(col("fid").isin(keptFids.toIndexedSeq: _*))
           .groupBy("fid")
           .agg(sum(when(col("o_custkey") === probeKey, 1L).otherwise(0L)).as("n_matches"))
         files.select("fid").distinct()

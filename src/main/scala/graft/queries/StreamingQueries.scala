@@ -359,7 +359,7 @@ object StreamingQueries {
     * advances the watermark past the tail windows.
     */
   private def replayBatches(s: SparkSession, batches: Seq[DataFrame],
-                            parts: Int = 8)
+                            parts: Int)
                            (build: DataFrame => DataFrame): DataFrame = {
     require(batches.nonEmpty, "replayBatches: need at least one batch")
     val base = scratchDir("graft-stream-staged")
@@ -1315,7 +1315,6 @@ object StreamingQueries {
     // group, never the group's history.
     ("stream_topk",
       (s, d) => {
-        val li = s.read.parquet(s"$d/lineitem.parquet")
         replayLinked(s, stagedLineitem(s, d), "complete") { st =>
           st.select(col("l_returnflag"),
               round(col("l_extendedprice") * 100).cast("long").as("cents"),

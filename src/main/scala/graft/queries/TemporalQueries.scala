@@ -522,7 +522,6 @@ object TemporalQueries {
     // one average day's volume.
     ("ts_cusum_shift",
       (s, d) => {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
         val wo = org.apache.spark.sql.expressions.Window
           .partitionBy("event_type").orderBy("day")
         TemporalOps.loadEvents(s, d)

@@ -1,59 +1,17 @@
 package graft.streaming
 
-import graft.io.OwlReader
-import graft.model.TripleRow
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Structured-Streaming ingest of an OWL landing directory — the incremental
-  * analog of the reference's download-then-reparse cycle
-  * (OntologyDownloader.java:86-133; SURVEY.md §2.7): when a new or updated
-  * ontology file lands, only that file is re-parsed and only its partition of
-  * the raw-triple store is replaced (dynamic partition overwrite keyed by
-  * src_file). Cross-file dedup (A1) stays a read-time transform
-  * (TripleOps.uniqueTriples), so the store remains an incremental-friendly
-  * union of per-file triple sets.
+/** Structured-Streaming operators: watermarked windows, sessions and
+  * dedup, stateful sketches, stream-stream joins, and `foreachBatch` loops
+  * that probe a persisted, `batch=<n>`-partitioned store (near-dup
+  * candidates, entity match, sorted-neighborhood ER, attribution) with
+  * per-batchId overwrite, so a replayed micro-batch is idempotent
+  * (SURVEY.md §2.7).
   */
 object StreamingIngest {
-
-  /** Start the ingest stream: OWL files under `landingDir` → parquet triple
-    * store at `storeDir` partitioned by src_file. Caller owns the lifecycle.
-    */
-  def start(spark: SparkSession, landingDir: String, storeDir: String,
-            checkpointDir: String): StreamingQuery = {
-    val files = spark.readStream
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*.owl")
-      .text(landingDir)
-      .select(input_file_name().as("path"), col("value"))
-
-    files.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import batch.sparkSession.implicits._
-        val triples = batch.as[(String, String)].flatMap { case (path, content) =>
-          val name = path.substring(path.lastIndexOf('/') + 1)
-          OwlReader.parseTriples(name, content.getBytes("UTF-8"))
-        }
-        triples.toDF()
-          .withColumnRenamed("srcFile", "src_file")
-          .write
-          .partitionBy("src_file")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
-  }
-
-  /** Read the streaming store back as the same raw-triples shape the batch
-    * reader produces, ready for TripleOps.
-    */
-  def readStore(spark: SparkSession, storeDir: String) =
-    spark.read.parquet(storeDir).withColumnRenamed("src_file", "srcFile").as[TripleRow](
-      org.apache.spark.sql.Encoders.product[TripleRow])
 
   /** Event-time windowed aggregation with a watermark — the generalized
     * streaming surface (SURVEY §2.7): tumbling/sliding window counts + sums
@@ -369,7 +327,7 @@ object StreamingIngest {
     */
   def runningSourceStats(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Encoders
     val pairs = docs.select(col("source").cast("string").as("source"),
       size(split(col("text"), "\\s+")).as("n_tokens"))
     implicit val inEnc = Encoders.product[(String, Int)]

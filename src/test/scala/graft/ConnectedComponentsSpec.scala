@@ -59,7 +59,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // pairwise drop removes only 3; component resolution keeps only root 1.
     val docs = Seq((1L, "x"), (2L, "y"), (3L, "z"), (7L, "w")).toDF("doc_id", "text")
     val pairs = Seq((1L, 3L), (2L, 3L)).toDF("id_a", "id_b")
-    val kept = ConnectedComponents.dedupByComponents(docs, pairs)
+    val comp = ConnectedComponents.components(pairs, "id_a", "id_b",
+      vertices = Some(docs.select($"doc_id".as("id"))))
+    val kept = ConnectedComponents.keepBestByComponents(docs.withColumn("p", lit(0)), comp, "p")
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq == Seq(1L, 7L))
   }
@@ -71,7 +73,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val docs = Seq((1L, "x", 5L), (2L, "y", 9L), (3L, "z", 7L),
       (7L, "w", 1L), (8L, "p", 4L), (9L, "q", 4L)).toDF("doc_id", "text", "len")
     val pairs = Seq((1L, 3L), (2L, 3L), (8L, 9L)).toDF("id_a", "id_b")
-    val kept = ConnectedComponents.dedupByComponentsKeepBest(docs, pairs, "len")
+    val comp = ConnectedComponents.components(pairs, "id_a", "id_b",
+      vertices = Some(docs.select($"doc_id".as("id"))))
+    val kept = ConnectedComponents.keepBestByComponents(docs, comp, "len")
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq == Seq(2L, 7L, 8L))
   }

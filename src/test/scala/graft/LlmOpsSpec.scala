@@ -87,7 +87,6 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("estimateJaccard: exact extremes and estimator accuracy on random corpora") {
-    import org.apache.spark.sql.DataFrame
     val d = docs(
       1L -> "a b c d e f", 2L -> "a b c d e f", // identical -> est 1.0
       3L -> "q r s t u v")                      // disjoint from 1 -> est 0.0
@@ -109,7 +108,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val joined = Dedup.estimateJaccard(sigs2, exact.select("id_a", "id_b"))
       .join(exact, Seq("id_a", "id_b"))
       .select(avg(abs(col("est_jaccard") - col("jaccard"))))
-      .head.getDouble(0)
+      .head().getDouble(0)
     assert(joined < 2.0 / math.sqrt(12), s"mean |est - exact| too high: $joined")
     // a pair referencing an id with no signature surfaces as NULL, not a drop
     val withGhost = Seq((1L, 2L), (1L, 999L)).toDF("id_a", "id_b")
@@ -205,7 +204,7 @@ class LlmOpsSpec extends AnyFunSuite {
         graft.functions.BloomProbe.positionsCol(col("gram"), mBits, 4).as("ps"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSet).toMap
     val setBits = grams.take(100).flatMap(posOf).toSet
-    val bloom = graft.functions.BloomProbe.buildBits(setBits.toSeq, 3, mBits, 4)
+    val bloom = Dedup.buildBloom(grams.take(100).toDF("text"), n = 3, mBits = mBits)
     grams.foreach { g =>
       val expected = posOf(g).subsetOf(setBits)
       assert(bloom.mightContain(g) == expected, s"gram '$g'")
@@ -437,17 +436,13 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(b(0L) != b(2L)) // every plane's sign flips
   }
 
-  test("bpe-ish token count splits letter runs, digit runs, and symbols") {
-    val r = docs(1L -> "hello world42!").select(TextStats.bpeishTokenCount($"text")).collect()(0)
-    assert(r.getInt(0) == 4) // hello, world, 42, !
-  }
-
   test("ivf top-k recovers most brute-force neighbors on real embeddings") {
     val e = TestSpark.spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = e.filter($"vec_id" < 10)
     val exact = Similarity.bruteForceTopK(queries, e, k = 5)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.ivfTopK(queries, e, k = 5, nCentroids = 8, nProbe = 4)
+    val approx = Similarity.ivfTopKWithQuantizedCentroids(queries, e, k = 5,
+        Similarity.collectQuantizedCentroids(e, 8), nProbe = 4)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.5, s"IVF recall too low: $recall")
@@ -496,38 +491,6 @@ class LlmOpsSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.avg("recall"))
       .collect()(0).getDouble(0)
     assert(recall >= 0.8, s"layered search recall@5 too low: $recall")
-  }
-
-  test("ivfTopK online fit is deterministic at fixed partitioning (seeded KMeans)") {
-    // the online path (seed 42, fixed maxIter) must reproduce bit-identical
-    // results run-to-run at the same partitioning — pins the recall claim
-    // against Spark-version / plan drift; the offline-quantizer path is
-    // already hash-pinned by the sim_ivf_topk oracle
-    val e = TestSpark.spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .repartition(4).cache()
-    e.count()
-    try {
-      def run() = Similarity.ivfTopK(e.filter($"vec_id" < 10), e, k = 5,
-          nCentroids = 8, nProbe = 4)
-        .select("query_id", "neighbor_id", "cosine")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val a = run()
-      val b = run()
-      assert(a == b, "seeded online IVF fit diverged between identical runs")
-      assert(a.nonEmpty)
-      // not just the ranked output: the fitted centroid MATRIX itself must
-      // be bit-identical across runs (a compensating error in assignment
-      // could mask centroid drift in the top-k comparison above)
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      def fitCentroids() = new KMeans().setK(8).setSeed(42L).setMaxIter(10)
-        .fit(e.select(array_to_vector(col("embedding").cast("array<double>")).as("features")))
-        .clusterCenters.map(_.toArray.toSeq).toSeq
-      val c1 = fitCentroids()
-      val c2 = fitCentroids()
-      assert(c1 == c2, "seeded KMeans centroids diverged between identical runs")
-      assert(c1.size == 8)
-    } finally { e.unpersist(); () }
   }
 
   test("ordered-pairs generator: empty, singleton, and struct elements") {
@@ -627,8 +590,8 @@ class LlmOpsSpec extends AnyFunSuite {
     val mk = (base: Float, id: Long) =>
       (id, Seq.tabulate(64)(d => base + 0.001f * ((id + d) % 7)))
     val v = vecs(((0L until 8L).map(i => mk(0.5f, i)) ++ (8L until 16L).map(i => mk(-0.5f, i))): _*)
-    val cents = Seq(Seq.fill(64)(0.5), Seq.fill(64)(-0.5))
-    val got = Similarity.ivfTopKWithCentroids(v, v, k = 3, cents, nProbe = 1)
+    val cents = Seq(Seq.fill(64)(500L), Seq.fill(64)(-500L))
+    val got = Similarity.ivfTopKWithQuantizedCentroids(v, v, k = 3, cents, nProbe = 1)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Similarity.bruteForceTopK(v, v, k = 3)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -667,25 +630,25 @@ class LlmOpsSpec extends AnyFunSuite {
     val v = vecs(1L -> Seq.fill(64)(0.1f), 2L -> Seq.fill(64)(0.2f))
     // ragged centroid list rejected driver-side, before any job
     val ragged = intercept[IllegalArgumentException] {
-      Similarity.ivfTopKWithCentroids(v, v, k = 1,
-        Seq(Seq.fill(64)(0.0), Seq.fill(32)(0.0)))
+      Similarity.ivfTopKWithQuantizedCentroids(v, v, k = 1,
+        Seq(Seq.fill(64)(0L), Seq.fill(32)(0L)))
     }
     assert(ragged.getMessage.contains("same dimension"))
     val empty = intercept[IllegalArgumentException] {
-      Similarity.ivfTopKWithCentroids(v, v, k = 1, Nil)
+      Similarity.ivfTopKWithQuantizedCentroids(v, v, k = 1, Nil)
     }
     assert(empty.getMessage.contains("non-empty"))
     // embedding shorter than the centroid dims -> clear message, not AIOOBE
     val short = vecs(1L -> Seq.fill(32)(0.1f), 2L -> Seq.fill(32)(0.2f))
     val mismatch = intercept[Exception] {
-      Similarity.ivfTopKWithCentroids(short, short, k = 1, Seq(Seq.fill(64)(0.0))).collect()
+      Similarity.ivfTopKWithQuantizedCentroids(short, short, k = 1, Seq(Seq.fill(64)(0L))).collect()
     }
     assert(causeMessages(mismatch).contains("centroid dimension"))
     // null embedding -> clear message, not an NPE
     val withNull = Seq((1L, Seq.fill(64)(0.1f)), (2L, null.asInstanceOf[Seq[Float]]))
       .toDF("vec_id", "embedding")
     val nul = intercept[Exception] {
-      Similarity.ivfTopKWithCentroids(withNull, withNull, k = 1, Seq(Seq.fill(64)(0.0))).collect()
+      Similarity.ivfTopKWithQuantizedCentroids(withNull, withNull, k = 1, Seq(Seq.fill(64)(0L))).collect()
     }
     assert(causeMessages(nul).contains("null embedding"))
   }
@@ -884,7 +847,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("damerauVerify scores candidate pairs; SQL registration matches the Scala path") {
     graft.functions.GraftExtensions.register(spark)
-    assert(spark.sql("SELECT damerau_levenshtein('CA', 'ABC')").head.getInt(0) == 2)
+    assert(spark.sql("SELECT damerau_levenshtein('CA', 'ABC')").head().getInt(0) == 2)
     // "ratain" -> "retian": one substitution + one DRIFTED transposition —
     // DL 2 vs levenshtein 3 (DuckDB-verified values)
     val d = docs(1L -> "they will ratain it", 2L -> "they will retian it",
@@ -942,7 +905,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(weak <= 0.7)
     graft.functions.GraftExtensions.register(spark)
     assert(spark.sql("SELECT jaro_winkler('MARTHA', 'MARHTA')")
-      .head.getDouble(0) == similarity("MARTHA", "MARHTA"))
+      .head().getDouble(0) == similarity("MARTHA", "MARHTA"))
   }
 
   test("blockedNamePairs: within-block candidates only, threshold, block-size guard") {
@@ -957,7 +920,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(got == Set((1L, 2L))) // cross-block twin excluded by blocking
     // sim matches the scalar kernel on the surviving pair
     val sim = EntityResolution.blockedNamePairs(df, Seq("country"), "id", "name", 0.9)
-      .select("sim").head.getDouble(0)
+      .select("sim").head().getDouble(0)
     assert(sim == graft.functions.JaroWinkler.similarity("acme corp", "acme corp."))
     // guard: a 3-row block exceeds maxBlockRows=2 (3 pairs > 1 allowed)
     val e = intercept[Exception] {
@@ -991,7 +954,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // sim matches the scalar kernel
     val sim = EntityResolution.sortedNeighborhoodPairs(df, Seq("country"), "id",
         "name", minSim = 0.9, window = 1)
-      .filter(col("key_a") === 1L).select("sim").head.getDouble(0)
+      .filter(col("key_a") === 1L).select("sim").head().getDouble(0)
     assert(sim == graft.functions.JaroWinkler.similarity("acme corp", "acme corp."))
     // candidate volume is LINEAR: at minSim=0, exactly Σ max(0, |block|−j)
     // pairs for j in 1..w — the 5-row block at w=2 yields 4+3=7, plus 0
@@ -1442,12 +1405,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(f.feature.length == 8 && math.abs(f.feature.sum - 1.0f) < 1e-5)
   }
 
-  test("resize truncates payload and stamps dimensions") {
-    val media = Multimodal.documentsAsMedia(docs(1L -> ("x" * 100)))
-    val r = Multimodal.resize(media, 4, 5).collect()(0)
-    assert(r.bytes.length == 20 && r.width == 4 && r.height == 5)
-  }
-
   test("resizeImages: real NN resample, position-exact pixels, BMP roundtrip") {
     val id = 9L // source 8x3 (w=4+9%5=8, h=3+9%3=3)
     val rows = Multimodal.syntheticBmps(docs(id -> "x"))
@@ -1469,15 +1426,6 @@ class LlmOpsSpec extends AnyFunSuite {
       org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
     val fb = Multimodal.resizeImages(junk, 2).collect()(0)
     assert(fb.bytes.toSeq == Seq[Byte](1, 2, 3, 4) && fb.width == 2)
-  }
-
-  test("frame sampling yields one frame per interval for video") {
-    val v = Multimodal.documentsAsMedia(docs(1L -> ("y" * 100)))
-      .map(_.copy(media_type = "video", duration_ms = 200L))(
-        org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val frames = Multimodal.sampleFrames(v, everyMs = 40L).collect()
-    assert(frames.length == 5)
-    assert(frames.map(_.getInt(1)).toSet == Set(0, 1, 2, 3, 4))
   }
 
   test("decodeImage parses a PNG written by an independent encoder exactly") {
@@ -1848,7 +1796,7 @@ class LlmOpsSpec extends AnyFunSuite {
     }
     // the MJPEG generator itself roundtrips: frames are REAL JPEGs whose
     // decode approximates the DIB formula (lossy, so compare loosely)
-    val Some((_, w42, h42, f42)) = Multimodal.parseAvi(Multimodal.syntheticAviMjpeg(42L))
+    val Some((_, w42, h42, f42)) = Multimodal.parseAvi(graft.llm.LlmFixtures.syntheticAviMjpeg(42L))
     val Some((dw, dh, sum)) = Multimodal.decodeAviFrame("MJPG", w42, h42, f42(0))
     val exact = (0 until dw * dh).map(i =>
       (0 to 2).map(c => Multimodal.aviPx(42L, 0, i, c).toLong).sum).sum

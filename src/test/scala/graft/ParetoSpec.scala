@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Pareto
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** 2-D skyline vs a brute-force dominance reference: the bucketed

@@ -66,11 +66,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** Bytes read from local files through Hadoop's file system, all threads. */
-  private def localBytesRead(): Long = {
-    import scala.jdk.CollectionConverters._
-    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
-      .filter(_.getScheme == "file").map(_.getBytesRead).sum
-  }
+  private def localBytesRead(): Long =
+    Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file"))
+      .flatMap(s => Option(s.getLong("bytesRead"))).map(_.longValue).getOrElse(0L)
 
   test("source stage reads each OWL file once") {
     withFixtureCopy { obo =>
@@ -94,7 +92,7 @@ class PipelineSpec extends AnyFunSuite {
         OntologyPipeline.run(spark, obo.toString, out.toString, phenotypePattern = "macrophage\\.owl")
       }
       assert(java.nio.file.Files.isDirectory(out.resolve("ontologies/vertices")))
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
     }
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.ScdOps
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SCD Type-2 history: no-op collapse, null-safe attribute transitions,

@@ -44,12 +44,6 @@ class SkewOpsSpec extends AnyFunSuite {
     assert(salted.exceptAll(plain.select(salted.columns.toIndexedSeq.map(col): _*)).isEmpty)
   }
 
-  test("skew profile surfaces the hub key") {
-    val prof = SkewOps.keySkewProfile(skewed, Seq("key"), topN = 1).collect()(0)
-    assert(prof.getLong(0) == 0L)
-    assert(prof.getAs[Double]("share") > 0.7)
-  }
-
   test("AQE splits skewed sort-merge join partitions") {
     // lower AQE thresholds so the tiny local dataset triggers the skew path
     val conf = spark.conf

@@ -5,55 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Incremental OWL ingest: new files append partitions, updated files replace
-  * only their own partition (SURVEY.md §2.7).
+/** Structured-Streaming operators: each matches its batch twin, and the
+  * store-probing `foreachBatch` loops replay idempotently (SURVEY.md §2.7).
   */
 class StreamingIngestSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("file-source ingest with dynamic partition replacement") {
-    val base = Files.createTempDirectory("graft-stream")
-    val landing = base.resolve("landing"); Files.createDirectories(landing)
-    val store = base.resolve("store").toString
-    val checkpoint = base.resolve("ckpt").toString
-
-    Files.copy(Paths.get(TestSpark.fixture("macrophage.owl")),
-      landing.resolve("macrophage.owl"))
-
-    val q = StreamingIngest.start(spark, landing.toString, store, checkpoint)
-    try {
-      q.processAllAvailable()
-      val s1 = spark.read.parquet(store)
-      val macroCount = s1.filter(col("src_file") === "macrophage.owl").count()
-      assert(macroCount > 0)
-      assert(s1.select("src_file").distinct().count() == 1)
-
-      // second file arrives -> new partition, old untouched
-      Files.copy(Paths.get(TestSpark.fixture("ro.owl")), landing.resolve("ro.owl"))
-      q.processAllAvailable()
-      val s2 = spark.read.parquet(store)
-      assert(s2.select("src_file").distinct().count() == 2)
-      assert(s2.filter(col("src_file") === "macrophage.owl").count() == macroCount)
-
-      // updated version of a file -> its partition replaced, not duplicated
-      val updated = new String(Files.readAllBytes(Paths.get(TestSpark.fixture("no-version-test.owl"))), "UTF-8")
-      Files.write(landing.resolve("extra.owl"), updated.getBytes("UTF-8"))
-      q.processAllAvailable()
-      val s3 = spark.read.parquet(store)
-      assert(s3.select("src_file").distinct().count() == 3)
-
-      // store reads back in the batch TripleRow shape and feeds TripleOps
-      val raw = StreamingIngest.readStore(spark, store).toDF()
-      val meta = graft.io.OwlReader.meta(spark,
-        Seq(TestSpark.fixture("macrophage.owl"), TestSpark.fixture("ro.owl"))).toDF()
-      val uniq = graft.ops.TripleOps.uniqueTriples(
-        graft.ops.TripleOps.collectTriples(raw.filter(col("srcFile") =!= "extra.owl"), meta, testObject = false))
-      assert(uniq.count() > 0)
-    } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
-  }
 
   test("streaming exact dedup drops re-arrived content within the watermark") {
     import spark.implicits._

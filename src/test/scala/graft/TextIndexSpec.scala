@@ -339,7 +339,7 @@ class TextIndexSpec extends AnyFunSuite {
       (3L, "cat cat cat cat " + ("pad " * 5).trim),        // tf=4, dl=9
       (4L, "cat " + ("pad " * 98).trim))                   // tf=1, dl=99
       .toDF("doc_id", "text")
-    val got = TextIndex.bm25Rank(base, Seq("cat"), k = 10)
+    val got = TextIndex.rankTopK(TextIndex.bm25Scores(base, Seq("cat")), k = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // saturation: tf 1->2 gains less than linear, tf 2->4 still less
     assert(got(2L) > got(1L) && got(3L) > got(2L))
@@ -348,11 +348,11 @@ class TextIndexSpec extends AnyFunSuite {
     // length normalization: same tf, much longer doc scores lower
     assert(got(4L) < got(1L))
     // b=0 switches length normalization off: docs 1 and 4 tie exactly
-    val noB = TextIndex.bm25Rank(base, Seq("cat"), k = 10, bHundredths = 0)
+    val noB = TextIndex.rankTopK(TextIndex.bm25Scores(base, Seq("cat"), bHundredths = 0), k = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(noB(4L) == noB(1L))
     // stemmed match + rank order and ties-by-id survive in the full path
-    val ranks = TextIndex.bm25Rank(base, Seq("cats"), k = 2)
+    val ranks = TextIndex.rankTopK(TextIndex.bm25Scores(base, Seq("cats")), k = 2)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(ranks == Map(3L -> 1, 2L -> 2))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.{Dedup, TextStats}
+import graft.llm.{Dedup, LlmFixtures, TextStats}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -353,11 +353,11 @@ class TextPipelineSpec extends AnyFunSuite {
       // 3. benchmark decontamination (5-gram overlap with the eval set)
       val clean = Dedup.decontaminate(deduped, evalDocs, n = 5)
       // 4. token-budget mix + split + pack + shard export
+      val tokens = size(split(col("text"), " "))
       val mixed = Sampling.tokenBudgetMix(clean.withColumn("domain", lit("web")),
-        "domain",
-        graft.llm.TextStats.tokenCount(col("text")), Map.empty, defaultBudget = Long.MaxValue)
+        "domain", tokens, Map.empty, defaultBudget = Long.MaxValue)
       Sampling.writeTrainingShards(mixed.drop("n_tokens", "cum_tokens"),
-        s"$base/shards", "doc_id", TextStats.tokenCount(col("text")).cast("long"),
+        s"$base/shards", "doc_id", tokens.cast("long"),
         capacity = 32L, numShards = 2)
 
       val back = spark.read.parquet(s"$base/shards")
@@ -442,12 +442,12 @@ class TextPipelineSpec extends AnyFunSuite {
     // lexicographically to (l,o); round 2: (lo,w)=3; round 3: every pair
     // occurs once -> early stop at 2 rules despite numMerges=5
     assert(rules.map(r => (r._2, r._3, r._5)) == Seq(("l", "o", 3L), ("lo", "w", 3L)))
-    val toks = docs.select(Bpe.tokenize(rules.map(r => (r._2, r._3)))(col("text")).as("t"))
+    val toks = docs.select(LlmFixtures.tokenize(rules.map(r => (r._2, r._3)))(col("text")).as("t"))
       .collect()(0).getSeq[String](0)
     assert(toks == Seq("low", "low", "low", "e", "r"))
     // greedy left-to-right: "aaa" under (a,a) merges the FIRST pair only
     val aaa = Seq((1L, "aaa")).toDF("doc_id", "text")
-      .select(Bpe.tokenize(Seq(("a", "a")))(col("text")).as("t"))
+      .select(LlmFixtures.tokenize(Seq(("a", "a")))(col("text")).as("t"))
       .collect()(0).getSeq[String](0)
     assert(aaa == Seq("aa", "a"))
   }
@@ -501,7 +501,7 @@ class TextPipelineSpec extends AnyFunSuite {
       .select(col("doc_id"), graft.functions.BpeEncode.encodeCol(col("text"), rules).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val viaUdf = docs
-      .select(col("doc_id"), Bpe.tokenize(rules)(col("text")).as("t"))
+      .select(col("doc_id"), LlmFixtures.tokenize(rules)(col("text")).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(viaKernel == viaUdf)
     assert(viaKernel(3L) == Seq.empty && viaKernel(4L) == Seq.empty)
@@ -518,7 +518,7 @@ class TextPipelineSpec extends AnyFunSuite {
       .select(graft.functions.BpeEncode.encodeCol(col("s"), dupRules).as("t"))
       .collect()(0).getSeq[String](0)
     val dupUdf = Seq("abc").toDF("s")
-      .select(Bpe.tokenize(dupRules)(col("s")).as("t"))
+      .select(LlmFixtures.tokenize(dupRules)(col("s")).as("t"))
       .collect()(0).getSeq[String](0)
     assert(dupKernel == Seq("ab", "c") && dupUdf == dupKernel)
     // the kernel symbols by CODE POINT: an astral-plane char stays one
@@ -534,7 +534,7 @@ class TextPipelineSpec extends AnyFunSuite {
     val mismatch = corpus
       .select(col("doc_id"),
         graft.functions.BpeEncode.encodeCol(col("text"), corpusRules).as("k"),
-        Bpe.tokenize(corpusRules)(col("text")).as("u"))
+        LlmFixtures.tokenize(corpusRules)(col("text")).as("u"))
       .filter(col("k") =!= col("u"))
       .count()
     assert(mismatch == 0L)

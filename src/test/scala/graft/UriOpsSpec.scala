@@ -2,6 +2,7 @@ package graft
 
 import graft.model.VTuple
 import graft.ops.{Normalize, UriOps}
+import org.apache.spark.sql.Column
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Prop, Test => SCTest}
 
@@ -85,34 +86,43 @@ class UriOpsSpec extends AnyFunSuite {
   }
 
   // --- N4/N5 normalization matrices ---
+  // the Column forms GraphOps runs, evaluated on a one-row frame
+  private def normalized(f: Column => Column)(s: String): String = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Seq(s).toDF("v").select(f($"v")).head().getString(0)
+  }
+  private def edgeLabel(s: String): String = normalized(Normalize.normalizeEdgeLabel)(s)
+  private def edgeSource(s: String): String = normalized(Normalize.normalizeEdgeSource)(s)
+
   test("normalizeEdgeLabel special cases") {
-    assert(Normalize.normalizeEdgeLabel("subClassOf") == "SUB_CLASS_OF")
-    assert(Normalize.normalizeEdgeLabel("disjointWith") == "DISJOINT_WITH")
-    assert(Normalize.normalizeEdgeLabel("crossSpeciesExactMatch") == "CROSS_SPECIES_EXACT_MATCH")
-    assert(Normalize.normalizeEdgeLabel("exactMatch") == "EXACT_MATCH")
-    assert(Normalize.normalizeEdgeLabel("equivalentClass") == "EQUIVALENT_CLASS")
-    assert(Normalize.normalizeEdgeLabel("seeAlso") == "SEE_ALSO")
+    assert(edgeLabel("subClassOf") == "SUB_CLASS_OF")
+    assert(edgeLabel("disjointWith") == "DISJOINT_WITH")
+    assert(edgeLabel("crossSpeciesExactMatch") == "CROSS_SPECIES_EXACT_MATCH")
+    assert(edgeLabel("exactMatch") == "EXACT_MATCH")
+    assert(edgeLabel("equivalentClass") == "EQUIVALENT_CLASS")
+    assert(edgeLabel("seeAlso") == "SEE_ALSO")
   }
   test("normalizeEdgeLabel defaults") {
-    assert(Normalize.normalizeEdgeLabel("develops from") == "DEVELOPS_FROM")
-    assert(Normalize.normalizeEdgeLabel("capable of") == "CAPABLE_OF")
-    assert(Normalize.normalizeEdgeLabel("part of") == "PART_OF")
-    assert(Normalize.normalizeEdgeLabel("label") == "LABEL")
+    assert(edgeLabel("develops from") == "DEVELOPS_FROM")
+    assert(edgeLabel("capable of") == "CAPABLE_OF")
+    assert(edgeLabel("part of") == "PART_OF")
+    assert(edgeLabel("label") == "LABEL")
   }
   test("normalizeEdgeSource matrix") {
-    assert(Normalize.normalizeEdgeSource("mondo-simple") == "MONDO")
-    assert(Normalize.normalizeEdgeSource("taxslim") == "NCBITAXON")
-    assert(Normalize.normalizeEdgeSource("go-plus") == "GO")
-    assert(Normalize.normalizeEdgeSource("uberon-base") == "UBERON")
-    assert(Normalize.normalizeEdgeSource("cl") == "CL")
-    assert(Normalize.normalizeEdgeSource("hp") == "HP")
-    assert(Normalize.normalizeEdgeSource("pato") == "PATO")
+    assert(edgeSource("mondo-simple") == "MONDO")
+    assert(edgeSource("taxslim") == "NCBITAXON")
+    assert(edgeSource("go-plus") == "GO")
+    assert(edgeSource("uberon-base") == "UBERON")
+    assert(edgeSource("cl") == "CL")
+    assert(edgeSource("hp") == "HP")
+    assert(edgeSource("pato") == "PATO")
   }
 
   // --- N4 property: normalized labels never contain spaces ---
   test("normalizeEdgeLabel output has no spaces") {
     check(Prop.forAll { (s: String) =>
-      !Normalize.normalizeEdgeLabel(s).contains(" ")
+      !edgeLabel(s).contains(" ")
     })
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.VTupleParse
 import graft.ops.UriOps
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native vtuple_parse Expression: equivalence with the UDF, codegen path,

@@ -37,6 +37,10 @@
 // stderr: defaulted parameters, defaulted parameters no root sets,
 // defaulted parameters only non-`main`/non-`bench` roots set, all
 // parameters, and parameters with one literal value and a `main` caller.
+// Then, also on stderr, the reachability table: one `# unreached` line
+// per non-local `def` of `main` that no production root reaches (position,
+// method, body lines, `test-only` if another root names it, else
+// `no-test-ref`), and the counts of non-local defs and unreached ones.
 import java.io.File
 
 import scala.collection.mutable
@@ -196,5 +200,104 @@ object OptionsCensus {
     Console.err.println(s"# set only by roots other than $mainRoot/bench: $testOnly")
     Console.err.println(s"# def parameters in $mainRoot: ${params.size}")
     Console.err.println(s"# one literal value in use, with a $mainRoot caller: $oneLiteral")
+
+    // Reachability. A node is a definition of `main` that no method
+    // encloses: a def, a val, a class or an object. A node's code reaches
+    // every node it names (its type trees too), a member reaches its owner,
+    // and a reached class or object reaches its constructors, its fields'
+    // initializers, its body's statements and its overriding methods (a
+    // call may dispatch to them). Roots are the `main` methods of objects,
+    // every node `bench` names, and what generated code names in a `main`
+    // string literal: a def whose `.name(` or a class whose full name
+    // appears there (`$helper.invalidRow()`, "graft.functions.X").
+    def nonLocal(s: Symbol): Boolean =
+      s.ownerChain.drop(1).takeWhile(o => !o.isPackageClass).forall(_.isClass)
+    val nodes = mutable.LinkedHashMap[Symbol, (MemberDef, CompilationUnit)]()
+    def key(s: Symbol): Symbol =
+      if (s.isModule) s.moduleClass
+      else if (s.isAccessor && s.accessed != NoSymbol) s.accessed
+      else s
+    for (u <- units if rootOf(u) == mainRoot) u.body.foreach {
+      case md: MemberDef if md.symbol != null && md.symbol != NoSymbol && nonLocal(md.symbol) &&
+          (md.isInstanceOf[DefDef] || md.isInstanceOf[ValDef] || md.isInstanceOf[ImplDef]) =>
+        nodes.getOrElseUpdate(key(md.symbol), (md, u))
+      case _ =>
+    }
+    def nodeOf(s: Symbol): Symbol = {
+      var x = key(s)
+      while (x != NoSymbol && !x.isPackageClass && !nodes.contains(x)) x = key(x.owner)
+      if (nodes.contains(x)) x else NoSymbol
+    }
+    val edges = mutable.Map[Symbol, mutable.Set[Symbol]]()
+    def edge(from: Symbol, to: Symbol): Unit =
+      if (from != NoSymbol && to != NoSymbol && from != to) edges.getOrElseUpdate(from, mutable.Set()) += to
+    val starts = mutable.Set[Symbol]()
+    val testRefs = mutable.Set[Symbol]()
+    val literalNames = mutable.Set[String]()
+    val literalClasses = mutable.Set[String]()
+    for ((n, (md, _)) <- nodes) {
+      val owner = nodeOf(n.owner)
+      edge(n, owner)
+      md match {
+        case dd: DefDef if dd.symbol.isConstructor || dd.symbol.allOverriddenSymbols.nonEmpty => edge(owner, n)
+        case vd: ValDef if !vd.symbol.isLazy => edge(owner, n)
+        case dd: DefDef if dd.name.decoded == "main" && dd.symbol.owner.isModuleClass => starts += n
+        case _ =>
+      }
+    }
+    for (u <- units; root = rootOf(u)) {
+      def refer(from: Symbol, s: Symbol): Unit = {
+        val n = nodeOf(s)
+        if (n != NoSymbol) {
+          if (root == mainRoot) edge(from, n)
+          else if (root == "bench") starts += n
+          else testRefs += n
+        }
+      }
+      def walk(t: Tree, from: Symbol): Unit = {
+        val here = t match {
+          case md: MemberDef if root == mainRoot && nodes.contains(key(md.symbol)) &&
+              (nodes(key(md.symbol))._1 eq md) => key(md.symbol)
+          case _ => from
+        }
+        t match {
+          case _: MemberDef =>
+          case tt: TypeTree if tt.tpe != null => tt.tpe.foreach(tp => refer(here, tp.typeSymbol))
+          case Literal(Constant(s: String)) if root == mainRoot =>
+            literalNames ++= """\.([A-Za-z_][A-Za-z0-9_]*)\(""".r.findAllMatchIn(s).map(_.group(1))
+            literalClasses += s
+          case _ => if (t.symbol != null && t.symbol != NoSymbol) refer(here, t.symbol)
+        }
+        t.children.foreach(walk(_, here))
+      }
+      walk(u.body, NoSymbol)
+    }
+    for ((n, (md, _)) <- nodes) md match {
+      case dd: DefDef if literalNames(dd.name.decoded) => starts += n
+      case _: ImplDef if literalClasses(n.fullName) => starts += n
+      case _ =>
+    }
+    val reached = mutable.Set[Symbol]()
+    var frontier = starts.toList
+    while (frontier.nonEmpty) {
+      frontier = frontier.filter(reached.add)
+      frontier = frontier.flatMap(n => edges.getOrElse(n, Nil))
+    }
+    val defs = nodes.toSeq.collect {
+      case (n, (dd: DefDef, u)) if !n.isSynthetic && !n.isAccessor && !n.isConstructor &&
+          !n.name.decoded.contains("$default$") => (n, dd, u)
+    }
+    val unreached = defs.filterNot { case (n, _, _) => reached(n) }
+    def lines(t: Tree): Int =
+      t.pos.source.offsetToLine(t.pos.end) - t.pos.source.offsetToLine(t.pos.start) + 1
+    for ((n, dd, u) <- unreached) {
+      val line = dd.pos.source.offsetToLine(dd.pos.point) + 1
+      Console.err.println(Seq(s"# unreached", s"${u.source.file.path}:$line",
+        s"${n.owner.name.decoded}.${dd.name.decoded}", lines(dd),
+        if (testRefs(n)) "test-only" else "no-test-ref").mkString("\t"))
+    }
+    Console.err.println(s"# non-local defs in $mainRoot: ${defs.size}")
+    Console.err.println(s"# reached by no root: ${unreached.size} " +
+      s"(${unreached.map(d => lines(d._2)).sum} lines)")
   }
 }
